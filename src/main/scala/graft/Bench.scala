@@ -44,183 +44,13 @@ object Bench {
     // drown the one JSON line this main exists to print.
     spark.sparkContext.setLogLevel("ERROR")
 
-    // optional comma-separated filter for local iteration on a subset
+    // optional comma-separated filter for local iteration on a subset;
+    // matching is exact set membership, so ONLY=q_ann_lsh selects that
+    // one row and never a name-prefix sibling like q_ann_lsh_multi
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // scale-sweep cap (VERDICT r8 #7): q_knn_join is quadratic by
-    // SEMANTICS (exact all-pairs ground truth) — at sf ≥ 1 set
-    // SPARK_GRAFT_BENCH_KNN_SAMPLE=m to bench the sampled variant
-    // (query side cut to vec_id % m == 0) under the HONEST name
-    // q_knn_join_sampled, so sweeps measure plan scaling instead of
-    // CPU saturation. Unset (driver runs at sf0.1) = unchanged row.
-    val knnSample = sys.env.get("SPARK_GRAFT_BENCH_KNN_SAMPLE").map(_.toLong)
-    // scale-sweep cap #2: the sf10 fixture's 100-replica cliques make
-    // every clique LSH bucket ~100 ids, and the UNCAPPED candidate set
-    // (≈25M pairs) OOMs the downstream verify/clustering aggregations in
-    // an 8 GB JVM — measured, not hypothetical. At sf ≥ 10 set
-    // SPARK_GRAFT_BENCH_NEARDUP_CAP=c to bench the capped variants
-    // (the production shape; q_neardup_capped is the oracle-certified
-    // row for the cap semantics) under their honest *_capped names.
-    // Unset (driver runs at sf0.1) = unchanged rows.
-    val neardupCap = sys.env.get("SPARK_GRAFT_BENCH_NEARDUP_CAP").map(_.toInt)
-    // scale-sweep cap #3: the ANN knn-join family's declared rows pin
-    // fixture-scale index constants (c = 16 cells, 8-bit buckets,
-    // fixed-fraction samples) that the DuckDB oracle can replay; at
-    // sf ≥ 10 those constants make the self-joins do 100× the pairs
-    // (q_ann_ivf alone: 5·10⁹). SPARK_GRAFT_BENCH_ANN_SCALED=1 benches
-    // the *_scaled variants instead, sized from the measured corpus
-    // count by MIGRATION.md's own rules: bits ≈ log2(N/50), c ≈ √N,
-    // eval anchors a fixed COUNT (~1000). Unset (driver at sf0.1) =
-    // unchanged rows.
-    val annScaled = sys.env.get("SPARK_GRAFT_BENCH_ANN_SCALED").contains("1")
-    lazy val nVec = Tables.embeddings(spark, sfDir).count()
-    lazy val bitsScaled =
-      math.max(8, math.ceil(math.log(nVec / 50.0) / math.log(2)).toInt)
-    lazy val cScaled = math.max(16, math.ceil(math.sqrt(nVec.toDouble)).toInt)
-    lazy val evalMod = math.max(20L, nVec / 1000L)
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .map { orig => (orig._1, orig match {
-        case ("q_ann_lsh", _) if annScaled =>
-          ("q_ann_lsh_scaled",
-            (s: SparkSession, d: String) => Queries.annLshScaled(s, d, bitsScaled))
-        // flips=1 second point on the PROBE curve (the _2x/_p4
-        // precedent): the DECLARED q_ann_multiprobe_scaled (flips=2,
-        // count-derived bits, hash-certified) benches unsubstituted
-        // since r14, so this substitution re-points the fixture row at
-        // 2 probes/query instead of 3 — MIGRATION's flips guidance
-        // carries two measured points
-        case ("q_ann_multiprobe", _) if annScaled =>
-          ("q_ann_multiprobe_scaled_f1",
-            (s: SparkSession, d: String) =>
-              Queries.annMultiprobeScaled(s, d, bitsScaled, flips = 1))
-        // The cap-factor curve is MEASURED and ledgered (r14 sweep:
-        // uncapped 243.2s / 4× 170.0s / 2× 127.8s at sf10 — MIGRATION's
-        // substitution ledger), so the 243s uncapped baseline is retired
-        // from per-sweep residency (VERDICT r14 #2): re-measuring a
-        // monotone curve every round is sweep cost without information.
-        // Default now benches the BANDS curve's second point — bands=4
-        // at the production 4× cap and sweep bits (the declared
-        // q_ann_capped_scaled is the bands=8 point at the same
-        // bits/cap) — so MIGRATION's "buy recall with bands" guidance
-        // gains a measured cost point instead of a re-measured one.
-        // SPARK_GRAFT_BENCH_UNCAPPED_BASELINE=1 restores the uncapped
-        // point for a once-per-retune re-measurement of the curve.
-        case ("q_ann_lsh_multi", _) if annScaled =>
-          if (sys.env.get("SPARK_GRAFT_BENCH_UNCAPPED_BASELINE").contains("1"))
-            ("q_ann_lsh_multi_scaled",
-              (s: SparkSession, d: String) =>
-                Queries.annLshMultiScaled(s, d, bitsScaled, None))
-          else
-            ("q_ann_lsh_multi_scaled_b4",
-              (s: SparkSession, d: String) =>
-                Queries.annLshMultiScaled(s, d, bitsScaled,
-                  Some(Queries.AnnCapFactor), bands = Queries.ScaledCapBandsB4))
-        // The UNCAPPED multiprobe baseline follows the multiband
-        // baseline's r15 retirement (VERDICT r15 #4): its capped twin
-        // (q_ann_multiprobe_capped_scaled, declared + sf10-certified)
-        // and recall certificate (q_ann_recall_multiprobe_scaled) now
-        // carry what the 108.7s uncapped point measured, so the default
-        // sweep re-points this row at the multiprobe cap-FACTOR curve's
-        // second point — 2× (the multiband _2x precedent), same
-        // count-derived bits as the declared capped row so the factor
-        // is the only variable. The same
-        // SPARK_GRAFT_BENCH_UNCAPPED_BASELINE=1 knob restores the
-        // uncapped point for a once-per-retune curve re-measurement of
-        // BOTH the multiband and multiprobe baselines.
-        case ("q_ann_multiprobe_scaled", _) if annScaled &&
-            !sys.env.get("SPARK_GRAFT_BENCH_UNCAPPED_BASELINE").contains("1") =>
-          ("q_ann_multiprobe_capped_scaled_2x",
-            (s: SparkSession, d: String) =>
-              Queries.annMultiprobeScaled(s, d,
-                math.max(2, Queries.scaledLshBits(nVec)),
-                capFactor = Some(2.0)))
-        // second operating point on the factor curve: a 2× cap trades
-        // more tail recall for less pair work — benched so MIGRATION.md's
-        // factor guidance carries two measured points, not one. Named
-        // _2x since r11: the DECLARED row q_ann_capped_scaled (4× cap,
-        // integer ceil-log2 bits, hash-certified at every scale) now
-        // owns the plain _scaled name and benches unsubstituted.
-        case ("q_ann_capped", _) if annScaled =>
-          ("q_ann_capped_scaled_2x",
-            (s: SparkSession, d: String) =>
-              Queries.annLshMultiScaled(s, d, bitsScaled, Some(2.0)))
-        // recall at the 2x-cap operating point: the DECLARED
-        // q_ann_recall_capped_scaled (4x cap, count-derived bits/mod,
-        // the exact q_ann_capped_scaled config) benches unsubstituted
-        // since r13; this substitution re-points the fixture-constant
-        // row at the tighter cap, so MIGRATION's factor guidance pairs
-        // each timing point (q_ann_capped_scaled_2x) with a measured
-        // recall number
-        case ("q_ann_recall_capped", _) if annScaled =>
-          ("q_ann_recall_capped_scaled_2x",
-            (s: SparkSession, d: String) =>
-              Queries.annRecallCappedScaled(s, d, evalMod, bitsScaled, 2.0))
-        // second operating point on the PROBE curve (the capped row's
-        // _2x precedent): the DECLARED q_ann_ivf_scaled (c = 2^⌈bits/2⌉
-        // from the corpus count, probes=2, hash-certified at every
-        // scale) benches unsubstituted; this substitution re-points the
-        // fixture-constant q_ann_ivf at probes=4 with c = ⌈√N⌉, so
-        // MIGRATION's probe guidance carries two measured points
-        case ("q_ann_ivf", _) if annScaled =>
-          ("q_ann_ivf_scaled_p4",
-            (s: SparkSession, d: String) =>
-              Queries.annIvfScaled(s, d, cScaled, nProbes = 4))
-        // named _csqrt since r12: the DECLARED row q_semantic_dedup_scaled
-        // (c = 2^ceil(bitLen(N)/2) from the corpus count, hash-certified
-        // at every scale) now owns the plain _scaled name and benches
-        // unsubstituted; this substitution re-points the fixture-constant
-        // q_semantic_dedup at the exact-ceil(sqrt(N)) cell count, a second
-        // operating point on the c curve
-        case ("q_semantic_dedup", _) if annScaled =>
-          ("q_semantic_dedup_csqrt",
-            (s: SparkSession, d: String) => Queries.semanticDedupScaled(s, d, cScaled))
-        // same treatment for SemDeDup's leakage sibling (VERDICT r12
-        // #2: this row had no substitution, so the r11 sweep paid the
-        // fixture-c=16 N²/16 shape ~100s at sf10); the DECLARED
-        // q_split_leakage_scaled (c = 2^⌈bitLen(N)/2⌉, hash-certified
-        // sf0.01→sf10) benches unsubstituted, and this re-points the
-        // fixture-constant row at exact-⌈√N⌉ cells — the same second
-        // operating point on the c curve the _csqrt dedup row measures
-        case ("q_split_leakage", _) if annScaled =>
-          ("q_split_leakage_csqrt",
-            (s: SparkSession, d: String) => Queries.splitLeakageScaled(s, d, cScaled))
-        case ("q_ann_recall", _) if annScaled =>
-          ("q_ann_recall_scaled",
-            (s: SparkSession, d: String) => Queries.annRecallScaled(s, d, evalMod))
-        // 2× anchor density second point: the DECLARED
-        // q_contrastive_pairs_scaled (~1000 anchors) benches
-        // unsubstituted since r14; this re-points the fixture row at
-        // ~2000 anchors — the mining-density knob a user actually turns
-        case ("q_contrastive_pairs", _) if annScaled =>
-          ("q_contrastive_pairs_scaled_2k",
-            (s: SparkSession, d: String) =>
-              Queries.contrastivePairsScaled(s, d, math.max(20L, evalMod / 2)))
-        case ("q_knn_join", _) if knnSample.isDefined =>
-          ("q_knn_join_sampled",
-            (s: SparkSession, d: String) => Queries.knnJoinSampled(s, d, knnSample.get))
-        case ("q_jaccard_pairs", _) if neardupCap.isDefined =>
-          ("q_jaccard_pairs_capped",
-            (s: SparkSession, d: String) => Queries.jaccardPairsCapped(s, d, neardupCap.get))
-        case ("q_dedup_clusters", _) if neardupCap.isDefined =>
-          ("q_dedup_clusters_capped",
-            (s: SparkSession, d: String) => Queries.dedupClustersCapped(s, d, neardupCap.get))
-        case ("q_cluster_weights", _) if neardupCap.isDefined =>
-          ("q_cluster_weights_capped",
-            (s: SparkSession, d: String) => Queries.clusterWeightsCapped(s, d, neardupCap.get))
-        case other => other
-      }) }
-      // ONLY filter runs AFTER the scale-sweep substitution and accepts
-      // EITHER the original or the substituted name (r9 ADVICE: filtering
-      // by the honest substituted row names — q_ann_ivf_scaled,
-      // q_knn_join_sampled, … — silently selected nothing because the
-      // filter ran on the pre-substitution names). Matching is EXACT
-      // set membership of the comma-split env names (ADVICE r16 asked
-      // for exactness — `names(x)` is Set#contains, equality-based, so
-      // ONLY=q_ann_lsh_multi_scaled_b4 selects that one row and never a
-      // name-prefix sibling like q_ann_lsh).
-      .filter { case (origName, (name, _)) =>
-        only.forall(names => names(origName) || names(name)) }
-      .map(_._2)
+      .filter { case (name, _) => only.forall(_(name)) }
 
     // untimed warmup: plan + execute each query once. The per-query
     // stderr line is long-sweep visibility (a multi-hour sf10 run with

@@ -208,22 +208,6 @@ object Queries {
   /** Batch knn (O9 at scale; the exact replacement for the reference's
     * HNSW serving path ann.py:67-102): every vector's top-5 cosine
     * neighbors, self excluded. */
-  /** Bench-only sampled variant of [[qKnnJoin]] (NOT in the declared
-    * registry — the oracle row is unchanged): query side cut to
-    * `vec_id % m == 0`, the q_ann_recall sample × corpus shape. The
-    * exact all-pairs knn join is quadratic BY SEMANTICS (10× rows =
-    * 100× scored pairs — 40.8s of the r8 sf1 sweep, load-volatile
-    * 33–62s); at sf ≥ 1 the scale sweep substitutes this row (Bench's
-    * SPARK_GRAFT_BENCH_KNN_SAMPLE) so it measures plan scaling, not
-    * CPU saturation, matching the operator's documented production
-    * role: sampled ground truth for recall certification. */
-  def knnJoinSampled(s: SparkSession, dir: String, m: Long): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.knnJoin(emb.filter(col("vec_id") % m === 0), emb,
-      "embedding", "vec_id", Metric.Cosine, k = KnnJoinK, excludeSelf = true,
-      broadcastQueries = true)
-  }
-
   private def qKnnJoin(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     // no broadcastData override: at 100× the data side (~2.5 GB) would OOM
@@ -764,7 +748,7 @@ object Queries {
   /** Greedy merge rounds for the BPE-apply queries — small enough that
     * the oracle's unrolled round CTEs stay readable, large enough that
     * per-language fertility discriminates. */
-  private[graft] val BpeMerges = 8
+  private val BpeMerges = 8
 
   /** DuckDB replay of [[TextOps.bpeLearnMerges]]'s greedy rounds as
     * program-generated CTEs: `bwords` (the (lang, word) stream), `v0`
@@ -1299,7 +1283,7 @@ object Queries {
     * subdomain, casing, TLD, port, path and query string all vary by
     * `doc_id` arithmetic, so [[Web.host]] faces every extraction edge
     * the FineWeb URL-filtering stage faces on real crawl URLs. */
-  private[graft] def syntheticUrl(docId: Column, source: Column): Column = concat(
+  private def syntheticUrl(docId: Column, source: Column): Column = concat(
     when(docId % 3 === 0, lit("https")).otherwise(lit("http")), lit("://"),
     when(docId % 11 === 0, lit("user:pw@")).otherwise(lit("")),
     element_at(array(lit("www."), lit("cdn."), lit(""), lit("a.b.")),
@@ -1381,7 +1365,7 @@ object Queries {
 
   /** The q_url_filter blocklist: two apex domains (subdomains inherit
     * the block) and one exact subdomain host (its siblings survive). */
-  private[graft] val BlockedHosts = Seq("src3.org", "src7.net", "cdn.src1.io")
+  private val BlockedHosts = Seq("src3.org", "src7.net", "cdn.src1.io")
 
   /** Blocklist URL filtering ([[Web.urlFilter]]) — the FineWeb "URL
     * filtering" gate that runs before every text heuristic: drop docs
@@ -1689,10 +1673,7 @@ object Queries {
     * bucket's pair work) — so the oracle row certifies the DROP path,
     * not just the pass-through, at every fixture scale, because the cap
     * is RELATIVE and self-sizes. */
-  // private[graft] so Bench's bands-curve rows reference the SAME cap
-  // the declared rows pin instead of a drift-prone 4.0 literal
-  // (ADVICE r15) — a retune here re-points every consumer at once.
-  private[graft] val AnnCapFactor = 4.0
+  private val AnnCapFactor = 4.0
 
   /** Tighter factor for [[qAnnRecallCapped]]: at the recall operating
     * point (4-bit × 16-band) the measured occupancy is mean 31.25 at
@@ -1762,11 +1743,9 @@ object Queries {
   private val ScaledCapBands = 8
 
   /** The bands-curve CHEAP point (half the hash tables at identical
-    * bits/cap — Bench's `q_ann_lsh_multi_scaled_b4` timing point, r15:
-    * 42.2s vs bands=8's 167.5s at sf10). private[graft] so Bench and
-    * the declared recall row `q_ann_recall_capped_scaled_b4` pin the
-    * SAME constant — the timing and recall points cannot desync. */
-  private[graft] val ScaledCapBandsB4 = 4
+    * bits/cap, r15: 42.2s vs bands=8's 167.5s at sf10), pinned by the
+    * declared recall row `q_ann_recall_capped_scaled_b4`. */
+  private val ScaledCapBandsB4 = 4
 
   /** MIGRATION's serving-config rule `bits ≈ log2(N / target_bucket_rows)`
     * (target 50 rows/bucket) applied at RUNTIME from the corpus count —
@@ -2438,7 +2417,7 @@ object Queries {
     * files; band-restricted probes prune whole directories). */
   private def qIndexCompact(s: SparkSession, dir: String): DataFrame = {
     val base = indexCompactCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
-      val b = s"/root/repo/target/tmp/index_compact_${java.util.UUID.randomUUID()}"
+      val b = Tables.scratchPath(s"index_compact_${java.util.UUID.randomUUID()}")
       val frag = s"$b/frag"
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
       // each append is written 4-way-partitioned, the shape a
@@ -2624,7 +2603,7 @@ object Queries {
     val key =
       s"${stagedKey(dir, "embeddings")}#c${centroids.length}#k${cbs.head.length}"
     val path = ivfPqIndexCache.computeIfAbsent(key, _ => {
-      val p = s"/root/repo/target/tmp/ivfpq_index_${java.util.UUID.randomUUID()}"
+      val p = Tables.scratchPath(s"ivfpq_index_${java.util.UUID.randomUUID()}")
       VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id", centroids, cbs,
         Metric.Cosine)
         .write.mode("overwrite").partitionBy("centroid_id").parquet(p)
@@ -2990,7 +2969,7 @@ object Queries {
     * spherical k-means objective by > 0.01 — certifying that the
     * quality path improves the index at the cell counts the scaled
     * serving rows actually use (c=√N), not just at fixture c=16.
-    * Measured margins (SPARK_GRAFT_GATE_DEBUG=1): +0.098 at sf0.001
+    * Measured margins (oRef − oInit): +0.098 at sf0.001
     * (c=32, N=500), +0.097 at sf0.01 (c=32), +0.062 at sf0.1 (c=64,
     * N=2000) — an order of magnitude above the 0.01 bar along the
     * measured curve; the bar itself is three orders above the refined
@@ -3005,9 +2984,6 @@ object Queries {
       Metric.Cosine, iters = 2)
     val oInit = VectorSearch.ivfObjective(emb, "embedding", init, Metric.Cosine)
     val oRef = VectorSearch.ivfObjective(emb, "embedding", refined, Metric.Cosine)
-    if (sys.env.contains("SPARK_GRAFT_GATE_DEBUG"))
-      System.err.println(
-        f"[gate] c=$c oInit=$oInit%.6f oRef=$oRef%.6f margin=${oRef - oInit}%.6f")
     Seq((c.toLong, 2L, oRef > oInit + 0.01))
       .toDF("n_centroids", "iters", "improved")
   }
@@ -3232,46 +3208,27 @@ object Queries {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  // ------------------------------------- ANN scale-sweep variants ---------
+  // ------------------------------------------ ANN scaled-row builders ---
 
-  /** Scale-sweep ANN variants (substituted by Bench under
-    * `SPARK_GRAFT_BENCH_ANN_SCALED=1`, honest `*_scaled` names).
+  /** Builders shared by the declared `*_scaled` ANN rows.
     *
-    * The declared ANN rows pin SMALL-SCALE operating points (c = 16
+    * The fixture ANN rows pin SMALL-SCALE operating points (c = 16
     * cells, 8-bit buckets, fixed-FRACTION eval samples) because the
     * DuckDB oracle must replay them affordably. Those constants do not
     * survive 100×: a bucketed/celled knn SELF-join does N²/buckets work,
     * so holding buckets fixed while N grows 100× grows the scored-pair
     * set 100× — measured at sf10, q_ann_ivf's 5·10⁹-pair join sat 25
-    * minutes in one WindowGroupLimit partition. The scaled variants size
+    * minutes in one WindowGroupLimit partition. The `*_scaled` rows size
     * the index from the corpus the way MIGRATION.md's rules say to —
     * bits ≈ log2(N/target_bucket_rows), c ≈ √N, eval anchors/samples a
     * fixed COUNT (not fraction) — so scale sweeps measure whether the
     * PLAN survives, not whether a fixture-sized constant does. */
-  def annLshScaled(s: SparkSession, dir: String, bits: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.bucketedKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits)
-      .orderBy("query_id", "rank")
-  }
-
-  def annMultiprobeScaled(s: SparkSession, dir: String, bits: Int,
-      flips: Int = 2, capFactor: Option[Double] = None): DataFrame = {
+  private def annMultiprobeScaled(s: SparkSession, dir: String, bits: Int,
+      capFactor: Option[Double] = None): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     VectorSearch.multiProbeKnnJoin(emb, emb, "embedding", "vec_id",
       Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits,
-      flips = flips, maxBucketFactor = capFactor,
-      dataCountHint = Some(embCount(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  def annLshMultiScaled(s: SparkSession, dir: String, bits: Int,
-      capFactor: Option[Double] = None,
-      bands: Int = LshMultiBands): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.multibandKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = bits, bands = bands, maxBucketFactor = capFactor,
+      maxBucketFactor = capFactor,
       dataCountHint = Some(embCount(s, dir)))
       .orderBy("query_id", "rank")
   }
@@ -3281,15 +3238,13 @@ object Queries {
     * point (corpus-sized `bits`, caller-chosen `bands`, production
     * cap factor) against exact top-k on a fixed-count query sample —
     * so the sweep's capped serving row carries a measured recall
-    * number, not an argued one. `bands` is EXPLICIT (ADVICE r13): the
-    * declared row passes [[ScaledCapBands]] — the constant its oracle
-    * SQL burns in — so retuning [[LshMultiBands]] can never silently
-    * desynchronize the declared row from its oracle; the bench _2x
-    * form passes [[LshMultiBands]] to stay paired with
-    * q_ann_capped_scaled_2x. */
-  def annRecallCappedScaled(s: SparkSession, dir: String, mod: Long,
-      bits: Int, capFactor: Double,
-      bands: Int = LshMultiBands): DataFrame = {
+    * number, not an argued one. `bands` is EXPLICIT (ADVICE r13): each
+    * declared row passes the constant its oracle SQL burns in
+    * ([[ScaledCapBands]] or [[ScaledCapBandsB4]]), so retuning
+    * [[LshMultiBands]] can never silently desynchronize a declared row
+    * from its oracle. */
+  private def annRecallCappedScaled(s: SparkSession, dir: String, mod: Long,
+      bits: Int, capFactor: Double, bands: Int): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") % mod === 0)
     val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
@@ -3320,8 +3275,8 @@ object Queries {
     * ([[VectorSearch.multiProbeKnnJoin]] with `maxBucketFactor`) vs
     * exact top-k on a fixed-count query sample — the single-band cap's
     * recall certificate ([[annRecallCappedScaled]]'s eval shape). */
-  def annRecallMultiprobeScaled(s: SparkSession, dir: String, mod: Long,
-      bits: Int, capFactor: Double, flips: Int = 2): DataFrame = {
+  private def annRecallMultiprobeScaled(s: SparkSession, dir: String, mod: Long,
+      bits: Int, capFactor: Double): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") % mod === 0)
     val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
@@ -3330,7 +3285,7 @@ object Queries {
       .select(col("query_id"), col("neighbor_id"))
     val ann = VectorSearch.multiProbeKnnJoin(queries, emb, "embedding", "vec_id",
       Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits,
-      flips = flips, maxBucketFactor = Some(capFactor),
+      maxBucketFactor = Some(capFactor),
       dataCountHint = Some(embCount(s, dir)),
       queriesCountHint = Some(math.max(1L, embCount(s, dir) / mod)))
       .select(col("query_id"), col("neighbor_id"))
@@ -3344,17 +3299,7 @@ object Queries {
       .orderBy("query_id")
   }
 
-  def annIvfScaled(s: SparkSession, dir: String, c: Int,
-      nProbes: Int = 2): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
-    VectorSearch.ivfKnnJoin(emb, emb, "embedding", "vec_id", Metric.Cosine,
-      k = KnnJoinK, c = c, nProbes = nProbes, centroids = Some(centroids))
-      .orderBy("query_id", "rank")
-  }
-
-  def semanticDedupScaled(s: SparkSession, dir: String, c: Int): DataFrame = {
+  private def semanticDedupScaled(s: SparkSession, dir: String, c: Int): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
       _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
@@ -3363,12 +3308,9 @@ object Queries {
       .orderBy("vec_id")
   }
 
-  /** [[qSplitLeakage]] at an explicit cell count — the bench-sweep
-    * hook (VERDICT r12 #2): without it, sf ≥ 10 sweeps re-pay the
-    * fixture-c=16 row's N²/16 within-cell pair shape (~100s at sf10 in
-    * the r11 sweep) that the DECLARED self-sizing twin
-    * q_split_leakage_scaled exists to avoid. */
-  def splitLeakageScaled(s: SparkSession, dir: String, c: Int): DataFrame = {
+  /** [[qSplitLeakage]] at an explicit cell count, for the self-sizing
+    * twin q_split_leakage_scaled. */
+  private def splitLeakageScaled(s: SparkSession, dir: String, c: Int): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
       _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
@@ -3383,55 +3325,26 @@ object Queries {
       .orderBy("vec_id")
   }
 
-  def annRecallScaled(s: SparkSession, dir: String, mod: Long): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") % mod === 0)
-    val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, excludeSelf = true,
-      // sample x corpus ground truth: broadcast the bounded sample so the
-      // corpus streams once (no per-query-partition recompute, no corpus
-      // movement) - the only orientation that survives 100 TB
-      broadcastQueries = true)
-      .select(col("query_id"), col("neighbor_id"))
-    val ann = VectorSearch.multibandKnnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = RecallBits, bands = RecallBands,
-      dataCountHint = Some(embCount(s, dir)),
-      queriesCountHint = Some(math.max(1L, embCount(s, dir) / mod)))
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = exact.join(ann, Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("__h"))
-    exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("query_id"), "left")
-      .withColumn("n_hits", coalesce(col("__h"), lit(0L)))
-      .withColumn("recall_milli", expr("(n_hits * 1000) div n_exact"))
-      .select("query_id", "n_exact", "n_hits", "recall_milli")
-      .orderBy("query_id")
-  }
-
-  def contrastivePairsScaled(s: SparkSession, dir: String, mod: Long): DataFrame =
+  private def contrastivePairsScaled(s: SparkSession, dir: String, mod: Long): DataFrame =
     Contrastive.minePairs(
       Tables.embeddings(s, dir).select("vec_id", "embedding"),
       "embedding", "vec_id", Metric.Cosine,
       anchorFilter = col("vec_id") % mod === 0,
       nPos = 1, hardStart = PairsHardStart, nHard = PairsNHard,
       nRandom = PairsNRandom,
-      // the scaled rows' anchor set is a FIXED-COUNT sample (~1000 at
-      // mod = scaledEvalMod, ~2000 at the _2k bench point) — exactly
-      // the bounded-sample case broadcastAnchors exists for. PairsDiag
-      // at sf10 (r16): default orientation 137.1s vs broadcast 94.6s;
-      // the fixture row (anchors = N/10, corpus-fraction) keeps the
-      // default.
+      // the scaled row's anchor set is a FIXED-COUNT sample (~1000 at
+      // mod = scaledEvalMod) — exactly the bounded-sample case
+      // broadcastAnchors exists for. Measured at sf10 (r16): default
+      // orientation 137.1s vs broadcast 94.6s; the fixture row
+      // (anchors = N/10, corpus-fraction) keeps the default.
       broadcastAnchors = true)
       .orderBy("anchor_id", "pair_type", "pair_rank")
 
   // ------------------------------------------------------------ sketches ---
 
-  // private[graft]: SaltDiag replays the band build at scale with the
-  // declared constants for its salted-vs-naive differential
-  private[graft] val ShingleK = 8
-  private[graft] val MinhashM = 16
-  private[graft] val MinhashBands = 4
+  private val ShingleK = 8
+  private val MinhashM = 16
+  private val MinhashBands = 4
 
   /** Oracle CTE `mh(doc_id, mh_0..mh_15)` mirroring
     * [[Sketches.minhashSignature]]: one md5 per shingle, first 15 hex
@@ -3553,7 +3466,7 @@ object Queries {
   private def qNeardupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val path = bandIndexCache.computeIfAbsent(stagedKey(dir, "documents"), _ => {
-      val p = s"/root/repo/target/tmp/band_index_${java.util.UUID.randomUUID()}"
+      val p = Tables.scratchPath(s"band_index_${java.util.UUID.randomUUID()}")
       Sketches.minhashBands(
         Sketches.minhashSignature(docs.filter(col("doc_id") % 10 =!= 0),
           "doc_id", "text", ShingleK, MinhashM),
@@ -3602,28 +3515,9 @@ object Queries {
     * `WHERE doc_id = component_id`. Pointer-jumped label propagation
     * converges in O(log n) rounds; each round shuffles (long, long)
     * rows only. */
-  private def qDedupClusters(s: SparkSession, dir: String): DataFrame =
-    dedupClustersImpl(s, dir, maxBucket = None)
-
-  /** Scale-sweep variant (`q_dedup_clusters_capped`, substituted by
-    * Bench under `SPARK_GRAFT_BENCH_NEARDUP_CAP`): components over
-    * bucket-CAPPED candidate edges — at 100 TB the edge list feeding
-    * connected components is always cap-bounded, or one boilerplate
-    * bucket floods the propagation joins. */
-  def dedupClustersCapped(s: SparkSession, dir: String, maxBucket: Int): DataFrame =
-    dedupClustersImpl(s, dir, Some(maxBucket))
-
-  private def dedupClustersImpl(
-      s: SparkSession, dir: String, maxBucket: Option[Int]): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val cand = maxBucket.fold(
-      Sketches.minhashCandidates(docs,
-        "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)) {
-      cap =>
-        Sketches.minhashCandidatesCapped(docs,
-          "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands,
-          maxBucket = cap)
-    }
+  private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
+    val cand = Sketches.minhashCandidates(Tables.documents(s, dir),
+      "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)
     Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id"))
       .select(col("id").as("doc_id"), col("component_id"), col("csize"))
       .orderBy("doc_id")
@@ -3672,26 +3566,9 @@ object Queries {
     * collided in ≥1 LSH band — a small fraction of the corpus — so the
     * corpus-side left join shuffles ids only, and the weight column is
     * computed before the join (no corpus-wide window). */
-  private def qClusterWeights(s: SparkSession, dir: String): DataFrame =
-    clusterWeightsImpl(s, dir, maxBucket = None)
-
-  /** Scale-sweep variant (`q_cluster_weights_capped`, substituted by
-    * Bench under `SPARK_GRAFT_BENCH_NEARDUP_CAP`): keep-one weighting
-    * over components of bucket-CAPPED candidate edges. */
-  def clusterWeightsCapped(s: SparkSession, dir: String, maxBucket: Int): DataFrame =
-    clusterWeightsImpl(s, dir, Some(maxBucket))
-
-  private def clusterWeightsImpl(
-      s: SparkSession, dir: String, maxBucket: Option[Int]): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val cand = maxBucket.fold(
-      Sketches.minhashCandidates(docs,
-        "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)) {
-      cap =>
-        Sketches.minhashCandidatesCapped(docs,
-          "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands,
-          maxBucket = cap)
-    }
+  private def qClusterWeights(s: SparkSession, dir: String): DataFrame = {
+    val cand = Sketches.minhashCandidates(Tables.documents(s, dir),
+      "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)
     val comp = Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id"))
       .select(col("id").as("doc_id"), col("component_id"), col("csize"))
     Tables.documents(s, dir).select("doc_id")
@@ -4566,21 +4443,7 @@ object Queries {
   /** North-star n-gram Jaccard: exact shingle-set Jaccard for the
     * MinHash candidate pairs (the verify stage of an LSH dedup pipeline:
     * cheap candidates first, exact set intersection only on survivors). */
-  private def qJaccardPairs(s: SparkSession, dir: String): DataFrame =
-    jaccardPairsImpl(s, dir, maxBucket = None)
-
-  /** Scale-sweep variant of [[qJaccardPairs]] (`q_jaccard_pairs_capped`,
-    * substituted by Bench under `SPARK_GRAFT_BENCH_NEARDUP_CAP`): the
-    * verify stage fed by bucket-CAPPED candidates. The sf10 fixture's
-    * 100-replica cliques make every clique bucket ~100 ids — the
-    * uncapped candidate set (≈25M pairs) OOMs the verify's intersection
-    * aggregation in an 8 GB JVM; production pipelines run the verify
-    * over capped candidates for exactly this reason. */
-  def jaccardPairsCapped(s: SparkSession, dir: String, maxBucket: Int): DataFrame =
-    jaccardPairsImpl(s, dir, Some(maxBucket))
-
-  private def jaccardPairsImpl(
-      s: SparkSession, dir: String, maxBucket: Option[Int]): DataFrame = {
+  private def qJaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // one aggregation pass yields signature AND set size; sizes ride the
     // band rows into the candidate join, so no separate sizes scan/joins.
@@ -4598,30 +4461,12 @@ object Queries {
     // twice per consumer — the plan-dedup analog of staging the candidate
     // table between pipeline steps at real scale.
     //
-    // UNCAPPED pair generation goes through Sketches.bandSelfPairs so a
+    // Pair generation goes through Sketches.bandSelfPairs so a
     // pathological clique bucket skew-splits across salted grid cells
-    // (identical pair multiset — see its scaladoc); the CAPPED path keeps
-    // the plain self-join, whose buckets are ≤ cap by construction.
-    val pairs = maxBucket match {
-      case None =>
-        Sketches.bandSelfPairs(allBands, "doc_id", carry = Seq("n_shingles"))
-          .select(col("a_id"), col("b_id"),
-            col("a_n_shingles").as("na"), col("b_n_shingles").as("nb"))
-      case Some(cap) =>
-        val bucketSize = org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "band_key")
-        val bk = allBands.withColumn("__bsz", count(lit(1)).over(bucketSize))
-          .filter(col("__bsz") <= cap)
-          .drop("__bsz")
-        val a = bk.select(col("doc_id").as("a_id"), col("band"), col("band_key"),
-          col("n_shingles").as("na"))
-        val b = bk.select(col("doc_id").as("b_id"), col("band"), col("band_key"),
-          col("n_shingles").as("nb"))
-        a.join(b, Seq("band", "band_key"))
-          .filter(col("a_id") < col("b_id"))
-          .select("a_id", "b_id", "na", "nb")
-    }
-    val cand = pairs
+    // (identical pair multiset — see its scaladoc).
+    val cand = Sketches.bandSelfPairs(allBands, "doc_id", carry = Seq("n_shingles"))
+      .select(col("a_id"), col("b_id"),
+        col("a_n_shingles").as("na"), col("b_n_shingles").as("nb"))
       .distinct()
       .localCheckpoint()
     // exact intersection only needs the CANDIDATE docs' shingles — a
@@ -5414,11 +5259,31 @@ object Queries {
   private def eventsLanding(dir: String): String =
     streamLandingCache.computeIfAbsent(stagedKey(dir, "events"), _ => {
       val d = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/stream_landing_${java.util.UUID.randomUUID()}")
+        Tables.scratchPath(s"stream_landing_${java.util.UUID.randomUUID()}"))
       java.nio.file.Files.createDirectories(d)
       stageParquet(java.nio.file.Paths.get(s"$dir/events.parquet"), d, "events")
       d.toString
     })
+
+  /** State width for a STATE-HEAVY stream (the stream-stream join),
+    * self-sized from the corpus row count — MIGRATION's "state
+    * partition count is sized to state volume" rule as code, the
+    * scaledLshBits pattern: every stateful operator commits one state
+    * store per partition per micro-batch, so SMALL state wants few
+    * partitions (commit overhead dominates — the fixture-tuned 8),
+    * while corpus-sized state wants per-row update parallelism
+    * (measured r15 at sf10: 20M state rows, 93% of wall in state
+    * updates; width 8 = 112.0s vs width 32 = 50.2s idle). The sizing
+    * curve between the two tuned endpoints is
+    * `width = clamp(8, 32, 8 · (1 + stateRows/2.5M))` — i.e. +8 width
+    * per 2.5M state rows, so the only values are 8/16/24/32; results
+    * are width-independent. The first r15 attempt was a GLOBAL env width —
+    * measured backfiring on every small-state stream row at sf10
+    * (sessions 9.2→15.0s, dedup 2.8→4.3s: 32 stores' commit overhead
+    * for KB-sized state), which is why the sizing is per-volume here,
+    * not per-sweep. */
+  private def streamStateWidth(stateRows: Long): Int =
+    math.max(8, math.min(32, 8 * (1 + (stateRows / 2500000L)).toInt))
 
   /** Cap `spark.sql.shuffle.partitions` for a streaming query and
     * DRAIN it — every stateful operator commits one state store PER
@@ -5435,45 +5300,11 @@ object Queries {
     * scale the state partition count is sized to state volume ÷
     * executor memory — here state is fixture-sized, so a handful of
     * partitions is the honest shape. */
-  /** State width for a STATE-HEAVY stream (the stream-stream join),
-    * self-sized from the corpus row count — MIGRATION's "state
-    * partition count is sized to state volume" rule as code, the
-    * scaledLshBits pattern: every stateful operator commits one state
-    * store per partition per micro-batch, so SMALL state wants few
-    * partitions (commit overhead dominates — the fixture-tuned 8),
-    * while corpus-sized state wants per-row update parallelism
-    * (StreamDiag r15 at sf10: 20M state rows, 93% of wall in state
-    * updates; width 8 = 112.0s vs width 32 = 50.2s idle). The sizing
-    * curve between the two tuned endpoints is
-    * `width = clamp(8, 32, 8 · (1 + stateRows/2.5M))` — i.e. +8 width
-    * per 2.5M state rows, so the only values are 8/16/24/32; results
-    * are width-independent. The first r15 attempt was a GLOBAL env width —
-    * measured backfiring on every small-state stream row at sf10
-    * (sessions 9.2→15.0s, dedup 2.8→4.3s: 32 stores' commit overhead
-    * for KB-sized state), which is why the sizing is per-volume here,
-    * not per-sweep. */
-  private def streamStateWidth(stateRows: Long): Int =
-    math.max(8, math.min(32, 8 * (1 + (stateRows / 2500000L)).toInt))
-
   private def drainStream(
       s: SparkSession, n: Int, name: String,
       extraConfs: Map[String, String] = Map.empty)(
       start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    // SPARK_GRAFT_STREAM_STATE_PARTS: explicit A/B override of the
-    // caller's width (diagnosis tool, not the sizing path — the sizing
-    // lives in streamStateWidth and the callers' tuned defaults; a
-    // sweep must NOT export it, or every KB-state stream row pays the
-    // measured global-width regression the per-volume sizing fixed).
-    // toIntOption + loud error: a malformed value would otherwise
-    // throw a bare NumberFormatException inside every stream row
-    // (ADVICE r15).
-    val width = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS") match {
-      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_STATE_PARTS must be a positive int, got '$v'"))
-      case None => n
-    }
-    val confs = Map("spark.sql.shuffle.partitions" -> width.toString) ++ extraConfs
+    val confs = Map("spark.sql.shuffle.partitions" -> n.toString) ++ extraConfs
     val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     try {
@@ -5516,14 +5347,14 @@ object Queries {
   private def qStreamFeatures(s: SparkSession, dir: String): DataFrame = {
     val landing = docLandingCache.computeIfAbsent(stagedKey(dir, "documents"), _ => {
       val d = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/doc_landing_${java.util.UUID.randomUUID()}")
+        Tables.scratchPath(s"doc_landing_${java.util.UUID.randomUUID()}"))
       java.nio.file.Files.createDirectories(d)
       stageParquet(java.nio.file.Paths.get(s"$dir/documents.parquet"), d,
         "documents")
       d.toString
     })
     val pub = featurePubCache.computeIfAbsent(stagedKey(dir, "documents"), _ =>
-      s"/root/repo/target/tmp/feature_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"feature_pub_${java.util.UUID.randomUUID()}"))
     val q = Streaming.documentsStream(s, landing)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -5566,7 +5397,7 @@ object Queries {
     // memory sink would collect them all driver-side — the
     // q_stream_pairs sf10 failure mode)
     val pub = dedupPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      s"/root/repo/target/tmp/dedup_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"dedup_pub_${java.util.UUID.randomUUID()}"))
     drainStream(s, 8, "q_stream_dedup") {
       Streaming.dedupStream(
           Streaming.eventsStream(s, landing)
@@ -5625,7 +5456,7 @@ object Queries {
     // q_stream_pairs sf10 failure mode); the per-type rollup aggregates
     // from the published files executor-side
     val pub = enrichPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      s"/root/repo/target/tmp/enrich_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"enrich_pub_${java.util.UUID.randomUUID()}"))
     val profile = Tables.events(s, dir)
       .select(col("event_type"),
         floor(col("value") * 1000).cast("long").as("milli"))
@@ -5721,7 +5552,7 @@ object Queries {
   private def qStreamUpsert(s: SparkSession, dir: String): DataFrame = {
     val landing = upsertLandingCache.computeIfAbsent(stagedKey(dir, "events"), _ => {
       val d = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/upsert_landing_${java.util.UUID.randomUUID()}")
+        Tables.scratchPath(s"upsert_landing_${java.util.UUID.randomUUID()}"))
       java.nio.file.Files.createDirectories(d)
       val ev = Tables.events(s, dir)
       val t0 = ev.agg(min("event_type")).head().getString(0)
@@ -5735,7 +5566,7 @@ object Queries {
       d.toString
     })
     val pub = upsertPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      s"/root/repo/target/tmp/upsert_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"upsert_pub_${java.util.UUID.randomUUID()}"))
     drainStream(s, 8, "q_stream_upsert") {
       Streaming.eventsStream(s, landing, maxFilesPerTrigger = Some(1))
         .groupBy("event_type")
@@ -5766,7 +5597,7 @@ object Queries {
   private def qStreamPairs(s: SparkSession, dir: String): DataFrame = {
     val landing = eventsLanding(dir)
     val pub = pairsPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      s"/root/repo/target/tmp/pairs_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"pairs_pub_${java.util.UUID.randomUUID()}"))
     val ev = Streaming.eventsStream(s, landing).withWatermark("ts", "1 hour")
     // inner stream-stream joins emit each pair in the micro-batch where
     // both rows arrive (no watermark holdback), so the trailing no-data
@@ -5809,26 +5640,6 @@ object Queries {
   private val embLandingCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** Trigger granularity for the streamed index/codes maintenance rows:
-    * unset = drain everything available in one AvailableNow batch (the
-    * bulk-catch-up shape); set SPARK_GRAFT_STREAM_MAX_FILES=n to cap
-    * each micro-batch at n landing files (the steady-state file-arrival
-    * shape). Exposed as an env knob so scale sweeps can MEASURE the
-    * per-micro-batch overhead instead of arguing it (VERDICT r9 #7) —
-    * the result set is identical either way (stateless per-row
-    * projections; the publish sink is idempotent per batch id). */
-  private def streamMaxFiles: Option[Int] =
-    sys.env.get("SPARK_GRAFT_STREAM_MAX_FILES").map { v =>
-      val n = try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_MAX_FILES must be a positive integer " +
-            s"(files per micro-batch), got '$v'")
-      }
-      require(n > 0,
-        s"SPARK_GRAFT_STREAM_MAX_FILES must be positive, got $n")
-      n
-    }
-
   /** Streamed ANN index maintenance executed FOR REAL under the gate:
     * the embeddings landing-dir stream bucketed through the SAME
     * stateless per-row sign-LSH assignment the batch index build uses
@@ -5844,7 +5655,7 @@ object Queries {
   private def qStreamIndex(s: SparkSession, dir: String): DataFrame = {
     val landing = embLandingCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
       val d = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/emb_landing_${java.util.UUID.randomUUID()}")
+        Tables.scratchPath(s"emb_landing_${java.util.UUID.randomUUID()}"))
       java.nio.file.Files.createDirectories(d)
       stageParquet(java.nio.file.Paths.get(s"$dir/embeddings.parquet"), d,
         "embeddings")
@@ -5855,10 +5666,10 @@ object Queries {
     // publishing IS the operator's real contract (a streamed index is
     // served from storage, not from driver memory)
     val pub = streamIndexPubCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ =>
-      s"/root/repo/target/tmp/stream_index_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"stream_index_pub_${java.util.UUID.randomUUID()}"))
     drainStream(s, 8, "q_stream_index") {
       VectorSearch.lshBucketTable(
-          Streaming.embeddingsStream(s, landing, streamMaxFiles),
+          Streaming.embeddingsStream(s, landing),
           "embedding", "vec_id",
           Metric.Cosine, EmbeddingDim, bits = LshMultiBits, bands = IndexBands)
         .select(col("vec_id"), col("band").cast("long").as("band"), col("bucket"))
@@ -5896,7 +5707,7 @@ object Queries {
     * under live ingestion. */
   private def qStreamCompact(s: SparkSession, dir: String): DataFrame = {
     val base = streamCompactCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
-      val b = s"/root/repo/target/tmp/stream_compact_${java.util.UUID.randomUUID()}"
+      val b = Tables.scratchPath(s"stream_compact_${java.util.UUID.randomUUID()}")
       Tables.embeddings(s, dir).repartition(3)
         .write.parquet(s"$b/landing")
       val frag = s"$b/frag"
@@ -5945,7 +5756,7 @@ object Queries {
       VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, PqKsub, Metric.Cosine))
     val landing = embLandingCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
       val d = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/emb_landing_${java.util.UUID.randomUUID()}")
+        Tables.scratchPath(s"emb_landing_${java.util.UUID.randomUUID()}"))
       java.nio.file.Files.createDirectories(d)
       stageParquet(java.nio.file.Paths.get(s"$dir/embeddings.parquet"), d,
         "embeddings")
@@ -5954,10 +5765,10 @@ object Queries {
     // publish sink, not memory: codes are corpus-scale, and published
     // parquet IS the PQ code table's serving layout
     val pub = streamCodesPubCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ =>
-      s"/root/repo/target/tmp/stream_codes_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"stream_codes_pub_${java.util.UUID.randomUUID()}"))
     drainStream(s, 8, "q_stream_codes") {
       VectorSearch.pqEncode(
-          Streaming.embeddingsStream(s, landing, streamMaxFiles),
+          Streaming.embeddingsStream(s, landing),
           "embedding", "vec_id",
           cbs, Metric.Cosine)
         .writeStream
@@ -6031,7 +5842,7 @@ object Queries {
   private def qStreamSessions(s: SparkSession, dir: String): DataFrame = {
     val landing = sessLandingCache.computeIfAbsent(stagedKey(dir, "events"), _ => {
       val d = java.nio.file.Paths.get(
-        s"/root/repo/target/tmp/sess_landing_${java.util.UUID.randomUUID()}")
+        Tables.scratchPath(s"sess_landing_${java.util.UUID.randomUUID()}"))
       java.nio.file.Files.createDirectories(d)
       val srcPath = java.nio.file.Paths.get(s"$dir/events.parquet")
       if (!java.nio.file.Files.isDirectory(srcPath))
@@ -6133,7 +5944,7 @@ object Queries {
     // publish sink, not memory: closed sessions are corpus-scale (the
     // q_stream_pairs sf10 failure mode)
     val pub = sessionsPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      s"/root/repo/target/tmp/sessions_pub_${java.util.UUID.randomUUID()}")
+      Tables.scratchPath(s"sessions_pub_${java.util.UUID.randomUUID()}"))
     drainStream(s, 8, "q_stream_sessions") {
       Streaming.closedSessions(
           Streaming.eventsStream(s, landing, maxFilesPerTrigger = Some(1)),
@@ -6831,7 +6642,7 @@ object Queries {
     * sidecar), load it back, report scalar checksums + loaded config. */
   private def qSaveLoad(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/root/repo/target/tmp/q_save_load_$safe"
+    val path = Tables.scratchPath(s"q_save_load_$safe")
     val vt = VectorTable(
       Tables.embeddings(s, dir),
       VectorTableConfig(dim = EmbeddingDim, metric = "cosine"))
@@ -6866,7 +6677,7 @@ object Queries {
     * the generation split relationally from the original table. */
   private def qSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = s"/root/repo/target/tmp/q_schema_evo_$safe"
+    val root = Tables.scratchPath(s"q_schema_evo_$safe")
     val orders = Tables.orders(s, dir)
     orders.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_custkey", "o_orderstatus")
@@ -7049,8 +6860,8 @@ object Queries {
        |ORDER BY vec_id, pos""".stripMargin
   }
 
-  private[graft] val SplitSalt = "exp1"
-  private[graft] val SplitWeights = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
+  private val SplitSalt = "exp1"
+  private val SplitWeights = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
 
   /** Deterministic train/val/test split (training-pipeline op): assign
     * every document by `md5(salt:id)` bucket — reproducible across runs,
@@ -7804,7 +7615,7 @@ object Queries {
     * per-row digests cannot overflow BIGINT). */
   private def qSourceRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"/root/repo/target/tmp/q_source_rt_$safe"
+    val base = Tables.scratchPath(s"q_source_rt_$safe")
     val docs = Tables.documents(s, dir)
     Sources.writeJsonl(docs, s"$base/jsonl")
     Sources.writeCsv(docs, s"$base/csv")
@@ -7845,7 +7656,7 @@ object Queries {
     * the unpartitioned table). */
   private def qPartitionPrune(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val path = s"/root/repo/target/tmp/q_part_prune_$safe"
+    val path = Tables.scratchPath(s"q_part_prune_$safe")
     Tables.documents(s, dir).write.mode("overwrite")
       .partitionBy("lang").parquet(path)
     s.read.parquet(path)
@@ -7879,7 +7690,7 @@ object Queries {
     * file counts flips it and fails the hash gate). */
   private def qCompaction(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"/root/repo/target/tmp/q_compaction_$safe"
+    val base = Tables.scratchPath(s"q_compaction_$safe")
     Tables.documents(s, dir).repartition(64)
       .write.mode("overwrite").parquet(s"$base/small")
     Compaction.compact(s, s"$base/small", s"$base/compact")

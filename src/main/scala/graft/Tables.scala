@@ -10,6 +10,13 @@ import org.apache.spark.sql.functions._
   * double-precision, matching the DuckDB oracle's `::DOUBLE[]` cast.
   */
 object Tables {
+  /** Absolute path of `target/tmp/<name>` under the working directory —
+    * the one scratch root for staged landing dirs, published sinks and
+    * save/load roundtrips (the same working-directory convention as
+    * Bench's `target/bench_last.json`). */
+  def scratchPath(name: String): String =
+    java.nio.file.Paths.get("target", "tmp", name).toAbsolutePath.toString
+
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

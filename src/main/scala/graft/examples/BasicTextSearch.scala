@@ -57,7 +57,7 @@ object BasicTextSearch {
         |ORDER BY score DESC, vec_id LIMIT 5""".stripMargin).show()
 
     // 6. persistence roundtrip
-    val path = "/root/repo/target/tmp/example_save"
+    val path = Tables.scratchPath("example_save")
     table.save(path)
     val reloaded = VectorTable.load(spark, path)
     println(s"== reloaded ${reloaded.df.count()} rows, config ${reloaded.config} ==")

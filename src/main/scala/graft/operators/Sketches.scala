@@ -300,10 +300,14 @@ object Sketches {
     * a bijection and fingerprints never cross documents. ZERO exchanges
     * where the r1–r16 shape had two (window hash + distinct hash); the
     * oracle mirrors the window form of the same math.
-    * Output: (idCol, fp_pos, fp_hash) distinct, the winnowed sketch. */
+    * Output: (idCol, fp_pos, fp_hash) distinct, the winnowed sketch.
+    * Contract: `w ≥ 2` (enforced; `IllegalArgumentException` otherwise). */
   def fingerprint(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, w: Int = 8): DataFrame = {
+    // the sliding min below is a `least` over w lookups, and `least`
+    // needs at least two arguments — w = 1 would fail at analysis
+    require(w >= 2, s"fingerprint window w must be >= 2, got $w")
     val text = col(textCol)
     // hm_i·R + (R−1−i) for 1-based gram position i — one md5 per
     // positioned gram, exactly the window form's hash count
@@ -323,8 +327,8 @@ object Sketches {
     // array_min(slice(...)): slice allocates a w-element array per gram
     // (r17's "not yet optimized #6"); try_element_at returns null past
     // the array end — exactly the window frame's clamp — and least
-    // ignores nulls, so the semantics are bit-identical (the w ≥ 1
-    // offset-0 element is always present). Measured at sf10 (r18,
+    // ignores nulls, so the semantics are bit-identical (the offset-0
+    // element is always present). Measured at sf10 (r18,
     // dedicated idle medians): 32.7s → 17.8s on q_fingerprint — the
     // per-gram array allocation was ~half the sketch's runtime.
     def slidingMin(i: Column): Column =

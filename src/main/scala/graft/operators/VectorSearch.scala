@@ -1021,7 +1021,12 @@ object VectorSearch {
     * buckets are the crowded, least-selective regions, so the measured
     * recall stays high — certified through the
     * q_ann_recall_multiprobe_scaled oracle row, same treatment as the
-    * multiband cap's recall rows. */
+    * multiband cap's recall rows.
+    *
+    * Contract: `idCol` must be unique on BOTH sides. The candidate pairs
+    * are unique by construction only per (query row, corpus row), and no
+    * `distinct` runs on them, so a duplicated id yields duplicate
+    * `(query_id, neighbor_id)` rows in the output. */
   def multiProbeKnnJoin(
       queries: DataFrame,
       data: DataFrame,

@@ -30,9 +30,9 @@ private[plans] object IntervalBuckets {
         Some(Literal(1L, LongType)), Some(tz)),
       Literal.create(null, ArrayType(LongType, containsNull = false)))
 
-  // diagnostic A/B knobs (the SPARK_GRAFT_STREAM_MAX_FILES precedent):
-  // scale sweeps measure a prune's effect on the SAME fixture instead
-  // of arguing it; never set in production. The sys.props fallback
+  // diagnostic A/B knobs: scale sweeps measure a prune's effect on the
+  // SAME fixture instead of arguing it; never set in production. The
+  // sys.props fallback
   // exists only so in-JVM specs can exercise both paths (env is frozen
   // at JVM start) — it is honored ONLY when the JVM was launched with
   // -Dgraft.test.knobs=1 (build.sbt sets it for the forked test JVM),

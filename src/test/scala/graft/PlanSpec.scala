@@ -355,10 +355,10 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), s"re-attach no longer broadcast:\n$p")
     // formatted-mode SMJ details print their equi-keys as
     // "Left/Right keys [n]: [col#id, ...]" — a sort-merge re-attach
-    // would list a_id/b_id there
+    // would list a_id/b_id there, in any key position
     val smjBlocks = p.split(raw"\(\d+\) ").filter(_.startsWith("SortMergeJoin"))
     val onReattachKeys = smjBlocks.filter(b =>
-      raw"keys \[\d+\]: \[(a_id|b_id)#".r.findFirstIn(b).isDefined)
+      raw"keys \[\d+\]: \[[^\]]*\b(a_id|b_id)#".r.findFirstIn(b).isDefined)
     assert(onReattachKeys.isEmpty,
       s"candidates sort-merge-joined against the vector table:\n" +
         s"${onReattachKeys.mkString("\n---\n")}")

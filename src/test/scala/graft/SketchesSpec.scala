@@ -223,6 +223,12 @@ class SketchesSpec extends SparkSpec {
     assert(fp.collect().map(_.toSeq).toSet == fp2.collect().map(_.toSeq).toSet)
   }
 
+  test("fingerprint rejects a window w < 2 up front") {
+    intercept[IllegalArgumentException] {
+      Sketches.fingerprint(corpus, "doc_id", "text", k = 8, w = 1)
+    }
+  }
+
   test("fingerprintPairs surfaces the near-dup pair and only it") {
     // docs 1 and 2 share long substrings (one char differs); 3 is unrelated
     val pairs = Sketches.fingerprintPairs(corpus, "doc_id", "text",
@@ -272,7 +278,7 @@ class SketchesSpec extends SparkSpec {
 
   test("sketch rows survive a parquet round-trip and still merge exactly") {
     val docs = Tables.documents(spark, Sf0001)
-    val path = "/root/repo/target/tmp/sketch_rt"
+    val path = Tables.scratchPath("sketch_rt")
     Sketches.sketchPerSub(docs, "lang", "source", "text")
       .write.mode("overwrite").parquet(path)
     val reloaded = spark.read.parquet(path)

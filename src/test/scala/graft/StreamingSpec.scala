@@ -567,7 +567,7 @@ class StreamingSpec extends SparkSpec {
   test("in-stream compaction: serving read == batch rebuild, snapshot versioned, ingestion uninterrupted") {
     import graft.operators.VectorSearch
     import graft.functions.Metric
-    val b = s"/root/repo/target/tmp/spec_stream_compact_${java.util.UUID.randomUUID()}"
+    val b = Tables.scratchPath(s"spec_stream_compact_${java.util.UUID.randomUUID()}")
     val emb = Tables.embeddings(spark, Sf0001).select("vec_id", "embedding", "label")
     emb.repartition(3).write.parquet(s"$b/landing")
     val stream = VectorSearch.lshBucketTable(

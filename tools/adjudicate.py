@@ -21,7 +21,7 @@ Usage:
       [--previous BENCH_SCALE10_r15.json] --out BENCH_SCALE10_r16.json
 
 The adjudication re-runs inherit the caller's env (SPARK_GRAFT_SF_DIR,
-scale knobs, driver mem) and override only SPARK_GRAFT_BENCH_ONLY /
+SPARK_GRAFT_CPUS, driver mem) and override only SPARK_GRAFT_BENCH_ONLY /
 SPARK_GRAFT_BENCH_RUNS, so each median measures the exact sweep config.
 Each re-run waits for the machine to be idle first (1-min load average
 <= --idle-max) -- the whole point is an uncontended number.

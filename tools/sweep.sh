@@ -3,10 +3,12 @@
 # machine-made idle-median adjudication (tools/adjudicate.py).
 #
 # Usage: tools/sweep.sh <out.json> [previous_idle_record.json]
-# Env:   the usual graft.Bench knobs (SPARK_GRAFT_SF_DIR,
-#        SPARK_GRAFT_BENCH_*, SPARK_DRIVER_MEM,
-#        SPARK_GRAFT_DRAIN_TIMEOUT_MS, ...), plus
-#        SWEEP_MIN_FREE_GB (default 40) and SWEEP_IDLE_MAX (default 4.0).
+# Env:   the graft.Bench settings (SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
+#        SPARK_GRAFT_BENCH_RUNS, SPARK_GRAFT_BENCH_ONLY), SPARK_DRIVER_MEM
+#        and SPARK_GRAFT_DRAIN_TIMEOUT_MS, plus SWEEP_MIN_FREE_GB
+#        (default 40) and SWEEP_IDLE_MAX (default 4.0). Bench runs the
+#        declared rows only; scale sweeps measure the declared
+#        *_scaled / *_capped twins under their own names.
 #
 # Pre-flight (both are MIGRATION rules, both measured lessons):
 #  1. DISK HYGIENE -- the r15 sweep lost one in-sweep row to ENOSPC from
