@@ -1546,125 +1546,7 @@ object Queries {
   private val RecallBits = 4
   private val RecallBands = 16
 
-  /** ANN recall evaluation as a declared row ([[VectorSearch.knnJoin]]
-    * vs [[VectorSearch.multibandKnnJoin]]): per sampled query, how many
-    * of the exact top-[[KnnJoinK]] cosine neighbors the multiband LSH at
-    * its pinned HNSW-grade operating point ([[RecallBits]]-bit ×
-    * [[RecallBands]]-band) retrieves — `recall_milli = (hits·1000) div k`. This certifies
-    * the recall numbers the LshSpec pins through the DuckDB oracle gate
-    * itself. Production shape: recall is estimated on a QUERY SAMPLE
-    * (here every [[RecallSampleMod]]th vector), so the exact side is
-    * sample×corpus, never corpus² — the eval stays affordable at any
-    * scale while the ANN side is the serving plan unchanged. */
-  private def qAnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") % RecallSampleMod === 0)
-    val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, excludeSelf = true,
-      // sample x corpus ground truth: broadcast the bounded sample so the
-      // corpus streams once (no per-query-partition recompute, no corpus
-      // movement) - the only orientation that survives 100 TB
-      broadcastQueries = true)
-      .select(col("query_id"), col("neighbor_id"))
-    val ann = VectorSearch.multibandKnnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = RecallBits, bands = RecallBands,
-      // hints: plan-choice only (re-attach broadcast decision); the
-      // query side is ~N/mod by construction of the % filter
-      dataCountHint = Some(embCount(s, dir)),
-      queriesCountHint = Some(math.max(1L, embCount(s, dir) / RecallSampleMod)))
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = exact.join(ann, Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("__h"))
-    exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("query_id"), "left")
-      .withColumn("n_hits", coalesce(col("__h"), lit(0L)))
-      .withColumn("recall_milli", expr("(n_hits * 1000) div n_exact"))
-      .select("query_id", "n_exact", "n_hits", "recall_milli")
-      .orderBy("query_id")
-  }
-
-  private val qAnnRecallSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val bandBranches = (0 until RecallBands).map { band =>
-      s"SELECT vec_id, nemb, $band AS band, " +
-        s"${Oracle.lshBucketBand("nemb", EmbeddingDim, RecallBits, band)} AS bucket FROM n"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |q AS (SELECT * FROM n WHERE vec_id % $RecallSampleMod = 0),
-       |ex AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY a.vec_id
-       |                            ORDER BY $score DESC, b.vec_id ASC) AS rank
-       |  FROM q a CROSS JOIN n b WHERE a.vec_id <> b.vec_id),
-       |exk AS (SELECT query_id, neighbor_id FROM ex WHERE rank <= $KnnJoinK),
-       |nb AS (
-       |  $bandBranches),
-       |qb AS (SELECT * FROM nb WHERE vec_id % $RecallSampleMod = 0),
-       |p AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, max($score) AS score
-       |  FROM qb a JOIN nb b ON a.band = b.band AND a.bucket = b.bucket
-       |                     AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
-       |annk AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |           ROW_NUMBER() OVER (PARTITION BY query_id
-       |                              ORDER BY score DESC, neighbor_id ASC) AS rank
-       |    FROM p) WHERE rank <= $KnnJoinK),
-       |h AS (
-       |  SELECT query_id, count(*) AS n_hits
-       |  FROM exk JOIN annk USING (query_id, neighbor_id) GROUP BY 1)
-       |SELECT e.query_id,
-       |       CAST(count(*) AS BIGINT) AS n_exact,
-       |       CAST(COALESCE(max(h.n_hits), 0) AS BIGINT) AS n_hits,
-       |       CAST((COALESCE(max(h.n_hits), 0) * 1000) // count(*) AS BIGINT)
-       |         AS recall_milli
-       |FROM exk e LEFT JOIN h USING (query_id)
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
-  }
-
-  /** Multi-band OR LSH — the recall-amplified ANN path: 8 independent
-    * hyperplane families, candidates unioned across bands, deduped,
-    * ranked once. Recall rises as 1−(1−p^bits)^bands at cost linear in
-    * bands; the per-band join is the same shuffle-by-bucket shape as
-    * [[qAnnLsh]] (one exchange keyed (band, bucket) serves all bands). */
-  private def qAnnLshMulti(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.multibandKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = LshMultiBits, bands = LshMultiBands,
-      dataCountHint = Some(embCount(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  private val qAnnLshMultiSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val bandBranches = (0 until LshMultiBands).map { band =>
-      s"SELECT vec_id, nemb, $band AS band, " +
-        s"${Oracle.lshBucketBand("nemb", EmbeddingDim, LshMultiBits, band)} AS bucket FROM n"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |nb AS (
-       |  $bandBranches),
-       |p AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, max($score) AS score
-       |  FROM nb a JOIN nb b ON a.band = b.band AND a.bucket = b.bucket
-       |                     AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Bucket-cap factor for [[qAnnCapped]] — the serving default
+  /** Bucket-cap factor of the capped serving rows — the serving default
     * (MIGRATION.md "Bucket caps"): corpus-side (band, bucket)s denser
     * than 4× the mean occupancy are dropped before the join. 4× keeps
     * every organically-sized bucket in the fixtures (sf0.01: mean 2.35,
@@ -1675,69 +1557,17 @@ object Queries {
     * is RELATIVE and self-sizes. */
   private val AnnCapFactor = 4.0
 
-  /** Tighter factor for [[qAnnRecallCapped]]: at the recall operating
+  /** Tighter factor for q_ann_recall_capped: at the recall operating
     * point (4-bit × 16-band) the measured occupancy is mean 31.25 at
     * both fixture scales (the embeddings table is 500 rows in each),
-    * max 72 at sf0.01 (this row) and max 71 at sf0.001 (LshSpec), so
+    * max 72 at sf0.01 (that row) and max 71 at sf0.001 (LshSpec), so
     * 4× (cap 125) would drop NOTHING and certify nothing — 2×
     * (cap 62.5) drops the measured 63–72-row tail while the dropped
     * vectors keep their other 15 bands, which is exactly the
     * graceful-decay claim the row exists to certify. */
   private val RecallCapFactor = 2.0
 
-  /** The capped multiband ANN serving row —
-    * [[VectorSearch.multibandKnnJoin]] with its production bucket-size
-    * cap engaged ([[AnnCapFactor]]× mean occupancy, whole-bucket drop),
-    * certifying the cap semantics through the hash gate the way
-    * [[qNeardupCapped]] certifies the text cap: the oracle replays
-    * bucket sizing, the mean threshold, the drop, and the
-    * post-cap candidate/rank pipeline relationally. This is the shape
-    * the 100 TB sweep runs (`q_ann_lsh_multi_capped`): sign-LSH
-    * occupancy skew makes the uncapped join's hottest bucket quadratic
-    * on its own (r9 sweep: 427s, 19% of the whole sweep, on one
-    * 17×-mean bucket). */
-  private def qAnnCapped(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.multibandKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = LshMultiBits, bands = LshMultiBands,
-      maxBucketFactor = Some(AnnCapFactor),
-      dataCountHint = Some(embCount(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  private val qAnnCappedSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val bandBranches = (0 until LshMultiBands).map { band =>
-      s"SELECT vec_id, nemb, $band AS band, " +
-        s"${Oracle.lshBucketBand("nemb", EmbeddingDim, LshMultiBits, band)} AS bucket FROM n"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |nb AS (
-       |  $bandBranches),
-       |bs AS (SELECT band, bucket, count(*) AS n FROM nb GROUP BY 1, 2),
-       |thr AS (SELECT avg(n) AS meanb FROM bs),
-       |kept AS (
-       |  SELECT nb.vec_id, nb.nemb, nb.band, nb.bucket
-       |  FROM nb JOIN bs USING (band, bucket) CROSS JOIN thr
-       |  WHERE CAST(bs.n AS DOUBLE) <= $AnnCapFactor * thr.meanb),
-       |p AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, max($score) AS score
-       |  FROM nb a JOIN kept b ON a.band = b.band AND a.bucket = b.bucket
-       |                       AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Bands for [[qAnnCappedScaled]] — fixed while `bits` scales, per
+  /** Bands of the scaled capped rows — fixed while `bits` scales, per
     * MIGRATION's own rule (size `bits` from N FIRST so per-bucket work
     * stays bounded, then buy recall with `bands`). */
   private val ScaledCapBands = 8
@@ -1747,234 +1577,114 @@ object Queries {
     * declared recall row `q_ann_recall_capped_scaled_b4`. */
   private val ScaledCapBandsB4 = 4
 
+  // ------------------------------------------- count-derived sizing rules ---
+  //
+  // Each rule is defined once in Scala and once as a DuckDB SQL scalar
+  // over `embeddings`, so a scaled row passes the same size to its
+  // builder and to its oracle. ScaledSizingSpec checks the two forms
+  // agree over the whole Long range, and its "fixture anchors" test
+  // pins the sizes every fixture and scale gate hits.
+
   /** MIGRATION's serving-config rule `bits ≈ log2(N / target_bucket_rows)`
-    * (target 50 rows/bucket) applied at RUNTIME from the corpus count —
-    * pure integer math (`ceil(log2(m)) = bitLength(m − 1)` for m ≥ 1) so
-    * the DuckDB oracle derives the identical value via
-    * `length(bin(m − 1))` with zero cross-engine float risk. CEIL, not
-    * floor: rounding bits DOWN doubles mean bucket occupancy (the r11
-    * sf10 gate measured the floor form at bits=11 → mean bucket 98 →
-    * ~1.6·10⁸ candidate pairs whose vector re-attach exchange overran
-    * the gate machine's disk), while rounding UP halves it — the cheap
-    * side of the trade, and the side the r9/r10 sweeps actually ran
-    * (bits=12 at N=200k). Clamped to [1, 20]. */
+    * (target 50 rows/bucket) — pure integer math (`ceil(log2(m)) =
+    * bitLength(m − 1)` for m ≥ 1), so DuckDB derives the identical value
+    * via `length(bin(m − 1))` with zero cross-engine float risk. CEIL,
+    * not floor: rounding bits DOWN doubles mean bucket occupancy (the
+    * r11 sf10 gate measured the floor form at bits=11 → mean bucket 98
+    * → ~1.6·10⁸ candidate pairs whose vector re-attach exchange overran
+    * the gate machine's disk), while rounding UP halves it. Clamped to
+    * [1, 20]. */
   private[graft] def scaledLshBits(n: Long): Int = {
     val m = math.max(1L, n / 50)
     math.max(1, math.min(20, 64 - java.lang.Long.numberOfLeadingZeros(m - 1)))
   }
 
-  /** The capped multiband serving join at the SCALED operating point —
-    * VERDICT r10 #4: every other ANN row pins fixture constants, so the
-    * sweep's scaled configs (`bits` from corpus size) were never
-    * hash-certified at any scale. Here `bits` is computed from
-    * `count(embeddings)` by the MIGRATION rule IN BOTH ENGINES (the
-    * oracle unrolls band × bit hyperplane arithmetic with `bits` as a
-    * runtime scalar — `unnest(range(...))` over a count subquery — the
-    * closed-form weight `((li·jj·7919) mod 193)/193 − 0.5` makes that
-    * possible), so the SAME declared row certifies bits=4 at sf0.01
-    * (N=500), bits=9 at sf1 (N≈20k), and bits=12 at sf10 (N=200k)
-    * without touching a constant. One count job sizes the index —
-    * exactly the sizing pass a production deployment runs. */
-  private def qAnnCappedScaled(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val n = embCount(s, dir)
-    val bits = scaledLshBits(n)
-    VectorSearch.multibandKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = bits, bands = ScaledCapBands,
-      maxBucketFactor = Some(AnnCapFactor),
-      dataCountHint = Some(n))
-      .orderBy("query_id", "rank")
-  }
+  private val ScaledLshBitsSql =
+    "(SELECT GREATEST(1, LEAST(20, length(bin(GREATEST(1, count(*) // 50) - 1)))) FROM embeddings)"
 
-  private val qAnnCappedScaledSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    // band × bit unrolled as DATA (not SQL text): plane index
-    // jj = band·bits + j + 1 with `bits` a runtime scalar from params —
-    // the same integer-weight formula Oracle.lshBucketBand burns into
-    // literals when bits is compile-time
-    val w = "(CAST((li * (b.band * pp.bits + j.j + 1) * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
-    val pr = Oracle.foldSum(
-      s"list_transform(range(1, ${EmbeddingDim + 1}), li -> n.nemb[li] * $w)")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(1, LEAST(20,
-       |           length(bin(GREATEST(1, count(*) // 50) - 1)))) AS bits
-       |  FROM embeddings),
-       |bx AS (SELECT unnest(range(0, $ScaledCapBands)) AS band),
-       |jx AS (SELECT unnest(range(0, (SELECT bits FROM params))) AS j),
-       |proj AS (
-       |  SELECT n.vec_id, b.band, j.j, $pr AS pr
-       |  FROM n, params pp, bx b, jx j),
-       |buck AS (
-       |  SELECT vec_id, band,
-       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM proj GROUP BY 1, 2),
-       |nb AS (
-       |  SELECT bu.vec_id, n.nemb, bu.band, bu.bucket
-       |  FROM buck bu JOIN n ON bu.vec_id = n.vec_id),
-       |bs AS (SELECT band, bucket, count(*) AS n FROM nb GROUP BY 1, 2),
-       |thr AS (SELECT avg(n) AS meanb FROM bs),
-       |kept AS (
-       |  SELECT nb.vec_id, nb.nemb, nb.band, nb.bucket
-       |  FROM nb JOIN bs USING (band, bucket) CROSS JOIN thr
-       |  WHERE CAST(bs.n AS DOUBLE) <= $AnnCapFactor * thr.meanb),
-       |p AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, max($score) AS score
-       |  FROM nb a JOIN kept b ON a.band = b.band AND a.bucket = b.bucket
-       |                       AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
-  }
+  /** [[scaledLshBits]] floored at 2: multiprobe's two flips need at
+    * least two hyperplanes. */
+  private def scaledProbeBits(n: Long): Int = math.max(2, scaledLshBits(n))
 
-  /** Fixed-count query-sample anchor for the scaled recall rows:
+  private val ScaledProbeBitsSql = s"GREATEST(2, $ScaledLshBitsSql)"
+
+  /** Fixed-count query-sample anchor for the scaled eval rows:
     * `mod = max(20, N/1000)` keeps ~1000 probes at any corpus size.
     * Recall is a STATISTIC — its precision is set by the sample COUNT,
     * not the sample fraction, so the eval side must not grow with the
     * corpus (a fixed-mod sample like [[RecallSampleMod]]'s N/20 makes
-    * the exact ground-truth side Θ(N²/20) — the exclusion class that
-    * kept the fixture recall rows out of the sf10 gate). */
+    * the exact ground-truth side Θ(N²/20)). */
   private[graft] def scaledEvalMod(n: Long): Long = math.max(20L, n / 1000L)
 
-  /** Recall certificate of [[qAnnCappedScaled]]'s exact serving config
-    * at the SCALED operating point — closing the recall family's sf10
-    * gate hole (VERDICT r12 #1 nominated the fixture-constant
-    * `q_ann_recall_capped`, but its bits=4 pins mean bucket occupancy
-    * at N/16, so the oracle replay does Θ(N²/16) interpreted 64-dim
-    * dots on the ANN side ALONE — ≈4·10⁹ at sf10, the same
-    * quadratic-by-fixture-constant class as the other exclusions).
-    * Here everything self-sizes from `count(embeddings)` in BOTH
-    * engines: `bits` by [[scaledLshBits]] (the q_ann_capped_scaled
-    * rule), the query sample by [[scaledEvalMod]] (~1000 probes, fixed
-    * COUNT), bands/cap the same [[ScaledCapBands]]/[[AnnCapFactor]]
-    * the serving row pins — so the SAME declared row certifies recall
-    * of the certified serving config at sf0.01 (bits=6, 100 probes),
-    * sf1 (bits=9), and sf10 (bits=12, 1000 probes): exact side 2·10⁸
-    * dots, ANN side ~10⁶ — both oracle-affordable by construction.
-    * The oracle's exact side computes the score in a projection CTE so
-    * the per-query top-k window carries 24-byte rows, never vectors
-    * (the IVF skinny-window precedent). */
-  private def qAnnRecallCappedScaled(s: SparkSession, dir: String): DataFrame = {
-    val n = embCount(s, dir)
-    // bands passed EXPLICITLY as ScaledCapBands — the constant the
-    // oracle SQL burns in — so the declared row cannot desynchronize
-    // from its oracle if LshMultiBands is ever retuned (ADVICE r13)
-    annRecallCappedScaled(s, dir, scaledEvalMod(n), scaledLshBits(n),
-      AnnCapFactor, bands = ScaledCapBands)
-  }
+  private val ScaledEvalModSql = "(SELECT GREATEST(20, count(*) // 1000) FROM embeddings)"
 
-  /** Oracle SQL for the scaled capped-recall row, parameterized by the
-    * band count so the bands-CURVE points (8 = the declared serving
-    * config, 4 = the measured cheap point) replay the identical eval
-    * from one builder — the two certificates cannot drift apart
-    * structurally (VERDICT r15 #1). */
-  private def annRecallCappedScaledSqlFor(bands: Int): String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val w = "(CAST((li * (b.band * pp.bits + j.j + 1) * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
-    val pr = Oracle.foldSum(
-      s"list_transform(range(1, ${EmbeddingDim + 1}), li -> n.nemb[li] * $w)")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(1, LEAST(20,
-       |           length(bin(GREATEST(1, count(*) // 50) - 1)))) AS bits,
-       |         GREATEST(20, count(*) // 1000) AS mod
-       |  FROM embeddings),
-       |q AS (SELECT * FROM n WHERE vec_id % (SELECT mod FROM params) = 0),
-       |exs AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, $score AS s
-       |  FROM q a CROSS JOIN n b WHERE a.vec_id <> b.vec_id),
-       |ex AS (
-       |  SELECT query_id, neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY s DESC, neighbor_id ASC) AS rank
-       |  FROM exs),
-       |exk AS (SELECT query_id, neighbor_id FROM ex WHERE rank <= $KnnJoinK),
-       |bx AS (SELECT unnest(range(0, $bands)) AS band),
-       |jx AS (SELECT unnest(range(0, (SELECT bits FROM params))) AS j),
-       |proj AS (
-       |  SELECT n.vec_id, b.band, j.j, $pr AS pr
-       |  FROM n, params pp, bx b, jx j),
-       |buck AS (
-       |  SELECT vec_id, band,
-       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM proj GROUP BY 1, 2),
-       |nb AS (
-       |  SELECT bu.vec_id, n.nemb, bu.band, bu.bucket
-       |  FROM buck bu JOIN n ON bu.vec_id = n.vec_id),
-       |bs AS (SELECT band, bucket, count(*) AS n FROM nb GROUP BY 1, 2),
-       |thr AS (SELECT avg(n) AS meanb FROM bs),
-       |kept AS (
-       |  SELECT nb.vec_id, nb.nemb, nb.band, nb.bucket
-       |  FROM nb JOIN bs USING (band, bucket) CROSS JOIN thr
-       |  WHERE CAST(bs.n AS DOUBLE) <= $AnnCapFactor * thr.meanb),
-       |qb AS (SELECT * FROM nb WHERE vec_id % (SELECT mod FROM params) = 0),
-       |p AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, max($score) AS score
-       |  FROM qb a JOIN kept b ON a.band = b.band AND a.bucket = b.bucket
-       |                       AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
-       |annk AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |           ROW_NUMBER() OVER (PARTITION BY query_id
-       |                              ORDER BY score DESC, neighbor_id ASC) AS rank
-       |    FROM p) WHERE rank <= $KnnJoinK),
-       |h AS (
-       |  SELECT query_id, count(*) AS n_hits
-       |  FROM exk JOIN annk USING (query_id, neighbor_id) GROUP BY 1)
-       |SELECT e.query_id,
-       |       CAST(count(*) AS BIGINT) AS n_exact,
-       |       CAST(COALESCE(max(h.n_hits), 0) AS BIGINT) AS n_hits,
-       |       CAST((COALESCE(max(h.n_hits), 0) * 1000) // count(*) AS BIGINT)
-       |         AS recall_milli
-       |FROM exk e LEFT JOIN h USING (query_id)
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
-  }
+  // ------------------------------------------------ LSH ANN join families ---
 
-  private val qAnnRecallCappedScaledSql: String =
-    annRecallCappedScaledSqlFor(ScaledCapBands)
+  /** One LSH knn join at a fixed operating point: (queries, corpus,
+    * query-count hint) → (query_id, neighbor_id, score, rank). The
+    * corpus count and the hint gate only the vector re-attach
+    * broadcast — plan choice, never results. */
+  private type AnnJoin = (DataFrame, DataFrame, Option[Long]) => DataFrame
 
-  /** Recall certificate at the bands=[[ScaledCapBandsB4]] capped
-    * operating point (VERDICT r15 #1): the bands curve's COST side has
-    * two measured sf10 points (bands=8: 167.5s — the sweep's top row;
-    * bands=4: 42.2s at identical bits/cap) but only bands=8 carried a
-    * recall certificate, so the operating-point decision the curve
-    * exists to inform could not be made. Identical eval to
-    * [[qAnnRecallCappedScaled]] — same count-derived bits/mod, same
-    * [[AnnCapFactor]] — differing ONLY in bands, so the recall delta
-    * between the two declared rows is attributable to bands alone.
-    * Reference anchor: test_v3_features.py:29–46 (the ANN-vs-exact
-    * differential bar — serving configs are chosen on measured recall,
-    * not cost alone). */
-  private def qAnnRecallCappedScaledB4(s: SparkSession, dir: String): DataFrame = {
-    val n = embCount(s, dir)
-    annRecallCappedScaled(s, dir, scaledEvalMod(n), scaledLshBits(n),
-      AnnCapFactor, bands = ScaledCapBandsB4)
-  }
+  /** Multi-band OR LSH ([[VectorSearch.multibandKnnJoin]]) at (`bits`,
+    * `bands`, `cap`): independent hyperplane families, candidates
+    * unioned across bands, deduped, ranked once. Recall rises as
+    * 1−(1−p^bits)^bands at cost linear in bands. `cap` engages the
+    * production bucket-size cap (whole (band, bucket)s above
+    * `cap`× mean occupancy drop from the corpus side) — the shape the
+    * 100 TB sweep runs, since sign-LSH occupancy skew makes the
+    * uncapped join's hottest bucket quadratic on its own (r9 sweep:
+    * 427s on one 17×-mean bucket). Rows: q_ann_lsh_multi (8 × 8),
+    * q_ann_capped (8 × 8, [[AnnCapFactor]]), q_ann_capped_scaled
+    * ([[scaledLshBits]] × [[ScaledCapBands]], [[AnnCapFactor]]). */
+  private def multiband(s: SparkSession, dir: String, bits: Int, bands: Int,
+      cap: Option[Double]): AnnJoin = (q, d, qn) =>
+    VectorSearch.multibandKnnJoin(q, d, "embedding", "vec_id",
+      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits, bands = bands,
+      maxBucketFactor = cap, dataCountHint = Some(embCount(s, dir)),
+      queriesCountHint = qn)
 
-  private val qAnnRecallCappedScaledB4Sql: String =
-    annRecallCappedScaledSqlFor(ScaledCapBandsB4)
+  /** Multi-probe LSH ([[VectorSearch.multiProbeKnnJoin]], Lv et al.
+    * VLDB 2007) at (`bits`, `cap`): the query probes its own bucket PLUS
+    * the two buckets reached by flipping the lowest-|margin| sign bits —
+    * recall bought per query at serving time against the UNCHANGED
+    * single-band index. `cap` drops corpus buckets over `cap`× mean
+    * occupancy before the probe join; a dropped corpus vector has no
+    * other band, so the capped config carries its own recall row.
+    * Rows: q_ann_multiprobe (8 bits), q_ann_multiprobe_scaled and
+    * q_ann_multiprobe_capped_scaled ([[scaledProbeBits]]). */
+  private def multiprobe(s: SparkSession, dir: String, bits: Int,
+      cap: Option[Double]): AnnJoin = (q, d, qn) =>
+    VectorSearch.multiProbeKnnJoin(q, d, "embedding", "vec_id",
+      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits, flips = 2,
+      maxBucketFactor = cap, dataCountHint = Some(embCount(s, dir)),
+      queriesCountHint = qn)
 
-  /** Recall of the CAPPED multiband ANN vs exact top-k — the
-    * re-certification the cap demands ([[qAnnRecall]]'s eval shape with
-    * [[VectorSearch.multibandKnnJoin]]'s `maxBucketFactor` engaged at
-    * the pinned recall operating point): a vector in a dropped bucket
-    * keeps its other 15 bands, so recall must decay gracefully, and
-    * this row measures exactly how much through the hash gate
-    * (LshSpec additionally pins mean capped recall ≥ 0.8). Eval shape
-    * unchanged: sample × corpus exact side, never corpus². */
-  private def qAnnRecallCapped(s: SparkSession, dir: String): DataFrame = {
+  /** A serving row: the ANN self-join over the whole corpus. */
+  private def annServe(s: SparkSession, dir: String, ann: AnnJoin): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") % RecallSampleMod === 0)
+    ann(emb, emb, None).orderBy("query_id", "rank")
+  }
+
+  /** ANN recall evaluation ([[VectorSearch.knnJoin]] vs `ann`): per
+    * sampled query (every `mod`-th vector), how many of the exact
+    * top-[[KnnJoinK]] cosine neighbors the ANN join retrieves —
+    * `recall_milli = (hits·1000) div k`. This certifies the recall
+    * numbers LshSpec pins through the DuckDB oracle gate itself. The
+    * exact side is sample×corpus, never corpus², so the eval stays
+    * affordable at any scale while the ANN side is the serving plan
+    * unchanged. Rows: q_ann_recall and q_ann_recall_capped
+    * ([[RecallSampleMod]], [[RecallBits]] × [[RecallBands]], uncapped /
+    * [[RecallCapFactor]]); q_ann_recall_capped_scaled and its `_b4`
+    * bands-curve point ([[scaledEvalMod]], [[scaledLshBits]] ×
+    * [[ScaledCapBands]] / [[ScaledCapBandsB4]], [[AnnCapFactor]]) —
+    * differing ONLY in bands, so their recall delta is attributable to
+    * bands alone; q_ann_recall_multiprobe_scaled (the capped multiprobe
+    * serving config). */
+  private def annRecall(s: SparkSession, dir: String, mod: Long,
+      ann: AnnJoin): DataFrame = {
+    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
+    val queries = emb.filter(col("vec_id") % mod === 0)
     val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
       Metric.Cosine, k = KnnJoinK, excludeSelf = true,
       // sample x corpus ground truth: broadcast the bounded sample so the
@@ -1982,14 +1692,10 @@ object Queries {
       // movement) - the only orientation that survives 100 TB
       broadcastQueries = true)
       .select(col("query_id"), col("neighbor_id"))
-    val ann = VectorSearch.multibandKnnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = RecallBits, bands = RecallBands,
-      maxBucketFactor = Some(RecallCapFactor),
-      dataCountHint = Some(embCount(s, dir)),
-      queriesCountHint = Some(math.max(1L, embCount(s, dir) / RecallSampleMod)))
+    // the query side is ~N/mod by construction of the % filter
+    val found = ann(queries, emb, Some(math.max(1L, embCount(s, dir) / mod)))
       .select(col("query_id"), col("neighbor_id"))
-    val hits = exact.join(ann, Seq("query_id", "neighbor_id"))
+    val hits = exact.join(found, Seq("query_id", "neighbor_id"))
       .groupBy("query_id").agg(count(lit(1)).as("__h"))
     exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
       .join(hits, Seq("query_id"), "left")
@@ -1999,302 +1705,129 @@ object Queries {
       .orderBy("query_id")
   }
 
-  private val qAnnRecallCappedSql: String = {
+  /** Oracle tail shared by every knn-join row: rank the scored candidate
+    * pairs `p(query_id, neighbor_id, score)` and keep the top
+    * [[KnnJoinK]] per query. */
+  private val topKSql: String =
+    s"""r AS (
+       |  SELECT query_id, neighbor_id, score,
+       |         ROW_NUMBER() OVER (PARTITION BY query_id
+       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
+       |  FROM p)
+       |SELECT query_id, neighbor_id, score, rank
+       |FROM r WHERE rank <= $KnnJoinK
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Oracle CTE for the corpus-side bucket cap: `kept` = the rows of
+    * `rel` whose `key` group holds at most `cap`× the mean group size
+    * (all rows when uncapped). */
+  private def bucketCapSql(rel: String, key: String, cap: Option[Double]): String =
+    cap.fold(s"kept AS (SELECT * FROM $rel)") { f =>
+      s"""bs AS (SELECT $key, count(*) AS n FROM $rel GROUP BY ALL),
+         |thr AS (SELECT avg(n) AS meanb FROM bs),
+         |kept AS (
+         |  SELECT r.* FROM $rel r JOIN bs USING ($key) CROSS JOIN thr
+         |  WHERE CAST(bs.n AS DOUBLE) <= $f * thr.meanb)""".stripMargin
+    }
+
+  /** Sign-LSH projections of every normalized vector on the planes
+    * `jj = band·bits + j + 1` as (vec, band, plane) ROWS, with `bits`
+    * read from `params` at runtime — the closed-form weight
+    * `((li·jj·7919) mod 193)/193 − 0.5` of [[Oracle.lshBucketBand]],
+    * so fixture and count-sized rows replay through one chain. */
+  private def lshProjSql(bands: Int): String = {
+    val w = "(CAST((li * (b.band * pp.bits + j.j + 1) * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
+    val pr = Oracle.foldSum(
+      s"list_transform(range(1, ${EmbeddingDim + 1}), li -> n.nemb[li] * $w)")
+    s"""bx AS (SELECT unnest(range(0, $bands)) AS band),
+       |jx AS (SELECT unnest(range(0, (SELECT bits FROM params))) AS j),
+       |proj AS (
+       |  SELECT n.vec_id, b.band, j.j, $pr AS pr
+       |  FROM n, params pp, bx b, jx j)""".stripMargin
+  }
+
+  /** Oracle chain of [[multiband]]: band × bit bucketing, the optional
+    * corpus-side cap, and the scored candidate pairs `p` for the query
+    * rows matching `queries` (a predicate on `vec_id`). Needs
+    * `params(bits)` in scope. */
+  private def multibandSql(bands: Int, cap: Option[Double])(queries: String): String = {
     val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val bandBranches = (0 until RecallBands).map { band =>
-      s"SELECT vec_id, nemb, $band AS band, " +
-        s"${Oracle.lshBucketBand("nemb", EmbeddingDim, RecallBits, band)} AS bucket FROM n"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |q AS (SELECT * FROM n WHERE vec_id % $RecallSampleMod = 0),
-       |ex AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY a.vec_id
-       |                            ORDER BY $score DESC, b.vec_id ASC) AS rank
-       |  FROM q a CROSS JOIN n b WHERE a.vec_id <> b.vec_id),
-       |exk AS (SELECT query_id, neighbor_id FROM ex WHERE rank <= $KnnJoinK),
+    s"""${lshProjSql(bands)},
+       |buck AS (
+       |  SELECT vec_id, band,
+       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
+       |  FROM proj GROUP BY 1, 2),
        |nb AS (
-       |  $bandBranches),
-       |bs AS (SELECT band, bucket, count(*) AS n FROM nb GROUP BY 1, 2),
-       |thr AS (SELECT avg(n) AS meanb FROM bs),
-       |kept AS (
-       |  SELECT nb.vec_id, nb.nemb, nb.band, nb.bucket
-       |  FROM nb JOIN bs USING (band, bucket) CROSS JOIN thr
-       |  WHERE CAST(bs.n AS DOUBLE) <= $RecallCapFactor * thr.meanb),
-       |qb AS (SELECT * FROM nb WHERE vec_id % $RecallSampleMod = 0),
+       |  SELECT bu.vec_id, n.nemb, bu.band, bu.bucket
+       |  FROM buck bu JOIN n ON bu.vec_id = n.vec_id),
+       |${bucketCapSql("nb", "band, bucket", cap)},
+       |qb AS (SELECT * FROM nb WHERE $queries),
        |p AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, max($score) AS score
        |  FROM qb a JOIN kept b ON a.band = b.band AND a.bucket = b.bucket
        |                       AND a.vec_id <> b.vec_id
-       |  GROUP BY 1, 2),
-       |annk AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |           ROW_NUMBER() OVER (PARTITION BY query_id
-       |                              ORDER BY score DESC, neighbor_id ASC) AS rank
-       |    FROM p) WHERE rank <= $KnnJoinK),
-       |h AS (
-       |  SELECT query_id, count(*) AS n_hits
-       |  FROM exk JOIN annk USING (query_id, neighbor_id) GROUP BY 1)
-       |SELECT e.query_id,
-       |       CAST(count(*) AS BIGINT) AS n_exact,
-       |       CAST(COALESCE(max(h.n_hits), 0) AS BIGINT) AS n_hits,
-       |       CAST((COALESCE(max(h.n_hits), 0) * 1000) // count(*) AS BIGINT)
-       |         AS recall_milli
-       |FROM exk e LEFT JOIN h USING (query_id)
-       |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin
+       |  GROUP BY 1, 2)""".stripMargin
   }
 
-  /** Multi-probe LSH knn join ([[VectorSearch.multiProbeKnnJoin]], Lv
-    * et al. VLDB 2007): the query probes its own bucket PLUS the two
-    * buckets reached by flipping the lowest-|margin| sign bits — recall
-    * bought per-query at serving time against the UNCHANGED single-band
-    * index, instead of per-corpus with more bands. The probe
-    * generation (projections → abs margins → first-match argmin with
-    * lowest-index tie-break → bit flips) is pure deterministic
-    * arithmetic, replayed expression-for-expression by the oracle. */
-  private def qAnnMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.multiProbeKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = 8, flips = 2,
-      dataCountHint = Some(embCount(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  private val qAnnMultiprobeSql: String = {
-    val bits = 8
-    def w(j: Int) = s"(CAST((li * ${j + 1} * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
-    def proj(j: Int) =
-      Oracle.foldSum(s"list_transform(range(1, ${EmbeddingDim + 1}), li -> nemb[li] * ${w(j)})")
-    val pSelect = (0 until bits).map(j => s"${proj(j)} AS p$j").mkString(",\n       ")
-    val aSelect = (0 until bits).map(j => s"abs(p$j) AS a$j").mkString(", ")
-    val bucketExpr = (0 until bits)
-      .map(j => s"(CASE WHEN p$j > 0.0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-    val leastA = s"LEAST(${(0 until bits).map(j => s"a$j").mkString(", ")})"
-    val bv1Case = "CASE " +
-      (0 until bits).map(j => s"WHEN a$j = mn1 THEN ${1L << j}").mkString(" ") + " ELSE 0 END"
-    val penSelect = (0 until bits)
-      .map(j => s"a$j + (CASE WHEN bv1 = ${1L << j} THEN 1e9 ELSE 0.0 END) AS c$j")
-      .mkString(", ")
-    val leastC = s"LEAST(${(0 until bits).map(j => s"c$j").mkString(", ")})"
-    val bv2Case = "CASE " +
-      (0 until bits).map(j => s"WHEN c$j = mn2 THEN ${1L << j}").mkString(" ") + " ELSE 0 END"
-    val score = Oracle.dot("qn.nemb", "dn.nemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |qp AS (
-       |  SELECT vec_id AS query_id,
-       |       $pSelect
-       |  FROM n),
-       |qa AS (SELECT query_id, $aSelect, $bucketExpr AS bucket FROM qp),
-       |q1 AS (SELECT *, $leastA AS mn1 FROM qa),
-       |q2 AS (SELECT *, $bv1Case AS bv1 FROM q1),
-       |q3 AS (SELECT *, $penSelect FROM q2),
-       |q4 AS (SELECT *, $leastC AS mn2 FROM q3),
-       |q5 AS (SELECT *, $bv2Case AS bv2 FROM q4),
-       |probes AS (
-       |  SELECT query_id, bucket AS pb FROM q5
-       |  UNION ALL SELECT query_id, xor(bucket, bv1) FROM q5
-       |  UNION ALL SELECT query_id, xor(bucket, bv2) FROM q5),
-       |db AS (SELECT vec_id AS neighbor_id, nemb,
-       |       ${Oracle.lshBucket("nemb", EmbeddingDim, bits)} AS bucket FROM n),
+  /** Oracle chain of [[multiprobe]]: single-band bucketing, the two
+    * lowest-|margin| flip bits by a skinny ROW_NUMBER window (abs ASC,
+    * plane ASC — the engine's first-match argmin tie order), the
+    * optional corpus-side cap, and the scored candidate pairs `p` for
+    * the query rows matching `queries`. Needs `params(bits)` in scope. */
+  private def multiprobeSql(cap: Option[Double])(queries: String): String = {
+    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
+    s"""${lshProjSql(1)},
+       |buck AS (
+       |  SELECT vec_id,
+       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
+       |  FROM proj GROUP BY 1),
+       |${bucketCapSql("buck", "bucket", cap)},
+       |fr AS (
+       |  SELECT vec_id, j,
+       |         ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                            ORDER BY abs(pr) ASC, j ASC) AS rn
+       |  FROM proj WHERE $queries),
+       |fb AS (
+       |  SELECT vec_id,
+       |         CAST(max(CASE WHEN rn = 1 THEN (1 << j) END) AS BIGINT) AS bv1,
+       |         CAST(max(CASE WHEN rn = 2 THEN (1 << j) END) AS BIGINT) AS bv2
+       |  FROM fr GROUP BY 1),
+       |qbk AS (SELECT * FROM buck WHERE $queries),
+       |pq AS (
+       |  SELECT vec_id, bucket AS probe FROM qbk
+       |  UNION ALL
+       |  SELECT b.vec_id, xor(b.bucket, f.bv1) FROM qbk b JOIN fb f USING (vec_id)
+       |  UNION ALL
+       |  SELECT b.vec_id, xor(b.bucket, f.bv2) FROM qbk b JOIN fb f USING (vec_id)),
        |cand AS (
-       |  SELECT DISTINCT p.query_id, db.neighbor_id
-       |  FROM probes p JOIN db ON p.pb = db.bucket
-       |  WHERE p.query_id <> db.neighbor_id),
-       |scored AS (
-       |  SELECT c.query_id, c.neighbor_id, $score AS score
-       |  FROM cand c JOIN n qn ON c.query_id = qn.vec_id
-       |              JOIN n dn ON c.neighbor_id = dn.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** [[qAnnMultiprobe]] at the SCALED operating point (VERDICT r13 #1:
-    * the bench-only `q_ann_multiprobe_scaled` substitution promoted to
-    * a declared hash-gated row): `bits = max(2, scaledLshBits(N))` in
-    * BOTH engines (the floor exists because flips=2 needs at least two
-    * hyperplanes), so one row certifies bits=6 at sf0.01, 9 at sf1, 12
-    * at sf10 — per-bucket candidate work stays ~3·N·50 along the scale
-    * curve instead of 3·N²/256. The oracle replays the probe generation
-    * with `bits` a RUNTIME scalar: projections as (vec, plane) ROWS
-    * (the qAnnCappedScaledSql trick), bucket by conditional bit-sum,
-    * the two lowest-|margin| flip bits by a skinny ROW_NUMBER window —
-    * identical tie semantics (abs ASC, plane ASC) to the engine's
-    * staged first-match argmin. */
-  private def qAnnMultiprobeScaled(s: SparkSession, dir: String): DataFrame = {
-    val n = embCount(s, dir)
-    annMultiprobeScaled(s, dir, math.max(2, scaledLshBits(n)))
-  }
-
-  private val qAnnMultiprobeScaledSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    // plane weights with runtime plane index j (band 0 → jj = j + 1),
-    // the same integer formula Oracle.lshBucketBand burns into literals
-    // when bits is compile-time
-    val w = "(CAST((li * (j.j + 1) * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
-    val pr = Oracle.foldSum(
-      s"list_transform(range(1, ${EmbeddingDim + 1}), li -> n.nemb[li] * $w)")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(2, GREATEST(1, LEAST(20,
-       |           length(bin(GREATEST(1, count(*) // 50) - 1))))) AS bits
-       |  FROM embeddings),
-       |jx AS (SELECT unnest(range(0, (SELECT bits FROM params))) AS j),
-       |proj AS (
-       |  SELECT n.vec_id, j.j, $pr AS pr
-       |  FROM n, jx j),
-       |buck AS (
-       |  SELECT vec_id,
-       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM proj GROUP BY 1),
-       |fr AS (
-       |  SELECT vec_id, j,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                            ORDER BY abs(pr) ASC, j ASC) AS rn
-       |  FROM proj),
-       |fb AS (
-       |  SELECT vec_id,
-       |         CAST(max(CASE WHEN rn = 1 THEN (1 << j) END) AS BIGINT) AS bv1,
-       |         CAST(max(CASE WHEN rn = 2 THEN (1 << j) END) AS BIGINT) AS bv2
-       |  FROM fr GROUP BY 1),
-       |pq AS (
-       |  SELECT vec_id, bucket AS probe FROM buck
-       |  UNION ALL
-       |  SELECT b.vec_id, xor(b.bucket, f.bv1) FROM buck b JOIN fb f USING (vec_id)
-       |  UNION ALL
-       |  SELECT b.vec_id, xor(b.bucket, f.bv2) FROM buck b JOIN fb f USING (vec_id)),
-       |p AS (
-       |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id
-       |  FROM pq q JOIN buck d ON q.probe = d.bucket AND q.vec_id <> d.vec_id
-       |  GROUP BY 1, 2),
-       |sco AS (
-       |  SELECT p.query_id, p.neighbor_id, $score AS score
-       |  FROM p JOIN n a ON p.query_id = a.vec_id
-       |         JOIN n b ON p.neighbor_id = b.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM sco)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** [[qAnnMultiprobeScaled]] with the production occupancy cap engaged
-    * (r15, VERDICT r14 #5: at sf10 the multiprobe row's cost is the
-    * candidate join and the probed buckets had no occupancy bound —
-    * flipping INTO a skew-hot bucket pays its full occupancy per
-    * probing query). Corpus-side buckets over [[AnnCapFactor]]× the
-    * mean occupancy drop BEFORE the probe join, the
-    * [[VectorSearch.multibandKnnJoin]] cap applied to the single-band
-    * index. The recall trade is sharper than multiband's (a dropped
-    * corpus vector has no other band), so the config carries its own
-    * measured recall certificate: [[qAnnRecallMultiprobeScaled]]. */
-  private def qAnnMultiprobeCappedScaled(s: SparkSession, dir: String): DataFrame = {
-    val n = embCount(s, dir)
-    annMultiprobeScaled(s, dir, math.max(2, scaledLshBits(n)),
-      capFactor = Some(AnnCapFactor))
-  }
-
-  private val qAnnMultiprobeCappedScaledSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val w = "(CAST((li * (j.j + 1) * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
-    val pr = Oracle.foldSum(
-      s"list_transform(range(1, ${EmbeddingDim + 1}), li -> n.nemb[li] * $w)")
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(2, GREATEST(1, LEAST(20,
-       |           length(bin(GREATEST(1, count(*) // 50) - 1))))) AS bits
-       |  FROM embeddings),
-       |jx AS (SELECT unnest(range(0, (SELECT bits FROM params))) AS j),
-       |proj AS (
-       |  SELECT n.vec_id, j.j, $pr AS pr
-       |  FROM n, jx j),
-       |buck AS (
-       |  SELECT vec_id,
-       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM proj GROUP BY 1),
-       |bs AS (SELECT bucket, count(*) AS n FROM buck GROUP BY 1),
-       |thr AS (SELECT avg(n) AS meanb FROM bs),
-       |kept AS (
-       |  SELECT b.vec_id, b.bucket
-       |  FROM buck b JOIN bs USING (bucket) CROSS JOIN thr
-       |  WHERE CAST(bs.n AS DOUBLE) <= $AnnCapFactor * thr.meanb),
-       |fr AS (
-       |  SELECT vec_id, j,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                            ORDER BY abs(pr) ASC, j ASC) AS rn
-       |  FROM proj),
-       |fb AS (
-       |  SELECT vec_id,
-       |         CAST(max(CASE WHEN rn = 1 THEN (1 << j) END) AS BIGINT) AS bv1,
-       |         CAST(max(CASE WHEN rn = 2 THEN (1 << j) END) AS BIGINT) AS bv2
-       |  FROM fr GROUP BY 1),
-       |pq AS (
-       |  SELECT vec_id, bucket AS probe FROM buck
-       |  UNION ALL
-       |  SELECT b.vec_id, xor(b.bucket, f.bv1) FROM buck b JOIN fb f USING (vec_id)
-       |  UNION ALL
-       |  SELECT b.vec_id, xor(b.bucket, f.bv2) FROM buck b JOIN fb f USING (vec_id)),
-       |p AS (
        |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id
        |  FROM pq q JOIN kept d ON q.probe = d.bucket AND q.vec_id <> d.vec_id
        |  GROUP BY 1, 2),
-       |sco AS (
-       |  SELECT p.query_id, p.neighbor_id, $score AS score
-       |  FROM p JOIN n a ON p.query_id = a.vec_id
-       |         JOIN n b ON p.neighbor_id = b.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM sco)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
+       |p AS (
+       |  SELECT c.query_id, c.neighbor_id, $score AS score
+       |  FROM cand c JOIN n a ON c.query_id = a.vec_id
+       |            JOIN n b ON c.neighbor_id = b.vec_id)""".stripMargin
   }
 
-  /** Recall certificate of [[qAnnMultiprobeCappedScaled]]'s exact
-    * serving config — the cap re-certification the single-band index
-    * demands MORE than multiband does (a dropped corpus bucket removes
-    * its vectors from every query's candidate pool, not from one of
-    * `bands` chances). Everything self-sizes from `count(embeddings)`
-    * in BOTH engines: `bits` by the multiprobe rule
-    * (`max(2, scaledLshBits(N))`), the query sample by
-    * [[scaledEvalMod]] (~1000 probes, fixed COUNT), the cap the same
-    * [[AnnCapFactor]] the serving row pins — so one declared row
-    * measures the capped-multiprobe recall at every sf through the
-    * hash gate. */
-  private def qAnnRecallMultiprobeScaled(s: SparkSession, dir: String): DataFrame = {
-    val n = embCount(s, dir)
-    annRecallMultiprobeScaled(s, dir, scaledEvalMod(n),
-      math.max(2, scaledLshBits(n)), AnnCapFactor)
-  }
-
-  private val qAnnRecallMultiprobeScaledSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val w = "(CAST((li * (j.j + 1) * 7919) % 193 AS DOUBLE) / 193.0 - 0.5)"
-    val pr = Oracle.foldSum(
-      s"list_transform(range(1, ${EmbeddingDim + 1}), li -> n.nemb[li] * $w)")
+  /** Oracle of [[annServe]]: `bits` is a SQL scalar (a literal, or a
+    * count-derived sizing rule). */
+  private def annServeSql(bits: String, ann: String => String): String =
     s"""WITH ${Oracle.embeddingsCte},
        |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(2, GREATEST(1, LEAST(20,
-       |           length(bin(GREATEST(1, count(*) // 50) - 1))))) AS bits,
-       |         GREATEST(20, count(*) // 1000) AS mod
-       |  FROM embeddings),
-       |q AS (SELECT * FROM n WHERE vec_id % (SELECT mod FROM params) = 0),
+       |params AS (SELECT $bits AS bits),
+       |${ann("TRUE")},
+       |$topKSql""".stripMargin
+
+  /** Oracle of [[annRecall]]: `bits` and `mod` are SQL scalars. The
+    * exact side computes the score in a projection CTE, so the
+    * per-query top-k window carries 24-byte rows, never vectors. */
+  private def annRecallSql(bits: String, mod: String, ann: String => String): String = {
+    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
+    val sample = "vec_id % (SELECT mod FROM params) = 0"
+    s"""WITH ${Oracle.embeddingsCte},
+       |${Oracle.normalizedCte},
+       |params AS (SELECT $bits AS bits, $mod AS mod),
+       |q AS (SELECT * FROM n WHERE $sample),
        |exs AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, $score AS s
        |  FROM q a CROSS JOIN n b WHERE a.vec_id <> b.vec_id),
@@ -2304,51 +1837,13 @@ object Queries {
        |                            ORDER BY s DESC, neighbor_id ASC) AS rank
        |  FROM exs),
        |exk AS (SELECT query_id, neighbor_id FROM ex WHERE rank <= $KnnJoinK),
-       |jx AS (SELECT unnest(range(0, (SELECT bits FROM params))) AS j),
-       |proj AS (
-       |  SELECT n.vec_id, j.j, $pr AS pr
-       |  FROM n, jx j),
-       |buck AS (
-       |  SELECT vec_id,
-       |         CAST(sum(CASE WHEN pr > 0.0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
-       |  FROM proj GROUP BY 1),
-       |bs AS (SELECT bucket, count(*) AS n FROM buck GROUP BY 1),
-       |thr AS (SELECT avg(n) AS meanb FROM bs),
-       |kept AS (
-       |  SELECT b.vec_id, b.bucket
-       |  FROM buck b JOIN bs USING (bucket) CROSS JOIN thr
-       |  WHERE CAST(bs.n AS DOUBLE) <= $AnnCapFactor * thr.meanb),
-       |fr AS (
-       |  SELECT vec_id, j,
-       |         ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                            ORDER BY abs(pr) ASC, j ASC) AS rn
-       |  FROM proj WHERE vec_id % (SELECT mod FROM params) = 0),
-       |fb AS (
-       |  SELECT vec_id,
-       |         CAST(max(CASE WHEN rn = 1 THEN (1 << j) END) AS BIGINT) AS bv1,
-       |         CAST(max(CASE WHEN rn = 2 THEN (1 << j) END) AS BIGINT) AS bv2
-       |  FROM fr GROUP BY 1),
-       |qbk AS (SELECT * FROM buck WHERE vec_id % (SELECT mod FROM params) = 0),
-       |pq AS (
-       |  SELECT vec_id, bucket AS probe FROM qbk
-       |  UNION ALL
-       |  SELECT b.vec_id, xor(b.bucket, f.bv1) FROM qbk b JOIN fb f USING (vec_id)
-       |  UNION ALL
-       |  SELECT b.vec_id, xor(b.bucket, f.bv2) FROM qbk b JOIN fb f USING (vec_id)),
-       |p AS (
-       |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id
-       |  FROM pq q JOIN kept d ON q.probe = d.bucket AND q.vec_id <> d.vec_id
-       |  GROUP BY 1, 2),
-       |sco AS (
-       |  SELECT p.query_id, p.neighbor_id, $score AS score
-       |  FROM p JOIN n a ON p.query_id = a.vec_id
-       |         JOIN n b ON p.neighbor_id = b.vec_id),
+       |${ann(sample)},
        |annk AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT query_id, neighbor_id,
        |           ROW_NUMBER() OVER (PARTITION BY query_id
        |                              ORDER BY score DESC, neighbor_id ASC) AS rank
-       |    FROM sco) WHERE rank <= $KnnJoinK),
+       |    FROM p) WHERE rank <= $KnnJoinK),
        |h AS (
        |  SELECT query_id, count(*) AS n_hits
        |  FROM exk JOIN annk USING (query_id, neighbor_id) GROUP BY 1)
@@ -2511,6 +2006,15 @@ object Queries {
   private def centroidKey(dir: String, c: Int): String =
     s"$dir#$c#${fixtureSig(dir)}"
 
+  /** The first-`c` IVF coarse centroids of `emb` (the fixture's
+    * `(vec_id, embedding)` frame), built once per [[centroidKey]]. */
+  private def centroids(dir: String, emb: DataFrame, c: Int): Seq[(Long, Seq[Double])] =
+    centroidCache.computeIfAbsent(centroidKey(dir, c),
+      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
+
+  /** Cell count of the fixture-constant IVF rows. */
+  private val IvfCells = 16
+
   private val PqM = 8
   private val PqKsub = 16
 
@@ -2528,35 +2032,88 @@ object Queries {
   private def pqCodebookKey(dir: String, ksub: Int): String =
     s"$dir#$PqM#$ksub#${fixtureSig(dir)}"
 
-  /** North-star product quantization ([[VectorSearch.pqSearch]]): ADC
-    * top-10 — the query scored against 32-bit PQ codes instead of
-    * 512-byte vectors (the FAISS-IVFPQ serving layout). Deterministic
-    * first-16-rows-per-subspace codebooks keep the whole path
-    * oracle-replayable. */
-  private def qPqSearch(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, PqKsub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, PqKsub, Metric.Cosine))
-    VectorSearch.pqSearch(emb, "embedding", "vec_id",
-      queryVecFrame(s, dir), "qvec", cbs, K, Metric.Cosine)
+  /** The [[PqM]] × `ksub` first-rows PQ codebooks of `emb`, built once
+    * per [[pqCodebookKey]]. */
+  private def codebooks(dir: String, emb: DataFrame, ksub: Int): Seq[Seq[(Int, Seq[Double])]] =
+    pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, ksub), _ =>
+      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, ksub, Metric.Cosine))
+
+  /** MIGRATION's IVF sizing rule `c ≈ √N` in the integer-exact form the
+    * hash gate demands: `c = 2^ceil(bitLength(N)/2)` — the power-of-two
+    * ceiling of √N (within 2× of it — the ratio sits in (1, 2], worst
+    * exactly at N = 2^(2j), e.g. N=256 → c=32 = 2·√N), derived with
+    * zero float math so DuckDB's `1 << ((length(bin(N)) + 1) // 2)`
+    * lands on the identical value. Clamped to [16, 4096]: the floor
+    * keeps tiny fixtures on the fixture-row shape, the cap bounds the
+    * centroid broadcast (4096 × 64 doubles ≈ 2 MB, still model-sized).
+    * See the sizing-rules note above [[scaledLshBits]]. */
+  private[graft] def scaledIvfCells(n: Long): Int = {
+    val bitLen = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n))
+    math.max(16L, math.min(4096L, 1L << ((bitLen + 1) / 2))).toInt
   }
 
-  private val qPqSearchSql: String = {
-    val s = EmbeddingDim / PqM
-    val subA = s"list_slice(v.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val subC = s"list_slice(c.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val dist = Oracle.euclideanDistance(subA, subC, s)
-    val qSub = s"list_slice(q.qemb, a.j * $s + 1, a.j * $s + $s)"
-    val cSub = s"list_slice(c.nemb, a.j * $s + 1, a.j * $s + $s)"
-    val subdot = Oracle.dot(qSub, cSub, s)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |cb AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS code, nemb
-       |  FROM (SELECT vec_id, nemb FROM n ORDER BY vec_id LIMIT $PqKsub)),
+  private val ScaledIvfCellsSql =
+    "(SELECT GREATEST(16, LEAST(4096, 1 << ((length(bin(GREATEST(1, count(*)))) + 1) // 2))) FROM embeddings)"
+
+  /** Codebook-size rule of the scaled PQ rows: `ksub = min(64,
+    * scaledIvfCells(N))` — per-subspace codebooks grow with the corpus
+    * on the same curve as the IVF coarse cells, capped at 64 because
+    * (a) sub-codes must pack into the ONE BIGINT the persisted code
+    * table stores (6 bits × m=8 = 48 bits at the cap) and (b) the
+    * per-row encode is m·ksub codegen kernels — 512 at the cap. */
+  private[graft] def scaledPqKsub(n: Long): Int = math.min(64, scaledIvfCells(n))
+
+  private val ScaledPqKsubSql = s"LEAST(64, $ScaledIvfCellsSql)"
+
+  /** Oracle chain of IVF cell assignment over `n`: the first `cells`
+    * vectors (a SQL scalar) are the centroids `cc`; `asgn(vec_id, cid,
+    * rn)` holds each vector's `probes` best cells (score DESC, cid ASC)
+    * and `da(vec_id, nemb, cid)` its home cell. Scores live in their own
+    * projection CTE (`sca`), so the per-vector window never carries the
+    * 512-byte vector (the skinny-window form that makes the N·c
+    * assignment replayable at sf10). */
+  private def ivfAssignSql(cells: String, probes: Int): String = {
+    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
+    s"""cc AS (
+       |  SELECT vec_id AS cid, nemb AS cvec FROM (
+       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
+       |    FROM n)
+       |  WHERE rn <= $cells),
+       |sca AS (
+       |  SELECT v.vec_id, c.cid, $assign AS s
+       |  FROM n v CROSS JOIN cc c),
+       |asgn AS MATERIALIZED (
+       |  SELECT vec_id, cid, rn FROM (
+       |    SELECT vec_id, cid,
+       |           ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                              ORDER BY s DESC, cid ASC) AS rn
+       |    FROM sca) WHERE rn <= $probes),
+       |da AS MATERIALIZED (
+       |  SELECT v.vec_id, v.nemb, a.cid FROM n v
+       |  JOIN asgn a ON a.vec_id = v.vec_id AND a.rn = 1)""".stripMargin
+  }
+
+  /** Oracle chain of PQ ADC scoring: first-`ksub` codebooks `cb` (a SQL
+    * scalar), sub-code assignment of ONLY the rows in `cand(vec_id)`,
+    * the normalized query `q` (vec_id 0), and the fixed-order ADC sum
+    * `sc(vec_id, score)`. */
+  private def pqAdcSql(ksub: String): String = {
+    val w = EmbeddingDim / PqM
+    val dist = Oracle.euclideanDistance(
+      s"list_slice(v.nemb, gs.j * $w + 1, gs.j * $w + $w)",
+      s"list_slice(c.nemb, gs.j * $w + 1, gs.j * $w + $w)", w)
+    val subdot = Oracle.dot(
+      s"list_slice(q.qemb, a.j * $w + 1, a.j * $w + $w)",
+      s"list_slice(c.nemb, a.j * $w + 1, a.j * $w + $w)", w)
+    s"""cb AS (
+       |  SELECT CAST(rn - 1 AS BIGINT) AS code, nemb FROM (
+       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
+       |    FROM n)
+       |  WHERE rn <= $ksub),
        |d AS (
        |  SELECT v.vec_id, gs.j, c.code, $dist AS dist
-       |  FROM n v CROSS JOIN cb c CROSS JOIN generate_series(0, ${PqM - 1}) gs(j)),
+       |  FROM n v JOIN cand USING (vec_id)
+       |       CROSS JOIN cb c CROSS JOIN generate_series(0, ${PqM - 1}) gs(j)),
        |a AS (
        |  SELECT vec_id, j, code FROM (
        |    SELECT vec_id, j, code,
@@ -2571,13 +2128,33 @@ object Queries {
        |  SELECT vec_id,
        |         list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
        |                     (acc, x) -> acc + x) AS score
-       |  FROM sub GROUP BY vec_id)
-       |SELECT vec_id, score FROM sc
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
+       |  FROM sub GROUP BY vec_id)""".stripMargin
   }
 
-  /** Probes for [[qIvfPqSearch]]: 2 of 16 cells — the same routing
-    * budget as [[qAnnIvf]], composed with PQ's compressed scan. */
+  /** North-star product quantization ([[VectorSearch.pqSearch]]): ADC
+    * top-10 — the query scored against packed PQ codes instead of
+    * 512-byte vectors (the FAISS-IVFPQ serving layout). Deterministic
+    * first-`ksub`-rows-per-subspace codebooks keep the whole path
+    * oracle-replayable. Rows: q_pq_search ([[PqKsub]]),
+    * q_pq_search_scaled ([[scaledPqKsub]]). */
+  private def pqSearch(s: SparkSession, dir: String, ksub: Int): DataFrame = {
+    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
+    val cbs = codebooks(dir, emb, ksub)
+    VectorSearch.pqSearch(emb, "embedding", "vec_id",
+      queryVecFrame(s, dir), "qvec", cbs, K, Metric.Cosine)
+  }
+
+  private def pqSearchSql(ksub: String): String =
+    s"""WITH ${Oracle.embeddingsCte},
+       |${Oracle.normalizedCte},
+       |cand AS (SELECT vec_id FROM n),
+       |${pqAdcSql(ksub)}
+       |SELECT vec_id, score FROM sc
+       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
+
+  /** Probes for the IVF+PQ search rows: 2 of the cells — the same
+    * routing budget as the IVF knn rows, composed with PQ's compressed
+    * scan. */
   private val IvfPqProbes = 2
 
   /** Memoized persisted IVF+PQ index table per fixture dir — the
@@ -2613,89 +2190,11 @@ object Queries {
       .parquet(path)
   }
 
-  /** Composed IVF+PQ search over the persisted index
-    * ([[VectorSearch.ivfPqSearchIndexed]], the full FAISS-IVFPQ serving
-    * path): coarse-quantizer routing to 2 of 16 cells, then the
-    * [[qPqSearch]] ADC ranking over ONLY those cells' packed codes,
-    * unpacked by shift/mask from the code table. Results are
-    * bit-identical to the build-time [[VectorSearch.ivfPqSearch]]
-    * (LshSpec pins the equality through the parquet round-trip). */
-  private def qIvfPqSearch(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, 16),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine))
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, PqKsub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, PqKsub, Metric.Cosine))
-    VectorSearch.ivfPqSearchIndexed(ivfPqIndexFrame(s, dir, emb, centroids, cbs),
-      "vec_id",
-      queryVecFrame(s, dir), "qvec", centroids, cbs,
-      nProbes = IvfPqProbes, k = K, metric = Metric.Cosine)
-  }
-
-  /** Shared oracle CTE chain for the IVF+PQ family: ends at `sc(vec_id,
-    * score)` — ADC scores for every row in the query's `nProbes` probed
-    * cells (`da` = per-row cell assignment, `q` = normalized query).
-    * Consumers append their own final SELECT (and extra CTEs after a
-    * comma). */
-  private def ivfPqAdcWith(nProbes: Int): String = {
-    val s = EmbeddingDim / PqM
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
-    val subA = s"list_slice(v.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val subC = s"list_slice(c.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val dist = Oracle.euclideanDistance(subA, subC, s)
-    val qSub = s"list_slice(q.qemb, a.j * $s + 1, a.j * $s + $s)"
-    val cSub = s"list_slice(c.nemb, a.j * $s + 1, a.j * $s + $s)"
-    val subdot = Oracle.dot(qSub, cSub, s)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |cc AS (SELECT vec_id AS cid, nemb AS cvec FROM n ORDER BY vec_id LIMIT 16),
-       |da AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT v.vec_id, c.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $assign DESC, c.cid ASC) AS rn
-       |    FROM n v CROSS JOIN cc c) WHERE rn = 1),
-       |qa AS (
-       |  SELECT cid FROM (
-       |    SELECT c.cid,
-       |           ROW_NUMBER() OVER (ORDER BY $assign DESC, c.cid ASC) AS rn
-       |    FROM n v CROSS JOIN cc c WHERE v.vec_id = 0)
-       |  WHERE rn <= $nProbes),
-       |cb AS (
-       |  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) - 1 AS code, nemb
-       |  FROM (SELECT vec_id, nemb FROM n ORDER BY vec_id LIMIT $PqKsub)),
-       |d AS (
-       |  SELECT v.vec_id, gs.j, c.code, $dist AS dist
-       |  FROM n v CROSS JOIN cb c CROSS JOIN generate_series(0, ${PqM - 1}) gs(j)
-       |  WHERE v.vec_id IN (SELECT da.vec_id FROM da JOIN qa ON da.cid = qa.cid)),
-       |a AS (
-       |  SELECT vec_id, j, code FROM (
-       |    SELECT vec_id, j, code,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id, j
-       |                              ORDER BY dist ASC, code ASC) AS rn
-       |    FROM d) WHERE rn = 1),
-       |q AS (SELECT nemb AS qemb FROM n WHERE vec_id = 0),
-       |sub AS (
-       |  SELECT a.vec_id, a.j, $subdot AS sd
-       |  FROM a JOIN cb c ON a.code = c.code CROSS JOIN q),
-       |sc AS (
-       |  SELECT vec_id,
-       |         list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-       |                     (acc, x) -> acc + x) AS score
-       |  FROM sub GROUP BY vec_id)""".stripMargin
-  }
-
-  private val qIvfPqSearchSql: String =
-    s"""${ivfPqAdcWith(IvfPqProbes)}
-       |SELECT sc.vec_id, da.cid AS centroid_id, sc.score
-       |FROM sc JOIN da ON sc.vec_id = da.vec_id
-       |ORDER BY sc.score DESC, sc.vec_id ASC LIMIT $K""".stripMargin
-
-  /** Probe budget for the refined tier: 8 of 16 cells — the refine
-    * stage removes quantization error, so routing coverage becomes the
-    * only recall limiter and gets the bigger budget (IVF routes weakly
-    * on this LSH-hard near-uniform fixture; real clustered embeddings
-    * need far fewer probes for the same recall). */
+  /** Probe budget for the refined tier: 8 cells — the refine stage
+    * removes quantization error, so routing coverage becomes the only
+    * recall limiter and gets the bigger budget (IVF routes weakly on
+    * this LSH-hard near-uniform fixture; real clustered embeddings need
+    * far fewer probes for the same recall). */
   private val IvfPqRefineProbes = 8
 
   /** ADC candidate-pool size feeding the exact re-rank: 20× the final k
@@ -2704,28 +2203,62 @@ object Queries {
     * on the fixture (LshSpec pins ≥ 0.8). */
   private val IvfPqRefineCandidates = 200
 
-  /** IVF+PQ with exact re-rank ([[VectorSearch.ivfPqSearchRefined]]):
-    * the compressed ADC pass over the SAME persisted code table as
-    * [[qIvfPqSearch]] nominates 200 candidates from 8 probed cells; only
-    * those true vectors are fetched and re-scored exactly — the
-    * near-exact serving tier mirroring the reference's
-    * ANN-matches-bruteforce contract (tests/test_v3_features.py:29-46).
-    * LshSpec pins refined recall ≥ 0.8@10 against brute force. */
-  private def qIvfPqRefine(s: SparkSession, dir: String): DataFrame = {
+  /** Composed IVF+PQ search over the persisted index (the full
+    * FAISS-IVFPQ serving path): coarse-quantizer routing to `nProbes`
+    * of `c` cells, then ADC ranking over ONLY those cells' packed codes
+    * ([[VectorSearch.ivfPqSearchIndexed]]; LshSpec pins its equality
+    * with the build-time [[VectorSearch.ivfPqSearch]]). With
+    * `refine = Some(m)` the ADC pass nominates `m` candidates and only
+    * those true vectors are re-scored exactly
+    * ([[VectorSearch.ivfPqSearchRefined]]) — the near-exact serving
+    * tier mirroring the reference's ANN-matches-bruteforce contract
+    * (tests/test_v3_features.py:29-46). Rows: q_ivfpq_search /
+    * q_ivfpq_refine at ([[IvfCells]], [[PqKsub]]), their `_scaled`
+    * twins at ([[scaledIvfCells]], [[scaledPqKsub]]). */
+  private def ivfPq(s: SparkSession, dir: String, c: Int, ksub: Int,
+      nProbes: Int, refine: Option[Int]): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, 16),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine))
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, PqKsub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, PqKsub, Metric.Cosine))
-    VectorSearch.ivfPqSearchRefined(ivfPqIndexFrame(s, dir, emb, centroids, cbs),
-      emb, "embedding", "vec_id", queryVecFrame(s, dir), "qvec",
-      centroids, cbs, nProbes = IvfPqRefineProbes,
-      nCandidates = IvfPqRefineCandidates, k = K, metric = Metric.Cosine)
+    val cents = centroids(dir, emb, c)
+    val cbs = codebooks(dir, emb, ksub)
+    val index = ivfPqIndexFrame(s, dir, emb, cents, cbs)
+    refine.fold(
+      VectorSearch.ivfPqSearchIndexed(index, "vec_id",
+        queryVecFrame(s, dir), "qvec", cents, cbs,
+        nProbes = nProbes, k = K, metric = Metric.Cosine)) { m =>
+      VectorSearch.ivfPqSearchRefined(index,
+        emb, "embedding", "vec_id", queryVecFrame(s, dir), "qvec",
+        cents, cbs, nProbes = nProbes,
+        nCandidates = m, k = K, metric = Metric.Cosine)
+    }
+  }
+
+  private def ivfPqSql(cells: String, ksub: String, nProbes: Int,
+      refine: Option[Int]): String = {
+    val chain =
+      s"""WITH ${Oracle.embeddingsCte},
+         |${Oracle.normalizedCte},
+         |${ivfAssignSql(cells, nProbes)},
+         |qa AS (SELECT cid FROM asgn WHERE vec_id = 0),
+         |cand AS (SELECT da.vec_id FROM da JOIN qa ON da.cid = qa.cid),
+         |${pqAdcSql(ksub)}""".stripMargin
+    refine.fold(
+      s"""$chain
+         |SELECT sc.vec_id, da.cid AS centroid_id, sc.score
+         |FROM sc JOIN da ON sc.vec_id = da.vec_id
+         |ORDER BY sc.score DESC, sc.vec_id ASC LIMIT $K""".stripMargin) { m =>
+      s"""$chain,
+         |short AS (
+         |  SELECT vec_id FROM sc
+         |  ORDER BY score DESC, vec_id ASC LIMIT $m)
+         |SELECT v.vec_id, ${Oracle.dot("v.nemb", "q.qemb", EmbeddingDim)} AS score
+         |FROM n v JOIN short USING (vec_id) CROSS JOIN q
+         |ORDER BY score DESC, v.vec_id ASC LIMIT $K""".stripMargin
+    }
   }
 
   /** Declared gate for the k-means quality path
     * ([[VectorSearch.ivfRefineCentroids]]): 2 Lloyd iterations over the
-    * deterministic first-16 seed must RAISE the spherical k-means
+    * deterministic first-`c` seed must RAISE the spherical k-means
     * objective (mean cosine to assigned centroid) by > 0.01 — three
     * orders of magnitude above the refined means' last-bit
     * partition-order wobble, so the boolean is deterministic even
@@ -2733,253 +2266,17 @@ object Queries {
     * hash-checked ANN queries keep first-c centroids). The oracle row
     * is the EXPECTED assertion; the Spark side measures it — if
     * refinement ever stops improving the objective, the driver sees a
-    * hash mismatch. Measured margins: +0.079 at sf0.001, LshSpec pins
-    * the same direction with recall. Caveat (accepted): the objectives
-    * collect at construction, so plan-guard sweeps see only the final
-    * 1-row LocalTableScan — the refine subplans' shapes are covered by
-    * LshSpec, not PlanAudit. */
-  private def qIvfRefineGate(s: SparkSession, dir: String): DataFrame = {
+    * hash mismatch. Measured margins (oRef − oInit): +0.079 at c=16 and
+    * sf0.001; +0.098 at c=32 and sf0.001, +0.097 at sf0.01, +0.062 at
+    * c=64 and sf0.1. Rows: q_ivf_refine_gate ([[IvfCells]]),
+    * q_ivf_refine_gate_scaled ([[scaledIvfCells]]). Caveat (accepted):
+    * the objectives collect at construction, so plan-guard sweeps see
+    * only the final 1-row LocalTableScan — the refine subplans' shapes
+    * are covered by LshSpec, not PlanAudit. */
+  private def ivfRefineGate(s: SparkSession, dir: String, c: Int): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val init = centroidCache.computeIfAbsent(centroidKey(dir, 16),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine))
-    val refined = VectorSearch.ivfRefineCentroids(emb, "embedding", init,
-      Metric.Cosine, iters = 2)
-    val oInit = VectorSearch.ivfObjective(emb, "embedding", init, Metric.Cosine)
-    val oRef = VectorSearch.ivfObjective(emb, "embedding", refined, Metric.Cosine)
-    Seq((16L, 2L, oRef > oInit + 0.01))
-      .toDF("n_centroids", "iters", "improved")
-  }
-
-  private val qIvfRefineGateSql: String =
-    """SELECT CAST(16 AS BIGINT) AS n_centroids, CAST(2 AS BIGINT) AS iters,
-      |       TRUE AS improved""".stripMargin
-
-  private val qIvfPqRefineSql: String =
-    s"""${ivfPqAdcWith(IvfPqRefineProbes)},
-       |cand AS (
-       |  SELECT vec_id FROM sc
-       |  ORDER BY score DESC, vec_id ASC LIMIT $IvfPqRefineCandidates)
-       |SELECT v.vec_id, ${Oracle.dot("v.nemb", "q.qemb", EmbeddingDim)} AS score
-       |FROM n v JOIN cand USING (vec_id) CROSS JOIN q
-       |ORDER BY score DESC, v.vec_id ASC LIMIT $K""".stripMargin
-
-  // ------------------------ PQ serving family, SCALED operating points ---
-
-  /** SQL form of [[scaledIvfCells]] (the qAnnIvfScaledSql expression,
-    * shared by every scaled oracle that sizes cells or codebooks from
-    * the corpus count). */
-  private val ScaledCellsSql =
-    "GREATEST(16, LEAST(4096, 1 << ((length(bin(GREATEST(1, count(*)))) + 1) // 2)))"
-
-  /** Codebook-size rule for the scaled PQ rows (VERDICT r13 #1 — the
-    * last ANN family certified only at fixture constants):
-    * `ksub = min(64, scaledIvfCells(N))` — per-subspace codebooks grow
-    * with the corpus on the same power-of-two-ceiling-of-√N curve as
-    * the IVF coarse cells (finer quantization as density grows), capped
-    * at 64 because (a) sub-codes must pack into the ONE BIGINT the
-    * persisted code table stores (6 bits × m=8 = 48 bits at the cap)
-    * and (b) the per-row encode is m·ksub codegen kernels — 512 at the
-    * cap. Integer-exact in both engines (LEAST over
-    * [[ScaledCellsSql]]); first-ksub-rows determinism makes the larger
-    * codebooks oracle-replayable exactly like the fixture ones. */
-  private[graft] def scaledPqKsub(n: Long): Int = math.min(64, scaledIvfCells(n))
-
-  /** [[qPqSearch]] at the SCALED operating point: flat ADC top-10 with
-    * `ksub = scaledPqKsub(count(embeddings))` in BOTH engines — one
-    * declared row certifies ksub=16 at sf0.001, 32 at sf0.01, 64 at
-    * sf0.1+ without touching a constant. The scan side still reads
-    * codes, never vectors; the encode stays a per-row projection. */
-  private def qPqSearchScaled(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val ksub = scaledPqKsub(embCount(s, dir))
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, ksub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, ksub, Metric.Cosine))
-    VectorSearch.pqSearch(emb, "embedding", "vec_id",
-      queryVecFrame(s, dir), "qvec", cbs, K, Metric.Cosine)
-  }
-
-  private val qPqSearchScaledSql: String = {
-    val s = EmbeddingDim / PqM
-    val subA = s"list_slice(v.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val subC = s"list_slice(c.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val dist = Oracle.euclideanDistance(subA, subC, s)
-    val qSub = s"list_slice(q.qemb, a.j * $s + 1, a.j * $s + $s)"
-    val cSub = s"list_slice(c.nemb, a.j * $s + 1, a.j * $s + $s)"
-    val subdot = Oracle.dot(qSub, cSub, s)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (SELECT LEAST(64, $ScaledCellsSql) AS ksub FROM embeddings),
-       |cb AS (
-       |  SELECT CAST(rn - 1 AS BIGINT) AS code, nemb FROM (
-       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-       |    FROM n)
-       |  WHERE rn <= (SELECT ksub FROM params)),
-       |d AS (
-       |  SELECT v.vec_id, gs.j, c.code, $dist AS dist
-       |  FROM n v CROSS JOIN cb c CROSS JOIN generate_series(0, ${PqM - 1}) gs(j)),
-       |a AS (
-       |  SELECT vec_id, j, code FROM (
-       |    SELECT vec_id, j, code,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id, j
-       |                              ORDER BY dist ASC, code ASC) AS rn
-       |    FROM d) WHERE rn = 1),
-       |q AS (SELECT nemb AS qemb FROM n WHERE vec_id = 0),
-       |sub AS (
-       |  SELECT a.vec_id, a.j, $subdot AS sd
-       |  FROM a JOIN cb c ON a.code = c.code CROSS JOIN q),
-       |sc AS (
-       |  SELECT vec_id,
-       |         list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-       |                     (acc, x) -> acc + x) AS score
-       |  FROM sub GROUP BY vec_id)
-       |SELECT vec_id, score FROM sc
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
-  }
-
-  /** Shared scaled-oracle CTE chain for the IVF+PQ family —
-    * [[ivfPqAdcWith]] with BOTH index parameters count-derived
-    * (`c` by [[ScaledCellsSql]], `ksub` by its LEAST(64, ·) form) and
-    * the r12 skinny-window discipline: assignment scores live in their
-    * own projection CTE (`sca`) so the per-vector window never carries
-    * the 512-byte vector, and PQ sub-code assignment (`d`) is computed
-    * ONLY for rows in the query's probed cells (≈ nProbes·N/c rows),
-    * never the corpus. Ends at `sc(vec_id, score)` with `da`/`q` in
-    * scope, exactly like the fixture chain. */
-  private def ivfPqAdcScaledWith(nProbes: Int): String = {
-    val s = EmbeddingDim / PqM
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
-    val subA = s"list_slice(v.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val subC = s"list_slice(c.nemb, gs.j * $s + 1, gs.j * $s + $s)"
-    val dist = Oracle.euclideanDistance(subA, subC, s)
-    val qSub = s"list_slice(q.qemb, a.j * $s + 1, a.j * $s + $s)"
-    val cSub = s"list_slice(c.nemb, a.j * $s + 1, a.j * $s + $s)"
-    val subdot = Oracle.dot(qSub, cSub, s)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT $ScaledCellsSql AS c,
-       |         LEAST(64, $ScaledCellsSql) AS ksub
-       |  FROM embeddings),
-       |cc AS (
-       |  SELECT vec_id AS cid, nemb AS cvec FROM (
-       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-       |    FROM n)
-       |  WHERE rn <= (SELECT c FROM params)),
-       |sca AS (
-       |  SELECT v.vec_id, c.cid, $assign AS s
-       |  FROM n v CROSS JOIN cc c),
-       |asgn AS MATERIALIZED (
-       |  SELECT vec_id, cid, rn FROM (
-       |    SELECT vec_id, cid,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                              ORDER BY s DESC, cid ASC) AS rn
-       |    FROM sca) WHERE rn <= $nProbes),
-       |da AS (SELECT vec_id, cid FROM asgn WHERE rn = 1),
-       |qa AS (SELECT cid FROM asgn WHERE vec_id = 0),
-       |cb AS (
-       |  SELECT CAST(rn - 1 AS BIGINT) AS code, nemb FROM (
-       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-       |    FROM n)
-       |  WHERE rn <= (SELECT ksub FROM params)),
-       |cand AS (SELECT da.vec_id FROM da JOIN qa ON da.cid = qa.cid),
-       |d AS (
-       |  SELECT v.vec_id, gs.j, c.code, $dist AS dist
-       |  FROM n v JOIN cand USING (vec_id)
-       |       CROSS JOIN cb c CROSS JOIN generate_series(0, ${PqM - 1}) gs(j)),
-       |a AS (
-       |  SELECT vec_id, j, code FROM (
-       |    SELECT vec_id, j, code,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id, j
-       |                              ORDER BY dist ASC, code ASC) AS rn
-       |    FROM d) WHERE rn = 1),
-       |q AS (SELECT nemb AS qemb FROM n WHERE vec_id = 0),
-       |sub AS (
-       |  SELECT a.vec_id, a.j, $subdot AS sd
-       |  FROM a JOIN cb c ON a.code = c.code CROSS JOIN q),
-       |sc AS (
-       |  SELECT vec_id,
-       |         list_reduce(list_prepend(0.0, list(sd ORDER BY j)),
-       |                     (acc, x) -> acc + x) AS score
-       |  FROM sub GROUP BY vec_id)""".stripMargin
-  }
-
-  /** [[qIvfPqSearch]] at the SCALED operating point: the full persisted
-    * FAISS-IVFPQ serving path with `c = scaledIvfCells(N)` coarse cells
-    * and `ksub = scaledPqKsub(N)` codebook entries, both count-derived
-    * in BOTH engines — so one declared row certifies (c=32, ksub=32) at
-    * sf0.01, (256, 64) at sf1, (512, 64) at sf10. Probes stay at
-    * [[IvfPqProbes]]: the probe join scans ≈ nProbes·N/c code rows —
-    * ~2√N at the scaled c, the same sublinear curve as q_ann_ivf_scaled
-    * — and the persisted index prunes unprobed cell partitions to zero
-    * IO. */
-  private def qIvfPqSearchScaled(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val n = embCount(s, dir)
-    val c = scaledIvfCells(n)
-    val ksub = scaledPqKsub(n)
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, ksub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, ksub, Metric.Cosine))
-    VectorSearch.ivfPqSearchIndexed(ivfPqIndexFrame(s, dir, emb, centroids, cbs),
-      "vec_id",
-      queryVecFrame(s, dir), "qvec", centroids, cbs,
-      nProbes = IvfPqProbes, k = K, metric = Metric.Cosine)
-  }
-
-  private val qIvfPqSearchScaledSql: String =
-    s"""${ivfPqAdcScaledWith(IvfPqProbes)}
-       |SELECT sc.vec_id, da.cid AS centroid_id, sc.score
-       |FROM sc JOIN da ON sc.vec_id = da.vec_id
-       |ORDER BY sc.score DESC, sc.vec_id ASC LIMIT $K""".stripMargin
-
-  /** [[qIvfPqRefine]] at the SCALED operating point: ADC shortlist of
-    * [[IvfPqRefineCandidates]] from [[IvfPqRefineProbes]] probed cells
-    * of the count-sized index, exact re-rank of only those vectors —
-    * the candidate pool stays a CONSTANT-size exact fetch at any corpus
-    * size (the Jégou §V-C shortlist), so the refine tier's cost curve
-    * is the ADC scan's, not the corpus's. */
-  private def qIvfPqRefineScaled(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val n = embCount(s, dir)
-    val c = scaledIvfCells(n)
-    val ksub = scaledPqKsub(n)
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, ksub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, ksub, Metric.Cosine))
-    VectorSearch.ivfPqSearchRefined(ivfPqIndexFrame(s, dir, emb, centroids, cbs),
-      emb, "embedding", "vec_id", queryVecFrame(s, dir), "qvec",
-      centroids, cbs, nProbes = IvfPqRefineProbes,
-      nCandidates = IvfPqRefineCandidates, k = K, metric = Metric.Cosine)
-  }
-
-  private val qIvfPqRefineScaledSql: String =
-    s"""${ivfPqAdcScaledWith(IvfPqRefineProbes)},
-       |cand2 AS (
-       |  SELECT vec_id FROM sc
-       |  ORDER BY score DESC, vec_id ASC LIMIT $IvfPqRefineCandidates)
-       |SELECT v.vec_id, ${Oracle.dot("v.nemb", "q.qemb", EmbeddingDim)} AS score
-       |FROM n v JOIN cand2 USING (vec_id) CROSS JOIN q
-       |ORDER BY score DESC, v.vec_id ASC LIMIT $K""".stripMargin
-
-  /** [[qIvfRefineGate]] at the SCALED cell count: 2 Lloyd iterations
-    * over `c = scaledIvfCells(N)` first-c seeds must still raise the
-    * spherical k-means objective by > 0.01 — certifying that the
-    * quality path improves the index at the cell counts the scaled
-    * serving rows actually use (c=√N), not just at fixture c=16.
-    * Measured margins (oRef − oInit): +0.098 at sf0.001
-    * (c=32, N=500), +0.097 at sf0.01 (c=32), +0.062 at sf0.1 (c=64,
-    * N=2000) — an order of magnitude above the 0.01 bar along the
-    * measured curve; the bar itself is three orders above the refined
-    * means' partition-order wobble (the fixture row's analysis). */
-  private def qIvfRefineGateScaled(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val c = scaledIvfCells(embCount(s, dir))
-    val init = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
+    val init = centroids(dir, emb, c)
     val refined = VectorSearch.ivfRefineCentroids(emb, "embedding", init,
       Metric.Cosine, iters = 2)
     val oInit = VectorSearch.ivfObjective(emb, "embedding", init, Metric.Cosine)
@@ -2988,41 +2285,34 @@ object Queries {
       .toDF("n_centroids", "iters", "improved")
   }
 
-  private val qIvfRefineGateScaledSql: String =
-    s"""WITH params AS (SELECT $ScaledCellsSql AS c FROM embeddings)
-       |SELECT CAST((SELECT c FROM params) AS BIGINT) AS n_centroids,
-       |       CAST(2 AS BIGINT) AS iters, TRUE AS improved""".stripMargin
+  private def ivfRefineGateSql(cells: String): String =
+    s"""SELECT CAST($cells AS BIGINT) AS n_centroids, CAST(2 AS BIGINT) AS iters,
+       |       TRUE AS improved""".stripMargin
 
-  /** Similarity threshold for [[qSemanticDedup]]: within-cluster
+  /** Similarity threshold for [[semanticDedup]]: within-cluster
     * max-lower-sim on the fixture spans ~0.06–0.49 (median 0.27), so
     * 0.3 exercises both keep and drop at every scale. */
   private val SemDedupTau = 0.3
 
   /** North-star semantic dedup ([[VectorSearch.semanticDedup]]):
     * SemDeDup-style cluster-then-prune over the embedding space — the
-    * dedup family text hashing cannot catch. Same memoized centroids as
-    * [[qAnnIvf]]. */
-  private def qSemanticDedup(s: SparkSession, dir: String): DataFrame = {
+    * dedup family text hashing cannot catch — over `c` memoized
+    * first-c cells. Rows: q_semantic_dedup ([[IvfCells]]),
+    * q_semantic_dedup_scaled ([[scaledIvfCells]]: within-cluster pair
+    * work stays ~N·√N-bounded along the scale curve instead of
+    * N²/16). */
+  private def semanticDedup(s: SparkSession, dir: String, c: Int): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, 16),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine))
     VectorSearch.semanticDedup(emb, "embedding", "vec_id", Metric.Cosine,
-      tau = SemDedupTau, c = 16, centroids = Some(centroids))
+      tau = SemDedupTau, c = c, centroids = Some(centroids(dir, emb, c)))
       .orderBy("vec_id")
   }
 
-  private val qSemanticDedupSql: String = {
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
+  private def semanticDedupSql(cells: String): String = {
     val sim = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
     s"""WITH ${Oracle.embeddingsCte},
        |${Oracle.normalizedCte},
-       |c AS (SELECT vec_id AS cid, nemb AS cvec FROM n ORDER BY vec_id LIMIT 16),
-       |da AS (
-       |  SELECT vec_id, nemb, cid FROM (
-       |    SELECT v.vec_id, v.nemb, c.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $assign DESC, c.cid ASC) AS rn
-       |    FROM n v CROSS JOIN c) WHERE rn = 1),
+       |${ivfAssignSql(cells, 1)},
        |p AS (
        |  SELECT a.vec_id, max($sim) AS max_lower_sim
        |  FROM da a JOIN da b ON a.cid = b.cid AND b.vec_id < a.vec_id
@@ -3034,311 +2324,39 @@ object Queries {
        |ORDER BY d.vec_id""".stripMargin
   }
 
-  /** [[qSemanticDedup]] at the SCALED operating point — the last
-    * fixture-c=16 row in the SemDeDup family without a self-sizing
-    * declared twin (q_split_leakage got its r12 twin the same round):
-    * `c = scaledIvfCells(count(embeddings))` in BOTH engines, so one
-    * row certifies the dedup at c=32 @ sf0.01, 256 @ sf1, 512 @ sf10 —
-    * within-cluster pair work stays ~N·√N-bounded along the scale
-    * curve instead of N²/16. Oracle assignment uses the r12
-    * skinny-window form (score in a projection CTE; the window input
-    * never carries the vector). */
-  private def qSemanticDedupScaled(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    semanticDedupScaled(s, dir, scaledIvfCells(embCount(s, dir)))
-  }
+  /** Probes of the IVF knn rows: each query searches its 2 best cells. */
+  private val AnnIvfProbes = 2
 
-  private val qSemanticDedupScaledSql: String = {
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
-    val sim = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(16, LEAST(4096,
-       |           1 << ((length(bin(GREATEST(1, count(*)))) + 1) // 2))) AS c
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id AS cid, nemb AS cvec FROM (
-       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-       |    FROM n)
-       |  WHERE rn <= (SELECT c FROM params)),
-       |sc AS (
-       |  SELECT v.vec_id, c.cid, $assign AS s
-       |  FROM n v CROSS JOIN c),
-       |asgn AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT vec_id, cid,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                              ORDER BY s DESC, cid ASC) AS rn
-       |    FROM sc) WHERE rn = 1),
-       |da AS MATERIALIZED (
-       |  SELECT v.vec_id, v.nemb, a.cid
-       |  FROM n v JOIN asgn a ON a.vec_id = v.vec_id),
-       |p AS (
-       |  SELECT a.vec_id, max($sim) AS max_lower_sim
-       |  FROM da a JOIN da b ON a.cid = b.cid AND b.vec_id < a.vec_id
-       |  GROUP BY 1)
-       |SELECT d.vec_id, d.cid AS centroid_id, p.max_lower_sim,
-       |       (p.max_lower_sim IS NULL
-       |        OR p.max_lower_sim <= CAST($SemDedupTau AS DOUBLE)) AS keep
-       |FROM da d LEFT JOIN p ON d.vec_id = p.vec_id
-       |ORDER BY d.vec_id""".stripMargin
-  }
-
-  /** Approximate batch knn via IVF (the second ANN scale path): 16
-    * deterministic coarse centroids, per-row argmin assignment with no
-    * shuffle, 2-probe queries, bucket equi-join. */
-  private def qAnnIvf(s: SparkSession, dir: String): DataFrame = {
+  /** Approximate batch knn via IVF (the second ANN scale path): `c`
+    * deterministic first-c coarse centroids, per-row argmin assignment
+    * with no shuffle, [[AnnIvfProbes]]-probe queries, bucket equi-join.
+    * Rows: q_ann_ivf ([[IvfCells]]) and q_ann_ivf_scaled
+    * ([[scaledIvfCells]]) — the fixed c = 16 does N²/16 pair work, the
+    * shape the r9 sweep measured dying at sf10 (5·10⁹ pairs, 25 min
+    * stuck), while the scaled c keeps per-query work at
+    * nProbes·N/c ≈ 2√N rows, spread evenly across first-c-seeded
+    * Voronoi cells. */
+  private def annIvf(s: SparkSession, dir: String, c: Int): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, 16),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine))
     VectorSearch.ivfKnnJoin(emb, emb, "embedding", "vec_id", Metric.Cosine,
-      k = KnnJoinK, c = 16, nProbes = 2, centroids = Some(centroids))
+      k = KnnJoinK, c = c, nProbes = AnnIvfProbes,
+      centroids = Some(centroids(dir, emb, c)))
       .orderBy("query_id", "rank")
   }
 
-  private val qAnnIvfSql: String = {
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
+  private def annIvfSql(cells: String): String = {
     val score = Oracle.dot("q.nemb", "d.nemb", EmbeddingDim)
     s"""WITH ${Oracle.embeddingsCte},
        |${Oracle.normalizedCte},
-       |c AS (SELECT vec_id AS cid, nemb AS cvec FROM n ORDER BY vec_id LIMIT 16),
-       |da AS (
-       |  SELECT vec_id, nemb, cid FROM (
-       |    SELECT v.vec_id, v.nemb, c.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $assign DESC, c.cid ASC) AS rn
-       |    FROM n v CROSS JOIN c) WHERE rn = 1),
-       |qa AS (
-       |  SELECT vec_id, nemb, cid FROM (
-       |    SELECT v.vec_id, v.nemb, c.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $assign DESC, c.cid ASC) AS rn
-       |    FROM n v CROSS JOIN c) WHERE rn <= 2),
-       |p AS (
-       |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, $score AS score
-       |  FROM qa q JOIN da d ON q.cid = d.cid AND q.vec_id <> d.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** MIGRATION's IVF sizing rule `c ≈ √N` in the integer-exact form the
-    * hash gate demands: `c = 2^ceil(bitLength(N)/2)` — the power-of-two
-    * ceiling of √N (within 2× of it — the ratio sits in (1, 2], worst
-    * exactly at N = 2^(2j), e.g. N=256 → c=32 = 2·√N), derived with
-    * zero float math so
-    * DuckDB's `1 << ((length(bin(N)) + 1) // 2)` lands on the identical
-    * value at every fixture size. Clamped to [16, 4096]: the floor keeps
-    * tiny fixtures on the declared q_ann_ivf shape, the cap bounds the
-    * centroid broadcast (4096 × 64 doubles ≈ 2 MB, still model-sized). */
-  private[graft] def scaledIvfCells(n: Long): Int = {
-    val bitLen = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n))
-    math.max(16L, math.min(4096L, 1L << ((bitLen + 1) / 2))).toInt
-  }
-
-  /** IVF knn join at the SCALED operating point — the IVF counterpart of
-    * [[qAnnCappedScaled]] (VERDICT r10 #4 closed the multiband family;
-    * this row closes IVF): every other IVF row pins c = 16 cells, which
-    * does N²/16 pair work and is exactly the shape the r9 sweep measured
-    * dying at sf10 (5·10⁹ pairs, 25 min stuck). Here `c` is computed
-    * from `count(embeddings)` by [[scaledIvfCells]] IN BOTH ENGINES —
-    * the oracle's centroid CTE takes the first `c` vectors via a
-    * ROW_NUMBER bound read from a count subquery — so the SAME declared
-    * row certifies c=32 at sf0.01 (N=500), c=256 at sf1 (N≈20k), and
-    * c=512 at sf10 (N=200k) without touching a constant. Per-query work
-    * is nProbes·N/c ≈ 2√N rows: the N^1.5 total is the inherent IVF
-    * flop count, spread evenly across cells (no skew — cells are
-    * first-c-seeded Voronoi regions), and the assignment pass is a
-    * broadcast-centroid per-row projection, never a shuffle. */
-  private def qAnnIvfScaled(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val c = scaledIvfCells(embCount(s, dir))
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
-    VectorSearch.ivfKnnJoin(emb, emb, "embedding", "vec_id", Metric.Cosine,
-      k = KnnJoinK, c = c, nProbes = 2, centroids = Some(centroids))
-      .orderBy("query_id", "rank")
-  }
-
-  private val qAnnIvfScaledSql: String = {
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
-    val score = Oracle.dot("q.nemb", "d.nemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(16, LEAST(4096,
-       |           1 << ((length(bin(GREATEST(1, count(*)))) + 1) // 2))) AS c
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id AS cid, nemb AS cvec FROM (
-       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-       |    FROM n)
-       |  WHERE rn <= (SELECT c FROM params)),
-       |sc AS (
-       |  SELECT v.vec_id, c.cid, $assign AS s
-       |  FROM n v CROSS JOIN c),
-       |asgn AS MATERIALIZED (
-       |  SELECT vec_id, cid, rn FROM (
-       |    SELECT vec_id, cid,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                              ORDER BY s DESC, cid ASC) AS rn
-       |    FROM sc) WHERE rn <= 2),
-       |da AS (
-       |  SELECT v.vec_id, v.nemb, a.cid FROM n v
-       |  JOIN asgn a ON a.vec_id = v.vec_id AND a.rn = 1),
+       |${ivfAssignSql(cells, AnnIvfProbes)},
        |qa AS (
        |  SELECT v.vec_id, v.nemb, a.cid FROM n v
        |  JOIN asgn a ON a.vec_id = v.vec_id),
        |p AS (
        |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id, $score AS score
        |  FROM qa q JOIN da d ON q.cid = d.cid AND q.vec_id <> d.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
+       |$topKSql""".stripMargin
   }
-
-  // ------------------------------------------ ANN scaled-row builders ---
-
-  /** Builders shared by the declared `*_scaled` ANN rows.
-    *
-    * The fixture ANN rows pin SMALL-SCALE operating points (c = 16
-    * cells, 8-bit buckets, fixed-FRACTION eval samples) because the
-    * DuckDB oracle must replay them affordably. Those constants do not
-    * survive 100×: a bucketed/celled knn SELF-join does N²/buckets work,
-    * so holding buckets fixed while N grows 100× grows the scored-pair
-    * set 100× — measured at sf10, q_ann_ivf's 5·10⁹-pair join sat 25
-    * minutes in one WindowGroupLimit partition. The `*_scaled` rows size
-    * the index from the corpus the way MIGRATION.md's rules say to —
-    * bits ≈ log2(N/target_bucket_rows), c ≈ √N, eval anchors/samples a
-    * fixed COUNT (not fraction) — so scale sweeps measure whether the
-    * PLAN survives, not whether a fixture-sized constant does. */
-  private def annMultiprobeScaled(s: SparkSession, dir: String, bits: Int,
-      capFactor: Option[Double] = None): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    VectorSearch.multiProbeKnnJoin(emb, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits,
-      maxBucketFactor = capFactor,
-      dataCountHint = Some(embCount(s, dir)))
-      .orderBy("query_id", "rank")
-  }
-
-  /** Scaled recall eval of the CAPPED serving config: recall of
-    * [[VectorSearch.multibandKnnJoin]] at the SWEEP's own operating
-    * point (corpus-sized `bits`, caller-chosen `bands`, production
-    * cap factor) against exact top-k on a fixed-count query sample —
-    * so the sweep's capped serving row carries a measured recall
-    * number, not an argued one. `bands` is EXPLICIT (ADVICE r13): each
-    * declared row passes the constant its oracle SQL burns in
-    * ([[ScaledCapBands]] or [[ScaledCapBandsB4]]), so retuning
-    * [[LshMultiBands]] can never silently desynchronize a declared row
-    * from its oracle. */
-  private def annRecallCappedScaled(s: SparkSession, dir: String, mod: Long,
-      bits: Int, capFactor: Double, bands: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") % mod === 0)
-    val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, excludeSelf = true,
-      // sample x corpus ground truth: broadcast the bounded sample so the
-      // corpus streams once (no per-query-partition recompute, no corpus
-      // movement) - the only orientation that survives 100 TB
-      broadcastQueries = true)
-      .select(col("query_id"), col("neighbor_id"))
-    val ann = VectorSearch.multibandKnnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim,
-      bits = bits, bands = bands,
-      maxBucketFactor = Some(capFactor),
-      dataCountHint = Some(embCount(s, dir)),
-      queriesCountHint = Some(math.max(1L, embCount(s, dir) / mod)))
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = exact.join(ann, Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("__h"))
-    exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("query_id"), "left")
-      .withColumn("n_hits", coalesce(col("__h"), lit(0L)))
-      .withColumn("recall_milli", expr("(n_hits * 1000) div n_exact"))
-      .select("query_id", "n_exact", "n_hits", "recall_milli")
-      .orderBy("query_id")
-  }
-
-  /** Recall eval of the CAPPED multiprobe serving config
-    * ([[VectorSearch.multiProbeKnnJoin]] with `maxBucketFactor`) vs
-    * exact top-k on a fixed-count query sample — the single-band cap's
-    * recall certificate ([[annRecallCappedScaled]]'s eval shape). */
-  private def annRecallMultiprobeScaled(s: SparkSession, dir: String, mod: Long,
-      bits: Int, capFactor: Double): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val queries = emb.filter(col("vec_id") % mod === 0)
-    val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, excludeSelf = true,
-      broadcastQueries = true)
-      .select(col("query_id"), col("neighbor_id"))
-    val ann = VectorSearch.multiProbeKnnJoin(queries, emb, "embedding", "vec_id",
-      Metric.Cosine, k = KnnJoinK, dim = EmbeddingDim, bits = bits,
-      maxBucketFactor = Some(capFactor),
-      dataCountHint = Some(embCount(s, dir)),
-      queriesCountHint = Some(math.max(1L, embCount(s, dir) / mod)))
-      .select(col("query_id"), col("neighbor_id"))
-    val hits = exact.join(ann, Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("__h"))
-    exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("query_id"), "left")
-      .withColumn("n_hits", coalesce(col("__h"), lit(0L)))
-      .withColumn("recall_milli", expr("(n_hits * 1000) div n_exact"))
-      .select("query_id", "n_exact", "n_hits", "recall_milli")
-      .orderBy("query_id")
-  }
-
-  private def semanticDedupScaled(s: SparkSession, dir: String, c: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
-    VectorSearch.semanticDedup(emb, "embedding", "vec_id", Metric.Cosine,
-      tau = SemDedupTau, c = c, centroids = Some(centroids))
-      .orderBy("vec_id")
-  }
-
-  /** [[qSplitLeakage]] at an explicit cell count, for the self-sizing
-    * twin q_split_leakage_scaled. */
-  private def splitLeakageScaled(s: SparkSession, dir: String, c: Int): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, c),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", c, Metric.Cosine))
-    val isTrain =
-      Splits.hashBucket(col("vec_id"), LeakSalt) <
-        math.round(LeakTrainFrac * Splits.Buckets)
-    VectorSearch.clusterMaxSim(
-      emb.filter(!isTrain), emb.filter(isTrain),
-      "embedding", "vec_id", Metric.Cosine, centroids)
-      .withColumn("leaked",
-        col("max_sim").isNotNull && col("max_sim") > LeakTau)
-      .orderBy("vec_id")
-  }
-
-  private def contrastivePairsScaled(s: SparkSession, dir: String, mod: Long): DataFrame =
-    Contrastive.minePairs(
-      Tables.embeddings(s, dir).select("vec_id", "embedding"),
-      "embedding", "vec_id", Metric.Cosine,
-      anchorFilter = col("vec_id") % mod === 0,
-      nPos = 1, hardStart = PairsHardStart, nHard = PairsNHard,
-      nRandom = PairsNRandom,
-      // the scaled row's anchor set is a FIXED-COUNT sample (~1000 at
-      // mod = scaledEvalMod) — exactly the bounded-sample case
-      // broadcastAnchors exists for. Measured at sf10 (r16): default
-      // orientation 137.1s vs broadcast 94.6s; the fixture row
-      // (anchors = N/10, corpus-fraction) keeps the default.
-      broadcastAnchors = true)
-      .orderBy("anchor_id", "pair_type", "pair_rank")
 
   // ------------------------------------------------------------ sketches ---
 
@@ -4179,22 +3197,34 @@ object Queries {
   private val PairsNHard = 5
   private val PairsNRandom = 5
 
+  /** Anchor density of q_contrastive_pairs: every 10th vector. */
+  private val PairsAnchorMod = 10
+
   /** Contrastive training pairs ([[Contrastive.minePairs]], the DPR
-    * recipe): anchors are every 10th vector; the positive is the
+    * recipe): anchors are every `mod`-th vector; the positive is the
     * nearest neighbor, hard negatives are retrieval ranks 6–10 (the
     * gap at 2–5 avoids mislabeling borderline near-dups), random
     * negatives are hash-mod ids with self/positive collisions
-    * filtered. */
-  private def qContrastivePairs(s: SparkSession, dir: String): DataFrame =
+    * filtered. Rows: q_contrastive_pairs ([[PairsAnchorMod]]: anchors a
+    * corpus FRACTION, N²/10 retrieval work) and
+    * q_contrastive_pairs_scaled ([[scaledEvalMod]]: a FIXED-COUNT
+    * ~1000-anchor sample at any corpus size, so the exact retrieval
+    * side stays anchors×corpus). `broadcastAnchors` is the scaled row's
+    * plan choice — a bounded anchor sample is exactly the case it
+    * exists for (sf10, r16: default orientation 137.1s vs broadcast
+    * 94.6s); the fixture row keeps the default orientation. */
+  private def contrastivePairs(s: SparkSession, dir: String, mod: Long,
+      broadcastAnchors: Boolean): DataFrame =
     Contrastive.minePairs(
       Tables.embeddings(s, dir).select("vec_id", "embedding"),
       "embedding", "vec_id", Metric.Cosine,
-      anchorFilter = col("vec_id") % 10 === 0,
+      anchorFilter = col("vec_id") % mod === 0,
       nPos = 1, hardStart = PairsHardStart, nHard = PairsNHard,
-      nRandom = PairsNRandom)
+      nRandom = PairsNRandom, broadcastAnchors = broadcastAnchors)
       .orderBy("anchor_id", "pair_type", "pair_rank")
 
-  private val qContrastivePairsSql: String = {
+  /** Oracle of [[contrastivePairs]]; `mod` is a SQL scalar. */
+  private def contrastivePairsSql(mod: String): String = {
     val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
     val hardEnd = PairsHardStart + PairsNHard - 1
     s"""WITH ${Oracle.embeddingsCte},
@@ -4202,63 +3232,7 @@ object Queries {
        |p AS (
        |  SELECT a.vec_id AS anchor_id, b.vec_id AS neighbor_id, $score AS score
        |  FROM n a CROSS JOIN n b
-       |  WHERE a.vec_id % 10 = 0 AND a.vec_id <> b.vec_id),
-       |r AS (
-       |  SELECT anchor_id, neighbor_id,
-       |         ROW_NUMBER() OVER (PARTITION BY anchor_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p),
-       |pos AS (SELECT anchor_id, neighbor_id, rank FROM r WHERE rank <= 1),
-       |hard AS (SELECT anchor_id, neighbor_id, rank FROM r
-       |         WHERE rank BETWEEN $PairsHardStart AND $hardEnd),
-       |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
-       |rnd AS (
-       |  SELECT a.anchor_id,
-       |         CAST('0x' || substr(md5(CAST(a.anchor_id AS VARCHAR) || ':'
-       |              || CAST(g.j AS VARCHAR)), 1, 15) AS BIGINT) % cnt.n AS other_id,
-       |         g.j
-       |  FROM pos a CROSS JOIN cnt
-       |       CROSS JOIN generate_series(1, $PairsNRandom) g(j)),
-       |rndf AS (
-       |  SELECT r.anchor_id, r.other_id, r.j
-       |  FROM rnd r JOIN pos p ON r.anchor_id = p.anchor_id
-       |  WHERE r.other_id <> r.anchor_id AND r.other_id <> p.neighbor_id),
-       |allp AS (
-       |  SELECT anchor_id, neighbor_id AS other_id, 'positive' AS pair_type,
-       |         CAST(rank AS BIGINT) AS pair_rank FROM pos
-       |  UNION ALL
-       |  SELECT anchor_id, neighbor_id,
-       |         'hard_negative', CAST(rank - ${PairsHardStart - 1} AS BIGINT) FROM hard
-       |  UNION ALL
-       |  SELECT anchor_id, other_id, 'random_negative', CAST(j AS BIGINT) FROM rndf)
-       |SELECT anchor_id, other_id, pair_type, pair_rank FROM allp
-       |ORDER BY anchor_id, pair_type, pair_rank""".stripMargin
-  }
-
-  /** [[qContrastivePairs]] at the SCALED anchor density (VERDICT r13
-    * #1: the bench-only `q_contrastive_pairs_scaled` substitution
-    * promoted to a declared hash-gated row): anchors every
-    * `scaledEvalMod(N)`-th vector — a FIXED-COUNT (~1000) anchor set at
-    * any corpus size, so the exact retrieval side stays anchors×corpus
-    * (2·10⁸ dots at sf10, the certified recall-row shape) instead of
-    * the fixture's N²/10. Same DPR rank windows, same md5 random
-    * negatives; `mod` is derived from `count(embeddings)` identically
-    * in both engines. */
-  private def qContrastivePairsScaled(s: SparkSession, dir: String): DataFrame = {
-    val n = embCount(s, dir)
-    contrastivePairsScaled(s, dir, scaledEvalMod(n))
-  }
-
-  private val qContrastivePairsScaledSql: String = {
-    val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    val hardEnd = PairsHardStart + PairsNHard - 1
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (SELECT GREATEST(20, count(*) // 1000) AS mod FROM embeddings),
-       |p AS (
-       |  SELECT a.vec_id AS anchor_id, b.vec_id AS neighbor_id, $score AS score
-       |  FROM n a CROSS JOIN n b
-       |  WHERE a.vec_id % (SELECT mod FROM params) = 0 AND a.vec_id <> b.vec_id),
+       |  WHERE a.vec_id % $mod = 0 AND a.vec_id <> b.vec_id),
        |r AS (
        |  SELECT anchor_id, neighbor_id,
        |         ROW_NUMBER() OVER (PARTITION BY anchor_id
@@ -4619,14 +3593,13 @@ object Queries {
       |ORDER BY relationship""".stripMargin
 
   private val SimHistSalt = "simhist"
-  private val SimHistBuckets = 20
 
   /** Embedding-space similarity histogram — corpus diagnostics (a
     * collapsed or duplicate-heavy embedding space shows up instantly in
     * this profile): every vector pairs with ONE deterministic partner
     * (`hash(id) mod N`, self-pairs dropped) — an unbiased-enough sample
     * that costs one id equi-join and NO quadratic work — and the cosine
-    * lands in one of 20 fixed-width buckets by exact integer floor
+    * lands in one of 21 width-0.1 buckets by exact integer floor
     * (cosines are bit-identical cross-engine, so the floor is too).
     * Output: `(bucket, n_pairs)`, bucket = ⌊cos·10⌋ ∈ [−10, 10]. */
   private def qSimHistogram(s: SparkSession, dir: String): DataFrame = {
@@ -4944,109 +3917,45 @@ object Queries {
     * .clusterMaxSim]]): hash-split the vectors 80/20, then every test
     * row's max cosine to any train row WITHIN its centroid cluster —
     * the semantic contamination check n-gram overlap
-    * ([[qContamination]]) cannot catch. Same memoized centroids as the
-    * other IVF-family queries. */
-  private def qSplitLeakage(s: SparkSession, dir: String): DataFrame = {
+    * ([[qContamination]]) cannot catch — over `c` memoized first-c
+    * cells. Rows: q_split_leakage ([[IvfCells]]) and
+    * q_split_leakage_scaled ([[scaledIvfCells]]: within-cell pair work
+    * stays ~N·√N-bounded along the scale curve instead of the N²/16
+    * the r9 sweep measured dying at sf10). */
+  private def splitLeakage(s: SparkSession, dir: String, c: Int): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val centroids = centroidCache.computeIfAbsent(centroidKey(dir, 16),
-      _ => VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine))
+    val cents = centroids(dir, emb, c)
     val isTrain =
       Splits.hashBucket(col("vec_id"), LeakSalt) <
         math.round(LeakTrainFrac * Splits.Buckets)
     VectorSearch.clusterMaxSim(
       emb.filter(!isTrain), emb.filter(isTrain),
-      "embedding", "vec_id", Metric.Cosine, centroids)
+      "embedding", "vec_id", Metric.Cosine, cents)
       .withColumn("leaked",
         col("max_sim").isNotNull && col("max_sim") > LeakTau)
       .orderBy("vec_id")
   }
 
-  private val qSplitLeakageSql: String = {
+  private def splitLeakageSql(cells: String): String = {
     val p = Sketches.MinhashPrime
     val b = Splits.Buckets
     val bound = math.round(LeakTrainFrac * b)
     val bucket =
       s"((CAST('0x' || substr(md5('$LeakSalt:' || CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
     val sim = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
     s"""WITH ${Oracle.embeddingsCte},
        |${Oracle.normalizedCte},
-       |c AS (SELECT vec_id AS cid, nemb AS cvec FROM n ORDER BY vec_id LIMIT 16),
-       |da AS (
-       |  SELECT vec_id, nemb, cid, ($bucket < $bound) AS is_train FROM (
-       |    SELECT v.vec_id, v.nemb, c.cid,
-       |           ROW_NUMBER() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $assign DESC, c.cid ASC) AS rn
-       |    FROM n v CROSS JOIN c) WHERE rn = 1),
+       |${ivfAssignSql(cells, 1)},
+       |dt AS MATERIALIZED (
+       |  SELECT vec_id, nemb, cid, ($bucket < $bound) AS is_train FROM da),
        |m AS (
        |  SELECT a.vec_id, max($sim) AS max_sim
-       |  FROM da a JOIN da b ON a.cid = b.cid AND NOT a.is_train AND b.is_train
+       |  FROM dt a JOIN dt b ON a.cid = b.cid AND NOT a.is_train AND b.is_train
        |  GROUP BY 1)
        |SELECT d.vec_id, d.cid AS centroid_id, m.max_sim,
        |       (m.max_sim IS NOT NULL
        |        AND m.max_sim > CAST($LeakTau AS DOUBLE)) AS leaked
-       |FROM da d LEFT JOIN m ON d.vec_id = m.vec_id
-       |WHERE NOT d.is_train
-       |ORDER BY d.vec_id""".stripMargin
-  }
-
-  /** [[qSplitLeakage]] at the SCALED operating point — closing the one
-    * weak spot the r11 verdict flagged in the dedup family: the declared
-    * leakage row pins c = 16 fixture cells, the exact shape whose
-    * N²/16 within-cell pair work the r9 sweep measured dying at sf10.
-    * Here `c` is [[scaledIvfCells]]`(count(embeddings))` in BOTH
-    * engines (the q_ann_ivf_scaled rule: power-of-two ceiling of √N,
-    * pure integer, clamped [16, 4096]), so the SAME declared row
-    * certifies the leakage check at c=32 @ sf0.01, 256 @ sf1, 512 @
-    * sf10 — within-cell pair work stays ~N·√N-bounded along the scale
-    * curve. The oracle assigns cells through the skinny-window form
-    * (window input carries (vec_id, cid) + the score ORDER key only —
-    * never nemb), the restructuring that makes the N·c assignment
-    * replayable at sf10 (~2.4 GB window spill instead of the r11
-    * form's ~100 GB vector-cartesian). */
-  private def qSplitLeakageScaled(s: SparkSession, dir: String): DataFrame =
-    splitLeakageScaled(s, dir,
-      scaledIvfCells(embCount(s, dir)))
-
-  private val qSplitLeakageScaledSql: String = {
-    val p = Sketches.MinhashPrime
-    val b = Splits.Buckets
-    val bound = math.round(LeakTrainFrac * b)
-    val bucket =
-      s"((CAST('0x' || substr(md5('$LeakSalt:' || CAST(v.vec_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
-    val assign = Oracle.dot("v.nemb", "c.cvec", EmbeddingDim)
-    val sim = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |params AS (
-       |  SELECT GREATEST(16, LEAST(4096,
-       |           1 << ((length(bin(GREATEST(1, count(*)))) + 1) // 2))) AS c
-       |  FROM embeddings),
-       |c AS (
-       |  SELECT vec_id AS cid, nemb AS cvec FROM (
-       |    SELECT vec_id, nemb, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn
-       |    FROM n)
-       |  WHERE rn <= (SELECT c FROM params)),
-       |sc AS (
-       |  SELECT v.vec_id, c.cid, $assign AS s
-       |  FROM n v CROSS JOIN c),
-       |asgn AS (
-       |  SELECT vec_id, cid FROM (
-       |    SELECT vec_id, cid,
-       |           ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                              ORDER BY s DESC, cid ASC) AS rn
-       |    FROM sc) WHERE rn = 1),
-       |da AS MATERIALIZED (
-       |  SELECT v.vec_id, v.nemb, a.cid, ($bucket < $bound) AS is_train
-       |  FROM n v JOIN asgn a ON a.vec_id = v.vec_id),
-       |m AS (
-       |  SELECT a.vec_id, max($sim) AS max_sim
-       |  FROM da a JOIN da b ON a.cid = b.cid AND NOT a.is_train AND b.is_train
-       |  GROUP BY 1)
-       |SELECT d.vec_id, d.cid AS centroid_id, m.max_sim,
-       |       (m.max_sim IS NOT NULL
-       |        AND m.max_sim > CAST($LeakTau AS DOUBLE)) AS leaked
-       |FROM da d LEFT JOIN m ON d.vec_id = m.vec_id
+       |FROM dt d LEFT JOIN m ON d.vec_id = m.vec_id
        |WHERE NOT d.is_train
        |ORDER BY d.vec_id""".stripMargin
   }
@@ -5752,8 +4661,7 @@ object Queries {
     * argmin assignment replayed relationally and bit-packed. */
   private def qStreamCodes(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val cbs = pqCodebookCache.computeIfAbsent(pqCodebookKey(dir, PqKsub), _ =>
-      VectorSearch.pqCodebooks(emb, "embedding", "vec_id", PqM, PqKsub, Metric.Cosine))
+    val cbs = codebooks(dir, emb, PqKsub)
     val landing = embLandingCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
       val d = java.nio.file.Paths.get(
         Tables.scratchPath(s"emb_landing_${java.util.UUID.randomUUID()}"))
@@ -6174,15 +5082,44 @@ object Queries {
       |    AND o.o_orderdate < TIMESTAMP '1996-01-01')
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
+  /** The dense interval set of q_range_join / q_overlap_join: orders
+    * placed in March 1995. */
+  private def march1995: Column =
+    col("o_orderdate") >= lit("1995-03-01").cast("timestamp") &&
+      col("o_orderdate") < lit("1995-04-01").cast("timestamp")
+
+  private val March1995Sql =
+    """o.o_orderdate >= TIMESTAMP '1995-03-01'
+      |  AND o.o_orderdate < TIMESTAMP '1995-04-01'""".stripMargin
+
+  /** The SPARSE-BUT-WIDE interval set of the `_sparse` twins — the
+    * documented failure mode of the r11 global-min/max points prune
+    * (VERDICT r11 #3): orders placed in the OPENING 3 DAYS of any
+    * March, a seasonal-audit pattern that recurs once per fixture year,
+    * so the intervals span the whole date axis (global bounds cover
+    * ~everything → the bounds prune goes inert) while covering ~2% of
+    * its 4-day buckets. The bucket-id bloom of
+    * [[graft.plans.ExpandRangeJoin]] / [[graft.plans.ExpandOverlapJoin]]
+    * is the load-bearing prune here: points in the ~98% of buckets no
+    * interval overlaps drop map-side, BELOW the bucket exchange.
+    * Calendar predicates survive [[ScaleUp]]'s axis extension (replicas
+    * shift by whole spans, so every replica contributes its own
+    * Marches) — the sparsity RATIO is scale-invariant. */
+  private def marchOpenings: Column =
+    month(col("o_orderdate")) === 3 && dayofmonth(col("o_orderdate")) <= 3
+
+  private val MarchOpeningsSql = "month(o.o_orderdate) = 3 AND day(o.o_orderdate) <= 3"
+
   /** Range join via the custom [[graft.plans.RangeJoinPlan]] logical
     * node + [[graft.plans.ExpandRangeJoin]] optimizer rule: lineitems
-    * shipped within 3 days of any March-1995 order's date — a pure
-    * range predicate with NO equi-key, which Spark natively plans as
-    * BroadcastNestedLoopJoin (O(n·m), dead at 100 TB) and the rule
+    * shipped within 3 days of the date of any order in `orders` — a
+    * pure range predicate with NO equi-key, which Spark natively plans
+    * as BroadcastNestedLoopJoin (O(n·m), dead at 100 TB) and the rule
     * expands into a bucketed equi-join (4-day buckets ⇒ ≤ 2 bucket
     * rows per order). Epochs as LONG seconds; quantities are integral
-    * doubles, summed as exact longs. */
-  private def qRangeJoin(s: SparkSession, dir: String): DataFrame = {
+    * doubles, summed as exact longs. Rows: q_range_join
+    * ([[march1995]]), q_range_join_sparse ([[marchOpenings]]). */
+  private def rangeJoin(s: SparkSession, dir: String, orders: Column): DataFrame = {
     val points = Tables.lineitem(s, dir).select(
       col("l_orderkey"),
       col("l_quantity"),
@@ -6191,8 +5128,7 @@ object Queries {
       // wall-clock — same reading DuckDB's epoch() gives)
       col("l_shipdate").cast("timestamp").cast("long").as("ship_s"))
     val intervals = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1995-03-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1995-04-01").cast("timestamp"))
+      .filter(orders)
       .select(
         col("o_orderkey"),
         col("o_orderdate").cast("timestamp").cast("long").as("lo_s"),
@@ -6205,83 +5141,38 @@ object Queries {
       .orderBy("o_orderkey")
   }
 
-  private val qRangeJoinSql: String =
-    """SELECT o.o_orderkey AS o_orderkey,
-      |       CAST(count(*) AS BIGINT) AS n_ship,
-      |       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
-      |FROM orders o
-      |JOIN lineitem l
-      |  ON CAST(epoch(l.l_shipdate) AS BIGINT) >= CAST(epoch(o.o_orderdate) AS BIGINT)
-      | AND CAST(epoch(l.l_shipdate) AS BIGINT) <= CAST(epoch(o.o_orderdate) AS BIGINT) + 3 * 86400
-      |WHERE o.o_orderdate >= TIMESTAMP '1995-03-01'
-      |  AND o.o_orderdate < TIMESTAMP '1995-04-01'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Range join over a SPARSE-BUT-WIDE interval set — the documented
-    * failure mode of the r11 global-min/max points prune (VERDICT r11
-    * #3): intervals are orders placed in the OPENING 3 DAYS of any
-    * March, a seasonal-audit pattern that recurs once per fixture year,
-    * so the interval clusters span the whole date axis (global bounds
-    * cover ~everything → the r11 prune goes inert) while covering ~2%
-    * of its 4-day buckets. The r12 bucket-id bloom in
-    * [[graft.plans.ExpandRangeJoin]] is the load-bearing prune here:
-    * points in the ~98% of buckets no interval overlaps are dropped
-    * map-side, BELOW the bucket exchange. Calendar predicates survive
-    * [[ScaleUp]]'s axis extension (replicas shift by whole spans, so
-    * every replica contributes its own Marches) — the sparsity RATIO is
-    * scale-invariant and the A/B knob measures the bloom on the same
-    * fixture at any sf. */
-  private def qRangeJoinSparse(s: SparkSession, dir: String): DataFrame = {
-    val points = Tables.lineitem(s, dir).select(
-      col("l_orderkey"),
-      col("l_quantity"),
-      col("l_shipdate").cast("timestamp").cast("long").as("ship_s"))
-    val intervals = Tables.orders(s, dir)
-      .filter(month(col("o_orderdate")) === 3 && dayofmonth(col("o_orderdate")) <= 3)
-      .select(
-        col("o_orderkey"),
-        col("o_orderdate").cast("timestamp").cast("long").as("lo_s"),
-        (col("o_orderdate").cast("timestamp").cast("long") + lit(3L * 86400)).as("hi_s"))
-    Temporal.rangeJoin(points, "ship_s", intervals, "lo_s", "hi_s", 4L * 86400)
-      .groupBy("o_orderkey")
-      .agg(
-        count(lit(1)).as("n_ship"),
-        sum(col("l_quantity").cast("long")).as("qty_sum"))
-      .orderBy("o_orderkey")
-  }
-
-  private val qRangeJoinSparseSql: String =
-    """SELECT o.o_orderkey AS o_orderkey,
-      |       CAST(count(*) AS BIGINT) AS n_ship,
-      |       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
-      |FROM orders o
-      |JOIN lineitem l
-      |  ON CAST(epoch(l.l_shipdate) AS BIGINT) >= CAST(epoch(o.o_orderdate) AS BIGINT)
-      | AND CAST(epoch(l.l_shipdate) AS BIGINT) <= CAST(epoch(o.o_orderdate) AS BIGINT) + 3 * 86400
-      |WHERE month(o.o_orderdate) = 3 AND day(o.o_orderdate) <= 3
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+  private def rangeJoinSql(orders: String): String =
+    s"""SELECT o.o_orderkey AS o_orderkey,
+       |       CAST(count(*) AS BIGINT) AS n_ship,
+       |       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
+       |FROM orders o
+       |JOIN lineitem l
+       |  ON CAST(epoch(l.l_shipdate) AS BIGINT) >= CAST(epoch(o.o_orderdate) AS BIGINT)
+       | AND CAST(epoch(l.l_shipdate) AS BIGINT) <= CAST(epoch(o.o_orderdate) AS BIGINT) + 3 * 86400
+       |WHERE $orders
+       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Interval-OVERLAP join ([[Temporal.overlapJoin]], the custom
     * [[graft.plans.OverlapJoinPlan]] node) — the interval×interval
     * join type the point-in-interval [[graft.plans.RangeJoinPlan]]
     * cannot express: lineitem shipment-activity windows
-    * `[ship−1d, ship+1d]` overlapping March-1995 order fulfillment
-    * windows `[o_date, o_date+3d]`. Both sides explode to 4-day
-    * buckets, ONE equi-join on bucket id with the exact overlap
-    * predicate as residual, and duplicate pairs die by bucket
-    * OWNERSHIP (a pair counts only in bucket `max(lo_l, lo_r) div w`) —
-    * no distinct, so `count(*)` certifies the dedup through the hash
-    * gate: one extra or missing pair changes `n_overlap`. The
-    * corpus-scale lineitem frame is the LEFT side (the operator's
-    * orientation contract): [[graft.plans.ExpandOverlapJoin]]'s
+    * `[ship−1d, ship+1d]` overlapping the fulfillment windows
+    * `[o_date, o_date+3d]` of the orders in `orders`. Both sides
+    * explode to 4-day buckets, ONE equi-join on bucket id with the
+    * exact overlap predicate as residual, and duplicate pairs die by
+    * bucket OWNERSHIP (a pair counts only in bucket
+    * `max(lo_l, lo_r) div w`) — no distinct, so `count(*)` certifies
+    * the dedup through the hash gate: one extra or missing pair changes
+    * `n_overlap`. The corpus-scale lineitem frame is the LEFT side (the
+    * operator's orientation contract): [[graft.plans.ExpandOverlapJoin]]'s
     * runtime prune — hull bounds pre-explode + bucket-id bloom below
-    * the exchange, one metadata-scale subquery over the March orders —
-    * drops the ~99% of shipment windows that cannot overlap any March
-    * fulfillment window before they shuffle. */
-  private def qOverlapJoin(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.orders(s, dir)
-      .filter(col("o_orderdate") >= lit("1995-03-01").cast("timestamp") &&
-        col("o_orderdate") < lit("1995-04-01").cast("timestamp"))
+    * the exchange, one metadata-scale subquery over the orders — drops
+    * the shipment windows that cannot overlap any fulfillment window
+    * before they shuffle. Rows: q_overlap_join ([[march1995]]),
+    * q_overlap_join_sparse ([[marchOpenings]]). */
+  private def overlapJoin(s: SparkSession, dir: String, orders: Column): DataFrame = {
+    val right = Tables.orders(s, dir)
+      .filter(orders)
       .select(
         col("o_orderkey"),
         col("o_orderdate").cast("timestamp").cast("long").as("lo_r"),
@@ -6290,7 +5181,7 @@ object Queries {
       col("l_quantity"),
       (col("l_shipdate").cast("timestamp").cast("long") - lit(86400L)).as("lo_l"),
       (col("l_shipdate").cast("timestamp").cast("long") + lit(86400L)).as("hi_l"))
-    Temporal.overlapJoin(ships, "lo_l", "hi_l", orders, "lo_r", "hi_r", 4L * 86400)
+    Temporal.overlapJoin(ships, "lo_l", "hi_l", right, "lo_r", "hi_r", 4L * 86400)
       .groupBy("o_orderkey")
       .agg(
         count(lit(1)).as("n_overlap"),
@@ -6298,64 +5189,18 @@ object Queries {
       .orderBy("o_orderkey")
   }
 
-  private val qOverlapJoinSql: String =
-    """SELECT o.o_orderkey AS o_orderkey,
-      |       CAST(count(*) AS BIGINT) AS n_overlap,
-      |       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
-      |FROM orders o
-      |JOIN lineitem l
-      |  ON CAST(epoch(o.o_orderdate) AS BIGINT)
-      |       <= CAST(epoch(l.l_shipdate) AS BIGINT) + 86400
-      | AND CAST(epoch(l.l_shipdate) AS BIGINT) - 86400
-      |       <= CAST(epoch(o.o_orderdate) AS BIGINT) + 3 * 86400
-      |WHERE o.o_orderdate >= TIMESTAMP '1995-03-01'
-      |  AND o.o_orderdate < TIMESTAMP '1995-04-01'
-      |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** [[qOverlapJoin]] over a SPARSE-BUT-WIDE right set — the
-    * [[qRangeJoinSparse]] failure mode transplanted to the
-    * interval×interval node: fulfillment windows of orders placed in
-    * the OPENING 3 DAYS of any March (every fixture year contributes a
-    * cluster, so the right set's HULL spans the whole date axis — the
-    * pre-explode bounds prune goes inert) while covering ~2% of the
-    * 4-day buckets. [[graft.plans.ExpandOverlapJoin]]'s bucket-id
-    * bloom is the load-bearing prune: shipment windows in the ~98% of
-    * buckets no March-opening fulfillment window overlaps drop
-    * map-side, below the exchange. Calendar predicates survive
-    * [[ScaleUp]]'s axis extension, so the sparsity RATIO is
-    * scale-invariant and the A/B knobs measure the bloom on the same
-    * fixture at any sf. */
-  private def qOverlapJoinSparse(s: SparkSession, dir: String): DataFrame = {
-    val orders = Tables.orders(s, dir)
-      .filter(month(col("o_orderdate")) === 3 && dayofmonth(col("o_orderdate")) <= 3)
-      .select(
-        col("o_orderkey"),
-        col("o_orderdate").cast("timestamp").cast("long").as("lo_r"),
-        (col("o_orderdate").cast("timestamp").cast("long") + lit(3L * 86400)).as("hi_r"))
-    val ships = Tables.lineitem(s, dir).select(
-      col("l_quantity"),
-      (col("l_shipdate").cast("timestamp").cast("long") - lit(86400L)).as("lo_l"),
-      (col("l_shipdate").cast("timestamp").cast("long") + lit(86400L)).as("hi_l"))
-    Temporal.overlapJoin(ships, "lo_l", "hi_l", orders, "lo_r", "hi_r", 4L * 86400)
-      .groupBy("o_orderkey")
-      .agg(
-        count(lit(1)).as("n_overlap"),
-        sum(col("l_quantity").cast("long")).as("qty_sum"))
-      .orderBy("o_orderkey")
-  }
-
-  private val qOverlapJoinSparseSql: String =
-    """SELECT o.o_orderkey AS o_orderkey,
-      |       CAST(count(*) AS BIGINT) AS n_overlap,
-      |       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
-      |FROM orders o
-      |JOIN lineitem l
-      |  ON CAST(epoch(o.o_orderdate) AS BIGINT)
-      |       <= CAST(epoch(l.l_shipdate) AS BIGINT) + 86400
-      | AND CAST(epoch(l.l_shipdate) AS BIGINT) - 86400
-      |       <= CAST(epoch(o.o_orderdate) AS BIGINT) + 3 * 86400
-      |WHERE month(o.o_orderdate) = 3 AND day(o.o_orderdate) <= 3
-      |GROUP BY 1 ORDER BY 1""".stripMargin
+  private def overlapJoinSql(orders: String): String =
+    s"""SELECT o.o_orderkey AS o_orderkey,
+       |       CAST(count(*) AS BIGINT) AS n_overlap,
+       |       CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS qty_sum
+       |FROM orders o
+       |JOIN lineitem l
+       |  ON CAST(epoch(o.o_orderdate) AS BIGINT)
+       |       <= CAST(epoch(l.l_shipdate) AS BIGINT) + 86400
+       | AND CAST(epoch(l.l_shipdate) AS BIGINT) - 86400
+       |       <= CAST(epoch(o.o_orderdate) AS BIGINT) + 3 * 86400
+       |WHERE $orders
+       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** JSON property extraction (`props` is a JSON string column):
     * per-event-type sum of the numeric `k` field. */
@@ -6875,18 +5720,12 @@ object Queries {
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("char_sum"))
       .orderBy("split", "lang")
 
-  private val qSplitSql: String = {
-    val p = Sketches.MinhashPrime
-    val b = Splits.Buckets
-    val bounds = SplitWeights.scanLeft(0L) { case (acc, (_, w)) =>
-      acc + math.round(w * b)
-    }.tail
+  private val qSplitSql: String =
     s"""SELECT $splitCaseSql AS split, lang,
        |       CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(n_chars) AS BIGINT) AS char_sum
        |FROM documents
        |GROUP BY 1, 2 ORDER BY split, lang""".stripMargin
-  }
 
   /** Oracle fragment: [[Splits.assignSplit]]'s CASE expression over
     * `doc_id` with the declared salt/weights (shared by [[qSplitSql]]
@@ -7827,44 +6666,92 @@ object Queries {
     GraftQuery("q_approx_stats", qApproxStats, Some(qApproxStatsSql)),
     GraftQuery("q_bucketed_join", qBucketedJoin, Some(qBucketedJoinSql)),
     GraftQuery("q_ann_lsh", qAnnLsh, Some(qAnnLshSql)),
-    GraftQuery("q_ann_lsh_multi", qAnnLshMulti, Some(qAnnLshMultiSql)),
-    GraftQuery("q_ann_capped", qAnnCapped, Some(qAnnCappedSql)),
-    GraftQuery("q_ann_capped_scaled", qAnnCappedScaled, Some(qAnnCappedScaledSql)),
-    GraftQuery("q_ann_recall", qAnnRecall, Some(qAnnRecallSql)),
-    GraftQuery("q_ann_recall_capped", qAnnRecallCapped, Some(qAnnRecallCappedSql)),
-    GraftQuery("q_ann_recall_capped_scaled", qAnnRecallCappedScaled,
-      Some(qAnnRecallCappedScaledSql)),
-    GraftQuery("q_ann_recall_capped_scaled_b4", qAnnRecallCappedScaledB4,
-      Some(qAnnRecallCappedScaledB4Sql)),
-    GraftQuery("q_ann_multiprobe", qAnnMultiprobe, Some(qAnnMultiprobeSql)),
-    GraftQuery("q_ann_multiprobe_scaled", qAnnMultiprobeScaled,
-      Some(qAnnMultiprobeScaledSql)),
-    GraftQuery("q_ann_multiprobe_capped_scaled", qAnnMultiprobeCappedScaled,
-      Some(qAnnMultiprobeCappedScaledSql)),
-    GraftQuery("q_ann_recall_multiprobe_scaled", qAnnRecallMultiprobeScaled,
-      Some(qAnnRecallMultiprobeScaledSql)),
+    GraftQuery("q_ann_lsh_multi",
+      (s, d) => annServe(s, d, multiband(s, d, LshMultiBits, LshMultiBands, None)),
+      Some(annServeSql(s"$LshMultiBits", multibandSql(LshMultiBands, None)))),
+    GraftQuery("q_ann_capped",
+      (s, d) => annServe(s, d, multiband(s, d, LshMultiBits, LshMultiBands, Some(AnnCapFactor))),
+      Some(annServeSql(s"$LshMultiBits", multibandSql(LshMultiBands, Some(AnnCapFactor))))),
+    GraftQuery("q_ann_capped_scaled",
+      (s, d) => annServe(s, d, multiband(s, d, scaledLshBits(embCount(s, d)),
+        ScaledCapBands, Some(AnnCapFactor))),
+      Some(annServeSql(ScaledLshBitsSql, multibandSql(ScaledCapBands, Some(AnnCapFactor))))),
+    GraftQuery("q_ann_recall",
+      (s, d) => annRecall(s, d, RecallSampleMod,
+        multiband(s, d, RecallBits, RecallBands, None)),
+      Some(annRecallSql(s"$RecallBits", s"$RecallSampleMod",
+        multibandSql(RecallBands, None)))),
+    GraftQuery("q_ann_recall_capped",
+      (s, d) => annRecall(s, d, RecallSampleMod,
+        multiband(s, d, RecallBits, RecallBands, Some(RecallCapFactor))),
+      Some(annRecallSql(s"$RecallBits", s"$RecallSampleMod",
+        multibandSql(RecallBands, Some(RecallCapFactor))))),
+    GraftQuery("q_ann_recall_capped_scaled",
+      (s, d) => annRecall(s, d, scaledEvalMod(embCount(s, d)),
+        multiband(s, d, scaledLshBits(embCount(s, d)), ScaledCapBands, Some(AnnCapFactor))),
+      Some(annRecallSql(ScaledLshBitsSql, ScaledEvalModSql,
+        multibandSql(ScaledCapBands, Some(AnnCapFactor))))),
+    GraftQuery("q_ann_recall_capped_scaled_b4",
+      (s, d) => annRecall(s, d, scaledEvalMod(embCount(s, d)),
+        multiband(s, d, scaledLshBits(embCount(s, d)), ScaledCapBandsB4, Some(AnnCapFactor))),
+      Some(annRecallSql(ScaledLshBitsSql, ScaledEvalModSql,
+        multibandSql(ScaledCapBandsB4, Some(AnnCapFactor))))),
+    GraftQuery("q_ann_multiprobe",
+      (s, d) => annServe(s, d, multiprobe(s, d, LshMultiBits, None)),
+      Some(annServeSql(s"$LshMultiBits", multiprobeSql(None)))),
+    GraftQuery("q_ann_multiprobe_scaled",
+      (s, d) => annServe(s, d, multiprobe(s, d, scaledProbeBits(embCount(s, d)), None)),
+      Some(annServeSql(ScaledProbeBitsSql, multiprobeSql(None)))),
+    GraftQuery("q_ann_multiprobe_capped_scaled",
+      (s, d) => annServe(s, d,
+        multiprobe(s, d, scaledProbeBits(embCount(s, d)), Some(AnnCapFactor))),
+      Some(annServeSql(ScaledProbeBitsSql, multiprobeSql(Some(AnnCapFactor))))),
+    GraftQuery("q_ann_recall_multiprobe_scaled",
+      (s, d) => annRecall(s, d, scaledEvalMod(embCount(s, d)),
+        multiprobe(s, d, scaledProbeBits(embCount(s, d)), Some(AnnCapFactor))),
+      Some(annRecallSql(ScaledProbeBitsSql, ScaledEvalModSql,
+        multiprobeSql(Some(AnnCapFactor))))),
     GraftQuery("q_index_append", qIndexAppend, Some(qIndexAppendSql)),
     GraftQuery("q_index_compact", qIndexCompact, Some(qIndexCompactSql)),
-    GraftQuery("q_ann_ivf", qAnnIvf, Some(qAnnIvfSql)),
-    GraftQuery("q_ann_ivf_scaled", qAnnIvfScaled, Some(qAnnIvfScaledSql)),
-    GraftQuery("q_semantic_dedup", qSemanticDedup, Some(qSemanticDedupSql)),
-    GraftQuery("q_semantic_dedup_scaled", qSemanticDedupScaled, Some(qSemanticDedupScaledSql)),
-    GraftQuery("q_pq_search", qPqSearch, Some(qPqSearchSql)),
-    GraftQuery("q_pq_search_scaled", qPqSearchScaled, Some(qPqSearchScaledSql)),
-    GraftQuery("q_ivfpq_search", qIvfPqSearch, Some(qIvfPqSearchSql)),
-    GraftQuery("q_ivfpq_search_scaled", qIvfPqSearchScaled,
-      Some(qIvfPqSearchScaledSql)),
-    GraftQuery("q_ivfpq_refine", qIvfPqRefine, Some(qIvfPqRefineSql)),
-    GraftQuery("q_ivfpq_refine_scaled", qIvfPqRefineScaled,
-      Some(qIvfPqRefineScaledSql)),
-    GraftQuery("q_ivf_refine_gate", qIvfRefineGate, Some(qIvfRefineGateSql)),
-    GraftQuery("q_ivf_refine_gate_scaled", qIvfRefineGateScaled,
-      Some(qIvfRefineGateScaledSql)),
+    GraftQuery("q_ann_ivf", (s, d) => annIvf(s, d, IvfCells), Some(annIvfSql(s"$IvfCells"))),
+    GraftQuery("q_ann_ivf_scaled", (s, d) => annIvf(s, d, scaledIvfCells(embCount(s, d))),
+      Some(annIvfSql(ScaledIvfCellsSql))),
+    GraftQuery("q_semantic_dedup", (s, d) => semanticDedup(s, d, IvfCells),
+      Some(semanticDedupSql(s"$IvfCells"))),
+    GraftQuery("q_semantic_dedup_scaled",
+      (s, d) => semanticDedup(s, d, scaledIvfCells(embCount(s, d))),
+      Some(semanticDedupSql(ScaledIvfCellsSql))),
+    GraftQuery("q_pq_search", (s, d) => pqSearch(s, d, PqKsub), Some(pqSearchSql(s"$PqKsub"))),
+    GraftQuery("q_pq_search_scaled", (s, d) => pqSearch(s, d, scaledPqKsub(embCount(s, d))),
+      Some(pqSearchSql(ScaledPqKsubSql))),
+    GraftQuery("q_ivfpq_search", (s, d) => ivfPq(s, d, IvfCells, PqKsub, IvfPqProbes, None),
+      Some(ivfPqSql(s"$IvfCells", s"$PqKsub", IvfPqProbes, None))),
+    GraftQuery("q_ivfpq_search_scaled",
+      (s, d) => ivfPq(s, d, scaledIvfCells(embCount(s, d)), scaledPqKsub(embCount(s, d)),
+        IvfPqProbes, None),
+      Some(ivfPqSql(ScaledIvfCellsSql, ScaledPqKsubSql, IvfPqProbes, None))),
+    GraftQuery("q_ivfpq_refine",
+      (s, d) => ivfPq(s, d, IvfCells, PqKsub, IvfPqRefineProbes, Some(IvfPqRefineCandidates)),
+      Some(ivfPqSql(s"$IvfCells", s"$PqKsub", IvfPqRefineProbes,
+        Some(IvfPqRefineCandidates)))),
+    GraftQuery("q_ivfpq_refine_scaled",
+      (s, d) => ivfPq(s, d, scaledIvfCells(embCount(s, d)), scaledPqKsub(embCount(s, d)),
+        IvfPqRefineProbes, Some(IvfPqRefineCandidates)),
+      Some(ivfPqSql(ScaledIvfCellsSql, ScaledPqKsubSql, IvfPqRefineProbes,
+        Some(IvfPqRefineCandidates)))),
+    GraftQuery("q_ivf_refine_gate", (s, d) => ivfRefineGate(s, d, IvfCells),
+      Some(ivfRefineGateSql(s"$IvfCells"))),
+    GraftQuery("q_ivf_refine_gate_scaled",
+      (s, d) => ivfRefineGate(s, d, scaledIvfCells(embCount(s, d))),
+      Some(ivfRefineGateSql(ScaledIvfCellsSql))),
     GraftQuery("q_rerank", qRerank, Some(qRerankSql)),
     GraftQuery("q_bloom_prefilter", qBloomPrefilter, Some(qBloomPrefilterSql)),
-    GraftQuery("q_contrastive_pairs", qContrastivePairs, Some(qContrastivePairsSql)),
-    GraftQuery("q_contrastive_pairs_scaled", qContrastivePairsScaled,
-      Some(qContrastivePairsScaledSql)),
+    GraftQuery("q_contrastive_pairs",
+      (s, d) => contrastivePairs(s, d, PairsAnchorMod, broadcastAnchors = false),
+      Some(contrastivePairsSql(s"$PairsAnchorMod"))),
+    GraftQuery("q_contrastive_pairs_scaled",
+      (s, d) => contrastivePairs(s, d, scaledEvalMod(embCount(s, d)), broadcastAnchors = true),
+      Some(contrastivePairsSql(ScaledEvalModSql))),
     GraftQuery("q_mmr_diversify", qMmrDiversify, Some(qMmrDiversifySql)),
     GraftQuery("q_zorder_layout", qZorderLayout, Some(qZorderLayoutSql)),
     GraftQuery("q_funnel", qFunnel, Some(qFunnelSql)),
@@ -7873,8 +6760,11 @@ object Queries {
     GraftQuery("q_attribution", qAttribution, Some(qAttributionSql)),
     GraftQuery("q_frame_sample", qFrameSample, Some(qFrameSampleSql)),
     GraftQuery("q_profile", qProfile, Some(qProfileSql)),
-    GraftQuery("q_split_leakage", qSplitLeakage, Some(qSplitLeakageSql)),
-    GraftQuery("q_split_leakage_scaled", qSplitLeakageScaled, Some(qSplitLeakageScaledSql)),
+    GraftQuery("q_split_leakage", (s, d) => splitLeakage(s, d, IvfCells),
+      Some(splitLeakageSql(s"$IvfCells"))),
+    GraftQuery("q_split_leakage_scaled",
+      (s, d) => splitLeakage(s, d, scaledIvfCells(embCount(s, d))),
+      Some(splitLeakageSql(ScaledIvfCellsSql))),
     GraftQuery("q_cms_counts", qCmsCounts, Some(qCmsCountsSql)),
     GraftQuery("q_phrase_search", qPhraseSearch, Some(qPhraseSearchSql)),
     GraftQuery("q_fuzzy_match", qFuzzyMatch, Some(qFuzzyMatchSql)),
@@ -7921,10 +6811,14 @@ object Queries {
     GraftQuery("q_event_props", qEventProps, Some(qEventPropsSql)),
     GraftQuery("q_event_pairs", qEventPairs, Some(qEventPairsSql)),
     GraftQuery("q_asof_join", qAsofJoin, Some(qAsofJoinSql)),
-    GraftQuery("q_range_join", qRangeJoin, Some(qRangeJoinSql)),
-    GraftQuery("q_range_join_sparse", qRangeJoinSparse, Some(qRangeJoinSparseSql)),
-    GraftQuery("q_overlap_join", qOverlapJoin, Some(qOverlapJoinSql)),
-    GraftQuery("q_overlap_join_sparse", qOverlapJoinSparse, Some(qOverlapJoinSparseSql)),
+    GraftQuery("q_range_join", (s, d) => rangeJoin(s, d, march1995),
+      Some(rangeJoinSql(March1995Sql))),
+    GraftQuery("q_range_join_sparse", (s, d) => rangeJoin(s, d, marchOpenings),
+      Some(rangeJoinSql(MarchOpeningsSql))),
+    GraftQuery("q_overlap_join", (s, d) => overlapJoin(s, d, march1995),
+      Some(overlapJoinSql(March1995Sql))),
+    GraftQuery("q_overlap_join_sparse", (s, d) => overlapJoin(s, d, marchOpenings),
+      Some(overlapJoinSql(MarchOpeningsSql))),
     GraftQuery("q_pricing_summary", qPricingSummary, Some(qPricingSummarySql)),
     GraftQuery("q_revenue_by_nation", qRevenueByNation, Some(qRevenueByNationSql)),
     GraftQuery("q_top_customers", qTopCustomers, Some(qTopCustomersSql)),

@@ -504,8 +504,6 @@ object VectorSearch {
       codebooks: Seq[Seq[(Int, Seq[Double])]],
       k: Int,
       metric: Metric = Metric.Cosine): DataFrame = {
-    val m = codebooks.length
-    val s = codebooks.head.head._2.length
     val codes = pqCodeColumns(col(vecCol), codebooks)
     val withCodes = prepareColumn(Partitioning.spread(data), vecCol, metric)
       .select(col(idCol) +: codes.zipWithIndex

@@ -20,8 +20,7 @@ class EventsFixtureSpec extends SparkSpec {
     * back LongType exactly like the old TIMESTAMP(NANOS) fixture did
     * under `nanosAsLong`). Returns (microsDir, nanosDir). */
   private lazy val encodedDirs: (String, String) = {
-    val base = "/root/repo/target/events_encoding_test"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = suiteScratchDir("events_encoding_test_")
     val src = Tables.events(spark, Sf0001) // ts: TimestampType (µs)
     val micros = s"$base/micros"
     val nanos = s"$base/nanos"

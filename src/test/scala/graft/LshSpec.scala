@@ -226,6 +226,51 @@ class LshSpec extends SparkSpec {
       s"huge-factor cap is not a no-op (${(noop diff uncapped).size} + ${(uncapped diff noop).size} differing pairs)")
   }
 
+  test("shuffled and broadcast vector re-attach return the same rows (capped multiband and multi-probe)") {
+    // the count hints only choose broadcast vs shuffled re-attach; at
+    // fixture scale the true counts always broadcast, so huge hints plus
+    // disabled auto-broadcast force the shuffled branch for comparison
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val queries = emb.filter(col("vec_id") % 20 === 0)
+    val (nData, nQueries) = (emb.count(), queries.count())
+    val joins: Seq[(String, (Long, Long) => DataFrame)] = Seq(
+      "multiband" -> ((nd, nq) => VectorSearch.multibandKnnJoin(queries, emb,
+        "embedding", "vec_id", Metric.Cosine, k = K, dim = Dim, bits = 4, bands = 16,
+        maxBucketFactor = Some(2.0),
+        dataCountHint = Some(nd), queriesCountHint = Some(nq))),
+      "multi-probe" -> ((nd, nq) => VectorSearch.multiProbeKnnJoin(queries, emb,
+        "embedding", "vec_id", Metric.Cosine, k = K, dim = Dim, bits = 4, flips = 2,
+        maxBucketFactor = Some(4.0),
+        dataCountHint = Some(nd), queriesCountHint = Some(nq))))
+    val plans = new AdaptiveSparkPlanHelper {}
+    def broadcastsIds(df: DataFrame): Boolean =
+      plans.collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+        .exists(j => (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+          .exists(n => n == "query_id" || n == "neighbor_id"))
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    joins.foreach { case (name, join) =>
+      val prev = confs.map(c => c -> spark.conf.getOption(c))
+      val (shuffled, shuffledRows) = try {
+        confs.foreach(spark.conf.set(_, "-1"))
+        val df = join(1L << 30, 1L << 30)
+        (df, df.collect().toSet)
+      } finally prev.foreach {
+        case (c, Some(v)) => spark.conf.set(c, v)
+        case (c, None) => spark.conf.unset(c)
+      }
+      assert(!broadcastsIds(shuffled),
+        s"$name: re-attach still broadcast under forced hints:\n${shuffled.queryExecution.executedPlan}")
+      val exact = join(nData, nQueries)
+      val exactRows = exact.collect().toSet
+      assert(broadcastsIds(exact), s"$name: true counts no longer broadcast the re-attach")
+      assert(shuffledRows.nonEmpty && shuffledRows == exactRows,
+        s"$name: ${(shuffledRows diff exactRows).size} + ${(exactRows diff shuffledRows).size} differing rows")
+    }
+  }
+
   test("multiband top-1 agreement with brute force (the reference's own ANN contract)") {
     // test_v3_features.py:29-46 pins HNSW top-1 == brute-force top-1;
     // the batch replacement should agree for MOST queries (argmax
@@ -248,8 +293,7 @@ class LshSpec extends SparkSpec {
     val appended = emb.filter(col("vec_id") >= 400)
     // model the persisted index: write the existing rows' bucket table to
     // parquet and read it back, as a real pipeline would
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "lsh_idx_").toString
+    val path = scratchDir("lsh_idx_")
     VectorSearch.lshBucketTable(existing, "embedding", "vec_id",
       Metric.Cosine, Dim, bits = 8, bands = 4)
       .write.mode("overwrite").parquet(path)
@@ -265,8 +309,7 @@ class LshSpec extends SparkSpec {
   }
 
   test("index compaction rewrites layout only: rows equal, strictly fewer files, band dirs prune") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "lsh_compact_").toString
+    val base = scratchDir("lsh_compact_")
     val frag = s"$base/frag"
     def bucketed(df: org.apache.spark.sql.DataFrame) =
       VectorSearch.lshBucketTable(df, "embedding", "vec_id",
@@ -523,8 +566,7 @@ class LshSpec extends SparkSpec {
   test("IVF+PQ indexed: persisted code table reproduces the direct path bit-for-bit") {
     val cents = VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ivfpq_idx_").toString
+    val path = scratchDir("ivfpq_idx_")
     VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id", cents, pqCbs,
       Metric.Cosine)
       .write.mode("overwrite").partitionBy("centroid_id").parquet(path)

@@ -5,9 +5,11 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** The count-derived index-sizing rules (bits/cells/ksub/mod) are
-  * computed independently in Scala and in every scaled oracle's DuckDB
-  * `params` CTE; the hash gate checks their equality only at the three
-  * fixture sizes. This spec pins the equality over the whole Long range
+  * computed independently in Scala and in DuckDB — each rule's SQL form
+  * is defined once, beside its Scala rule in Queries (`ScaledLshBitsSql`,
+  * `ScaledIvfCellsSql`, `ScaledPqKsubSql`, `ScaledEvalModSql`), and every
+  * scaled oracle uses it; the hash gate checks their equality only at
+  * the three fixture sizes. This spec pins the equality over the whole Long range
   * by re-implementing the DuckDB integer forms verbatim
   * (`length(bin(x))`, `//`, GREATEST/LEAST) and property-checking them
   * against the Scala rules — a clamp-order or off-by-one bug at an
@@ -25,14 +27,14 @@ class ScaledSizingSpec extends AnyFunSuite {
   private def lengthBin(x: Long): Int =
     math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(x))
 
-  /** The qAnnCappedScaledSql params CTE:
+  /** Queries.ScaledLshBitsSql:
     * GREATEST(1, LEAST(20, length(bin(GREATEST(1, n // 50) - 1)))). */
   private def duckBits(n: Long): Int = {
     val m = math.max(1L, n / 50)
     math.max(1, math.min(20, lengthBin(m - 1)))
   }
 
-  /** The qAnnIvfScaledSql params CTE:
+  /** Queries.ScaledIvfCellsSql:
     * GREATEST(16, LEAST(4096, 1 << ((length(bin(GREATEST(1, n))) + 1) // 2))). */
   private def duckCells(n: Long): Int = {
     val bl = lengthBin(math.max(1L, n))

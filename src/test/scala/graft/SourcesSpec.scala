@@ -16,8 +16,7 @@ class SourcesSpec extends SparkSpec {
     .add("id", LongType)
     .add("name", StringType)
 
-  private def tmp(): String =
-    Files.createTempDirectory(Paths.get("/root/repo/target"), "src_test_").toString
+  private def tmp(): String = scratchDir("src_test_")
 
   test("jsonl: malformed lines land in the corrupt column, clean rows parse") {
     val dir = tmp()

@@ -1,11 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.collection.mutable.ListBuffer
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide
-  * session across the forked test run). */
-trait SparkSpec extends AnyFunSuite {
+  * session across the forked test run), plus scratch directories under
+  * `target/tmp` ([[Tables.scratchPath]]) that are deleted when their
+  * test, or their suite, ends. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -19,4 +27,34 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   val Sf0001 = "/root/testdata/sf0.001"
+
+  private val testDirs = ListBuffer.empty[Path]
+  private val suiteDirs = ListBuffer.empty[Path]
+
+  private def newDir(prefix: String, owner: ListBuffer[Path]): String = {
+    val root = Paths.get(Tables.scratchPath(""))
+    Files.createDirectories(root)
+    val d = Files.createTempDirectory(root, prefix)
+    owner.synchronized(owner += d)
+    d.toString
+  }
+
+  private def deleteAll(owner: ListBuffer[Path]): Unit = owner.synchronized {
+    owner.foreach(d => FileUtils.deleteQuietly(d.toFile))
+    owner.clear()
+  }
+
+  /** A new empty directory under `target/tmp`, deleted with everything
+    * in it when the running test ends. */
+  def scratchDir(prefix: String): String = newDir(prefix, testDirs)
+
+  /** [[scratchDir]] for a fixture several tests share (a lazy val):
+    * deleted when the suite ends. */
+  def suiteScratchDir(prefix: String): String = newDir(prefix, suiteDirs)
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally deleteAll(testDirs)
+
+  override def afterAll(): Unit =
+    try deleteAll(suiteDirs) finally super.afterAll()
 }

@@ -13,8 +13,7 @@ class StreamingSpec extends SparkSpec {
   /** Stage the fixture's events.parquet into a landing directory — the
     * file-arrival shape FileStreamSource requires. */
   private lazy val landingDir: String = {
-    val dir = java.nio.file.Paths.get("/root/repo/target/stream_events_sf0001")
-    java.nio.file.Files.createDirectories(dir)
+    val dir = java.nio.file.Paths.get(suiteScratchDir("stream_events_sf0001_"))
     val dst = dir.resolve("events.parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf0001/events.parquet"), dst,
@@ -37,9 +36,7 @@ class StreamingSpec extends SparkSpec {
     // the operational ingest shape: the stream subscribes first, files
     // land later — schema sniffing must fall back to the documented
     // fixture schema instead of throwing UNABLE_TO_INFER_SCHEMA
-    val dir = java.nio.file.Paths.get("/root/repo/target/stream_empty_test")
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    java.nio.file.Files.createDirectories(dir)
+    val dir = java.nio.file.Paths.get(scratchDir("stream_empty_test_"))
     assert(Streaming.eventsStream(spark, dir.toString).isStreaming)
     assert(Streaming.documentsStream(spark, dir.toString).isStreaming)
     assert(Streaming.embeddingsStream(spark, dir.toString).isStreaming)
@@ -142,7 +139,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watermark drops late data in streaming; batch keeps it") {
-    val dir = "/root/repo/target/stream_late_test"
+    val dir = scratchDir("stream_late_test_")
     // batch 0: window [36000,36600) gets 2 events; max ts 37500 →
     // watermark 37500-600 = 36900 > 36600 closes the window. The
     // watermark becomes OPERATIVE one batch after its data (Spark
@@ -172,7 +169,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("flatMapGroupsWithState event-time timeout emits sessions exactly once, on close") {
-    val dir = "/root/repo/target/stream_session_test"
+    val dir = scratchDir("stream_session_test_")
     val gap = 300L
     // u1: session A (1000,1060) closed inline by the 10000 event in b2;
     //     session B (10000) closed by TIMEOUT once the watermark passes
@@ -203,8 +200,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming dedup drops cross-batch redeliveries (at-least-once ingest)") {
     // landing dir with the SAME fixture file twice: batch 2 redelivers
     // every event_id of batch 1 — the at-least-once upstream shape
-    val dir = java.nio.file.Paths.get("/root/repo/target/stream_dedup_test")
-    java.nio.file.Files.createDirectories(dir)
+    val dir = java.nio.file.Paths.get(scratchDir("stream_dedup_test_"))
     for (name <- Seq("a.parquet", "b.parquet")) {
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$Sf0001/events.parquet"), dir.resolve(name),
@@ -234,8 +230,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = Tables.documents(spark, Sf0001)
       .select("doc_id", "lang", "text")
-    val dir = "/root/repo/target/stream_sketch_test"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val dir = scratchDir("stream_sketch_test_")
     docs.filter(col("doc_id") % 2 === 0)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/b0")
     Thread.sleep(20)
@@ -270,8 +265,7 @@ class StreamingSpec extends SparkSpec {
     // table equals a batch build exactly (cellwise merge = streaming sum)
     import graft.operators.{Sketches, TextOps}
     val docs = Tables.documents(spark, Sf0001).select("doc_id", "text")
-    val dir = "/root/repo/target/stream_cms_test"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val dir = scratchDir("stream_cms_test_")
     docs.filter(col("doc_id") % 2 === 0)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/b0")
     Thread.sleep(20)
@@ -301,8 +295,7 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.VectorSearch
     import graft.functions.Metric
     // land the embeddings parquet for FileStreamSource
-    val dir = java.nio.file.Paths.get("/root/repo/target/stream_emb_sf0001")
-    java.nio.file.Files.createDirectories(dir)
+    val dir = java.nio.file.Paths.get(scratchDir("stream_emb_sf0001_"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$Sf0001/embeddings.parquet"),
       dir.resolve("embeddings.parquet"),
@@ -379,8 +372,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("idempotent publish: redelivered micro-batches overwrite, never duplicate (exactly-once sink)") {
-    val pub = "/root/repo/target/stream_publish_test"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(pub))
+    val pub = s"${scratchDir("stream_publish_test_")}/pub"
     // checkpoints must be fresh per test run: a reused checkpoint marks
     // the landing files already-committed and no batch ever fires
     val ckptBase = s"$pub-ckpt-${java.util.UUID.randomUUID()}"
@@ -417,7 +409,7 @@ class StreamingSpec extends SparkSpec {
 
   test("upsert snapshots: update-mode merge equals batch recompute and absorbs batchId replay") {
     import org.apache.spark.sql.functions._
-    val base = s"/root/repo/target/upsert_test_${java.util.UUID.randomUUID()}"
+    val base = scratchDir("upsert_test_")
     val ev = Tables.events(spark, Sf0001)
     def agg(df: org.apache.spark.sql.DataFrame) = df.groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -461,8 +453,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("multi-batch streamed featurization through the idempotent sink == batch featureHash") {
-    val base = "/root/repo/target/stream_features_test"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = scratchDir("stream_features_test_")
     stageDocBatches(s"$base/landing")
     val pub = s"$base/pub"
     val q = Streaming.documentsStream(spark, s"$base/landing/b*", maxFilesPerTrigger = Some(1))
@@ -486,8 +477,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streamed reservoir panel maintenance: per-batch merge-append == batch bottom-k") {
     import graft.operators.Splits
-    val base = "/root/repo/target/stream_panel_test"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val base = scratchDir("stream_panel_test_")
     stageDocBatches(s"$base/landing")
     val panel = s"$base/panel"
     val n = 8
@@ -523,11 +513,8 @@ class StreamingSpec extends SparkSpec {
     // run over an object-store prefix must process ONLY what landed since
     // the last run (source file log), while the idempotent sink keeps the
     // published table correct across the restarts
-    val dir = java.nio.file.Paths.get("/root/repo/target/stream_restart_test")
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    java.nio.file.Files.createDirectories(dir)
-    val pub = "/root/repo/target/stream_restart_pub"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(pub))
+    val dir = java.nio.file.Paths.get(scratchDir("stream_restart_test_"))
+    val pub = s"${scratchDir("stream_restart_pub_")}/pub"
     val ckpt = s"$pub-ckpt-${java.util.UUID.randomUUID()}"
 
     def land(name: String): Unit =
@@ -567,7 +554,7 @@ class StreamingSpec extends SparkSpec {
   test("in-stream compaction: serving read == batch rebuild, snapshot versioned, ingestion uninterrupted") {
     import graft.operators.VectorSearch
     import graft.functions.Metric
-    val b = Tables.scratchPath(s"spec_stream_compact_${java.util.UUID.randomUUID()}")
+    val b = scratchDir("spec_stream_compact_")
     val emb = Tables.embeddings(spark, Sf0001).select("vec_id", "embedding", "label")
     emb.repartition(3).write.parquet(s"$b/landing")
     val stream = VectorSearch.lshBucketTable(

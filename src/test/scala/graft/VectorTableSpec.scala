@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
@@ -12,9 +10,7 @@ import org.apache.spark.sql.functions._
 class VectorTableSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "vt_test_").toString
+  private def tmpDir(): String = scratchDir("vt_test_")
 
   private lazy val base = VectorTable(
     Tables.embeddings(spark, Sf0001),
