@@ -2530,9 +2530,9 @@ object Queries {
     * between near-dup PAIRS and keep-one GROUPS. Every doc that collided
     * with any other gets its transitive component's min doc_id as the
     * canonical id, plus the component size; keep-one dedup is then
-    * `WHERE doc_id = component_id`. Pointer-jumped label propagation
-    * converges in O(log n) rounds; each round shuffles (long, long)
-    * rows only. */
+    * `WHERE doc_id = component_id`. Each candidate partition is first
+    * contracted by a local union-find, so the label rounds (O(log n),
+    * five jobs each) shuffle the small contracted graph, not the pairs. */
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
     val cand = Sketches.minhashCandidates(Tables.documents(s, dir),
       "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)
@@ -6564,16 +6564,7 @@ object Queries {
   private def qBucketedJoin(s: SparkSession, dir: String): DataFrame = {
     val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
     val (ta, tb) = (s"emb_bkt_a_$safe", s"emb_bkt_b_$safe")
-    for (t <- Seq(ta, tb)) {
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      // a dropped catalog entry can leave its warehouse dir behind
-      val loc = java.nio.file.Paths.get(s"spark-warehouse/$t")
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
+    Seq(ta, tb).foreach(Tables.dropTable(s, _))
     val emb = Tables.embeddings(s, dir)
     val cfg = VectorTableConfig(EmbeddingDim, "cosine")
     VectorTable(emb.select("vec_id", "label"), cfg).saveBucketed(ta, 8)

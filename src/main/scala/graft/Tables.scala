@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,6 +17,16 @@ object Tables {
     * Bench's `target/bench_last.json`). */
   def scratchPath(name: String): String =
     java.nio.file.Paths.get("target", "tmp", name).toAbsolutePath.toString
+
+  /** Drop the managed table `name` and delete its directory under the
+    * session's `spark.sql.warehouse.dir`: a dropped catalog entry can
+    * leave that directory behind (the session restarts between runs),
+    * and the next CREATE then fails with LOCATION_ALREADY_EXISTS. */
+  def dropTable(spark: SparkSession, name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
+  }
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

@@ -1,13 +1,19 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graph, Sketches}
 
 /** Connected components: fixpoint correctness against a sequential
   * union-find model, shape cases that stress the pointer-jumping
-  * (chains — the O(diameter) worst case for plain propagation), and
-  * partitioning invariance. */
+  * (chains — the O(diameter) worst case for plain propagation) and the
+  * split of work between the per-partition contraction and the label
+  * rounds, partitioning invariance, the null/self-loop contract and a
+  * job-count guard. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,6 +35,14 @@ class GraphSpec extends SparkSpec {
     Graph.connectedComponents(
       edges.toDF("a", "b").repartition(parts), "a", "b")
       .as[(Long, Long)].collect().toMap
+
+  /** Components of `edges` laid out in exactly `slices` input partitions,
+    * in list order (`parallelize` slices a sequence into contiguous runs). */
+  private def runSliced(edges: Seq[(Long, Long)], slices: Int): Map[Long, Long] = {
+    val df = spark.sparkContext.parallelize(edges, slices).toDF("a", "b")
+    assert(df.rdd.getNumPartitions == slices)
+    Graph.connectedComponents(df, "a", "b").as[(Long, Long)].collect().toMap
+  }
 
   test("two triangles bridged by one edge merge into one component") {
     val edges = Seq[(Long, Long)](
@@ -94,5 +108,79 @@ class GraphSpec extends SparkSpec {
     pairs.foreach { case (a, b) => assert(labels(a) == labels(b)) }
     val byComp = labels.groupBy(_._2).view.mapValues(_.keys.min)
     byComp.foreach { case (label, minId) => assert(label == minId) }
+  }
+
+  test("null endpoints and self-loops: the non-null end and a looped vertex stand alone") {
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(1), None), (Some(5), Some(5)), (Some(7), Some(8)), (None, Some(9)))
+    val want = Set((1L, 1L), (5L, 5L), (7L, 7L), (8L, 7L), (9L, 9L))
+    for (parts <- Seq(1, 4); extra <- Seq(Nil, Seq((None, None)))) {
+      val got = Graph.connectedComponents(
+        (edges ++ extra).toDF("a", "b").repartition(parts), "a", "b")
+        .as[(Long, Long)].collect()
+      assert(got.length == want.size && got.toSet == want, s"parts=$parts extra=$extra")
+    }
+  }
+
+  test("all edges in one input partition: the local contraction solves everything") {
+    var seed = 7L
+    def next(): Long = { seed = seed * 6364136223846793005L + 1442695040888963407L; seed }
+    val edges = (1 to 200).map(_ => (math.floorMod(next(), 90L), math.floorMod(next(), 90L))) ++
+      (1L until 40L).map(i => (1000L + i, 1000L + i + 1))
+    assert(runSliced(edges, 1) == model(edges))
+  }
+
+  test("one edge per input partition: nothing contracts, the rounds do all the work") {
+    val edges = (1L until 24L).map(i => (i, i + 1)) ++ Seq[(Long, Long)]((40, 41), (41, 39))
+    assert(runSliced(edges, edges.size) == model(edges))
+  }
+
+  test("a 200-vertex clique spread over 8 input partitions") {
+    val edges = for (i <- 1L to 200L; j <- i + 1 to 200L) yield (1000L + i, 1000L + j)
+    val got = runSliced(edges, 8)
+    assert(got == model(edges))
+    assert(got.size == 200 && got.values.toSet == Set(1001L))
+  }
+
+  test("a 64-vertex chain listed in reverse id order across input partitions") {
+    val edges = (63L to 1L by -1L).map(i => (i + 1, i))
+    val got = runSliced(edges, 8)
+    assert(got == model(edges))
+    assert(got.keySet == (1L to 64L).toSet && got.values.toSet == Set(1L))
+  }
+
+  test("job-count guard: components + sizes over sf0.001 minhash candidates") {
+    val cand = Sketches.minhashCandidates(Tables.documents(spark, Sf0001), "doc_id", "text")
+      .localCheckpoint()
+    val sc = spark.sparkContext
+    val (measured, marker) = ("graph-job-guard", "graph-job-guard-marker")
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    // the bus delivers events in order, so once the marker job's start
+    // arrives every measured job's start has been counted
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`measured`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.countDown()
+          case _ =>
+        }
+    }
+    def inGroup[T](g: String)(body: => T): T = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val sized = inGroup(measured) {
+        Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id")).collect()
+      }
+      assert(sized.nonEmpty)
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS))
+      // measured: 9 (one round of 5, componentSizes 4); one job of slack
+      info(s"jobs: ${jobs.get()}")
+      assert(jobs.get() <= 10, s"${jobs.get()} jobs")
+    } finally sc.removeSparkListener(listener)
   }
 }

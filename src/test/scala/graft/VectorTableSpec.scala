@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
@@ -95,19 +96,22 @@ class VectorTableSpec extends SparkSpec {
       base.df.filter(col("label") === 3).count())
   }
 
+  test("dropTable clears a table dir left behind under the session's warehouse") {
+    val t = "emb_stale_dir"
+    val loc = new Path(spark.conf.get("spark.sql.warehouse.dir"), t)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(loc, "part-0")).close()
+    Tables.dropTable(spark, t)
+    assert(!fs.exists(loc))
+    try {
+      base.saveBucketed(t, 2)
+      assert(spark.table(t).count() == base.df.count())
+    } finally Tables.dropTable(spark, t)
+    assert(!fs.exists(loc))
+  }
+
   test("bucketed tables equi-join without a shuffle (co-located join)") {
-    for (t <- Seq("emb_bucketed_a", "emb_bucketed_b")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // a dropped catalog entry can leave its warehouse dir behind
-      // (session restarts between runs) — clear it or CREATE fails with
-      // LOCATION_ALREADY_EXISTS
-      val loc = java.nio.file.Paths.get(s"/root/repo/spark-warehouse/$t")
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
+    Seq("emb_bucketed_a", "emb_bucketed_b").foreach(Tables.dropTable(spark, _))
     base.saveBucketed("emb_bucketed_a", 8)
     base.saveBucketed("emb_bucketed_b", 8)
     // the fixture is broadcast-sized, which would bypass the bucketing;
