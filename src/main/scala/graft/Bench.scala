@@ -102,8 +102,8 @@ object Bench {
     // engine from a busy machine. -1.0 if the platform can't report it.
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // `runs` rides along so adjudicate.py can stamp the sweep's own
-    // measurement mode (sweep-single vs sweep-medianN — VERDICT r16 #4)
+    // `runs` rides along so the record states how many timed runs each
+    // row's median is taken over
     val full = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"queries":$qs,"load_avg":$loadAvg,"sf":"$sfDir"}"""
     println(full)
     // The driver keeps only a BOUNDED TAIL of this output (~2000 chars;

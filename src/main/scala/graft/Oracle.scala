@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.{Sketches, Splits}
+
 /** DuckDB oracle-SQL fragment builders.
   *
   * The driver hash-compares each Spark query result against DuckDB running
@@ -13,8 +15,29 @@ package graft
   *    range, matching `zip_with`'s pairing order.
   *  - normalization divides by `(sqrt(Σx²) + 1e-12)` exactly as the
   *    engine does.
+  *  - [[md5Long]] is the SQL mirror of `Sketches.md5Long` (md5 → first
+  *    15 hex digits → BIGINT), the hash format every sketch, split and
+  *    sampler relies on; [[shingleHash]], [[hashValue]] and
+  *    [[hashBucket]] mirror the Spark functions of the same names.
   */
 object Oracle {
+
+  /** md5 → first 15 hex digits → BIGINT: DuckDB's '0x…' cast reads the
+    * same 60-bit integer as Spark's `conv(…, 16, 10)`. */
+  def md5Long(expr: String): String =
+    s"CAST('0x' || substr(md5($expr), 1, 15) AS BIGINT)"
+
+  /** Mirror of `Sketches.shingleHash`: [[md5Long]] mod the minhash prime. */
+  def shingleHash(expr: String): String =
+    s"${md5Long(expr)} % ${Sketches.MinhashPrime}"
+
+  /** Mirror of `Splits.hashValue`: [[shingleHash]] of `salt:id`. */
+  def hashValue(idExpr: String, salt: String): String =
+    s"(${shingleHash(s"'$salt:' || CAST($idExpr AS VARCHAR)")})"
+
+  /** Mirror of `Splits.hashBucket`: [[hashValue]] mod `Splits.Buckets`. */
+  def hashBucket(idExpr: String, salt: String): String =
+    s"(${hashValue(idExpr, salt)} % ${Splits.Buckets})"
 
   /** Left-fold sum with 0.0 seed — bit-exact mirror of Spark's
     * `aggregate(xs, lit(0.0), (acc, x) => acc + x)`. */

@@ -465,6 +465,10 @@ object Queries {
     * behavior), large enough that the per-doc vectors stay sparse. */
   private val FeatureHashK = 256
 
+  /** Oracle mirror of [[TextOps.featureHash]]'s bucket of token `tok`. */
+  private def featureBucketSql(tok: String): String =
+    s"((${Oracle.shingleHash(tok)}) % $FeatureHashK)"
+
   /** Vocabulary-free feature extraction ([[TextOps.featureHash]],
     * hashing trick): per-doc certificate over the sparse hashed
     * bag-of-words — nonzeros, token total, squared l2 norm and max
@@ -481,9 +485,7 @@ object Queries {
       .orderBy("doc_id")
 
   private val qFeatureHashSql: String = {
-    val p = Sketches.MinhashPrime
-    val bucket =
-      s"((CAST('0x' || substr(md5(token), 1, 15) AS BIGINT) % $p) % $FeatureHashK)"
+    val bucket = featureBucketSql("token")
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
        |  FROM documents),
@@ -511,9 +513,7 @@ object Queries {
       .orderBy("doc_id")
 
   private val qQualityClassifierSql: String = {
-    val p = Sketches.MinhashPrime
-    val bucket =
-      s"((CAST('0x' || substr(md5(token), 1, 15) AS BIGINT) % $p) % $FeatureHashK)"
+    val bucket = featureBucketSql("token")
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
        |  FROM documents),
@@ -551,9 +551,7 @@ object Queries {
       .orderBy("doc_id")
 
   private val qClassifierTrainedSql: String = {
-    val p = Sketches.MinhashPrime
-    val bucket =
-      s"((CAST('0x' || substr(md5(token), 1, 15) AS BIGINT) % $p) % $FeatureHashK)"
+    val bucket = featureBucketSql("token")
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
        |  FROM documents),
@@ -618,7 +616,7 @@ object Queries {
        |           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS ngram
        |  FROM toks),
        |g AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(ngram), 1, 15) AS BIGINT) AS gh
+       |  SELECT doc_id, ${Oracle.md5Long("ngram")} AS gh
        |  FROM ng),
        |counts AS (SELECT gh, count(*) AS c FROM g GROUP BY gh),
        |tot AS (SELECT sum(c) AS t FROM counts),
@@ -665,7 +663,7 @@ object Queries {
        |           i -> $parts)) AS ngram
        |  FROM toks),
        |g AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(ngram), 1, 15) AS BIGINT) AS gh
+       |  SELECT doc_id, ${Oracle.md5Long("ngram")} AS gh
        |  FROM ng),
        |ev AS (SELECT DISTINCT gh FROM g WHERE doc_id % 10 = 7),
        |tr AS (SELECT DISTINCT doc_id, gh FROM g WHERE doc_id % 10 <> 7)
@@ -1003,7 +1001,7 @@ object Queries {
        |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
        |g AS (
        |  SELECT doc_id, i - 1 AS pos,
-       |         CAST('0x' || substr(md5($parts), 1, 15) AS BIGINT) AS gh
+       |         ${Oracle.md5Long(parts)} AS gh
        |  FROM toks, unnest(range(1, greatest(len(t) - $km1, 0) + 1)) AS u(i)),
        |usable AS (
        |  SELECT gh FROM (
@@ -1051,7 +1049,7 @@ object Queries {
        |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
        |g AS (
        |  SELECT doc_id, i - 1 AS pos,
-       |         CAST('0x' || substr(md5($parts), 1, 15) AS BIGINT) AS gh
+       |         ${Oracle.md5Long(parts)} AS gh
        |  FROM toks, unnest(range(1, greatest(len(t) - $km1, 0) + 1)) AS u(i)),
        |usable AS (
        |  SELECT gh FROM (
@@ -1186,7 +1184,7 @@ object Queries {
        |           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS ngram
        |  FROM toks),
        |g AS (
-       |  SELECT doc_id, CAST('0x' || substr(md5(ngram), 1, 15) AS BIGINT) AS gh
+       |  SELECT doc_id, ${Oracle.md5Long("ngram")} AS gh
        |  FROM ng),
        |counts AS (SELECT gh, count(*) AS c FROM g GROUP BY gh),
        |tot AS (SELECT sum(c) AS t FROM counts),
@@ -1245,17 +1243,14 @@ object Queries {
   }
 
   private val qDsirWeightsSql: String = {
-    val p = Sketches.MinhashPrime
-    val bucketOf = (tok: String) =>
-      s"((CAST('0x' || substr(md5($tok), 1, 15) AS BIGINT) % $p) % $FeatureHashK)"
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
        |  FROM documents),
        |tb AS (
-       |  SELECT ${bucketOf("token")} AS bucket, count(*) AS ct
+       |  SELECT ${featureBucketSql("token")} AS bucket, count(*) AS ct
        |  FROM toks WHERE doc_id % 10 = 7 GROUP BY 1),
        |rb AS (
-       |  SELECT ${bucketOf("token")} AS bucket, count(*) AS cr
+       |  SELECT ${featureBucketSql("token")} AS bucket, count(*) AS cr
        |  FROM toks WHERE doc_id % 10 <> 7 GROUP BY 1),
        |tt AS (SELECT COALESCE(sum(ct), 0) AS nt FROM tb),
        |rt AS (SELECT COALESCE(sum(cr), 0) AS nr FROM rb),
@@ -1268,7 +1263,7 @@ object Queries {
        |           AS lr_micro
        |  FROM rb LEFT JOIN tb USING (bucket), tt, rt),
        |f AS (
-       |  SELECT doc_id, ${bucketOf("token")} AS bucket, count(*) AS c
+       |  SELECT doc_id, ${featureBucketSql("token")} AS bucket, count(*) AS c
        |  FROM toks WHERE doc_id % 10 <> 7 GROUP BY 1, 2)
        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats,
        |       CAST(sum(c * lr_micro) AS BIGINT) AS weight_micro,
@@ -1397,66 +1392,6 @@ object Queries {
        |  SELECT 1 FROM (VALUES $vals) b(h)
        |  WHERE d.host = b.h OR right(d.host, length(b.h)+1) = '.' || b.h)
        |ORDER BY doc_id""".stripMargin
-  }
-
-  /** North-star near-dup: the full LSH dedup pipeline — minhash band
-    * candidates verified by exact embedding cosine. Replaces the round-2
-    * label-blocked all-pairs (O((N/L)²) over L shuffle keys — the one
-    * declared shape that died at 100×): candidates now come from
-    * [[Sketches.minhashCandidates]] (collision-bounded, never N²), and
-    * the vectors join in AFTER candidate pruning, so the pair stage
-    * shuffles ids and band hashes, never embeddings. The declared query
-    * emits every candidate's verified score; a production τ cut is a
-    * downstream `WHERE` (the fixture's synthetic embeddings are
-    * uncorrelated with text near-duplication, so a fixed τ would pin the
-    * result to ~0 rows and gate nothing). */
-  private def qNearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    val cand = Sketches.minhashCandidates(Tables.documents(s, dir),
-      "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)
-    val n = Tables.embeddings(s, dir)
-      .select(col("vec_id"), VF.l2Normalize(col("embedding")).as("nemb"))
-    // The verify stage is the SERVING re-attach shape (MIGRATION "LSH
-    // serving joins"): candidates are 24-byte scalar id pairs; a default
-    // join would sort-merge them against the vector table — exchanging
-    // the CANDIDATE volume by a_id and then again, vector attached
-    // (~25M pairs × 536 B at sf10), by b_id. Broadcast each prepared
-    // (id, vector) side while it fits the same 256 MB ceiling the
-    // multiband joins use; above it the shuffled form returns, and the
-    // candidate stage still never shuffles embeddings.
-    val reattach = VectorSearch.reattachSide(_: DataFrame,
-      embCount(s, dir), EmbeddingDim)
-    cand
-      .join(reattach(n.select(col("vec_id").as("a_id"), col("nemb").as("a_emb"))), "a_id")
-      .join(reattach(n.select(col("vec_id").as("b_id"), col("nemb").as("b_emb"))), "b_id")
-      .withColumn("score", VF.dot(col("a_emb"), col("b_emb")))
-      .select("a_id", "b_id", "n_bands", "score")
-      .orderBy("a_id", "b_id")
-  }
-
-  // lazy: refers to minhashCte, declared later in this object — an eager
-  // val would interpolate null at object init.
-  private lazy val qNearDupPairsSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
-    val score = Oracle.dot("na.nemb", "nb.nemb", EmbeddingDim)
-    s"""WITH $minhashCte,
-       |bands AS (
-       |  $bandSelects),
-       |cand AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS n_bands
-       |  FROM bands a
-       |  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte}
-       |SELECT c.a_id, c.b_id, c.n_bands, $score AS score
-       |FROM cand c
-       |JOIN n na ON na.vec_id = c.a_id
-       |JOIN n nb ON nb.vec_id = c.b_id
-       |ORDER BY a_id, b_id""".stripMargin
   }
 
   /** North-star text analysis: per-language doc/char/token statistics. */
@@ -2364,12 +2299,17 @@ object Queries {
   private val MinhashM = 16
   private val MinhashBands = 4
 
+  /** Oracle mirror of [[Sketches.shingles]]: the distinct character
+    * k-shingles of `text` in first-occurrence order, as a list. */
+  private def shinglesSql(text: String, k: Int): String =
+    s"""list_distinct(list_transform(
+       |           range(1, greatest(length($text) - ${k - 1}, 1) + 1),
+       |           si -> substr($text, CAST(si AS INTEGER), $k)))""".stripMargin
+
   /** Oracle CTE `mh(doc_id, mh_0..mh_15)` mirroring
-    * [[Sketches.minhashSignature]]: one md5 per shingle, first 15 hex
-    * chars parsed as a BIGINT (DuckDB's '0x…' cast == Spark's
-    * `conv(…,16,10)`), reduced mod the prime, then the m families by
-    * multiply-add with the SAME constants [[Sketches.mixConstants]]
-    * inlines on the Spark side. */
+    * [[Sketches.minhashSignature]]: one [[Oracle.shingleHash]] per
+    * shingle, then the m families by multiply-add with the SAME
+    * constants [[Sketches.mixConstants]] inlines on the Spark side. */
   private val minhashCte: String = {
     val p = Sketches.MinhashPrime
     val mins = Sketches.mixConstants(MinhashM).zipWithIndex
@@ -2377,16 +2317,84 @@ object Queries {
       .mkString(", ")
     s"""sh AS MATERIALIZED (
        |  SELECT doc_id,
-       |         unnest(list_distinct(list_transform(
-       |           range(1, greatest(length(text) - ${ShingleK - 1}, 1) + 1),
-       |           si -> substr(text, CAST(si AS INTEGER), $ShingleK)))) AS shingle
+       |         unnest(${shinglesSql("text", ShingleK)}) AS shingle
        |  FROM documents),
        |hs AS MATERIALIZED (
        |  SELECT doc_id,
-       |         CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $p AS hm
+       |         ${Oracle.shingleHash("shingle")} AS hm
        |  FROM sh),
        |mh AS MATERIALIZED (SELECT doc_id, $mins FROM hs GROUP BY doc_id)""".stripMargin
   }
+
+  /** Oracle mirror of [[Sketches.minhashBands]] over `mh`: CTE
+    * `bands(doc_id, band, band_key)`, band b keyed by the md5 of its
+    * `m / bands` comma-joined signature values. */
+  private def minhashBandsSql(m: Int, bands: Int): String = {
+    val rows = m / bands
+    val selects = (0 until bands).map { b =>
+      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
+      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
+    }.mkString("\n  UNION ALL ")
+    s"""bands AS MATERIALIZED (
+       |  $selects)""".stripMargin
+  }
+
+  /** Oracle mirror of the band self-join of [[Sketches.minhashCandidates]]
+    * over the band relation `rel(doc_id, band, band_key)`: CTE
+    * `cand(a_id, b_id, n_bands)`, each unordered pair once with its
+    * shared-band count. */
+  private def candSql(rel: String): String =
+    s"""cand AS MATERIALIZED (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS n_bands
+       |  FROM $rel a
+       |  JOIN $rel b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The family's candidate pairs at its operating point
+    * ([[ShingleK]], [[MinhashM]], [[MinhashBands]]). */
+  private def candidates(s: SparkSession, dir: String): DataFrame =
+    Sketches.minhashCandidates(Tables.documents(s, dir), "doc_id", "text",
+      k = ShingleK, m = MinhashM, bands = MinhashBands)
+
+  /** Oracle mirror of [[candidates]]: CTEs up to `cand`. */
+  private val candidatesSql: String =
+    s"""$minhashCte,
+       |${minhashBandsSql(MinhashM, MinhashBands)},
+       |${candSql("bands")}""".stripMargin
+
+  /** Connected components of the [[candidates]] graph with their sizes:
+    * `(doc_id, component_id, csize)` for every doc with ≥1 candidate. */
+  private def components(s: SparkSession, dir: String): DataFrame =
+    Graph.componentSizes(Graph.connectedComponents(candidates(s, dir), "a_id", "b_id"))
+      .select(col("id").as("doc_id"), col("component_id"), col("csize"))
+
+  /** Oracle mirror of [[components]]: [[candidatesSql]], then the
+    * transitive closure of `cand` by a recursive CTE (UNION dedups →
+    * terminates); component id = min reachable vertex (incl. self via
+    * `least`). CTE `comp(doc_id, component_id, csize)`; the query must
+    * open with `WITH RECURSIVE`. */
+  private val componentsSql: String =
+    s"""$candidatesSql,
+       |edges AS (
+       |  SELECT a_id AS u, b_id AS v FROM cand
+       |  UNION SELECT b_id, a_id FROM cand),
+       |reach(u, v) AS (
+       |  SELECT u, v FROM edges
+       |  UNION
+       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
+       |labels AS (
+       |  SELECT u AS doc_id, least(u, min(v)) AS component_id
+       |  FROM reach GROUP BY u),
+       |comp AS (
+       |  SELECT doc_id, component_id,
+       |         CAST(count(*) OVER (PARTITION BY component_id) AS BIGINT) AS csize
+       |  FROM labels)""".stripMargin
+
+  /** Signature → bands of `docs` at the family's operating point. */
+  private def minhashBandsOf(docs: DataFrame): DataFrame =
+    Sketches.minhashBands(
+      Sketches.minhashSignature(docs, "doc_id", "text", ShingleK, MinhashM),
+      "doc_id", MinhashBands, MinhashM / MinhashBands)
 
   /** North-star MinHash: per-doc signature digest (pins the whole
     * shingle→minhash pipeline through one scalar per doc). */
@@ -2408,23 +2416,55 @@ object Queries {
   /** North-star MinHash-LSH near-dup candidates: doc pairs sharing ≥1 of
     * 4 banded signature keys, with the shared-band count. */
   private def qNearDupMinhash(s: SparkSession, dir: String): DataFrame =
-    Sketches.minhashCandidates(Tables.documents(s, dir), "doc_id", "text",
-      k = ShingleK, m = MinhashM, bands = MinhashBands)
-      .orderBy("a_id", "b_id")
+    candidates(s, dir).orderBy("a_id", "b_id")
 
-  private val qNearDupMinhashSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH $minhashCte,
-       |bands AS (
-       |  $bandSelects)
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS n_bands
-       |FROM bands a
-       |JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-       |GROUP BY 1, 2 ORDER BY a_id, b_id""".stripMargin
+  private val qNearDupMinhashSql: String =
+    s"""WITH $candidatesSql
+       |SELECT a_id, b_id, n_bands FROM cand ORDER BY a_id, b_id""".stripMargin
+
+  /** North-star near-dup: the full LSH dedup pipeline — minhash band
+    * candidates verified by exact embedding cosine. Replaces the round-2
+    * label-blocked all-pairs (O((N/L)²) over L shuffle keys — the one
+    * declared shape that died at 100×): candidates now come from
+    * [[Sketches.minhashCandidates]] (collision-bounded, never N²), and
+    * the vectors join in AFTER candidate pruning, so the pair stage
+    * shuffles ids and band hashes, never embeddings. The declared query
+    * emits every candidate's verified score; a production τ cut is a
+    * downstream `WHERE` (the fixture's synthetic embeddings are
+    * uncorrelated with text near-duplication, so a fixed τ would pin the
+    * result to ~0 rows and gate nothing). */
+  private def qNearDupPairs(s: SparkSession, dir: String): DataFrame = {
+    val cand = candidates(s, dir)
+    val n = Tables.embeddings(s, dir)
+      .select(col("vec_id"), VF.l2Normalize(col("embedding")).as("nemb"))
+    // The verify stage is the SERVING re-attach shape (MIGRATION "LSH
+    // serving joins"): candidates are 24-byte scalar id pairs; a default
+    // join would sort-merge them against the vector table — exchanging
+    // the CANDIDATE volume by a_id and then again, vector attached
+    // (~25M pairs × 536 B at sf10), by b_id. Broadcast each prepared
+    // (id, vector) side while it fits the same 256 MB ceiling the
+    // multiband joins use; above it the shuffled form returns, and the
+    // candidate stage still never shuffles embeddings.
+    val reattach = VectorSearch.reattachSide(_: DataFrame,
+      embCount(s, dir), EmbeddingDim)
+    cand
+      .join(reattach(n.select(col("vec_id").as("a_id"), col("nemb").as("a_emb"))), "a_id")
+      .join(reattach(n.select(col("vec_id").as("b_id"), col("nemb").as("b_emb"))), "b_id")
+      .withColumn("score", VF.dot(col("a_emb"), col("b_emb")))
+      .select("a_id", "b_id", "n_bands", "score")
+      .orderBy("a_id", "b_id")
+  }
+
+  private val qNearDupPairsSql: String = {
+    val score = Oracle.dot("na.nemb", "nb.nemb", EmbeddingDim)
+    s"""WITH $candidatesSql,
+       |${Oracle.embeddingsCte},
+       |${Oracle.normalizedCte}
+       |SELECT c.a_id, c.b_id, c.n_bands, $score AS score
+       |FROM cand c
+       |JOIN n na ON na.vec_id = c.a_id
+       |JOIN n nb ON nb.vec_id = c.b_id
+       |ORDER BY a_id, b_id""".stripMargin
   }
 
   /** Bucket cap for [[qNeardupCapped]]: 5 keeps every organic near-dup
@@ -2447,25 +2487,16 @@ object Queries {
       maxBucket = NeardupMaxBucket)
       .orderBy("a_id", "b_id")
 
-  private val qNeardupCappedSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
+  private val qNeardupCappedSql: String =
     s"""WITH $minhashCte,
-       |bands AS (
-       |  $bandSelects),
+       |${minhashBandsSql(MinhashM, MinhashBands)},
        |bsz AS (SELECT band, band_key, count(*) AS n FROM bands GROUP BY 1, 2),
        |kept AS (
        |  SELECT bands.doc_id, bands.band, bands.band_key
        |  FROM bands JOIN bsz USING (band, band_key)
-       |  WHERE bsz.n <= $NeardupMaxBucket)
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(count(*) AS BIGINT) AS n_bands
-       |FROM kept a
-       |JOIN kept b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-       |GROUP BY 1, 2 ORDER BY a_id, b_id""".stripMargin
-  }
+       |  WHERE bsz.n <= $NeardupMaxBucket),
+       |${candSql("kept")}
+       |SELECT a_id, b_id, n_bands FROM cand ORDER BY a_id, b_id""".stripMargin
 
   /** Incremental near-dup — the ONLY near-dup shape that survives a
     * continuously-growing 100 TB corpus: the historical corpus's LSH
@@ -2485,19 +2516,13 @@ object Queries {
     val docs = Tables.documents(s, dir)
     val path = bandIndexCache.computeIfAbsent(stagedKey(dir, "documents"), _ => {
       val p = Tables.scratchPath(s"band_index_${java.util.UUID.randomUUID()}")
-      Sketches.minhashBands(
-        Sketches.minhashSignature(docs.filter(col("doc_id") % 10 =!= 0),
-          "doc_id", "text", ShingleK, MinhashM),
-        "doc_id", MinhashBands, MinhashM / MinhashBands)
+      minhashBandsOf(docs.filter(col("doc_id") % 10 =!= 0))
         .write.mode("overwrite").parquet(p)
       p
     })
     val index = s.read.schema("doc_id BIGINT, band INT, band_key STRING")
       .parquet(path)
-    val deltaBands = Sketches.minhashBands(
-      Sketches.minhashSignature(docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", ShingleK, MinhashM),
-      "doc_id", MinhashBands, MinhashM / MinhashBands)
+    val deltaBands = minhashBandsOf(docs.filter(col("doc_id") % 10 === 0))
       .select(col("doc_id").as("new_id"), col("band"), col("band_key"))
     index.join(broadcast(deltaBands), Seq("band", "band_key"))
       .groupBy(col("new_id"), col("doc_id").as("corpus_id"))
@@ -2508,22 +2533,15 @@ object Queries {
   private val bandIndexCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private lazy val qNeardupIncrementalSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
+  private val qNeardupIncrementalSql: String =
     s"""WITH $minhashCte,
-       |bands AS (
-       |  $bandSelects)
+       |${minhashBandsSql(MinhashM, MinhashBands)}
        |SELECT a.doc_id AS new_id, b.doc_id AS corpus_id,
        |       CAST(count(*) AS BIGINT) AS n_bands
        |FROM bands a
        |JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
        |WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
 
   /** North-star dedup clustering: connected components over the minhash
     * candidate pair graph ([[Graph.connectedComponents]]) — the stage
@@ -2533,45 +2551,12 @@ object Queries {
     * `WHERE doc_id = component_id`. Each candidate partition is first
     * contracted by a local union-find, so the label rounds (O(log n),
     * five jobs each) shuffle the small contracted graph, not the pairs. */
-  private def qDedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val cand = Sketches.minhashCandidates(Tables.documents(s, dir),
-      "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)
-    Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id"))
-      .select(col("id").as("doc_id"), col("component_id"), col("csize"))
-      .orderBy("doc_id")
-  }
+  private def qDedupClusters(s: SparkSession, dir: String): DataFrame =
+    components(s, dir).orderBy("doc_id")
 
-  private val qDedupClustersSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
-    // transitive closure via recursive CTE (UNION dedups → terminates);
-    // component id = min reachable vertex (incl. self via `least`)
-    s"""WITH RECURSIVE $minhashCte,
-       |bands AS (
-       |  $bandSelects),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM bands a
-       |  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-       |              AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |edges AS (
-       |  SELECT a_id AS u, b_id AS v FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |comp AS (
-       |  SELECT u AS doc_id, least(u, min(v)) AS component_id
-       |  FROM reach GROUP BY u)
-       |SELECT doc_id, component_id,
-       |       CAST(count(*) OVER (PARTITION BY component_id) AS BIGINT) AS csize
-       |FROM comp ORDER BY doc_id""".stripMargin
-  }
+  private val qDedupClustersSql: String =
+    s"""WITH RECURSIVE $componentsSql
+       |SELECT doc_id, component_id, csize FROM comp ORDER BY doc_id""".stripMargin
 
   /** Keep-one-with-multiplicity dedup weighting — the training-data
     * practice after clustering (keep each duplicate cluster's canonical
@@ -2585,10 +2570,7 @@ object Queries {
     * corpus-side left join shuffles ids only, and the weight column is
     * computed before the join (no corpus-wide window). */
   private def qClusterWeights(s: SparkSession, dir: String): DataFrame = {
-    val cand = Sketches.minhashCandidates(Tables.documents(s, dir),
-      "doc_id", "text", k = ShingleK, m = MinhashM, bands = MinhashBands)
-    val comp = Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id"))
-      .select(col("id").as("doc_id"), col("component_id"), col("csize"))
+    val comp = components(s, dir)
     Tables.documents(s, dir).select("doc_id")
       .join(comp, Seq("doc_id"), "left")
       .filter(col("component_id").isNull || col("component_id") === col("doc_id"))
@@ -2596,40 +2578,13 @@ object Queries {
       .orderBy("doc_id")
   }
 
-  private lazy val qClusterWeightsSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH RECURSIVE $minhashCte,
-       |bands AS (
-       |  $bandSelects),
-       |pairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM bands a
-       |  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-       |              AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
-       |edges AS (
-       |  SELECT a_id AS u, b_id AS v FROM pairs
-       |  UNION SELECT b_id, a_id FROM pairs),
-       |reach(u, v) AS (
-       |  SELECT u, v FROM edges
-       |  UNION
-       |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-       |comp AS (
-       |  SELECT u AS doc_id, least(u, min(v)) AS component_id
-       |  FROM reach GROUP BY u),
-       |w AS (
-       |  SELECT component_id, count(*) AS csize FROM comp GROUP BY component_id)
-       |SELECT d.doc_id, CAST(COALESCE(w.csize, 1) AS BIGINT) AS weight
+  private val qClusterWeightsSql: String =
+    s"""WITH RECURSIVE $componentsSql
+       |SELECT d.doc_id, CAST(COALESCE(c.csize, 1) AS BIGINT) AS weight
        |FROM documents d
        |LEFT JOIN comp c ON d.doc_id = c.doc_id
-       |LEFT JOIN w ON w.component_id = d.doc_id
        |WHERE c.doc_id IS NULL OR c.component_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
-  }
 
   private val WinnowK = 8
   private val WinnowW = 8
@@ -2654,7 +2609,6 @@ object Queries {
       .orderBy("doc_id", "fp_pos")
 
   private val qFingerprintSql: String = {
-    val p = Sketches.MinhashPrime
     val r = Sketches.WinnowPosRange
     s"""WITH g AS (
        |  SELECT doc_id, unnest(list_transform(
@@ -2664,7 +2618,7 @@ object Queries {
        |  FROM documents),
        |h AS (
        |  SELECT doc_id, CAST(u.pos AS BIGINT) AS pos,
-       |         CAST('0x' || substr(md5(u.gram), 1, 15) AS BIGINT) % $p AS hm
+       |         ${Oracle.shingleHash("u.gram")} AS hm
        |  FROM g),
        |w AS (
        |  SELECT doc_id, min(hm * $r + (${r - 1} - pos)) OVER
@@ -2692,7 +2646,6 @@ object Queries {
       .orderBy("a_id", "b_id")
 
   private val qFingerprintPairsSql: String = {
-    val p = Sketches.MinhashPrime
     val r = Sketches.WinnowPosRange
     s"""WITH g AS (
        |  SELECT doc_id, unnest(list_transform(
@@ -2702,7 +2655,7 @@ object Queries {
        |  FROM documents),
        |h AS (
        |  SELECT doc_id, CAST(u.pos AS BIGINT) AS pos,
-       |         CAST('0x' || substr(md5(u.gram), 1, 15) AS BIGINT) % $p AS hm
+       |         ${Oracle.shingleHash("u.gram")} AS hm
        |  FROM g),
        |w AS (
        |  SELECT doc_id, min(hm * $r + (${r - 1} - pos)) OVER
@@ -2798,8 +2751,7 @@ object Queries {
         count(lit(1)).as("n_docs"),
         sum((col("n_redactions") > 0).cast("long")).as("docs_changed"),
         sum("n_redactions").as("redactions_sum"),
-        sum(conv(substring(md5(col("scrubbed")), 1, 15), 16, 10).cast("long")
-          % Sketches.MinhashPrime).as("scrub_hash_sum"))
+        sum(Sketches.shingleHash(col("scrubbed"))).as("scrub_hash_sum"))
       .orderBy("source")
   }
 
@@ -2812,8 +2764,7 @@ object Queries {
        |       CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT) AS docs_changed,
        |       CAST(sum(hits) AS BIGINT) AS redactions_sum,
-       |       CAST(sum(CAST('0x' || substr(md5(cleaned), 1, 15) AS BIGINT)
-       |                % ${Sketches.MinhashPrime}) AS BIGINT) AS scrub_hash_sum
+       |       CAST(sum(${Oracle.shingleHash("cleaned")}) AS BIGINT) AS scrub_hash_sum
        |FROM (
        |  SELECT source,
        |         length(regexp_extract_all(text, '$p1'))
@@ -3244,8 +3195,7 @@ object Queries {
        |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |rnd AS (
        |  SELECT a.anchor_id,
-       |         CAST('0x' || substr(md5(CAST(a.anchor_id AS VARCHAR) || ':'
-       |              || CAST(g.j AS VARCHAR)), 1, 15) AS BIGINT) % cnt.n AS other_id,
+       |         ${Oracle.md5Long("CAST(a.anchor_id AS VARCHAR) || ':' || CAST(g.j AS VARCHAR)")} % cnt.n AS other_id,
        |         g.j
        |  FROM pos a CROSS JOIN cnt
        |       CROSS JOIN generate_series(1, $PairsNRandom) g(j)),
@@ -3340,8 +3290,8 @@ object Queries {
        |        ORDER BY score DESC, doc_id ASC LIMIT $RerankN)),
        |ce AS (
        |  SELECT c.doc_id, c.stage1_rank,
-       |         CAST(CAST('0x' || substr(md5('$RagQueryText' || chr(1) || d.text), 1, 15)
-       |              AS BIGINT) AS DOUBLE) / 1152921504606846976.0 AS ce_score
+       |         CAST(${Oracle.md5Long(s"'$RagQueryText' || chr(1) || d.text")} AS DOUBLE)
+       |              / 1152921504606846976.0 AS ce_score
        |  FROM cand c JOIN documents d ON c.doc_id = d.doc_id)
        |SELECT doc_id, stage1_rank, ce_score FROM ce
        |ORDER BY ce_score DESC, doc_id ASC LIMIT $RerankK""".stripMargin)
@@ -3462,19 +3412,8 @@ object Queries {
       .orderBy("a_id", "b_id")
   }
 
-  private val qJaccardPairsSql: String = {
-    val rows = MinhashM / MinhashBands
-    val bandSelects = (0 until MinhashBands).map { b =>
-      val cols = (0 until rows).map(r => s"mh_${b * rows + r}").mkString(", ")
-      s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS band_key FROM mh"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH $minhashCte,
-       |bands AS MATERIALIZED (
-       |  $bandSelects),
-       |cand AS MATERIALIZED (
-       |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM bands a
-       |  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+  private val qJaccardPairsSql: String =
+    s"""WITH $candidatesSql,
        |sizes AS MATERIALIZED (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
        |inter AS MATERIALIZED (
        |  SELECT c.a_id, c.b_id, count(*) AS n_inter
@@ -3488,7 +3427,6 @@ object Queries {
        |JOIN sizes na ON na.doc_id = i.a_id
        |JOIN sizes nb ON nb.doc_id = i.b_id
        |ORDER BY a_id, b_id""".stripMargin
-  }
 
   // ---------------------------------------------------------- multimodal ---
 
@@ -3608,9 +3546,8 @@ object Queries {
     val pairs = emb
       .crossJoin(broadcast(n))
       .withColumn("__pid",
-        pmod(conv(substring(md5(concat(lit(SimHistSalt), lit(":"),
-          col("vec_id").cast("string"))), 1, 15), 16, 10).cast("long"),
-          col("__n")))
+        pmod(Sketches.md5Long(concat(lit(SimHistSalt), lit(":"),
+          col("vec_id").cast("string"))), col("__n")))
       .filter(col("__pid") =!= col("vec_id"))
       .select(col("vec_id"), col("embedding"), col("__pid"))
     val partner = emb.select(col("vec_id").as("__pid"),
@@ -3630,8 +3567,7 @@ object Queries {
        |cnt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
        |p AS (
        |  SELECT vec_id,
-       |         CAST('0x' || substr(md5('$SimHistSalt:' || CAST(vec_id AS VARCHAR)), 1, 15)
-       |              AS BIGINT) % cnt.n AS pid
+       |         ${Oracle.md5Long(s"'$SimHistSalt:' || CAST(vec_id AS VARCHAR)")} % cnt.n AS pid
        |  FROM e CROSS JOIN cnt),
        |pairs AS (SELECT vec_id, pid FROM p WHERE pid <> vec_id),
        |sc AS (
@@ -3658,14 +3594,10 @@ object Queries {
       .agg(count(lit(1)).as("n"))
       .orderBy("fold", "label")
 
-  private val qKfoldSql: String = {
-    val p = Sketches.MinhashPrime
-    val b = Splits.Buckets
-    s"""SELECT (((CAST('0x' || substr(md5('$KfoldSalt:' || CAST(vec_id AS VARCHAR)), 1, 15)
-       |          AS BIGINT) % $p) % $b) % $KFolds) AS fold,
+  private val qKfoldSql: String =
+    s"""SELECT (${Oracle.hashBucket("vec_id", KfoldSalt)} % $KFolds) AS fold,
        |       label, CAST(count(*) AS BIGINT) AS n
        |FROM embeddings GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
 
   private val ServeFuseK = 20
   private val ServeRerankK = 10
@@ -3750,8 +3682,8 @@ object Queries {
          |  ORDER BY rrf DESC, doc_id ASC LIMIT $ServeFuseK),
          |ce AS (
          |  SELECT f.doc_id,
-         |         CAST(CAST('0x' || substr(md5('$RagQueryText' || chr(1) || d.text), 1, 15)
-         |              AS BIGINT) AS DOUBLE) / 1152921504606846976.0 AS ce_score
+         |         CAST(${Oracle.md5Long(s"'$RagQueryText' || chr(1) || d.text")} AS DOUBLE)
+         |              / 1152921504606846976.0 AS ce_score
          |  FROM fused f JOIN documents d ON f.doc_id = d.doc_id),
          |rr AS (
          |  SELECT doc_id, ce_score FROM ce
@@ -3887,7 +3819,7 @@ object Queries {
     s"""WITH t AS (
        |  SELECT unnest(string_split_regex(trim(text), ' +')) AS tok FROM documents),
        |h AS (
-       |  SELECT tok, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % $p AS hm
+       |  SELECT tok, ${Oracle.shingleHash("tok")} AS hm
        |  FROM t),
        |cells AS (
        |  SELECT row, bucket, CAST(count(*) AS BIGINT) AS cnt FROM (
@@ -3897,7 +3829,7 @@ object Queries {
        |  SELECT tok, CAST(count(*) AS BIGINT) AS exact_cnt FROM t GROUP BY 1
        |  ORDER BY exact_cnt DESC, tok ASC LIMIT 10),
        |exh AS (
-       |  SELECT tok, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) % $p AS hm
+       |  SELECT tok, ${Oracle.shingleHash("tok")} AS hm
        |  FROM ex),
        |pe AS (
        |    ${branches("exh")}),
@@ -3937,11 +3869,9 @@ object Queries {
   }
 
   private def splitLeakageSql(cells: String): String = {
-    val p = Sketches.MinhashPrime
     val b = Splits.Buckets
     val bound = math.round(LeakTrainFrac * b)
-    val bucket =
-      s"((CAST('0x' || substr(md5('$LeakSalt:' || CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    val bucket = Oracle.hashBucket("vec_id", LeakSalt)
     val sim = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
     s"""WITH ${Oracle.embeddingsCte},
        |${Oracle.normalizedCte},
@@ -5731,13 +5661,11 @@ object Queries {
     * `doc_id` with the declared salt/weights (shared by [[qSplitSql]]
     * and [[qContaminationSql]]). */
   private def splitCaseSql: String = {
-    val p = Sketches.MinhashPrime
     val b = Splits.Buckets
     val bounds = SplitWeights.scanLeft(0L) { case (acc, (_, w)) =>
       acc + math.round(w * b)
     }.tail
-    val bucket =
-      s"((CAST('0x' || substr(md5('$SplitSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    val bucket = Oracle.hashBucket("doc_id", SplitSalt)
     val cases = SplitWeights.init.zip(bounds.init)
       .map { case ((label, _), bound) => s"WHEN $bucket < $bound THEN '$label'" }
       .mkString(" ")
@@ -5759,19 +5687,16 @@ object Queries {
       .orderBy("doc_id")
   }
 
-  private val qContaminationSql: String = {
-    val p = Sketches.MinhashPrime
+  private val qContaminationSql: String =
     s"""WITH labeled AS (
        |  SELECT doc_id, text, $splitCaseSql AS split FROM documents),
        |csh AS (
        |  SELECT doc_id, split,
-       |         unnest(list_distinct(list_transform(
-       |           range(1, greatest(length(text) - ${ShingleK - 1}, 1) + 1),
-       |           si -> substr(text, CAST(si AS INTEGER), $ShingleK)))) AS shingle
+       |         unnest(${shinglesSql("text", ShingleK)}) AS shingle
        |  FROM labeled WHERE split IN ('train', 'test')),
        |chs AS (
        |  SELECT DISTINCT doc_id, split,
-       |         CAST('0x' || substr(md5(shingle), 1, 15) AS BIGINT) % $p AS hm
+       |         ${Oracle.shingleHash("shingle")} AS hm
        |  FROM csh),
        |trh AS (SELECT DISTINCT hm FROM chs WHERE split = 'train'),
        |teh AS (SELECT doc_id, hm FROM chs WHERE split = 'test')
@@ -5781,7 +5706,6 @@ object Queries {
        |       CAST(CASE WHEN count(trh.hm) > 0 THEN 1 ELSE 0 END AS INTEGER) AS contaminated
        |FROM teh te LEFT JOIN trh ON te.hm = trh.hm
        |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   /** The composed corpus pipeline end-to-end — the shape a real
     * training-data run takes, certified as ONE oracle-checked query:
@@ -5803,13 +5727,11 @@ object Queries {
       .agg(
         count(lit(1)).as("n_docs"),
         sum("n_chars").as("char_sum"),
-        sum(conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long")
-          % Sketches.MinhashPrime).as("text_hash_sum"))
+        sum(Sketches.shingleHash(col("text"))).as("text_hash_sum"))
       .orderBy("split")
   }
 
-  private val qCorpusPipelineSql: String = {
-    val p = Sketches.MinhashPrime
+  private val qCorpusPipelineSql: String =
     s"""WITH $qualityToksCteSql,
        |ok AS (SELECT doc_id FROM t WHERE $qualityOkCaseSql = 1),
        |kept AS (SELECT d.* FROM documents d JOIN ok USING (doc_id)),
@@ -5819,10 +5741,8 @@ object Queries {
        |SELECT split,
        |       CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(n_chars) AS BIGINT) AS char_sum,
-       |       CAST(sum(CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
-       |                % $p) AS BIGINT) AS text_hash_sum
+       |       CAST(sum(${Oracle.shingleHash("text")}) AS BIGINT) AS text_hash_sum
        |FROM labeled GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   /** Mergeable-sketch distinct counts ([[Sketches.mergedDistinct]]):
     * per-(lang, source) HLL sketches union-merged per lang — the
@@ -5868,10 +5788,8 @@ object Queries {
       .orderBy("source")
 
   private val qQuotaSampleSql: String = {
-    val p = Sketches.MinhashPrime
     val b = Splits.Buckets
-    val bucket =
-      s"((CAST('0x' || substr(md5('$QuotaSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    val bucket = Oracle.hashBucket("doc_id", QuotaSalt)
     s"""WITH th AS (
        |  SELECT source,
        |         least($b, CAST(floor(CAST(${SourceQuota * b} AS DOUBLE) / count(*)) AS BIGINT))
@@ -5908,9 +5826,7 @@ object Queries {
       .orderBy("lang", "sample_rank")
 
   private val qReservoirSampleSql: String = {
-    val p = Sketches.MinhashPrime
-    val hv =
-      s"(CAST('0x' || substr(md5('$ReservoirSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p)"
+    val hv = Oracle.hashValue("doc_id", ReservoirSalt)
     s"""WITH r AS (
        |  SELECT doc_id, lang, n_chars,
        |         ROW_NUMBER() OVER (PARTITION BY lang
@@ -6084,9 +6000,7 @@ object Queries {
   }
 
   private val qEpochShuffleSql: String = {
-    val p = Sketches.MinhashPrime
-    val hv =
-      s"(CAST('0x' || substr(md5('$EpochSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p)"
+    val hv = Oracle.hashValue("doc_id", EpochSalt)
     s"""WITH t AS (
        |  SELECT doc_id, source,
        |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_tokens,
@@ -6127,9 +6041,7 @@ object Queries {
   }
 
   private val qSampleAppendSql: String = {
-    val p = Sketches.MinhashPrime
-    val hv =
-      s"(CAST('0x' || substr(md5('$SampleSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p)"
+    val hv = Oracle.hashValue("doc_id", SampleSalt)
     s"""WITH r AS (
        |  SELECT doc_id, source,
        |         ROW_NUMBER() OVER (PARTITION BY source
@@ -6167,10 +6079,7 @@ object Queries {
   }
 
   private val qSnapshotDiffSql: String = {
-    val p = Sketches.MinhashPrime
-    val b = Splits.Buckets
-    def bucket(salt: String) =
-      s"((CAST('0x' || substr(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    def bucket(salt: String) = Oracle.hashBucket("doc_id", salt)
     s"""WITH o AS (
        |  SELECT doc_id, md5(text) AS h FROM documents
        |  WHERE ${bucket(SnapOldSalt)} < $SnapKeep),
@@ -6208,10 +6117,8 @@ object Queries {
       .orderBy("lang")
 
   private val qTemperatureMixSql: String = {
-    val p = Sketches.MinhashPrime
     val b = Splits.Buckets
-    val bucket =
-      s"((CAST('0x' || substr(md5('$TempSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    val bucket = Oracle.hashBucket("doc_id", TempSalt)
     s"""WITH c AS (
        |  SELECT lang, CAST(count(*) AS BIGINT) AS n,
        |         CAST(floor(sqrt(count(*)) * 1000) AS BIGINT) AS w
@@ -6253,12 +6160,9 @@ object Queries {
   }
 
   private val qFilterMixSql: String = {
-    val p = Sketches.MinhashPrime
     val b = Splits.Buckets
-    val fbucket =
-      s"((CAST('0x' || substr(md5(token), 1, 15) AS BIGINT) % $p) % $FeatureHashK)"
-    val mixBucket =
-      s"((CAST('0x' || substr(md5('$FilterMixSalt:' || CAST(k.doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    val fbucket = featureBucketSql("token")
+    val mixBucket = Oracle.hashBucket("k.doc_id", FilterMixSalt)
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
        |  FROM documents),
@@ -6326,11 +6230,8 @@ object Queries {
       .orderBy("shard")
 
   private val qPackSequencesSql: String = {
-    val p = Sketches.MinhashPrime
-    val b = Splits.Buckets
     val ctx = PackContext
-    val bucket =
-      s"((CAST('0x' || substr(md5('$PackSalt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    val bucket = Oracle.hashBucket("doc_id", PackSalt)
     s"""WITH base AS (
        |  SELECT doc_id, $bucket AS bucket, $bucket % $PackShards AS shard,
        |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_tok
@@ -6392,11 +6293,9 @@ object Queries {
   }
 
   private val qMixturePipelineSql: String = {
-    val p = Sketches.MinhashPrime
     val b = Splits.Buckets
     val ctx = PackContext
-    def bucket(salt: String) =
-      s"((CAST('0x' || substr(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % $p) % $b)"
+    def bucket(salt: String) = Oracle.hashBucket("doc_id", salt)
     s"""WITH $qualityToksCteSql,
        |ok AS (SELECT doc_id FROM t WHERE $qualityOkCaseSql = 1),
        |kept AS (SELECT d.doc_id, d.text, d.source
@@ -6465,8 +6364,7 @@ object Queries {
         count(lit(1)).as("n_rows"),
         sum("doc_id").as("id_sum"),
         sum("n_chars").as("char_sum"),
-        sum(conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long")
-          % Sketches.MinhashPrime).as("text_hash_sum"))
+        sum(Sketches.shingleHash(col("text"))).as("text_hash_sum"))
         .withColumn("fmt", lit(fmt))
         .select("fmt", "n_rows", "id_sum", "char_sum", "text_hash_sum")
     sums(fromCsv, "csv").unionByName(sums(fromJson, "jsonl")).orderBy("fmt")
@@ -6477,8 +6375,7 @@ object Queries {
        |  SELECT CAST(count(*) AS BIGINT) AS n_rows,
        |         CAST(sum(doc_id) AS BIGINT) AS id_sum,
        |         CAST(sum(n_chars) AS BIGINT) AS char_sum,
-       |         CAST(sum(CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
-       |                  % ${Sketches.MinhashPrime}) AS BIGINT) AS text_hash_sum
+       |         CAST(sum(${Oracle.shingleHash("text")}) AS BIGINT) AS text_hash_sum
        |  FROM documents)
        |SELECT 'csv' AS fmt, n_rows, id_sum, char_sum, text_hash_sum FROM s
        |UNION ALL
@@ -6505,8 +6402,7 @@ object Queries {
         count(lit(1)).as("n_docs"),
         sum("doc_id").as("id_sum"),
         sum("n_chars").as("char_sum"),
-        sum(conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long")
-          % Sketches.MinhashPrime).as("text_hash_sum"))
+        sum(Sketches.shingleHash(col("text"))).as("text_hash_sum"))
       .orderBy("lang")
   }
 
@@ -6515,8 +6411,7 @@ object Queries {
        |       CAST(count(*) AS BIGINT) AS n_docs,
        |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
        |       CAST(sum(n_chars) AS BIGINT) AS char_sum,
-       |       CAST(sum(CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
-       |                % ${Sketches.MinhashPrime}) AS BIGINT) AS text_hash_sum
+       |       CAST(sum(${Oracle.shingleHash("text")}) AS BIGINT) AS text_hash_sum
        |FROM documents WHERE lang IN ('en', 'zh')
        |GROUP BY lang ORDER BY lang""".stripMargin
 
@@ -6540,8 +6435,7 @@ object Queries {
         count(lit(1)).as("n_rows"),
         sum("doc_id").as("id_sum"),
         sum("n_chars").as("char_sum"),
-        sum(conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long")
-          % Sketches.MinhashPrime).as("text_hash_sum"))
+        sum(Sketches.shingleHash(col("text"))).as("text_hash_sum"))
       .withColumn("compacted_fewer",
         lit(partFiles(s"$base/compact") < partFiles(s"$base/small")).cast("int"))
   }
@@ -6550,8 +6444,7 @@ object Queries {
     s"""SELECT CAST(count(*) AS BIGINT) AS n_rows,
        |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
        |       CAST(sum(n_chars) AS BIGINT) AS char_sum,
-       |       CAST(sum(CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
-       |                % ${Sketches.MinhashPrime}) AS BIGINT) AS text_hash_sum,
+       |       CAST(sum(${Oracle.shingleHash("text")}) AS BIGINT) AS text_hash_sum,
        |       1 AS compacted_fewer
        |FROM documents""".stripMargin
 

@@ -85,8 +85,8 @@ object Contrastive {
       .select(col("anchor_id"), col("__n"),
         explode(array((1 to nRandom).map(lit): _*)).as("j"))
       .withColumn("other_id",
-        pmod(conv(substring(md5(concat(col("anchor_id").cast("string"), lit(":"),
-          col("j").cast("string"))), 1, 15), 16, 10).cast("long"), col("__n")))
+        pmod(Sketches.md5Long(concat(col("anchor_id").cast("string"), lit(":"),
+          col("j").cast("string"))), col("__n")))
       .filter(col("other_id") =!= col("anchor_id"))
     // anti-join against ALL positives (not just rank 1): with nPos > 1 a
     // hash-sampled id can collide with a rank-2..nPos positive, and a

@@ -29,8 +29,8 @@ object Rerank {
     * the SQL oracle via the '0x…' BIGINT cast ([[Sketches]] parity
     * pattern). */
   def crossEncoderScore(query: Column, text: Column): Column =
-    conv(substring(md5(concat(query, lit("\u0001"), text)), 1, 15), 16, 10)
-      .cast("long").cast("double") / lit(1152921504606846976.0) // 2^60
+    Sketches.md5Long(concat(query, lit("\u0001"), text))
+      .cast("double") / lit(1152921504606846976.0) // 2^60
 
   /** Re-rank `candidates` (`idCol`, `stage1Rank`) against the document
     * table: fetch candidate text by broadcast join, score every

@@ -52,6 +52,12 @@ object Sketches {
       (a, b)
     }
 
+  /** md5 → first 15 hex digits → 60-bit BIGINT: the hash format every
+    * sketch, split and sampler relies on (`Oracle.md5Long` is its SQL
+    * mirror). */
+  private[graft] def md5Long(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
   /** One md5 per shingle → first 15 hex chars as a 60-bit BIGINT →
     * reduced mod [[MinhashPrime]]. ALL m minhash families derive from
     * this single digest by integer multiply-add (universal hashing):
@@ -61,7 +67,7 @@ object Sketches {
     * top cost: 16 md5/shingle through a SortAggregate, 66% of the
     * bench). */
   def shingleHash(shingle: Column): Column =
-    conv(substring(md5(shingle), 1, 15), 16, 10).cast("long") % MinhashPrime
+    md5Long(shingle) % MinhashPrime
 
   /** The m min-hash aggregate expressions over a reduced-hash column
     * `hm` ([[shingleHash]]): `min((a_j·hm + b_j) mod P)` for family j —
@@ -88,10 +94,13 @@ object Sketches {
   /** LSH banding of a minhash signature: `bands` bands of `rowsPerBand`
     * hashes, each compressed to one md5 band key. Output: one row per
     * (id, band, band_key) plus any `carry` columns from the signature —
-    * the join key space for candidate pairs. */
+    * the join key space for candidate pairs.
+    * Contract: `rowsPerBand ≥ 1` (enforced; an empty band would key
+    * every id to `md5("")` and make every pair a candidate). */
   def minhashBands(
       signature: DataFrame, idCol: String, bands: Int, rowsPerBand: Int,
       carry: Seq[String] = Nil): DataFrame = {
+    require(rowsPerBand >= 1, s"minhashBands rowsPerBand must be >= 1, got $rowsPerBand")
     val bandStructs = (0 until bands).map { b =>
       val cols = (0 until rowsPerBand).map(r => col(s"mh_${b * rowsPerBand + r}"))
       struct(lit(b).as("band"), md5(concat_ws(",", cols: _*)).as("band_key"))
@@ -178,6 +187,10 @@ object Sketches {
     joined.select(outCols: _*)
   }
 
+  private def requireBandsDivide(m: Int, bands: Int): Unit =
+    require(bands >= 1 && m % bands == 0,
+      s"minhash bands must be >= 1 and divide m: m=$m, bands=$bands")
+
   /** Candidate near-dup pairs: ids sharing ≥1 minhash band, with the
     * number of shared bands. The equi-join on (band, band_key) is the
     * scale path — only hash keys shuffle, and the pair set is bounded by
@@ -185,10 +198,14 @@ object Sketches {
     * [[bandSelfPairs]], so pathological clique buckets skew-split
     * instead of serializing one task (the capped twin
     * [[minhashCandidatesCapped]] bounds buckets by construction and
-    * keeps the plain join). */
+    * keeps the plain join).
+    * Contract: `bands ≥ 1` and `bands` divides `m` (enforced before any
+    * job runs; `IllegalArgumentException` otherwise) — `bands > m` would
+    * leave every band empty, and a remainder would drop trailing hashes. */
   def minhashCandidates(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, m: Int = 16, bands: Int = 4): DataFrame = {
+    requireBandsDivide(m, bands)
     // The band SELF-join below feeds both sides from the same plan; without
     // materialization Spark recomputes the whole shingle→minhash subtree
     // once per side (round-2 verdict: the q_neardup_minhash plan showed the
@@ -218,10 +235,12 @@ object Sketches {
     * Cost of the cap: ONE extra count over the 16-byte band keys,
     * computed as a window aggregate on exactly the (band, band_key)
     * partitioning the self-join shuffles to anyway — bucket sizing
-    * never touches document text and adds no extra corpus exchange. */
+    * never touches document text and adds no extra corpus exchange.
+    * Contract: as [[minhashCandidates]], `bands ≥ 1` dividing `m`. */
   def minhashCandidatesCapped(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, m: Int = 16, bands: Int = 4, maxBucket: Int = 20): DataFrame = {
+    requireBandsDivide(m, bands)
     // same materialization contract as minhashCandidates: the band
     // self-join feeds both sides from this subtree
     val sig = minhashSignature(docs, idCol, textCol, k, m).localCheckpoint()
@@ -458,7 +477,7 @@ object Sketches {
         posexplode(TextOps.wordNgramsOfTokens(col("__toks"), k))
           .as(Seq("pos", "ngram")))
       .select(col(idCol), col("pos").cast("long").as("pos"),
-        conv(substring(md5(col("ngram")), 1, 15), 16, 10).cast("long").as("gh"))
+        md5Long(col("ngram")).as("gh"))
       .localCheckpoint()
     val usable = grams.select(col(idCol), col("gh")).distinct()
       .groupBy("gh").agg(count(lit(1)).as("__df"))

@@ -27,8 +27,7 @@ object Splits {
     * scale a 10⁴-bucket order would decide rank boundaries by the id
     * tie-break inside one giant bucket run. */
   def hashValue(idCol: Column, salt: String): Column =
-    conv(substring(md5(concat(lit(salt), lit(":"), idCol.cast("string"))), 1, 15), 16, 10)
-      .cast("long") % Sketches.MinhashPrime
+    Sketches.shingleHash(concat(lit(salt), lit(":"), idCol.cast("string")))
 
   /** Uniform bucket in [0, [[Buckets]]) — [[hashValue]] reduced to the
     * bucket count. */

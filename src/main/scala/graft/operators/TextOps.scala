@@ -477,7 +477,7 @@ object TextOps {
       .select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), explode(wordNgramsOfTokens(col("__toks"), n)).as("ngram"))
       .select(col(idCol),
-        conv(substring(md5(col("ngram")), 1, 15), 16, 10).cast("long").as("gh"))
+        Sketches.md5Long(col("ngram")).as("gh"))
       .localCheckpoint()
     val counts = grams.groupBy("gh").agg(count(lit(1)).as("c"))
     val total = counts.agg(sum("c").as("t"))
@@ -519,7 +519,7 @@ object TextOps {
       .select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), explode(wordNgramsOfTokens(col("__toks"), n)).as("ngram"))
       .select(col(idCol),
-        conv(substring(md5(col("ngram")), 1, 15), 16, 10).cast("long").as("gh"))
+        Sketches.md5Long(col("ngram")).as("gh"))
     val evalGrams = grams(evalDocs).select("gh").distinct()
     grams(Partitioning.spread(docs)).distinct()
       .join(broadcast(evalGrams), "gh")

@@ -229,6 +229,39 @@ class SketchesSpec extends SparkSpec {
     }
   }
 
+  test("minhash candidates reject a band count that does not divide m") {
+    // bands > m leaves every band empty (every pair a candidate); a
+    // remainder silently drops the trailing hashes
+    for ((m, bands) <- Seq((16, 32), (16, 5))) {
+      intercept[IllegalArgumentException] {
+        Sketches.minhashCandidates(corpus, "doc_id", "text", k = 8, m = m, bands = bands)
+      }
+      intercept[IllegalArgumentException] {
+        Sketches.minhashCandidatesCapped(corpus, "doc_id", "text",
+          k = 8, m = m, bands = bands, maxBucket = 5)
+      }
+    }
+    intercept[IllegalArgumentException] {
+      Sketches.minhashBands(Sketches.minhashSignature(corpus, "doc_id", "text", 8, 16),
+        "doc_id", bands = 32, rowsPerBand = 0)
+    }
+  }
+
+  test("md5Long and shingleHash match the DuckDB golden values") {
+    // expected: DuckDB `CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)`
+    // (and that mod 2^31-1), equal to Python
+    // `int(hashlib.md5(s.encode()).hexdigest()[:15], 16)`; the Arabic
+    // string pins hashing over UTF-8 bytes
+    val golden = Seq(
+      ("", 955282973525019424L, 863222971L),
+      ("hello wo", 453273272083690518L, 1028581213L),
+      ("قاعدة بيانات", 326785957501531743L, 1535699600L))
+    val got = golden.map(_._1).toDF("s")
+      .select(col("s"), Sketches.md5Long(col("s")), Sketches.shingleHash(col("s")))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got.sortBy(_._1) == golden.sortBy(_._1))
+  }
+
   test("fingerprintPairs surfaces the near-dup pair and only it") {
     // docs 1 and 2 share long substrings (one char differs); 3 is unrelated
     val pairs = Sketches.fingerprintPairs(corpus, "doc_id", "text",

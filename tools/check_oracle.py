@@ -50,7 +50,8 @@ def values_equal(a, b):
         return len(a) == len(b) and all(values_equal(x, y) for x, y in zip(a, b))
     return a == b
 
-def main(sf_dir, out_dir):
+def connect(sf_dir):
+    """A DuckDB connection with one view per fixture table of sf_dir."""
     con = duckdb.connect()
     for t in TABLES:
         # driver fixtures are single files; ScaleUp-generated fixtures are
@@ -58,6 +59,10 @@ def main(sf_dir, out_dir):
         p = f"{sf_dir}/{t}.parquet"
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
+    return con
+
+def main(sf_dir, out_dir):
+    con = connect(sf_dir)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     spark_times = {}
     st_path = f"{out_dir}/spark_times.json"
