@@ -1829,10 +1829,6 @@ object Queries {
        |ORDER BY vec_id, band""".stripMargin
   }
 
-  /** Staged fragmented + compacted index base path per fixture dir. */
-  private val indexCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Index-lifecycle COMPACTION ([[VectorSearch.compactIndex]]) — the
     * closing step of the index-as-data story (build → append → stream
     * → serve → COMPACT; VERDICT r7 missing #3): stage the persisted
@@ -1846,8 +1842,7 @@ object Queries {
     * never data. LshSpec pins the physical side (strictly fewer
     * files; band-restricted probes prune whole directories). */
   private def qIndexCompact(s: SparkSession, dir: String): DataFrame = {
-    val base = indexCompactCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
-      val b = Tables.scratchPath(s"index_compact_${java.util.UUID.randomUUID()}")
+    val base = staged("index_compact", stagedKey(dir, "embeddings")) { b =>
       val frag = s"$b/frag"
       val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
       // each append is written 4-way-partitioned, the shape a
@@ -1864,8 +1859,7 @@ object Queries {
       slice(col("vec_id") >= IndexSplitId && col("vec_id") % 2 === 1)
         .write.mode("append").parquet(frag)
       VectorSearch.compactIndex(s, frag, s"$b/compact")
-      b
-    })
+    }
     // band comes back as a partition-directory column; re-type it to
     // the persisted index's BIGINT contract for the oracle compare
     s.read.parquet(s"$base/compact")
@@ -1929,12 +1923,34 @@ object Queries {
   }
 
   /** Cache key for a staged/published artifact derived from ONE fixture
-    * table: dir + that table's [[tableSig]]. Every
-    * `ConcurrentHashMap[String, String]` staging cache in this object
-    * keys on this (never the bare dir), so an in-place fixture rewrite
+    * table: dir + that table's [[tableSig]]. Every [[staged]] dir keys
+    * on this (never the bare dir), so an in-place fixture rewrite
     * re-stages instead of serving stale parquet. */
   private def stagedKey(dir: String, table: String): String =
     s"$dir#${tableSig(dir, table)}"
+
+  /** Every [[staged]] dir, keyed by `prefix#key`. */
+  private val stagedDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  // staged dirs are session-scoped: the keys live in memory, so a new
+  // JVM re-stages anyway, and every harness writes its results out
+  // before it exits
+  sys.addShutdownHook(stagedDirs.values.forEach(p =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))))
+
+  /** The build-once scratch dir `Tables.scratchPath(s"${prefix}_<uuid>")`
+    * for `key` (a [[stagedKey]], plus any build parameters): the first
+    * call per (prefix, key) runs `build` on the path, later calls just
+    * return it. Rows that stage the same prefix and key share the dir.
+    * `build` runs inside `computeIfAbsent` and must not call `staged`
+    * itself (the map rejects a recursive update); no build does. */
+  private def staged(prefix: String, key: String)(build: String => Unit): String =
+    stagedDirs.computeIfAbsent(s"$prefix#$key", _ => {
+      val p = Tables.scratchPath(s"${prefix}_${java.util.UUID.randomUUID()}")
+      build(p)
+      p
+    })
 
   /** Cache key for [[centroidCache]]: fixture dir + cell count + the
     * staleness-guarding [[fixtureSig]]. */
@@ -2092,20 +2108,15 @@ object Queries {
     * scan. */
   private val IvfPqProbes = 2
 
-  /** Memoized persisted IVF+PQ index table per fixture dir — the
+  /** Build-once read-many accessor for the persisted IVF+PQ index — the
     * [[centroidCache]] rationale taken to its conclusion: the whole
     * `(id, centroid_id, pq_code)` table IS the index artifact a real
     * deployment stores (partitioned by cell, so probe joins prune
-    * unprobed cells to zero IO). Built once; serving scans 16-byte
-    * code rows and never re-runs the 128-kernel encode. */
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Build-once read-many accessor for the persisted IVF+PQ index: first
-    * call per fixture dir writes the cell-partitioned parquet table,
-    * later calls just scan it. The partition-column type is declared,
-    * not inferred, so `centroid_id` stays BIGINT through the round-trip
-    * (the oracle emits BIGINT). */
+    * unprobed cells to zero IO). The first call per fixture dir writes
+    * the cell-partitioned parquet table; serving scans 16-byte code rows
+    * and never re-runs the 128-kernel encode. The partition-column type
+    * is declared, not inferred, so `centroid_id` stays BIGINT through
+    * the round-trip (the oracle emits BIGINT). */
   private def ivfPqIndexFrame(
       s: SparkSession, dir: String, emb: DataFrame,
       centroids: Seq[(Long, Seq[Double])],
@@ -2114,13 +2125,11 @@ object Queries {
     // rows persist a second index over the same dir)
     val key =
       s"${stagedKey(dir, "embeddings")}#c${centroids.length}#k${cbs.head.length}"
-    val path = ivfPqIndexCache.computeIfAbsent(key, _ => {
-      val p = Tables.scratchPath(s"ivfpq_index_${java.util.UUID.randomUUID()}")
+    val path = staged("ivfpq_index", key) { p =>
       VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id", centroids, cbs,
         Metric.Cosine)
         .write.mode("overwrite").partitionBy("centroid_id").parquet(p)
-      p
-    })
+    }
     s.read.schema("vec_id BIGINT, pq_code BIGINT, centroid_id BIGINT")
       .parquet(path)
   }
@@ -2514,12 +2523,10 @@ object Queries {
     * the downstream Jaccard/cosine verify is [[qNearDupPairs]]'s stage. */
   private def qNeardupIncremental(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val path = bandIndexCache.computeIfAbsent(stagedKey(dir, "documents"), _ => {
-      val p = Tables.scratchPath(s"band_index_${java.util.UUID.randomUUID()}")
+    val path = staged("band_index", stagedKey(dir, "documents")) { p =>
       minhashBandsOf(docs.filter(col("doc_id") % 10 =!= 0))
         .write.mode("overwrite").parquet(p)
-      p
-    })
+    }
     val index = s.read.schema("doc_id BIGINT, band INT, band_key STRING")
       .parquet(path)
     val deltaBands = minhashBandsOf(docs.filter(col("doc_id") % 10 === 0))
@@ -2529,9 +2536,6 @@ object Queries {
       .agg(count(lit(1)).as("n_bands"))
       .orderBy("new_id", "corpus_id")
   }
-
-  private val bandIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val qNeardupIncrementalSql: String =
     s"""WITH $minhashCte,
@@ -2989,10 +2993,10 @@ object Queries {
     * the all-batch q_burst_detect — streamed-then-flagged must equal
     * batch-detected exactly. */
   private def qStreamBurst(s: SparkSession, dir: String): DataFrame = {
-    val landing = eventsLanding(dir)
+    val landing = landingDir(dir, "events")
     val sink = s"q_stream_burst_sink_${math.abs(dir.hashCode)}"
     if (s.catalog.tableExists(sink)) s.catalog.dropTempView(sink)
-    drainStream(s, 8, "q_stream_burst") {
+    drainStream(s, "q_stream_burst", streamWidth(8)) {
       Streaming.windowedCounts(
           Streaming.eventsStream(s, landing),
           windowDur = "6 hours", watermark = Some("1 hour"))
@@ -3000,8 +3004,6 @@ object Queries {
         .format("memory")
         .queryName(sink)
         .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     Streaming.burstFlags(s.table(sink))
       .orderBy("event_type", "window_start_epoch")
@@ -4033,10 +4035,10 @@ object Queries {
     * streaming bookkeeping (exactly-once file tracking in the source
     * log), and state is bounded by the watermark. */
   private def qStreamIngest(s: SparkSession, dir: String): DataFrame = {
-    val landing = eventsLanding(dir)
+    val landing = landingDir(dir, "events")
     val sink = s"q_stream_ingest_sink_${math.abs(dir.hashCode)}"
     if (s.catalog.tableExists(sink)) s.catalog.dropTempView(sink)
-    drainStream(s, 8, "q_stream_ingest") {
+    drainStream(s, "q_stream_ingest", streamWidth(8)) {
       Streaming.windowedCounts(
           Streaming.eventsStream(s, landing),
           windowDur = "30 minutes", watermark = Some("1 hour"))
@@ -4044,20 +4046,15 @@ object Queries {
         .format("memory")
         .queryName(sink)
         .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     s.table(sink).orderBy("window_start_epoch", "event_type")
   }
 
-  private val streamLandingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Stage one fixture table into a landing dir. The fixture may be a
-    * single parquet FILE (the driver's current shape) or a parquet
-    * DIRECTORY of part files (the multi-file shape a regenerated
-    * fixture could take — the same fixture-drift class as the r6
-    * ts-type break; ADVICE r7 flagged that a bare `Files.copy` of a
+  /** Stage one fixture table into a landing dir (created if absent).
+    * The fixture may be a single parquet FILE (the driver's current
+    * shape) or a parquet DIRECTORY of part files (the multi-file shape
+    * a regenerated fixture could take — the same fixture-drift class as
+    * the r6 ts-type break; ADVICE r7 flagged that a bare `Files.copy` of a
     * directory silently stages an EMPTY landing dir and every stream
     * query drains zero rows). Directory fixtures have every data file
     * copied; either way the staging FAILS LOUDLY unless at least one
@@ -4066,6 +4063,7 @@ object Queries {
       baseName: String): Unit = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
+    Files.createDirectories(dest)
     def dataFiles(p: java.nio.file.Path): List[java.nio.file.Path] = {
       val st = Files.list(p)
       try st.iterator().asScala.filter(Files.isRegularFile(_))
@@ -4092,17 +4090,21 @@ object Queries {
         s"(fixture $src drifted shape?)")
   }
 
-  /** Stage the fixture's events.parquet into a landing directory (the
-    * file-arrival shape FileStreamSource needs) — cached per sf dir, so
-    * the events-stream queries share ONE staging. */
-  private def eventsLanding(dir: String): String =
-    streamLandingCache.computeIfAbsent(stagedKey(dir, "events"), _ => {
-      val d = java.nio.file.Paths.get(
-        Tables.scratchPath(s"stream_landing_${java.util.UUID.randomUUID()}"))
-      java.nio.file.Files.createDirectories(d)
-      stageParquet(java.nio.file.Paths.get(s"$dir/events.parquet"), d, "events")
-      d.toString
-    })
+  /** Scratch-dir prefix of each fixture table's landing dir. */
+  private val LandingPrefix = Map(
+    "events" -> "stream_landing",
+    "documents" -> "doc_landing",
+    "embeddings" -> "emb_landing")
+
+  /** Stage the fixture's `table`.parquet into a landing directory (the
+    * file-arrival shape FileStreamSource needs), once per [[stagedKey]]:
+    * the events landing serves ingest, burst, dedup, enrich and pairs;
+    * the embeddings landing serves index and codes. */
+  private def landingDir(dir: String, table: String): String =
+    staged(LandingPrefix(table), stagedKey(dir, table)) { d =>
+      stageParquet(java.nio.file.Paths.get(s"$dir/$table.parquet"),
+        java.nio.file.Paths.get(d), table)
+    }
 
   /** State width for a STATE-HEAVY stream (the stream-stream join),
     * self-sized from the corpus row count — MIGRATION's "state
@@ -4124,38 +4126,49 @@ object Queries {
   private def streamStateWidth(stateRows: Long): Int =
     math.max(8, math.min(32, 8 * (1 + (stateRows / 2500000L)).toInt))
 
-  /** Cap `spark.sql.shuffle.partitions` for a streaming query and
-    * DRAIN it — every stateful operator commits one state store PER
-    * shuffle partition PER micro-batch, so the session default (32)
-    * pays 32 store commits × stores × batches on fixture-sized state
-    * (the stream-stream join keeps FOUR stores per partition;
-    * BENCH_r06's 44s q_stream_pairs row was mostly this bookkeeping).
-    * The capped confs are held until `awaitTermination` returns
-    * (restored in the finally AROUND the drain, per ADVICE r7 — the
-    * old restore-right-after-`start()` relied on the undocumented
-    * guarantee that StreamExecution clones the session conf
-    * synchronously inside `start()`); batch post-aggregation of the
-    * sink runs afterwards at the restored session width. At production
-    * scale the state partition count is sized to state volume ÷
-    * executor memory — here state is fixture-sized, so a handful of
-    * partitions is the honest shape. */
-  private def drainStream(
-      s: SparkSession, n: Int, name: String,
-      extraConfs: Map[String, String] = Map.empty)(
-      start: => org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val confs = Map("spark.sql.shuffle.partitions" -> n.toString) ++ extraConfs
+  /** The shuffle-partition cap of a stateful stream: every stateful
+    * operator commits one state store PER shuffle partition PER
+    * micro-batch, so the session width (the core count in Verify, Bench
+    * and the specs; 32 on the r1–r18 host) pays that many store commits
+    * × stores × batches on fixture-sized state (the stream-stream join
+    * keeps FOUR stores per partition; BENCH_r06's 44s q_stream_pairs row
+    * was mostly this bookkeeping). At production scale the state
+    * partition count is sized to state volume ÷ executor memory — here
+    * state is fixture-sized, so a handful of partitions is the honest
+    * shape. */
+  private def streamWidth(n: Int): Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> n.toString)
+
+  /** Skip the trailing no-data micro-batch `AvailableNow` runs to
+    * advance the watermark, for streams whose result it cannot change. */
+  private val NoTrailingBatch =
+    Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** Drain cap: 600s covers every fixture drain with 30× headroom at
+    * sf ≤ 0.1. A hung stream past the cap is a bug signal, and stop()
+    * on a mid-batch stream can destabilize the whole context, so the
+    * cap must stay ABOVE any honest drain. */
+  private val DrainTimeoutMs = 600000L
+
+  /** Start `writer` with `Trigger.AvailableNow` under the session
+    * `confs` and DRAIN it: stop it and throw if it has not terminated
+    * after [[DrainTimeoutMs]]. The confs are held until
+    * `awaitTermination` returns (restored in the finally AROUND the
+    * drain, per ADVICE r7 — restoring right after `start()` would rely
+    * on the undocumented guarantee that StreamExecution clones the
+    * session conf synchronously inside `start()`); batch
+    * post-aggregation of the sink runs afterwards at the restored
+    * session width. */
+  private def drainStream(s: SparkSession, name: String,
+      confs: Map[String, String] = Map.empty)(
+      writer: => org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit = {
     val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     try {
-      val q = start
-      // 600s covers every fixture drain with 30× headroom at sf ≤ 0.1;
-      // scale sweeps (10M-event landing dirs, stream-stream join state)
-      // legitimately need more wall — raise via env rather than weaken
-      // the guard for everyone (a hung stream past the cap is still a
-      // bug signal, and stop() on a mid-batch stream can destabilize
-      // the whole context, so the cap must stay ABOVE any honest drain).
-      val capMs = sys.env.getOrElse("SPARK_GRAFT_DRAIN_TIMEOUT_MS", "600000").toLong
-      if (!q.awaitTermination(capMs)) {
+      val q = writer
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      if (!q.awaitTermination(DrainTimeoutMs)) {
         q.stop()
         throw new IllegalStateException(s"$name: stream did not drain")
       }
@@ -4165,10 +4178,28 @@ object Queries {
     }
   }
 
-  private val docLandingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val featurePubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Drain `stream` through the exactly-once parquet sink
+    * ([[Streaming.idempotentPublish]]: dynamic `_batch_id` partition
+    * overwrite) into the `prefix` publish dir staged per fixture
+    * `table`, and read the published rows back. `perBatch` runs on
+    * each micro-batch before it is published. Publish sinks, not memory
+    * sinks: these rows' outputs are corpus-scale, and a memory sink
+    * collects all of it driver-side (at the sf10 sweep q_stream_pairs
+    * died on spark.driver.maxResultSize, 1.2 GiB of serialized pairs,
+    * after GC-thrashing the drain cap); the declared rollups aggregate
+    * the published files executor-side. */
+  private def publishDrained(s: SparkSession, dir: String, table: String,
+      prefix: String, name: String, confs: Map[String, String],
+      perBatch: DataFrame => DataFrame = identity)(
+      stream: => DataFrame): DataFrame = {
+    val pub = staged(prefix, stagedKey(dir, table))(_ => ())
+    drainStream(s, name, confs) {
+      stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+        Streaming.idempotentPublish(perBatch(batch), id, pub)
+      }
+    }
+    Streaming.readPublished(s, pub)
+  }
 
   /** Streamed corpus featurization executed FOR REAL under the gate,
     * AND the first driver-gated exercise of the exactly-once SINK
@@ -4184,29 +4215,12 @@ object Queries {
     * scale this is the freshness path: crawled docs land, features
     * appear next micro-batch, no corpus re-featurization. */
   private def qStreamFeatures(s: SparkSession, dir: String): DataFrame = {
-    val landing = docLandingCache.computeIfAbsent(stagedKey(dir, "documents"), _ => {
-      val d = java.nio.file.Paths.get(
-        Tables.scratchPath(s"doc_landing_${java.util.UUID.randomUUID()}"))
-      java.nio.file.Files.createDirectories(d)
-      stageParquet(java.nio.file.Paths.get(s"$dir/documents.parquet"), d,
-        "documents")
-      d.toString
-    })
-    val pub = featurePubCache.computeIfAbsent(stagedKey(dir, "documents"), _ =>
-      Tables.scratchPath(s"feature_pub_${java.util.UUID.randomUUID()}"))
-    val q = Streaming.documentsStream(s, landing)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Streaming.idempotentPublish(
-          TextOps.featureHash(batch, "doc_id", "text", FeatureHashK), id, pub)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(600000)) {
-      q.stop()
-      throw new IllegalStateException("q_stream_features: stream did not drain")
+    val landing = landingDir(dir, "documents")
+    val published = publishDrained(s, dir, "documents", "feature_pub", "q_stream_features",
+        Map.empty, TextOps.featureHash(_, "doc_id", "text", FeatureHashK)) {
+      Streaming.documentsStream(s, landing)
     }
-    Streaming.readPublished(s, pub)
+    published
       .groupBy("doc_id")
       .agg(
         count(lit(1)).as("nnz"),
@@ -4231,30 +4245,16 @@ object Queries {
     * micro-batch, so no key is ever evicted-then-re-emitted). Oracle:
     * relational SELECT DISTINCT. */
   private def qStreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val landing = eventsLanding(dir)
-    // publish sink, not memory: first-seen keys are corpus-scale (a
-    // memory sink would collect them all driver-side — the
-    // q_stream_pairs sf10 failure mode)
-    val pub = dedupPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      Tables.scratchPath(s"dedup_pub_${java.util.UUID.randomUUID()}"))
-    drainStream(s, 8, "q_stream_dedup") {
+    val landing = landingDir(dir, "events")
+    publishDrained(s, dir, "events", "dedup_pub", "q_stream_dedup",
+        streamWidth(8)) {
       Streaming.dedupStream(
           Streaming.eventsStream(s, landing)
             .select(col("user_id"), col("event_type"), col("ts")),
           Seq("user_id", "event_type"), watermark = Some("1 hour"))
         .select("user_id", "event_type")
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.idempotentPublish(batch, id, pub)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    Streaming.readPublished(s, pub).orderBy("user_id", "event_type")
+    }.orderBy("user_id", "event_type")
   }
-
-  private val dedupPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val qStreamDedupSql: String =
     """SELECT DISTINCT user_id, event_type
@@ -4286,23 +4286,15 @@ object Queries {
     * the all-BIGINT cross-multiply `milli·n > Σmilli` — no division, no
     * float threshold, so the flag is bit-deterministic cross-engine.
     * Oracle: the same profile and cross-multiply replayed relationally. */
-  private val enrichPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qStreamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val landing = eventsLanding(dir)
-    // publish sink, not memory: enriched rows are event-scale (the
-    // q_stream_pairs sf10 failure mode); the per-type rollup aggregates
-    // from the published files executor-side
-    val pub = enrichPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      Tables.scratchPath(s"enrich_pub_${java.util.UUID.randomUUID()}"))
+    val landing = landingDir(dir, "events")
     val profile = Tables.events(s, dir)
       .select(col("event_type"),
         floor(col("value") * 1000).cast("long").as("milli"))
       .groupBy("event_type")
       .agg(sum("milli").as("type_milli_sum"), count(lit(1)).as("type_n"))
-    drainStream(s, 8, "q_stream_enrich",
-        Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
+    val published = publishDrained(s, dir, "events", "enrich_pub", "q_stream_enrich",
+        streamWidth(8) ++ NoTrailingBatch) {
       Streaming.eventsStream(s, landing)
         .select(col("event_id"), col("event_type"),
           floor(col("value") * 1000).cast("long").as("milli"))
@@ -4310,14 +4302,8 @@ object Queries {
         .select(col("event_id"), col("event_type"), col("milli"),
           (col("milli") * col("type_n") > col("type_milli_sum"))
             .cast("int").as("above_mean"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.idempotentPublish(batch, id, pub)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    Streaming.readPublished(s, pub)
+    published
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         sum("above_mean").as("n_above_mean"),
@@ -4366,11 +4352,6 @@ object Queries {
     Files.delete(tmp)
   }
 
-  private val upsertLandingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val upsertPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** UPDATE-MODE aggregation feeding an idempotent foreachBatch MERGE
     * ([[Streaming.upsertSnapshot]]) — the fourth and last streaming
     * output shape after append (q_stream_dedup), complete
@@ -4389,10 +4370,8 @@ object Queries {
     * the panel-maintenance shape q_sample_append certifies in batch,
     * now certified on the streaming execution path. */
   private def qStreamUpsert(s: SparkSession, dir: String): DataFrame = {
-    val landing = upsertLandingCache.computeIfAbsent(stagedKey(dir, "events"), _ => {
-      val d = java.nio.file.Paths.get(
-        Tables.scratchPath(s"upsert_landing_${java.util.UUID.randomUUID()}"))
-      java.nio.file.Files.createDirectories(d)
+    val landing = staged("upsert_landing", stagedKey(dir, "events")) { p =>
+      val d = java.nio.file.Paths.get(p)
       val ev = Tables.events(s, dir)
       val t0 = ev.agg(min("event_type")).head().getString(0)
       stageSingleFile(
@@ -4402,11 +4381,9 @@ object Queries {
       stageSingleFile(
         ev.filter(col("event_type") =!= t0 &&
           pmod(col("event_id"), lit(2)) === 1), d, "h1")
-      d.toString
-    })
-    val pub = upsertPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      Tables.scratchPath(s"upsert_pub_${java.util.UUID.randomUUID()}"))
-    drainStream(s, 8, "q_stream_upsert") {
+    }
+    val pub = staged("upsert_pub", stagedKey(dir, "events"))(_ => ())
+    drainStream(s, "q_stream_upsert", streamWidth(8)) {
       Streaming.eventsStream(s, landing, maxFilesPerTrigger = Some(1))
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -4416,8 +4393,6 @@ object Queries {
         .foreachBatch { (batch: DataFrame, id: Long) =>
           Streaming.upsertSnapshot(batch, id, Seq("event_type"), pub)
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
     Streaming.readUpserted(s, pub).orderBy("event_type")
   }
@@ -4430,26 +4405,13 @@ object Queries {
       |         AS value_milli_sum
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val pairsPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def qStreamPairs(s: SparkSession, dir: String): DataFrame = {
-    val landing = eventsLanding(dir)
-    val pub = pairsPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      Tables.scratchPath(s"pairs_pub_${java.util.UUID.randomUUID()}"))
+    val landing = landingDir(dir, "events")
     val ev = Streaming.eventsStream(s, landing).withWatermark("ts", "1 hour")
     // inner stream-stream joins emit each pair in the micro-batch where
     // both rows arrive (no watermark holdback), so the trailing no-data
     // watermark-advance batch does pure state-eviction bookkeeping here
     // — skip it (it cannot change the result set)
-    //
-    // Pairs publish through the exactly-once parquet sink, NOT a memory
-    // sink: the pair stream is corpus-scale (events × within-window
-    // mates), and a memory sink is a driver-side collect of all of it —
-    // at the sf10 sweep it died on spark.driver.maxResultSize (1.2 GiB
-    // of serialized pairs) after GC-thrashing the 600s drain guard. The
-    // downstream (a_type, b_type) rollup aggregates from the published
-    // files, executor-side.
     //
     // Width self-sizes from state volume (both join sides insert every
     // event): 8 at fixture scale, 32 at sf10's 20M state rows — the
@@ -4457,17 +4419,11 @@ object Queries {
     // measured in the r15 sweep).
     val stateWidth = streamStateWidth(
       2L * Tables.events(s, dir).count())
-    drainStream(s, stateWidth, "q_stream_pairs",
-        Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) {
+    val published = publishDrained(s, dir, "events", "pairs_pub", "q_stream_pairs",
+        streamWidth(stateWidth) ++ NoTrailingBatch) {
       Streaming.correlatedPairs(ev, ev, withinSeconds = 86400)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.idempotentPublish(batch, id, pub)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
     }
-    Streaming.readPublished(s, pub)
+    published
       .groupBy("a_type", "b_type")
       .agg(count(lit(1)).as("n_pairs"), sum("gap_micros").as("gap_micros_sum"))
       .orderBy("a_type", "b_type")
@@ -4475,9 +4431,6 @@ object Queries {
 
   // def, not val: qEventPairsSql initializes later in this object
   private def qStreamPairsSql: String = qEventPairsSql
-
-  private val embLandingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Streamed ANN index maintenance executed FOR REAL under the gate:
     * the embeddings landing-dir stream bucketed through the SAME
@@ -4492,45 +4445,22 @@ object Queries {
     * rebuild. Oracle: the full-rebuild bucketing replayed arithmetically
     * (q_index_append's oracle — the gated claim is streamed == rebuilt). */
   private def qStreamIndex(s: SparkSession, dir: String): DataFrame = {
-    val landing = embLandingCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
-      val d = java.nio.file.Paths.get(
-        Tables.scratchPath(s"emb_landing_${java.util.UUID.randomUUID()}"))
-      java.nio.file.Files.createDirectories(d)
-      stageParquet(java.nio.file.Paths.get(s"$dir/embeddings.parquet"), d,
-        "embeddings")
-      d.toString
-    })
-    // publish sink, not memory: the streamed index table is
-    // corpus × bands rows (the q_stream_pairs sf10 failure mode) — and
-    // publishing IS the operator's real contract (a streamed index is
-    // served from storage, not from driver memory)
-    val pub = streamIndexPubCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ =>
-      Tables.scratchPath(s"stream_index_pub_${java.util.UUID.randomUUID()}"))
-    drainStream(s, 8, "q_stream_index") {
+    val landing = landingDir(dir, "embeddings")
+    // publishing IS the operator's real contract: a streamed index is
+    // served from storage, not from driver memory
+    publishDrained(s, dir, "embeddings", "stream_index_pub", "q_stream_index",
+        streamWidth(8)) {
       VectorSearch.lshBucketTable(
           Streaming.embeddingsStream(s, landing),
           "embedding", "vec_id",
           Metric.Cosine, EmbeddingDim, bits = LshMultiBits, bands = IndexBands)
         .select(col("vec_id"), col("band").cast("long").as("band"), col("bucket"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.idempotentPublish(batch, id, pub)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    Streaming.readPublished(s, pub).orderBy("vec_id", "band")
+    }.orderBy("vec_id", "band")
   }
-
-  private val streamIndexPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   // def, not val: qIndexAppendSql (the full-rebuild replay) initializes
   // earlier in the file but keep the reference lazy for safety
   private def qStreamIndexSql: String = qIndexAppendSql
-
-  private val streamCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Streamed index maintenance WITH the compaction trigger INSIDE the
     * stream ([[Streaming.compactingIndexAppend]]) — closes the last
@@ -4545,32 +4475,26 @@ object Queries {
     * == rebuilt, the same layout-only claim as q_index_compact, now
     * under live ingestion. */
   private def qStreamCompact(s: SparkSession, dir: String): DataFrame = {
-    val base = streamCompactCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
-      val b = Tables.scratchPath(s"stream_compact_${java.util.UUID.randomUUID()}")
+    val base = staged("stream_compact", stagedKey(dir, "embeddings")) { b =>
       Tables.embeddings(s, dir).repartition(3)
         .write.parquet(s"$b/landing")
       val frag = s"$b/frag"
       val compacts = s"$b/compact"
-      val q = VectorSearch.lshBucketTable(
-          Streaming.embeddingsStream(s, s"$b/landing",
-            maxFilesPerTrigger = Some(1)),
-          "embedding", "vec_id", Metric.Cosine, EmbeddingDim,
-          bits = LshMultiBits, bands = IndexBands)
-        .select(col("vec_id"), col("band").cast("long").as("band"),
-          col("bucket"))
-        .writeStream
-        .foreachBatch((batch: DataFrame, id: Long) =>
-          Streaming.compactingIndexAppend(batch, id, frag, compacts,
-            cadence = 2))
-        .option("checkpointLocation", s"$b/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(600000)) {
-        q.stop()
-        throw new IllegalStateException("q_stream_compact: stream did not drain")
+      drainStream(s, "q_stream_compact") {
+        VectorSearch.lshBucketTable(
+            Streaming.embeddingsStream(s, s"$b/landing",
+              maxFilesPerTrigger = Some(1)),
+            "embedding", "vec_id", Metric.Cosine, EmbeddingDim,
+            bits = LshMultiBits, bands = IndexBands)
+          .select(col("vec_id"), col("band").cast("long").as("band"),
+            col("bucket"))
+          .writeStream
+          .foreachBatch((batch: DataFrame, id: Long) =>
+            Streaming.compactingIndexAppend(batch, id, frag, compacts,
+              cadence = 2))
+          .option("checkpointLocation", s"$b/ckpt")
       }
-      b
-    })
+    }
     Streaming.readCompactedIndex(s, s"$base/frag", s"$base/compact")
       .select(col("vec_id"), col("band"), col("bucket"))
       .orderBy("vec_id", "band")
@@ -4592,35 +4516,16 @@ object Queries {
   private def qStreamCodes(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
     val cbs = codebooks(dir, emb, PqKsub)
-    val landing = embLandingCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ => {
-      val d = java.nio.file.Paths.get(
-        Tables.scratchPath(s"emb_landing_${java.util.UUID.randomUUID()}"))
-      java.nio.file.Files.createDirectories(d)
-      stageParquet(java.nio.file.Paths.get(s"$dir/embeddings.parquet"), d,
-        "embeddings")
-      d.toString
-    })
-    // publish sink, not memory: codes are corpus-scale, and published
-    // parquet IS the PQ code table's serving layout
-    val pub = streamCodesPubCache.computeIfAbsent(stagedKey(dir, "embeddings"), _ =>
-      Tables.scratchPath(s"stream_codes_pub_${java.util.UUID.randomUUID()}"))
-    drainStream(s, 8, "q_stream_codes") {
+    val landing = landingDir(dir, "embeddings")
+    // published parquet IS the PQ code table's serving layout
+    publishDrained(s, dir, "embeddings", "stream_codes_pub", "q_stream_codes",
+        streamWidth(8)) {
       VectorSearch.pqEncode(
           Streaming.embeddingsStream(s, landing),
           "embedding", "vec_id",
           cbs, Metric.Cosine)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.idempotentPublish(batch, id, pub)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    Streaming.readPublished(s, pub).orderBy("vec_id")
+    }.orderBy("vec_id")
   }
-
-  private val streamCodesPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val qStreamCodesSql: String = {
     val sSub = EmbeddingDim / PqM
@@ -4645,9 +4550,6 @@ object Queries {
        |       CAST(sum(code * (1::BIGINT << (4 * j))) AS BIGINT) AS pq_code
        |FROM a GROUP BY vec_id ORDER BY vec_id""".stripMargin
   }
-
-  private val sessLandingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Custom-state streaming sessionization executed FOR REAL under the
     * gate — the hardest streaming path in the repo:
@@ -4678,10 +4580,8 @@ object Queries {
     * (lag → cumulative session id) on floor-second epochs, exactly
     * [[Streaming.closedSessions]]'s arithmetic. */
   private def qStreamSessions(s: SparkSession, dir: String): DataFrame = {
-    val landing = sessLandingCache.computeIfAbsent(stagedKey(dir, "events"), _ => {
-      val d = java.nio.file.Paths.get(
-        Tables.scratchPath(s"sess_landing_${java.util.UUID.randomUUID()}"))
-      java.nio.file.Files.createDirectories(d)
+    val landing = staged("sess_landing", stagedKey(dir, "events")) { p =>
+      val d = java.nio.file.Paths.get(p)
       val srcPath = java.nio.file.Paths.get(s"$dir/events.parquet")
       if (!java.nio.file.Files.isDirectory(srcPath))
         stageParquet(srcPath, d, "b0") // single-file fixture: byte-identical
@@ -4706,23 +4606,10 @@ object Queries {
         val k = 4
         val span = (hi - lo) / k + 1
         (0 until k).foreach { i =>
-          val tmp = d.resolve(s"__tmp_b0_$i")
-          ev.filter(unix_micros(col("ts")) >= lo + i * span &&
-              unix_micros(col("ts")) < lo + (i + 1) * span)
-            .coalesce(1).write.parquet(tmp.toString)
-          val entries = {
-            val st = java.nio.file.Files.list(tmp)
-            try {
-              import scala.jdk.CollectionConverters._
-              st.iterator().asScala.toList
-            } finally st.close()
-          }
-          val part = entries
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          java.nio.file.Files.move(part, d.resolve(f"b0_p$i%05d.parquet"))
-          entries.filterNot(_ == part)
-            .foreach(java.nio.file.Files.delete(_))
-          java.nio.file.Files.delete(tmp)
+          stageSingleFile(
+            ev.filter(unix_micros(col("ts")) >= lo + i * span &&
+              unix_micros(col("ts")) < lo + (i + 1) * span),
+            d, f"b0_p$i%05d")
           Thread.sleep(30) // ascending mod-times → deterministic order
         }
       }
@@ -4747,11 +4634,10 @@ object Queries {
       val dayMicros = 86400L * 1000000L
       val maxTsMicros =
         Tables.events(s, dir).agg(max(unix_micros(col("ts")))).head.getLong(0)
-      Seq(("b1.parquet", -1L, maxTsMicros + 10L * dayMicros),
-          ("b2.parquet", -1L, maxTsMicros + 10L * dayMicros + 600L * 1000000L)).foreach {
+      Seq(("b1", -1L, maxTsMicros + 10L * dayMicros),
+          ("b2", -1L, maxTsMicros + 10L * dayMicros + 600L * 1000000L)).foreach {
         case (name, uid, tsMicros) =>
           Thread.sleep(30) // distinct mod-times → deterministic file order
-          val tmp = d.resolve(s"__tmp_$name")
           val tsCol = tsType match {
             case org.apache.spark.sql.types.LongType => lit(tsMicros * 1000L)
             case _: org.apache.spark.sql.types.TimestampNTZType =>
@@ -4759,47 +4645,22 @@ object Queries {
               timestamp_micros(lit(tsMicros)).cast("timestamp_ntz")
             case _ => timestamp_micros(lit(tsMicros))
           }
-          s.range(1).select(
+          stageSingleFile(
+            s.range(1).select(
               lit(uid).as("event_id"), tsCol.as("ts"),
               lit(uid).as("user_id"), lit("sentinel").as("event_type"),
-              lit(0.0).as("value"), lit("{}").as("props"))
-            .coalesce(1).write.parquet(tmp.toString)
-          val entries = {
-            val st = java.nio.file.Files.list(tmp)
-            try {
-              import scala.jdk.CollectionConverters._
-              st.iterator().asScala.toList
-            } finally st.close()
-          }
-          val part = entries
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          java.nio.file.Files.move(part, d.resolve(name))
-          entries.filterNot(_ == part).foreach(java.nio.file.Files.delete(_))
-          java.nio.file.Files.delete(tmp)
+              lit(0.0).as("value"), lit("{}").as("props")),
+            d, name)
       }
-      d.toString
-    })
-    // publish sink, not memory: closed sessions are corpus-scale (the
-    // q_stream_pairs sf10 failure mode)
-    val pub = sessionsPubCache.computeIfAbsent(stagedKey(dir, "events"), _ =>
-      Tables.scratchPath(s"sessions_pub_${java.util.UUID.randomUUID()}"))
-    drainStream(s, 8, "q_stream_sessions") {
+    }
+    publishDrained(s, dir, "events", "sessions_pub", "q_stream_sessions",
+        streamWidth(8)) {
       Streaming.closedSessions(
           Streaming.eventsStream(s, landing, maxFilesPerTrigger = Some(1)),
           gapSecs = 1800L, watermark = "1 hour")
         .toDF()
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Streaming.idempotentPublish(batch, id, pub)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    Streaming.readPublished(s, pub).orderBy("user_id", "session_start_epoch")
+    }.orderBy("user_id", "session_start_epoch")
   }
-
-  private val sessionsPubCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private val qStreamSessionsSql: String =
     """WITH e AS (

@@ -808,54 +808,6 @@ object VectorSearch {
       centroids: Seq[(Long, Seq[Double])]): DataFrame =
     index.unionByName(ivfAssignTable(newRows, vecCol, idCol, metric, centroids))
 
-  /** Multi-band OR amplification of [[bucketedKnnJoin]] — the recall
-    * path the reference's HNSW gives its users (ann.py's ef_search
-    * buys recall at candidate cost; here `bands` does): `bands`
-    * independent hyperplane families, a pair is a candidate if it
-    * collides in ANY band, candidates are deduplicated and ranked once.
-    *
-    * Scale shape (r4): the bucket join runs over the SCALAR index
-    * layout ([[lshBucketTable]] — one (id, band, bucket) row per band,
-    * 24 bytes), NOT over band-replicated vectors: at 100 TB exploding
-    * the vector column `bands`× through the exchange would shuffle
-    * `bands`× the corpus (the r3 shape's hidden cost). Candidate pairs
-    * are OR-deduplicated while still scalar (ids only), and vectors are
-    * joined back by id exactly ONCE per distinct candidate for the
-    * codegen scoring — total vector movement is 2 id-keyed joins of the
-    * candidate set, independent of `bands`. Recall rises as
-    * 1−(1−p^bits)^bands; index cost is linear in `bands`, vector cost
-    * is not. (Measured negative, r10 sf10: forcing the two re-attach
-    * joins to shuffled-hash instead of sort-merge moved the capped row
-    * 295.6s → 307.3s — the candidate-volume EXCHANGES dominate, not the
-    * sorts, so the join-strategy hint is left to Catalyst/AQE.)
-    *
-    * Parameter guide at 100 TB: size `bits` to the corpus
-    * (`bits ≈ log2(N / target_bucket_rows)`) so per-bucket all-pairs
-    * stays bounded, then buy recall with `bands`. Deterministic
-    * (arithmetic planes) — an oracle replays it as a UNION ALL of the
-    * per-band bucketings.
-    *
-    * `maxBucketFactor` — the production bucket-size cap (r9 sweep
-    * finding): sign-LSH occupancy is SKEWED on real embeddings (the
-    * sf10 fixture measured max bucket 17× the mean, Σn² 2.6× uniform),
-    * and at corpus scale one hot bucket does quadratic pair work while
-    * the rest of the cluster idles — the same death
-    * [[graft.operators.Sketches.minhashCandidatesCapped]] guards the
-    * text path against. When set, every corpus-side (band, bucket)
-    * whose occupancy exceeds `factor × mean occupancy` is dropped
-    * BEFORE the join, bounding each bucket's pair fan-out by
-    * (factor·mean)·|queries in bucket| BY CONSTRUCTION. The cap is
-    * RELATIVE, not absolute, so one constant self-sizes along the whole
-    * scale curve (a fixed row cap correct at sf0.01's mean of 2.4 rows
-    * is absurd at sf10's mean of 49 and vice versa). Vectors in a
-    * dropped bucket keep their other `bands−1` chances — recall decays
-    * gracefully (certified ≥0.8 through the q_ann_recall_capped oracle
-    * row and LshSpec). The sizing pass is ONE count over the 24-byte
-    * scalar index rows on the (band, bucket) keys the join shuffles to
-    * anyway, plus a 1-row broadcast threshold — bucket sizing never
-    * touches vectors. Whole buckets drop (never a row sample): the
-    * predicate is a pure function of the bucket, so an oracle replays
-    * it exactly and incremental rebuilds stay deterministic. */
   /** Ceiling for BROADCASTING a prepared (id, vector) table into the
     * candidate re-attach joins of [[multibandKnnJoin]] /
     * [[multiProbeKnnJoin]]. CappedDiag (r16, sf10) attributed ~90% of
@@ -905,6 +857,54 @@ object VectorSearch {
     if (vecTableBytes(rows, dim) <= ReattachBroadcastMaxBytes / 2) broadcast(vecs)
     else vecs
 
+  /** Multi-band OR amplification of [[bucketedKnnJoin]] — the recall
+    * path the reference's HNSW gives its users (ann.py's ef_search
+    * buys recall at candidate cost; here `bands` does): `bands`
+    * independent hyperplane families, a pair is a candidate if it
+    * collides in ANY band, candidates are deduplicated and ranked once.
+    *
+    * Scale shape (r4): the bucket join runs over the SCALAR index
+    * layout ([[lshBucketTable]] — one (id, band, bucket) row per band,
+    * 24 bytes), NOT over band-replicated vectors: at 100 TB exploding
+    * the vector column `bands`× through the exchange would shuffle
+    * `bands`× the corpus (the r3 shape's hidden cost). Candidate pairs
+    * are OR-deduplicated while still scalar (ids only), and vectors are
+    * joined back by id exactly ONCE per distinct candidate for the
+    * codegen scoring — total vector movement is 2 id-keyed joins of the
+    * candidate set, independent of `bands`. Recall rises as
+    * 1−(1−p^bits)^bands; index cost is linear in `bands`, vector cost
+    * is not. (Measured negative, r10 sf10: forcing the two re-attach
+    * joins to shuffled-hash instead of sort-merge moved the capped row
+    * 295.6s → 307.3s — the candidate-volume EXCHANGES dominate, not the
+    * sorts, so the join-strategy hint is left to Catalyst/AQE.)
+    *
+    * Parameter guide at 100 TB: size `bits` to the corpus
+    * (`bits ≈ log2(N / target_bucket_rows)`) so per-bucket all-pairs
+    * stays bounded, then buy recall with `bands`. Deterministic
+    * (arithmetic planes) — an oracle replays it as a UNION ALL of the
+    * per-band bucketings.
+    *
+    * `maxBucketFactor` — the production bucket-size cap (r9 sweep
+    * finding): sign-LSH occupancy is SKEWED on real embeddings (the
+    * sf10 fixture measured max bucket 17× the mean, Σn² 2.6× uniform),
+    * and at corpus scale one hot bucket does quadratic pair work while
+    * the rest of the cluster idles — the same death
+    * [[graft.operators.Sketches.minhashCandidatesCapped]] guards the
+    * text path against. When set, every corpus-side (band, bucket)
+    * whose occupancy exceeds `factor × mean occupancy` is dropped
+    * BEFORE the join, bounding each bucket's pair fan-out by
+    * (factor·mean)·|queries in bucket| BY CONSTRUCTION. The cap is
+    * RELATIVE, not absolute, so one constant self-sizes along the whole
+    * scale curve (a fixed row cap correct at sf0.01's mean of 2.4 rows
+    * is absurd at sf10's mean of 49 and vice versa). Vectors in a
+    * dropped bucket keep their other `bands−1` chances — recall decays
+    * gracefully (certified ≥0.8 through the q_ann_recall_capped oracle
+    * row and LshSpec). The sizing pass is ONE count over the 24-byte
+    * scalar index rows on the (band, bucket) keys the join shuffles to
+    * anyway, plus a 1-row broadcast threshold — bucket sizing never
+    * touches vectors. Whole buckets drop (never a row sample): the
+    * predicate is a pure function of the bucket, so an oracle replays
+    * it exactly and incremental rebuilds stay deterministic. */
   def multibandKnnJoin(
       queries: DataFrame,
       data: DataFrame,

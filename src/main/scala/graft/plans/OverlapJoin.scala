@@ -81,9 +81,7 @@ final case class OverlapJoinPlan(
   * hull case (right set narrow in time); the bloom catches the
   * sparse-but-wide case where the hull covers everything but ~all
   * interior buckets are empty (the q_range_join_sparse failure mode).
-  * Skipped when the right plan is nondeterministic. A/B knobs
-  * (SPARK_GRAFT_OVERLAPJOIN_NOPRUNE / _NOBLOOM) mirror the rangeJoin
-  * ones so sweeps can measure the prune on the same fixture. */
+  * Skipped when the right plan is nondeterministic. */
 object ExpandOverlapJoin extends Rule[LogicalPlan] {
   import IntervalBuckets._
 
@@ -103,9 +101,8 @@ object ExpandOverlapJoin extends Rule[LogicalPlan] {
         if (swap) (r0, l0, rLo0, rHi0, lLo0, lHi0)
         else (l0, r0, lLo0, lHi0, rLo0, rHi0)
       val stats =
-        if (knob("SPARK_GRAFT_OVERLAPJOIN_NOPRUNE") || !isDeterministic(r)) None
-        else Some(intervalStats(r, rLo, rHi, width, tz, conf,
-          withBloom = !knob("SPARK_GRAFT_OVERLAPJOIN_NOBLOOM")))
+        if (!isDeterministic(r)) None
+        else Some(intervalStats(r, rLo, rHi, width, tz, conf))
 
       // left side: hull bounds BEFORE the explode (cheapest point),
       // bucket-id bloom after it (the bucket id only exists then),
@@ -122,8 +119,8 @@ object ExpandOverlapJoin extends Rule[LogicalPlan] {
         qualifier = None,
         generatorOutput = Seq(lBkt),
         child = lBase)
-      val lPruned = stats.flatMap(_.mightContainBucket)
-        .map(mc => Filter(mc(lBkt), lGen)).getOrElse(lGen)
+      val lPruned = stats
+        .map(st => Filter(st.mightContainBucket(lBkt), lGen)).getOrElse(lGen)
 
       // right side: explode to every overlapped bucket, unpruned
       val rBkt = AttributeReference("__r_bucket", LongType, nullable = false)()

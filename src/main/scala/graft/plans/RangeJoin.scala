@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Shared machinery of the two bucketed interval-join rewrites
   * ([[ExpandRangeJoin]] point-in-interval, [[ExpandOverlapJoin]]
-  * interval×interval): bucket math, the diagnostic A/B knobs, and the
-  * one-subquery min/max/bloom statistics of an interval frame. */
+  * interval×interval): bucket math and the one-subquery
+  * min/max/bloom statistics of an interval frame. */
 private[plans] object IntervalBuckets {
 
   def bucketOf(e: Expression, width: Long): Expression =
@@ -30,23 +30,6 @@ private[plans] object IntervalBuckets {
         Some(Literal(1L, LongType)), Some(tz)),
       Literal.create(null, ArrayType(LongType, containsNull = false)))
 
-  // diagnostic A/B knobs: scale sweeps measure a prune's effect on the
-  // SAME fixture instead of arguing it; never set in production. The
-  // sys.props fallback
-  // exists only so in-JVM specs can exercise both paths (env is frozen
-  // at JVM start) — it is honored ONLY when the JVM was launched with
-  // -Dgraft.test.knobs=1 (build.sbt sets it for the forked test JVM),
-  // so a stray property in a production driver can never silently
-  // disable the prune. The knob specs mutate global sys.props; that is
-  // sound only while the suite runs serially in one forked JVM
-  // (Test/fork := true with sbt's default testForkedParallel = false —
-  // revisit the knob specs' try/finally if that ever changes).
-  private val testKnobs: Boolean =
-    sys.props.get("graft.test.knobs").contains("1")
-  def knob(name: String): Boolean =
-    sys.env.get(name).contains("1") ||
-      (testKnobs && sys.props.get(name).contains("1"))
-
   /** True when no expression anywhere in `plan` is nondeterministic —
     * the precondition for re-executing it inside a prune subquery
     * (which could otherwise prune against a different draw than the
@@ -54,15 +37,15 @@ private[plans] object IntervalBuckets {
   def isDeterministic(plan: LogicalPlan): Boolean =
     !plan.exists(_.expressions.exists(!_.deterministic))
 
-  /** Handles to the min/max(/bloom) statistics of an interval frame,
-    * all fields of ONE uncorrelated scalar subquery instance (so
+  /** Handles to the min/max/bloom statistics of an interval frame, all
+    * fields of ONE uncorrelated scalar subquery instance (so
     * `ReuseSubquery` dedups however many predicates consume them). */
   final case class IntervalStats(
       lo: Expression, hi: Expression,
-      mightContainBucket: Option[Expression => Expression])
+      mightContainBucket: Expression => Expression)
 
   /** ONE uncorrelated scalar subquery over the EXPLODED interval frame
-    * computing `struct(min(lo), max(hi)[, bloom(xxhash64(bucket))])` —
+    * computing `struct(min(lo), max(hi), bloom(xxhash64(bucket)))` —
     * a single metadata-scale aggregate job. Aggregating over the
     * exploded frame (not the raw one) drops NULL/inverted intervals
     * from min/max as well — rows that cannot match anything never
@@ -77,25 +60,13 @@ private[plans] object IntervalBuckets {
     * items (spark.sql.optimizer.runtime.bloomFilter.expectedNumItems)
     * — an interval frame exploding past capacity saturates the bloom
     * toward pass-all, silently losing the prune while still paying
-    * the subquery cost. Size it instead: an explicit session conf
-    * wins; else 2× the interval side's CBO row count (the exploded
-    * frame is ≤ 2×|intervals| at the intended width); else Spark's
-    * default. BloomFilterAggregate itself clamps the estimate to
-    * runtime.bloomFilter.maxNumItems, so an over-estimate is safe. */
+    * the subquery cost. Size it instead: 2× the interval side's CBO
+    * row count (the exploded frame is ≤ 2×|intervals| at the intended
+    * width), else Spark's default. BloomFilterAggregate itself clamps
+    * the estimate to runtime.bloomFilter.maxNumItems, so an
+    * over-estimate is safe. */
   def intervalStats(r: LogicalPlan, lo: Expression, hi: Expression,
-      width: Long, tz: String, conf: SQLConf,
-      withBloom: Boolean): IntervalStats = {
-    if (!withBloom) {
-      // bounds-only form (the r11 points prune), kept as the A/B
-      // baseline for sweeps
-      val bounds = Alias(CreateNamedStruct(Seq(
-        Literal("lo"), Min(lo).toAggregateExpression(),
-        Literal("hi"), Max(hi).toAggregateExpression())), "__iv_bounds")()
-      val sub = ScalarSubquery(Aggregate(Nil, Seq(bounds), r))
-      return IntervalStats(
-        GetStructField(sub, 0, Some("lo")),
-        GetStructField(sub, 1, Some("hi")), None)
-    }
+      width: Long, tz: String, conf: SQLConf): IntervalStats = {
     // column-pruned interval side: the subquery job reads only lo/hi
     val slim = Project((lo.references ++ hi.references).toSeq, r)
     val bkt = AttributeReference("__iv_stats_bucket", LongType, nullable = false)()
@@ -107,10 +78,7 @@ private[plans] object IntervalBuckets {
       generatorOutput = Seq(bkt),
       child = slim)
     val expectedItems: Long =
-      conf.getConfString("spark.graft.rangeJoin.bloom.expectedItems", "")
-        .toLongOption
-        .orElse(r.stats.rowCount.map(n =>
-          (n * 2).min(BigInt(Long.MaxValue)).toLong))
+      r.stats.rowCount.map(n => (n * 2).min(BigInt(Long.MaxValue)).toLong)
         .getOrElse(conf.getConf(
           SQLConf.RUNTIME_BLOOM_FILTER_EXPECTED_NUM_ITEMS))
         .max(1L)
@@ -125,8 +93,8 @@ private[plans] object IntervalBuckets {
     IntervalStats(
       GetStructField(sub, 0, Some("lo")),
       GetStructField(sub, 1, Some("hi")),
-      Some(b => BloomFilterMightContain(
-        GetStructField(sub, 2, Some("bf")), new XxHash64(Seq(b)))))
+      b => BloomFilterMightContain(
+        GetStructField(sub, 2, Some("bf")), new XxHash64(Seq(b))))
   }
 }
 
@@ -211,14 +179,11 @@ object ExpandRangeJoin extends Rule[LogicalPlan] {
     * join sees. */
   private def pointPrune(r: LogicalPlan, pt: Expression,
       lo: Expression, hi: Expression, width: Long): Option[Expression] = {
-    if (knob("SPARK_GRAFT_RANGEJOIN_NOPRUNE")) return None
     if (!isDeterministic(r)) return None
-    val st = intervalStats(r, lo, hi, width, conf.sessionLocalTimeZone, conf,
-      withBloom = !knob("SPARK_GRAFT_RANGEJOIN_NOBLOOM"))
-    val bounds = And(
-      GreaterThanOrEqual(pt, st.lo), LessThanOrEqual(pt, st.hi))
-    Some(st.mightContainBucket
-      .fold(bounds)(mc => And(bounds, mc(bucketOf(pt, width)))))
+    val st = intervalStats(r, lo, hi, width, conf.sessionLocalTimeZone, conf)
+    Some(And(
+      And(GreaterThanOrEqual(pt, st.lo), LessThanOrEqual(pt, st.hi)),
+      st.mightContainBucket(bucketOf(pt, width))))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {

@@ -106,30 +106,6 @@ class OverlapJoinSpec extends SparkSpec {
     assert(plan.contains("bloom_filter_agg"), plan)
   }
 
-  test("NOBLOOM / NOPRUNE knobs select the bounds-only and unpruned forms") {
-    val expected = naive(lhs, rhs)
-    for (k <- Seq("SPARK_GRAFT_OVERLAPJOIN_NOBLOOM", "SPARK_GRAFT_OVERLAPJOIN_NOPRUNE")) {
-      sys.props(k) = "1"
-      try {
-        val df = Temporal.overlapJoin(lhs, "a_lo", "a_hi", rhs, "b_lo", "b_hi", 16)
-        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        assert(!plan.contains("might_contain"), s"$k should disable the bloom: $plan")
-        // ADVICE r13: NOBLOOM must be bounds-ONLY, not prune-off — the
-        // hull filter's interval-stats scalar subquery must still be in
-        // the plan; NOPRUNE removes the subquery entirely.
-        val hasSubquery = "(?m)^Subquery".r.findFirstIn(plan).isDefined ||
-          plan.contains("Subquery subquery")
-        if (k.endsWith("NOBLOOM"))
-          assert(hasSubquery, s"$k should KEEP the hull-bounds subquery: $plan")
-        else
-          assert(!hasSubquery, s"$k should remove the whole prune: $plan")
-        val got = df.select("aid", "bid").as[(Long, Long)].collect()
-        assert(got.length === got.toSet.size)
-        assert(got.toSet === expected)
-      } finally sys.props.remove(k)
-    }
-  }
-
   test("sparse-but-wide right set (two clusters at opposite domain ends) stays exact") {
     // the hull-bounds failure mode: right intervals at both ends of the
     // domain widen min/max to cover every left row; the bucket bloom

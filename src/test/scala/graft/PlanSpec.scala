@@ -199,13 +199,14 @@ class PlanSpec extends SparkSpec {
   test("no accidental cartesian products in non-knn queries") {
     // the exact-knn queries legitimately cross-join (scored all-pairs);
     // every other declared query must be cartesian-free. 1-row broadcast
-    // query frames plan as BroadcastNestedLoopJoin — allowed.
+    // query frames plan as BroadcastNestedLoopJoin — allowed. A builder
+    // that throws fails the test: it would otherwise hide its plan.
     val knnLike = Set("q_knn_join", "q_ann_lsh", "q_ann_lsh_multi", "q_ann_ivf")
     val offenders = Queries.all.map(_.name)
       .filterNot(knnLike)
       .filter { n =>
         try planOf(n).contains("CartesianProduct")
-        catch { case _: Throwable => false }
+        catch { case e: Throwable => fail(s"$n: builder threw", e) }
       }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
   }

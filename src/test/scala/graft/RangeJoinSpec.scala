@@ -105,31 +105,21 @@ class RangeJoinSpec extends SparkSpec {
     assert(got.toSet === naive(p, iv))
   }
 
-  test("NOBLOOM / NOPRUNE knobs select the r11 bounds-only and unpruned forms") {
-    val expected = naive(points, intervals)
-    for (k <- Seq("SPARK_GRAFT_RANGEJOIN_NOBLOOM", "SPARK_GRAFT_RANGEJOIN_NOPRUNE")) {
-      sys.props(k) = "1"
-      try {
-        val df = Temporal.rangeJoin(points, "pt", intervals, "lo", "hi", 16)
-        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        assert(!plan.contains("might_contain"), s"$k should disable the bloom: $plan")
-        assert(df.select("pid", "iid").as[(Long, Long)].collect().toSet === expected)
-      } finally sys.props.remove(k)
-    }
-  }
-
   test("bloom expected-items conf is honored without changing results (tiny and huge capacity)") {
     val expected = naive(points, intervals)
     // capacity only tunes the false-positive rate — exactness lives in
-    // the join residual, so results must be identical at any setting
+    // the join residual, so results must be identical at any setting.
+    // BloomFilterAggregate clamps the expected-items estimate to Spark's
+    // maxNumItems, so a cap of 4 forces a tiny, saturated bloom.
+    val maxItems = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
     for (cap <- Seq("4", "50000000")) {
-      spark.conf.set("spark.graft.rangeJoin.bloom.expectedItems", cap)
+      spark.conf.set(maxItems, cap)
       try {
         val df = Temporal.rangeJoin(points, "pt", intervals, "lo", "hi", 16)
         val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
         assert(plan.contains("might_contain"), plan)
         assert(df.select("pid", "iid").as[(Long, Long)].collect().toSet === expected)
-      } finally spark.conf.unset("spark.graft.rangeJoin.bloom.expectedItems")
+      } finally spark.conf.unset(maxItems)
     }
   }
 
