@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Metric, VectorFunctions => VF}
-import graft.operators.{Budget, Contrastive, Curation, Diversify, Graph, Layout, Lexical, Multimodal, Packing, Partitioning, Profile, Quantize, Rag, Rerank, Sketches, Skew, Splits, Temporal, TextOps, VectorSearch, Web}
+import graft.operators.{Budget, Contrastive, Curation, Diversify, Graph, Layout, Lexical, Multimodal, Packing, Partitioning, Profile, Rag, Rerank, Sketches, Skew, Splits, Temporal, TextOps, VectorSearch, Web}
 import graft.sources.{Compaction, Sources}
 import graft.streaming.Streaming
 
@@ -65,22 +65,64 @@ object Queries {
 
   // ---------------------------------------------------------------- knn ---
 
-  /** O9+O5: top-10 by cosine similarity vs the vec_id=0 embedding. */
-  private def qKnnCosine(s: SparkSession, dir: String): DataFrame =
-    VectorSearch.topK(
-      Tables.embeddings(s, dir).select("vec_id", "embedding"),
-      "embedding", "vec_id",
-      queryVecFrame(s, dir), "qvec", Metric.Cosine, K)
-      .select("vec_id", "score")
+  /** The query vector of a single-query search: its 1-row Spark frame
+    * (column `qvec`) and its oracle CTE `q(qemb)`, given the scored
+    * relation and its vector column. */
+  private final case class SearchQuery(
+      frame: (SparkSession, String) => DataFrame,
+      cte: (String, String) => String)
 
-  private val qKnnCosineSql: String = {
-    val score = Oracle.dot("n.nemb", "q.qemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |q AS (SELECT nemb AS qemb FROM n WHERE vec_id = 0)
-       |SELECT n.vec_id AS vec_id, $score AS score
-       |FROM n CROSS JOIN q
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
+  /** The embedding of vec_id 0 ([[queryVecFrame]]). */
+  private val Vec0Query = SearchQuery(queryVecFrame,
+    (rel, v) => s"q AS (SELECT $v AS qemb FROM $rel WHERE vec_id = 0)")
+
+  /** "$RagQueryText" embedded arithmetically — the reference's
+    * `search_text` (api.py:164-168). */
+  private val TextQuery = SearchQuery((s, _) => textQueryFrame(s), (_, _) => textQueryCte)
+
+  /** "$RagQueryText" by the content-sensitive md5 embedding: the query
+    * vector varies with text CONTENT, not just length (exceeds the
+    * reference's DummyEmbeddings). */
+  private val HashQuery = SearchQuery(
+    (s, _) => s.range(1)
+      .select(VF.hashEmbedding(lit(RagQueryText), EmbeddingDim).as("qvec")),
+    (_, _) => s"q AS (SELECT ${Oracle.l2Normalize(
+      Oracle.hashEmbedding(s"'$RagQueryText'", EmbeddingDim))} AS qemb)")
+
+  /** O9: top-[[K]] embeddings by `metric` against `query` — O5 cosine,
+    * O6 dot, O7+O8 euclidean similarity `1/(1+d)`. `label` restricts
+    * the corpus first (extension — the reference has no filters); the
+    * predicate pushes down to the parquet scan (PushedFilters), shrinking
+    * the scored set before any vector math runs. Rows: q_knn_cosine,
+    * q_knn_dot, q_knn_euclid, q_filter_search (label 3), q_text_search
+    * (O10+O15), q_hash_search (O10). */
+  private def search(metric: Metric, query: SearchQuery, label: Option[Int] = None)(
+      s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    VectorSearch.topK(
+      label.fold(emb)(l => emb.filter(col("label") === l)).select("vec_id", "embedding"),
+      "embedding", "vec_id",
+      query.frame(s, dir), "qvec", metric, K)
+      .select("vec_id", "score")
+  }
+
+  /** Oracle of [[search]]: cosine scores the normalized `n(nemb)`, the
+    * other metrics the raw `e(emb)`. */
+  private def searchSql(metric: Metric, query: SearchQuery,
+      label: Option[Int] = None): String = {
+    val (rel, v) = if (metric == Metric.Cosine) ("n", "nemb") else ("e", "emb")
+    val score =
+      if (metric == Metric.Euclidean) Oracle.euclideanSimilarity(s"$rel.$v", "q.qemb", EmbeddingDim)
+      else Oracle.dot(s"$rel.$v", "q.qemb", EmbeddingDim)
+    val ctes =
+      if (metric == Metric.Cosine) s"${Oracle.embeddingsCte},\n${Oracle.normalizedCte}"
+      else Oracle.embeddingsCte
+    val where = label.fold("")(l => s"WHERE $rel.label = $l\n")
+    s"""WITH $ctes,
+       |${query.cte(rel, v)}
+       |SELECT $rel.vec_id AS vec_id, $score AS score
+       |FROM $rel CROSS JOIN q
+       |${where}ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
   }
 
   /** The SQL surface under the gate: the flagship cosine top-k written
@@ -90,7 +132,7 @@ object Queries {
     * SQL-only user gets the same engine as the DataFrame API (same
     * codegen kernel, same `TakeOrderedAndProject` top-k plan;
     * SqlFunctionsSpec pins kernel-level parity, this row pins the
-    * end-to-end result). Oracle: identical to [[qKnnCosine]]'s —
+    * end-to-end result). Oracle: identical to q_knn_cosine's —
     * bit-equality across the two entry paths is the claim. */
   private def qSqlSurface(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
@@ -104,107 +146,6 @@ object Queries {
          |LIMIT $K""".stripMargin)
   }
 
-  private def qSqlSurfaceSql: String = qKnnCosineSql
-
-  /** O9+O6: top-10 by raw dot product. */
-  private def qKnnDot(s: SparkSession, dir: String): DataFrame =
-    VectorSearch.topK(
-      Tables.embeddings(s, dir).select("vec_id", "embedding"),
-      "embedding", "vec_id",
-      queryVecFrame(s, dir), "qvec", Metric.Dot, K)
-      .select("vec_id", "score")
-
-  private val qKnnDotSql: String = {
-    val score = Oracle.dot("e.emb", "q.qemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0)
-       |SELECT e.vec_id AS vec_id, $score AS score
-       |FROM e CROSS JOIN q
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
-  }
-
-  /** O9+O7+O8: top-10 by euclidean similarity `1/(1+d)`. */
-  private def qKnnEuclid(s: SparkSession, dir: String): DataFrame =
-    VectorSearch.topK(
-      Tables.embeddings(s, dir).select("vec_id", "embedding"),
-      "embedding", "vec_id",
-      queryVecFrame(s, dir), "qvec", Metric.Euclidean, K)
-      .select("vec_id", "score")
-
-  private val qKnnEuclidSql: String = {
-    val score = Oracle.euclideanSimilarity("e.emb", "q.qemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0)
-       |SELECT e.vec_id AS vec_id, $score AS score
-       |FROM e CROSS JOIN q
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
-  }
-
-  /** O9 + metadata predicate (extension — the reference has no filters):
-    * cosine top-10 restricted to label = 3. The `label = 3` predicate
-    * pushes down to the parquet scan (PushedFilters), shrinking the scored
-    * set before any vector math runs. */
-  private def qFilterSearch(s: SparkSession, dir: String): DataFrame =
-    VectorSearch.topK(
-      Tables.embeddings(s, dir).filter(col("label") === 3)
-        .select("vec_id", "embedding"),
-      "embedding", "vec_id",
-      queryVecFrame(s, dir), "qvec", Metric.Cosine, K)
-      .select("vec_id", "score")
-
-  private val qFilterSearchSql: String = {
-    val score = Oracle.dot("n.nemb", "q.qemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |q AS (SELECT nemb AS qemb FROM n WHERE vec_id = 0)
-       |SELECT n.vec_id AS vec_id, $score AS score
-       |FROM n CROSS JOIN q
-       |WHERE n.label = 3
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
-  }
-
-  /** O10+O15: text query — embed "$RagQueryText" arithmetically, cosine
-    * top-10 (the reference's `search_text`, api.py:164-168). */
-  private def qTextSearch(s: SparkSession, dir: String): DataFrame =
-    VectorSearch.topK(
-      Tables.embeddings(s, dir).select("vec_id", "embedding"),
-      "embedding", "vec_id",
-      textQueryFrame(s), "qvec", Metric.Cosine, K)
-      .select("vec_id", "score")
-
-  private val qTextSearchSql: String = {
-    val score = Oracle.dot("n.nemb", "q.qemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |$textQueryCte
-       |SELECT n.vec_id AS vec_id, $score AS score
-       |FROM n CROSS JOIN q
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
-  }
-
-  /** O10 with the content-sensitive md5 embedding — same shape as
-    * [[qTextSearch]] but the query vector varies with text CONTENT, not
-    * just length (exceeds the reference's DummyEmbeddings). */
-  private def qHashSearch(s: SparkSession, dir: String): DataFrame = {
-    val q = s.range(1)
-      .select(VF.hashEmbedding(lit(RagQueryText), EmbeddingDim).as("qvec"))
-    VectorSearch.topK(
-      Tables.embeddings(s, dir).select("vec_id", "embedding"),
-      "embedding", "vec_id", q, "qvec", Metric.Cosine, K)
-      .select("vec_id", "score")
-  }
-
-  private val qHashSearchSql: String = {
-    val emb = Oracle.hashEmbedding(s"'$RagQueryText'", EmbeddingDim)
-    val score = Oracle.dot("n.nemb", "q.qemb", EmbeddingDim)
-    s"""WITH ${Oracle.embeddingsCte},
-       |${Oracle.normalizedCte},
-       |q AS (SELECT ${Oracle.l2Normalize(emb)} AS qemb)
-       |SELECT n.vec_id AS vec_id, $score AS score
-       |FROM n CROSS JOIN q
-       |ORDER BY score DESC, vec_id ASC LIMIT $K""".stripMargin
-  }
-
   /** Batch knn (O9 at scale; the exact replacement for the reference's
     * HNSW serving path ann.py:67-102): every vector's top-5 cosine
     * neighbors, self excluded. */
@@ -216,6 +157,19 @@ object Queries {
       k = KnnJoinK, excludeSelf = true)
   }
 
+  /** Oracle tail shared by every knn-join row: rank the scored candidate
+    * pairs `p(query_id, neighbor_id, score)` and keep the top
+    * [[KnnJoinK]] per query. */
+  private val topKSql: String =
+    s"""r AS (
+       |  SELECT query_id, neighbor_id, score,
+       |         ROW_NUMBER() OVER (PARTITION BY query_id
+       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
+       |  FROM p)
+       |SELECT query_id, neighbor_id, score, rank
+       |FROM r WHERE rank <= $KnnJoinK
+       |ORDER BY query_id, rank""".stripMargin
+
   private val qKnnJoinSql: String = {
     val score = Oracle.dot("a.nemb", "b.nemb", EmbeddingDim)
     s"""WITH ${Oracle.embeddingsCte},
@@ -224,14 +178,7 @@ object Queries {
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, $score AS score
        |  FROM n a CROSS JOIN n b
        |  WHERE a.vec_id <> b.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
+       |$topKSql""".stripMargin
   }
 
   // ---------------------------------------------------------- normalize ---
@@ -1460,14 +1407,7 @@ object Queries {
        |p AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, $score AS score
        |  FROM nb a JOIN nb b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
-       |r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
+       |$topKSql""".stripMargin
   }
 
   private val LshMultiBits = 8
@@ -1639,19 +1579,6 @@ object Queries {
       .select("query_id", "n_exact", "n_hits", "recall_milli")
       .orderBy("query_id")
   }
-
-  /** Oracle tail shared by every knn-join row: rank the scored candidate
-    * pairs `p(query_id, neighbor_id, score)` and keep the top
-    * [[KnnJoinK]] per query. */
-  private val topKSql: String =
-    s"""r AS (
-       |  SELECT query_id, neighbor_id, score,
-       |         ROW_NUMBER() OVER (PARTITION BY query_id
-       |                            ORDER BY score DESC, neighbor_id ASC) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, score, rank
-       |FROM r WHERE rank <= $KnnJoinK
-       |ORDER BY query_id, rank""".stripMargin
 
   /** Oracle CTE for the corpus-side bucket cap: `kept` = the rows of
     * `rel` whose `key` group holds at most `cap`× the mean group size
@@ -2151,7 +2078,7 @@ object Queries {
     * FAISS-IVFPQ serving path): coarse-quantizer routing to `nProbes`
     * of `c` cells, then ADC ranking over ONLY those cells' packed codes
     * ([[VectorSearch.ivfPqSearchIndexed]]; LshSpec pins its equality
-    * with the build-time [[VectorSearch.ivfPqSearch]]). With
+    * with flat [[VectorSearch.pqSearch]] over the probed cells). With
     * `refine = Some(m)` the ADC pass nominates `m` candidates and only
     * those true vectors are re-scored exactly
     * ([[VectorSearch.ivfPqSearchRefined]]) — the near-exact serving
@@ -6341,13 +6268,19 @@ object Queries {
   // ----------------------------------------------------------- registry ---
 
   val all: Seq[GraftQuery] = Seq(
-    GraftQuery("q_knn_cosine", qKnnCosine, Some(qKnnCosineSql)),
-    GraftQuery("q_sql_surface", qSqlSurface, Some(qSqlSurfaceSql)),
-    GraftQuery("q_knn_dot", qKnnDot, Some(qKnnDotSql)),
-    GraftQuery("q_knn_euclid", qKnnEuclid, Some(qKnnEuclidSql)),
-    GraftQuery("q_filter_search", qFilterSearch, Some(qFilterSearchSql)),
-    GraftQuery("q_text_search", qTextSearch, Some(qTextSearchSql)),
-    GraftQuery("q_hash_search", qHashSearch, Some(qHashSearchSql)),
+    GraftQuery("q_knn_cosine", search(Metric.Cosine, Vec0Query),
+      Some(searchSql(Metric.Cosine, Vec0Query))),
+    GraftQuery("q_sql_surface", qSqlSurface, Some(searchSql(Metric.Cosine, Vec0Query))),
+    GraftQuery("q_knn_dot", search(Metric.Dot, Vec0Query),
+      Some(searchSql(Metric.Dot, Vec0Query))),
+    GraftQuery("q_knn_euclid", search(Metric.Euclidean, Vec0Query),
+      Some(searchSql(Metric.Euclidean, Vec0Query))),
+    GraftQuery("q_filter_search", search(Metric.Cosine, Vec0Query, Some(3)),
+      Some(searchSql(Metric.Cosine, Vec0Query, Some(3)))),
+    GraftQuery("q_text_search", search(Metric.Cosine, TextQuery),
+      Some(searchSql(Metric.Cosine, TextQuery))),
+    GraftQuery("q_hash_search", search(Metric.Cosine, HashQuery),
+      Some(searchSql(Metric.Cosine, HashQuery))),
     GraftQuery("q_knn_join", qKnnJoin, Some(qKnnJoinSql)),
     GraftQuery("q_normalize", qNormalize, Some(qNormalizeSql)),
     GraftQuery("q_chunks", qChunks, Some(qChunksSql)),

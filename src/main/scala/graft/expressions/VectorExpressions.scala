@@ -87,17 +87,23 @@ object VectorExpressions {
          |  "$name: null array element at index " + $i + " (null elements are not supported)");""".stripMargin
     else ""
 
-  /** Dot product `Σ a[i]*b[i]`, left fold from 0.0. */
-  case class VecDot(left: Expression, right: Expression)
-      extends BinaryExpression {
+  /** What the pairwise `ARRAY<DOUBLE> × ARRAY<DOUBLE> → DOUBLE` kernels
+    * share: the input-type check, the result type, null intolerance and
+    * the per-side null-element guards. Each kernel keeps its own loop
+    * and `prettyName`. */
+  private[expressions] sealed trait PairwiseKernel extends BinaryExpression {
     override def checkInputDataTypes(): TypeCheckResult =
       checkArrayDouble(prettyName, Seq(left.dataType, right.dataType))
     override def dataType: DataType = DoubleType
     override def nullIntolerant: Boolean = true
-    override def prettyName: String = "vec_dot"
 
-    private def guardL = mayContainNull(left.dataType)
-    private def guardR = mayContainNull(right.dataType)
+    protected def guardL: Boolean = mayContainNull(left.dataType)
+    protected def guardR: Boolean = mayContainNull(right.dataType)
+  }
+
+  /** Dot product `Σ a[i]*b[i]`, left fold from 0.0. */
+  case class VecDot(left: Expression, right: Expression) extends PairwiseKernel {
+    override def prettyName: String = "vec_dot"
 
     override protected def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]
@@ -202,16 +208,8 @@ object VectorExpressions {
     * (reference index.py:11-16). Unequal lengths raise (the HOF form
     * would yield NULL via zip_with padding; a silent common-prefix fold
     * diverged from the spec — round-2 advice). */
-  case class VecCosine(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayDouble(prettyName, Seq(left.dataType, right.dataType))
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
+  case class VecCosine(left: Expression, right: Expression) extends PairwiseKernel {
     override def prettyName: String = "vec_cosine"
-
-    private def guardL = mayContainNull(left.dataType)
-    private def guardR = mayContainNull(right.dataType)
 
     override protected def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]
@@ -276,15 +274,8 @@ object VectorExpressions {
 
   /** Euclidean distance `sqrt(Σ (a[i]-b[i])²)` (reference index.py:25-29). */
   case class VecEuclideanDistance(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayDouble(prettyName, Seq(left.dataType, right.dataType))
-    override def dataType: DataType = DoubleType
-    override def nullIntolerant: Boolean = true
+      extends PairwiseKernel {
     override def prettyName: String = "vec_euclidean_distance"
-
-    private def guardL = mayContainNull(left.dataType)
-    private def guardR = mayContainNull(right.dataType)
 
     override protected def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]
@@ -811,9 +802,10 @@ object VectorExpressions {
     // while the pack side assigns codes from each entry's Int KEY — so
     // the flat-matrix build below sorts each subspace by key first
     // (honoring the documented keyed (code, centroid) contract on
-    // pqSearch/ivfPqSearch: caller ORDER is immaterial) and only gapped
-    // or duplicated keys — which no sort can repair and WOULD misindex
-    // silently — are a loud construction-time failure (ADVICE r14/r15)
+    // pqSearch/ivfPqSearchIndexed: caller ORDER is immaterial) and only
+    // gapped or duplicated keys — which no sort can repair and WOULD
+    // misindex silently — are a loud construction-time failure (ADVICE
+    // r14/r15)
     require(codebooks.forall(b => b.map(_._1).sorted == b.indices),
       "vec_pq_adc: codebook codes must be exactly 0..ksub-1 per subspace " +
         "(keyed entries may arrive in any order; gaps/duplicates misindex)")

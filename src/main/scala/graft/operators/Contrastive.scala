@@ -59,8 +59,8 @@ object Contrastive {
     // localCheckpoint: the ranked frame feeds FOUR consumers (positives,
     // hard, the posOf candidate key-join, and the anti-join build side)
     // and the union would otherwise re-execute the anchors×corpus
-    // retrieval subtree per branch — PairsDiag at sf10 measured the
-    // tail at 64.7s of a 137.1s row, most of it subtree recompute. The
+    // retrieval subtree per branch — a per-stage timing at sf10 measured
+    // the tail at 64.7s of a 137.1s row, most of it subtree recompute. The
     // checkpointed frame is ≤ hardEnd rows per anchor of 24-byte ids —
     // bounded at any corpus size by construction.
     val ranked = VectorSearch.knnJoin(anchors, emb, vecCol, idCol, metric,

@@ -63,6 +63,19 @@ object VectorSearch {
       case _ => df
     }
 
+  /** One side of a pair join: the metric-prepared `vecCol` and `idCol`
+    * projected as (`idAlias`, `vecAlias`), plus any `extra` columns
+    * computed in the same projection. */
+  private def side(df: DataFrame, vecCol: String, idCol: String, metric: Metric,
+      idAlias: String, vecAlias: String, extra: Column*): DataFrame =
+    prepareColumn(df, vecCol, metric)
+      .select(Seq(col(idCol).as(idAlias), col(vecCol).as(vecAlias)) ++ extra: _*)
+
+  /** Shared tail of the single-query searches: the `k` best-scored rows,
+    * ties broken on `idCol` — plans as `TakeOrderedAndProject`. */
+  private def topRows(scored: DataFrame, idCol: String, k: Int): DataFrame =
+    scored.orderBy(desc("score"), col(idCol).asc).limit(k)
+
   /** Top-k rows of `data` most similar to the 1-row `query` frame.
     * `orderBy(desc(score), id).limit(k)` → `TakeOrderedAndProject`.
     * k > N clamps naturally (reference api.py:121); empty input → empty
@@ -75,9 +88,7 @@ object VectorSearch {
       queryVecCol: String,
       metric: Metric,
       k: Int): DataFrame =
-    scoreAgainst(data, vecCol, query, queryVecCol, metric)
-      .orderBy(desc("score"), asc(idCol))
-      .limit(k)
+    topRows(scoreAgainst(data, vecCol, query, queryVecCol, metric), idCol, k)
 
   /** Batch knn: for every row of `queries`, its top-k neighbors in `data`
     * (the at-scale form of per-query search; replaces the reference's HNSW
@@ -107,8 +118,7 @@ object VectorSearch {
     // whole join to a handful of tasks.
     val spread = if (spreadQueries && !broadcastQueries)
       Partitioning.spread(queries) else queries
-    val q0 = prepareColumn(spread, vecCol, metric)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))
+    val q0 = side(spread, vecCol, idCol, metric, "query_id", "__qvec")
     // broadcastQueries: the sample×corpus eval shape (recall rows — a
     // fixed ~1000-row query sample vs the full corpus). Broadcasting the
     // SAMPLE makes the corpus the streamed side of the
@@ -121,23 +131,26 @@ object VectorSearch {
     // corpus partition ahead of the exchange. At 100 TB this is the only
     // orientation that never moves or re-reads the corpus.
     val q = if (broadcastQueries) broadcast(q0) else q0
-    val d = prepareColumn(data, vecCol, metric)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__dvec"))
+    val d = side(data, vecCol, idCol, metric, "neighbor_id", "__dvec")
     val dSide = if (broadcastData) broadcast(d) else d
-    val pairs = q.crossJoin(dSide)
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    rankTopK(pairs, k, excludeSelf)
+    rankTopK(q.crossJoin(dSide), metric, k, excludeSelf)
   }
 
-  /** Shared tail of the knn joins: optional self-exclusion, per-query
-    * `row_number` window, rank filter, scalar projection. */
-  private def rankTopK(pairs: DataFrame, k: Int, excludeSelf: Boolean): DataFrame = {
-    val filtered =
-      if (excludeSelf) pairs.filter(col("query_id") =!= col("neighbor_id"))
-      else pairs
+  /** Drop the `query_id == neighbor_id` pairs when `excludeSelf`. */
+  private def dropSelf(pairs: DataFrame, excludeSelf: Boolean): DataFrame =
+    if (excludeSelf) pairs.filter(col("query_id") =!= col("neighbor_id"))
+    else pairs
+
+  /** Shared tail of the knn joins: the `score` of each (`__qvec`,
+    * `__dvec`) pair, optional self-exclusion, per-query `row_number`
+    * window, rank filter, scalar projection. */
+  private def rankTopK(pairs: DataFrame, metric: Metric, k: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val scored = pairs
+      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
     val w = Window.partitionBy("query_id")
       .orderBy(desc("score"), asc("neighbor_id"))
-    filtered
+    dropSelf(scored, excludeSelf)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "score", "rank")
@@ -304,18 +317,14 @@ object VectorSearch {
       excludeSelf: Boolean = true,
       centroids: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
     val cents = centroids.getOrElse(ivfCentroids(data, vecCol, idCol, c, metric))
-    val d = prepareColumn(data, vecCol, metric)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__dvec"))
+    val d = side(data, vecCol, idCol, metric, "neighbor_id", "__dvec")
       .withColumn("centroid_id", ivfAssign(col("__dvec"), cents, metric))
-    val q = prepareColumn(Partitioning.spread(queries), vecCol, metric)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"))
+    val q = side(Partitioning.spread(queries), vecCol, idCol, metric, "query_id", "__qvec")
       .withColumn("probe",
         explode(probeStructs(col("__qvec"), cents, metric, nProbes)))
       .withColumn("centroid_id", col("probe.cid"))
       .drop("probe")
-    val pairs = q.join(d, Seq("centroid_id"))
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    rankTopK(pairs, k, excludeSelf)
+    rankTopK(q.join(d, Seq("centroid_id")), metric, k, excludeSelf)
   }
 
   // -------------------------------------------------- product quantization ---
@@ -383,40 +392,20 @@ object VectorSearch {
   private def pqCodeBits(codebooks: Seq[Seq[(Int, Seq[Double])]]): Int =
     VectorExpressions.packedCodeBits(codebooks.head.length)
 
-  /** The asymmetric-distance score `Σ_j dot(q_sub_j, centroid_j[code_j])`
-    * as ONE fixed-order fold seeded 0.0 — the single shared
-    * implementation behind [[pqSearch]], [[ivfPqSearch]] and
-    * [[ivfPqSearchIndexed]], parameterized only on where sub-code j
-    * comes from. Since r14 the score is the fused
-    * [[VectorExpressions.VecPqAdcScore]] kernel over the PACKED code
-    * (the per-code columns are shift/or-packed first — a tiny integer
-    * tree): the old m-term composed form (slice + dot + element_at per
-    * subspace) inlined into the same whole-stage method as the encode
-    * kernels and crossed HotSpot's 8 KB huge-method JIT limit — the
-    * serving scan ran INTERPRETED, 67.1s vs 0.4s for 200k rows at
-    * ksub=64 (MIGRATION "Fused per-row kernels"). Same doubles in the
-    * same order by construction (LshSpec + LshKernelSpec pin the
-    * equalities the oracle depends on). */
-  private def adcScore(
-      queryVec: Column,
-      codebooks: Seq[Seq[(Int, Seq[Double])]],
-      codeFor: Int => Column): Column = {
+  /** Sub-code columns `codes` (code j first) packed into ONE BIGINT:
+    * code_j in bits 4j..4j+3 at ksub=16. */
+  private def packCodes(
+      codes: Seq[Column], codebooks: Seq[Seq[(Int, Seq[Double])]]): Column = {
     val bits = pqCodeBits(codebooks)
-    val packed = codebooks.indices
-      .map(j => shiftleft(codeFor(j), bits * j))
-      .reduceLeft(_.bitwiseOR(_))
-    VectorExpressions.pqAdcScore(queryVec, packed, codebooks)
-  }
-
-  /** All m sub-codes packed into ONE BIGINT (code_j in bits 4j..4j+3 at
-    * ksub=16) for a metric-prepared vector column. */
-  private def pqPackedCode(
-      vec: Column, codebooks: Seq[Seq[(Int, Seq[Double])]]): Column = {
-    val bits = pqCodeBits(codebooks)
-    pqCodeColumns(vec, codebooks).zipWithIndex
+    codes.zipWithIndex
       .map { case (c, j) => shiftleft(c, bits * j) }
       .reduceLeft(_.bitwiseOR(_))
   }
+
+  /** All m sub-codes of a metric-prepared vector column, packed. */
+  private def pqPackedCode(
+      vec: Column, codebooks: Seq[Seq[(Int, Seq[Double])]]): Column =
+    packCodes(pqCodeColumns(vec, codebooks), codebooks)
 
   /** PQ-encode: `(idCol, pq_code)` with all m codes packed into ONE
     * BIGINT — the persistable index-as-data table ([[lshBucketTable]]
@@ -453,9 +442,9 @@ object VectorSearch {
     * its `nProbes` nearest cells, equi-joins the broadcast probe frame
     * against the code table, unpacks each sub-code with shift/mask (two
     * integer ops — no kernel re-evaluation), and scores with the same
-    * fixed-order ADC fold as [[pqSearch]]. Bit-identical results to
-    * [[ivfPqSearch]] by construction; the scan side touches only
-    * `(id, centroid_id, pq_code)`. */
+    * fixed-order ADC fold as [[pqSearch]]: restricted to the probed
+    * cells' rows, [[pqSearch]] ranks bit-identically (LshSpec pins it);
+    * the scan side touches only `(id, centroid_id, pq_code)`. */
   def ivfPqSearchIndexed(
       index: DataFrame,
       idCol: String,
@@ -474,11 +463,9 @@ object VectorSearch {
     // directly, no unpack/repack round-trip
     val score =
       VectorExpressions.pqAdcScore(col(queryVecCol), col("pq_code"), codebooks)
-    index.join(broadcast(q), Seq("centroid_id"))
+    topRows(index.join(broadcast(q), Seq("centroid_id"))
       .withColumn("score", score)
-      .select(col(idCol), col("centroid_id"), col("score"))
-      .orderBy(desc("score"), col(idCol).asc)
-      .limit(k)
+      .select(col(idCol), col("centroid_id"), col("score")), idCol, k)
   }
 
   /** Asymmetric-distance (ADC) top-k by PQ: score every data row against
@@ -509,60 +496,21 @@ object VectorSearch {
       .select(col(idCol) +: codes.zipWithIndex
         .map { case (c, j) => c.as(s"__code_$j") }: _*)
     val q = prepareColumn(query, queryVecCol, metric)
-    val score =
-      adcScore(col(queryVecCol), codebooks, j => col(s"__code_$j"))
-    withCodes.crossJoin(broadcast(q))
+    // The ADC score `Σ_j dot(q_sub_j, centroid_j[code_j])` as ONE
+    // fixed-order fold seeded 0.0: the fused VecPqAdcScore kernel over
+    // the per-code columns shift/or-packed (a tiny integer tree). Since
+    // r14 it replaces the m-term composed form (slice + dot + element_at
+    // per subspace), which inlined into the same whole-stage method as
+    // the encode kernels and crossed HotSpot's 8 KB huge-method JIT
+    // limit — the scan ran INTERPRETED, 67.1s vs 0.4s for 200k rows at
+    // ksub=64 (MIGRATION "Fused per-row kernels"). Same doubles in the
+    // same order by construction (LshSpec + LshKernelSpec pin the
+    // equalities the oracle depends on).
+    val score = VectorExpressions.pqAdcScore(col(queryVecCol),
+      packCodes(codebooks.indices.map(j => col(s"__code_$j")), codebooks), codebooks)
+    topRows(withCodes.crossJoin(broadcast(q))
       .withColumn("score", score)
-      .select(col(idCol), col("score"))
-      .orderBy(desc("score"), col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Composed IVF+PQ serving path (Jégou et al. 2011 §V — the full
-    * FAISS-IVFPQ layout): the coarse quantizer routes the query to its
-    * `nProbes` nearest IVF cells, and ADC ranks ONLY the codes stored
-    * in those cells. Relative to flat [[pqSearch]] this cuts the scan
-    * to ~nProbes/c of the code table, and each scanned row is still a
-    * handful of small codes, not the vector — the two index layouts
-    * ([[ivfAssign]] cells + [[pqEncode]] codes) compose into one
-    * `(id, centroid_id, codes…)` index-as-data table.
-    *
-    * The cell restriction is an equi-join on `centroid_id` against the
-    * broadcast ≤nProbes-row probe frame — on a persisted index table
-    * partitioned by `centroid_id` the same join prunes partitions, so
-    * unprobed cells cost zero IO and zero tasks. Scoring and
-    * tie-breaks are bit-identical to [[pqSearch]] (same fixed-order
-    * ADC fold), so the whole path replays in the SQL oracle.
-    *
-    * Same packed-code config limit as [[pqSearch]]:
-    * `m × ceil(log2(ksub)) ≤ 64`, enforced at plan construction. */
-  def ivfPqSearch(
-      data: DataFrame,
-      vecCol: String,
-      idCol: String,
-      query: DataFrame,
-      queryVecCol: String,
-      centroids: Seq[(Long, Seq[Double])],
-      codebooks: Seq[Seq[(Int, Seq[Double])]],
-      nProbes: Int,
-      k: Int,
-      metric: Metric = Metric.Cosine): DataFrame = {
-    val codes = pqCodeColumns(col(vecCol), codebooks)
-    val index = prepareColumn(Partitioning.spread(data), vecCol, metric)
-      .select(col(idCol) +:
-        ivfAssign(col(vecCol), centroids, metric).as("centroid_id") +:
-        codes.zipWithIndex.map { case (c, j) => c.as(s"__code_$j") }: _*)
-    val q = prepareColumn(query, queryVecCol, metric)
-      .withColumn("probe",
-        explode(probeStructs(col(queryVecCol), centroids, metric, nProbes)))
-      .select(col(queryVecCol), col("probe.cid").as("centroid_id"))
-    val score =
-      adcScore(col(queryVecCol), codebooks, j => col(s"__code_$j"))
-    index.join(broadcast(q), Seq("centroid_id"))
-      .withColumn("score", score)
-      .select(col(idCol), col("centroid_id"), col("score"))
-      .orderBy(desc("score"), col(idCol).asc)
-      .limit(k)
+      .select(col(idCol), col("score")), idCol, k)
   }
 
   /** IVF+PQ with an exact refine stage (Jégou et al. 2011 §V-C "re-ranking
@@ -592,14 +540,12 @@ object VectorSearch {
       centroids, codebooks, nProbes, nCandidates, metric)
       .select(col(idCol))
     val q = prepareColumn(query, queryVecCol, metric)
-    prepareColumn(data, vecCol, metric)
+    topRows(prepareColumn(data, vecCol, metric)
       .join(broadcast(cands), Seq(idCol))
       .crossJoin(broadcast(q))
       .withColumn("score",
         metric.scorePrenormalized(col(vecCol), col(queryVecCol)))
-      .select(col(idCol), col("score"))
-      .orderBy(desc("score"), col(idCol).asc)
-      .limit(k)
+      .select(col(idCol), col("score")), idCol, k)
   }
 
   /** SemDeDup-style embedding-space near-dup (Abbas et al. 2023,
@@ -700,15 +646,10 @@ object VectorSearch {
       dim: Int,
       bits: Int = 8,
       excludeSelf: Boolean = true): DataFrame = {
-    val q = prepareColumn(queries, vecCol, metric)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec"),
-        lshBucket(col(vecCol), dim, bits).as("bucket"))
-    val d = prepareColumn(data, vecCol, metric)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__dvec"),
-        lshBucket(col(vecCol), dim, bits).as("bucket"))
-    val pairs = q.join(d, Seq("bucket"))
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    rankTopK(pairs, k, excludeSelf)
+    def bucket = lshBucket(col(vecCol), dim, bits).as("bucket")
+    val q = side(queries, vecCol, idCol, metric, "query_id", "__qvec", bucket)
+    val d = side(data, vecCol, idCol, metric, "neighbor_id", "__dvec", bucket)
+    rankTopK(q.join(d, Seq("bucket")), metric, k, excludeSelf)
   }
 
   /** The LSH index AS DATA: one row per (id, band, bucket) over `bands`
@@ -810,8 +751,8 @@ object VectorSearch {
 
   /** Ceiling for BROADCASTING a prepared (id, vector) table into the
     * candidate re-attach joins of [[multibandKnnJoin]] /
-    * [[multiProbeKnnJoin]]. CappedDiag (r16, sf10) attributed ~90% of
-    * the capped-multiband serving row to the re-attach stage: the
+    * [[multiProbeKnnJoin]]. A per-stage timing of the capped-multiband
+    * serving row (r16, sf10) put ~90% of it in the re-attach stage: the
     * sort-merge form exchanges the CANDIDATE volume with a 512-byte
     * vector riding every row (the join after the first re-attach
     * shuffles |candidates| × (pair + qvec) to meet the neighbor side —
@@ -856,6 +797,43 @@ object VectorSearch {
   private[graft] def reattachSide(vecs: DataFrame, rows: Long, dim: Int): DataFrame =
     if (vecTableBytes(rows, dim) <= ReattachBroadcastMaxBytes / 2) broadcast(vecs)
     else vecs
+
+  /** Shared tail of the LSH joins: join the scalar `(query_id,
+    * neighbor_id)` candidates back to the prepared query vectors (from
+    * `queries`, `nQ` rows) and corpus vectors (from `data`, `nD` rows) —
+    * each side broadcast when [[reattachSide]] says it fits — then score
+    * and rank. The candidates are already self-filtered. */
+  private def reattachAndRank(
+      candidates: DataFrame,
+      queries: DataFrame,
+      data: DataFrame,
+      vecCol: String,
+      idCol: String,
+      metric: Metric,
+      k: Int,
+      dim: Int,
+      nQ: Long,
+      nD: Long): DataFrame = {
+    val qv = reattachSide(side(queries, vecCol, idCol, metric, "query_id", "__qvec"), nQ, dim)
+    val dv = reattachSide(side(data, vecCol, idCol, metric, "neighbor_id", "__dvec"), nD, dim)
+    rankTopK(candidates.join(qv, Seq("query_id")).join(dv, Seq("neighbor_id")),
+      metric, k, excludeSelf = false)
+  }
+
+  /** The corpus-side bucket cap of the LSH joins: drop every `keys`
+    * group of the scalar index `idx` holding more than `factor` × the
+    * mean group size. One count per group plus a 1-row broadcast
+    * threshold; whole groups drop, so an oracle replays it exactly. */
+  private def capBuckets(idx: DataFrame, keys: Seq[String], factor: Double): DataFrame = {
+    val thr = idx.groupBy(keys.head, keys.tail: _*)
+      .agg(count(lit(1)).as("__n"))
+      .agg(avg(col("__n")).as("__meanb"))
+    val wB = Window.partitionBy(keys.head, keys.tail: _*)
+    idx.withColumn("__bsz", count(lit(1)).over(wB))
+      .crossJoin(broadcast(thr))
+      .filter(col("__bsz").cast("double") <= lit(factor) * col("__meanb"))
+      .drop("__bsz", "__meanb")
+  }
 
   /** Multi-band OR amplification of [[bucketedKnnJoin]] — the recall
     * path the reference's HNSW gives its users (ann.py's ef_search
@@ -933,7 +911,7 @@ object VectorSearch {
     // cannot reuse the exchange and would run the bands·bits projection
     // sweep twice
     val self = queries eq data
-    val qSpread = if (self) Partitioning.spread(data) else Partitioning.spread(queries)
+    val qSpread = Partitioning.spread(queries)
     val qIdx = lshBucketTable(qSpread, vecCol, idCol, metric, dim, bits, bands)
     val sharedIdx = if (self) qIdx.localCheckpoint() else qIdx
     val qi = sharedIdx
@@ -941,30 +919,18 @@ object VectorSearch {
     val diRaw = (if (self) sharedIdx
               else lshBucketTable(data, vecCol, idCol, metric, dim, bits, bands))
       .select(col(idCol).as("neighbor_id"), col("band"), col("bucket"))
-    val di = maxBucketFactor match {
-      case None => diRaw
-      case Some(f) =>
-        // corpus-side only: a query in a dropped bucket still probes its
-        // other bands (and in the self case the pair vanishes from that
-        // band either way, so capping one side equals capping both).
-        // checkpoint (lazy) so the sizing aggregate and the join feed
-        // from ONE execution of the index subtree.
-        val idx = if (self) diRaw else diRaw.localCheckpoint(eager = false)
-        val thr = idx.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__n"))
-          .agg(avg(col("__n")).as("__meanb"))
-        val wB = Window.partitionBy("band", "bucket")
-        idx.withColumn("__bsz", count(lit(1)).over(wB))
-          .crossJoin(broadcast(thr))
-          .filter(col("__bsz").cast("double") <= lit(f) * col("__meanb"))
-          .drop("__bsz", "__meanb")
+    // corpus-side only: a query in a dropped bucket still probes its
+    // other bands (and in the self case the pair vanishes from that
+    // band either way, so capping one side equals capping both).
+    // checkpoint (lazy) so the sizing aggregate and the join feed from
+    // ONE execution of the index subtree.
+    val di = maxBucketFactor.fold(diRaw) { f =>
+      val idx = if (self) diRaw else diRaw.localCheckpoint(eager = false)
+      capBuckets(idx, Seq("band", "bucket"), f)
     }
-    val joined = qi.join(di, Seq("band", "bucket"))
-    val nonSelf =
-      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-      else joined
     // OR-dedup while scalar: the shuffle key is the id pair, no payload
-    val candidates = nonSelf.select("query_id", "neighbor_id").distinct()
+    val candidates = dropSelf(qi.join(di, Seq("band", "bucket")), excludeSelf)
+      .select("query_id", "neighbor_id").distinct()
     // re-attach sizing pass: hints first, else one count per side (the
     // self path reads it off the already-materialized index —
     // rows/bands — for free)
@@ -972,15 +938,7 @@ object VectorSearch {
       if (self) sharedIdx.count() / bands else data.count())
     val nQ =
       if (self) nD else queriesCountHint.getOrElse(queries.count())
-    val qv = reattachSide(prepareColumn(qSpread, vecCol, metric)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec")), nQ, dim)
-    val dv = reattachSide(prepareColumn(data, vecCol, metric)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__dvec")), nD, dim)
-    val scored = candidates
-      .join(qv, Seq("query_id"))
-      .join(dv, Seq("neighbor_id"))
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    rankTopK(scored, k, excludeSelf = false)
+    reattachAndRank(candidates, qSpread, data, vecCol, idCol, metric, k, dim, nQ, nD)
   }
 
   /** Query-side multi-probe LSH (Lv et al., "Multi-Probe LSH", VLDB
@@ -1047,22 +1005,10 @@ object VectorSearch {
     val diRaw = prepareColumn(data, vecCol, metric)
       .select(col(idCol).as("neighbor_id"),
         lshBucketBand(col(vecCol), dim, bits, band = 0).as("bucket"))
-    val di = maxBucketFactor match {
-      case None => diRaw
-      case Some(f) =>
-        // lazy checkpoint: the sizing aggregate and the probe join feed
-        // from ONE execution of the bucketing subtree (the multiband
-        // cap's exact shape, minus the band key)
-        val idx = diRaw.localCheckpoint(eager = false)
-        val thr = idx.groupBy("bucket")
-          .agg(count(lit(1)).as("__n"))
-          .agg(avg(col("__n")).as("__meanb"))
-        val wB = Window.partitionBy("bucket")
-        idx.withColumn("__bsz", count(lit(1)).over(wB))
-          .crossJoin(broadcast(thr))
-          .filter(col("__bsz").cast("double") <= lit(f) * col("__meanb"))
-          .drop("__bsz", "__meanb")
-    }
+    // lazy checkpoint: the sizing aggregate and the probe join feed
+    // from ONE execution of the bucketing subtree
+    val di = maxBucketFactor.fold(diRaw)(f =>
+      capBuckets(diRaw.localCheckpoint(eager = false), Seq("bucket"), f))
     // Probe generation is STAGED through aliased projections so each
     // subexpression is computed once and referenced as an attribute.
     // Composing it as one Column tree re-expands bv1 inside every
@@ -1115,10 +1061,6 @@ object VectorSearch {
     // rows (a null/zero vector makes every margin comparison fall to the
     // 0 branch and all probes collapse to bucket 0) at O(flips) cost.
     val qi = s5.select(col("query_id"), explode(array_distinct(probes)).as("bucket"))
-    val joined = qi.join(di, Seq("bucket"))
-    val nonSelf =
-      if (excludeSelf) joined.filter(col("query_id") =!= col("neighbor_id"))
-      else joined
     // No OR-dedup needed, unlike multibandKnnJoin: the single-band index
     // holds each neighbor in exactly ONE bucket and a query's probe
     // buckets are pairwise distinct (home ≠ home^bv1 ≠ home^bv2 — bv1 and
@@ -1127,20 +1069,13 @@ object VectorSearch {
     // unique BY CONSTRUCTION and the old `.distinct()` was a full
     // exchange + two hash aggregates over the candidate volume for
     // nothing (guide §2.4: a distinct on data that is already unique).
-    val candidates = nonSelf.select("query_id", "neighbor_id")
+    val candidates = dropSelf(qi.join(di, Seq("bucket")), excludeSelf)
+      .select("query_id", "neighbor_id")
     // re-attach sizing pass (the multiband shape): hints first, else
     // count once per distinct side; broadcast while the table fits
     val nD = dataCountHint.getOrElse(data.count())
     val nQ =
       if (queries eq data) nD else queriesCountHint.getOrElse(queries.count())
-    val qv = reattachSide(prepareColumn(qSpread, vecCol, metric)
-      .select(col(idCol).as("query_id"), col(vecCol).as("__qvec")), nQ, dim)
-    val dv = reattachSide(prepareColumn(data, vecCol, metric)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__dvec")), nD, dim)
-    val scored = candidates
-      .join(qv, Seq("query_id"))
-      .join(dv, Seq("neighbor_id"))
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    rankTopK(scored, k, excludeSelf = false)
+    reattachAndRank(candidates, qSpread, data, vecCol, idCol, metric, k, dim, nQ, nD)
   }
 }

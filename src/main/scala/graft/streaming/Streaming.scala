@@ -360,23 +360,45 @@ object Streaming {
     * StreamingSpec pins the contract: replaying a batchId leaves the
     * published table row-identical. */
   def idempotentPublish(batch: DataFrame, batchId: Long, path: String): Unit =
-    batch.sparkSession.synchronized {
-      // partitionOverwriteMode is session-wide; scope it to this write
-      val conf = batch.sparkSession.conf
+    overwriteBatchPartition(batch.withColumn("_batch_id", lit(batchId)), "_batch_id", path)
+
+  /** Write `df` partitioned by `partCol` with DYNAMIC partition
+    * overwrite: only the partitions present in `df` are replaced, so a
+    * replayed batch overwrites its own partition byte-identically.
+    * `partitionOverwriteMode` is session-wide, so the write holds the
+    * session lock and restores the previous mode afterwards. */
+  private def overwriteBatchPartition(df: DataFrame, partCol: String, path: String): Unit = {
+    val spark = df.sparkSession
+    spark.synchronized {
+      val conf = spark.conf
       val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
       conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        batch
-          .withColumn("_batch_id", org.apache.spark.sql.functions.lit(batchId))
-          .write
-          .mode("overwrite")
-          .partitionBy("_batch_id")
-          .parquet(path)
+      try df.write.mode("overwrite").partitionBy(partCol).parquet(path)
       finally prev match {
         case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
     }
+  }
+
+  /** The highest-numbered COMPLETE snapshot dir `<prefix><n>` under
+    * `basePath` (`_SUCCESS` present — a crash mid-write leaves a partial
+    * dir that must not be served) with its number `n`; None when there
+    * is none, or no `basePath`. */
+  private def latestComplete(spark: SparkSession, basePath: String,
+      prefix: String): Option[(String, Long)] = {
+    val base = new org.apache.hadoop.fs.Path(basePath)
+    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(base)) None
+    else fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
+      .filter { p =>
+        val n = p.getName.stripPrefix(prefix)
+        p.getName.startsWith(prefix) && n.nonEmpty && n.forall(_.isDigit) &&
+          fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
+      }
+      .map(p => p.toString -> p.getName.stripPrefix(prefix).toLong)
+      .maxByOption(_._2)
+  }
 
   /** The logical view over an [[idempotentPublish]] table: batch
     * partitions unioned, the layout column dropped. */
@@ -424,16 +446,9 @@ object Streaming {
     * highest-versioned COMPLETE snapshot (`_SUCCESS` present — a
     * crash mid-write leaves a partial dir that must not be served). */
   def readUpserted(spark: SparkSession, basePath: String): DataFrame = {
-    val base = new org.apache.hadoop.fs.Path(basePath)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val complete = fs.listStatus(base).filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("v") &&
-        p.getName.drop(1).forall(_.isDigit) &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-    require(complete.nonEmpty, s"no complete upsert snapshot under $basePath")
-    val latest = complete.maxBy(_.getName.drop(1).toLong)
-    spark.read.parquet(latest.toString)
+    val latest = latestComplete(spark, basePath, "v")
+    require(latest.nonEmpty, s"no complete upsert snapshot under $basePath")
+    spark.read.parquet(latest.get._1)
   }
 
   /** Documents FileStreamSource — the corpus-ingest side of the
@@ -523,23 +538,11 @@ object Streaming {
     * StreamingSpec pins the replay. */
   def compactingIndexAppend(batch: DataFrame, batchId: Long,
       fragDir: String, compactBase: String, cadence: Int): Unit = {
-    val spark = batch.sparkSession
-    spark.synchronized {
-      // partitionOverwriteMode is session-wide; scope it to this write
-      val conf = spark.conf
-      val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try batch.withColumn("batch_id", lit(batchId))
-        .repartition(4)
-        .write.mode("overwrite").partitionBy("batch_id").parquet(fragDir)
-      finally prev match {
-        case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    overwriteBatchPartition(batch.withColumn("batch_id", lit(batchId)).repartition(4),
+      "batch_id", fragDir)
     if (batchId % cadence == cadence - 1)
       graft.operators.VectorSearch.compactIndex(
-        spark, fragDir, s"$compactBase/c$batchId")
+        batch.sparkSession, fragDir, s"$compactBase/c$batchId")
   }
 
   /** Serving read of a [[compactingIndexAppend]] table: the latest
@@ -575,21 +578,12 @@ object Streaming {
             "(MIGRATION.md 'Streamed-index fragment layout') before serving")
       }
     }
-    val base = new org.apache.hadoop.fs.Path(compactBase)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val snaps =
-      if (!fs.exists(base)) Array.empty[org.apache.hadoop.fs.Path]
-      else fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
-        .filter(p => p.getName.startsWith("c") &&
-          p.getName.drop(1).forall(_.isDigit) &&
-          fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-    if (snaps.isEmpty) typed(spark.read.parquet(fragDir))
-    else {
-      val latest = snaps.maxBy(_.getName.drop(1).toLong)
-      val covered = latest.getName.drop(1).toLong
-      typed(spark.read.parquet(latest.toString))
-        .unionByName(typed(spark.read.parquet(fragDir))
-          .filter(col("batch_id") > covered))
+    latestComplete(spark, compactBase, "c") match {
+      case None => typed(spark.read.parquet(fragDir))
+      case Some((latest, covered)) =>
+        typed(spark.read.parquet(latest))
+          .unionByName(typed(spark.read.parquet(fragDir))
+            .filter(col("batch_id") > covered))
     }
   }
 }

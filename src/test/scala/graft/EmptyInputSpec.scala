@@ -132,6 +132,14 @@ class EmptyInputSpec extends SparkSpec {
     assert(VectorSearch.multibandKnnJoin(someEmb, noEmb.select("vec_id", "embedding"),
       "embedding", "vec_id", Metric.Cosine, k = 5,
       dim = Tables.EmbeddingDim, bits = 4, bands = 2).count() == 0)
+    // the corpus-side bucket cap sizes zero buckets (a null mean)
+    assert(VectorSearch.multibandKnnJoin(someEmb, noEmb.select("vec_id", "embedding"),
+      "embedding", "vec_id", Metric.Cosine, k = 5,
+      dim = Tables.EmbeddingDim, bits = 4, bands = 2,
+      maxBucketFactor = Some(2.0)).count() == 0)
+    assert(VectorSearch.multiProbeKnnJoin(someEmb, noEmb.select("vec_id", "embedding"),
+      "embedding", "vec_id", Metric.Cosine, k = 5,
+      dim = Tables.EmbeddingDim, maxBucketFactor = Some(2.0)).count() == 0)
   }
 
   test("index tables: LSH bucket table and appends on zero vectors") {

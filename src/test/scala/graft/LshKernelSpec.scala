@@ -246,7 +246,7 @@ class LshKernelSpec extends SparkSpec {
   }
 
   test("ADC codebook contract is KEYED: unsorted entries score identically; gaps/dups raise") {
-    // pqSearch/ivfPqSearch are public and take caller-supplied keyed
+    // pqSearch/ivfPqSearchIndexed are public and take caller-supplied keyed
     // codebooks — order must be immaterial (ADVICE r15)
     val sorted = (0 until 2).map { _ =>
       Seq(0 -> Seq(1.0, 0.0), 1 -> Seq(0.0, 1.0), 2 -> Seq(0.5, 0.5),

@@ -515,15 +515,18 @@ class LshSpec extends SparkSpec {
     val k = 10
     val cents = VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
-    val got = VectorSearch.ivfPqSearch(emb, "embedding", "vec_id",
+    val index = VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id",
+      cents, pqCbs, Metric.Cosine)
+    val got = VectorSearch.ivfPqSearchIndexed(index, "vec_id",
       q, "qvec", cents, pqCbs, nProbes = 2, k = k, metric = Metric.Cosine)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.length == k)
     // routing invariant: every hit's cell is one of the query's 2 probes
     val probes = got.map(_._2).toSet
     assert(probes.size <= 2, s"hits span ${probes.size} cells: $probes")
-    // composition invariant: restricting flat-PQ ADC to the probed
-    // cells' members reproduces the IVF+PQ ranking bit-for-bit
+    // composition invariant: restricting flat-PQ ADC (its own per-code
+    // encode, no packed index) to the probed cells' members reproduces
+    // the packed-index IVF+PQ ranking bit-for-bit
     val assigned = emb
       .withColumn("cid", VectorSearch.ivfAssign(
         graft.functions.VectorFunctions.l2Normalize(col("embedding")),
@@ -542,13 +545,15 @@ class LshSpec extends SparkSpec {
     import spark.implicits._
     val k = 10
     val cents = VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine)
+    val index = VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id",
+      cents, pqCbs, Metric.Cosine)
     val recalls = Seq(0L, 7L, 123L, 250L, 400L).map { qid =>
       val q = emb.filter(col("vec_id") === qid)
         .select(col("embedding").as("qvec"))
       val exact = VectorSearch.topK(emb, "embedding", "vec_id",
         q, "qvec", Metric.Cosine, k)
         .select("vec_id").as[Long].collect().toSet
-      val approx = VectorSearch.ivfPqSearch(emb, "embedding", "vec_id",
+      val approx = VectorSearch.ivfPqSearchIndexed(index, "vec_id",
         q, "qvec", cents, pqCbs, nProbes = 2, k = k, metric = Metric.Cosine)
         .select("vec_id").as[Long].collect().toSet
       (exact intersect approx).size.toDouble / k
@@ -563,23 +568,26 @@ class LshSpec extends SparkSpec {
     assert(mean >= 0.25, f"IVF+PQ recall regressed: $mean%.3f")
   }
 
-  test("IVF+PQ indexed: persisted code table reproduces the direct path bit-for-bit") {
+  test("IVF+PQ indexed: persisted cell-partitioned table == in-memory ivfPqIndexTable frame") {
     val cents = VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine)
     val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec"))
     val path = scratchDir("ivfpq_idx_")
-    VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id", cents, pqCbs,
-      Metric.Cosine)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-    val index = spark.read
+    val inMemory = VectorSearch.ivfPqIndexTable(emb, "embedding", "vec_id",
+      cents, pqCbs, Metric.Cosine)
+    inMemory.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
+    val persisted = spark.read
       .schema("vec_id BIGINT, pq_code BIGINT, centroid_id BIGINT").parquet(path)
-    val direct = VectorSearch.ivfPqSearch(emb, "embedding", "vec_id",
-      q, "qvec", cents, pqCbs, nProbes = 2, k = 10, metric = Metric.Cosine)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val indexed = VectorSearch.ivfPqSearchIndexed(index, "vec_id",
-      q, "qvec", cents, pqCbs, nProbes = 2, k = 10, metric = Metric.Cosine)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(indexed == direct,
-      "indexed (shift/mask unpack) path diverged from the direct encode path")
+    def rows(index: org.apache.spark.sql.DataFrame) =
+      index.select("vec_id", "centroid_id", "pq_code").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    assert(rows(persisted) == rows(inMemory),
+      "cell-partitioned round-trip changed the index rows")
+    def search(index: org.apache.spark.sql.DataFrame) =
+      VectorSearch.ivfPqSearchIndexed(index, "vec_id",
+        q, "qvec", cents, pqCbs, nProbes = 2, k = 10, metric = Metric.Cosine)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(search(persisted) == search(inMemory),
+      "search over the persisted index diverged from the in-memory frame")
   }
 
   test("IVF+PQ refined recall@10 >= 0.8 vs exact (the HNSW-replacement tier)") {

@@ -434,6 +434,11 @@ class StreamingSpec extends SparkSpec {
     // still-present v0 — byte-identical, never duplicated
     Streaming.upsertSnapshot(upd1, 1L, Seq("event_type"), base)
     assert(got() == expect, "batchId replay changed the panel")
+    // a crash mid-write leaves a higher-numbered snapshot without
+    // _SUCCESS: the reader must skip it and keep serving v1
+    upd0.write.parquet(s"$base/v7")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$base/v7/_SUCCESS"))
+    assert(got() == expect, "reader served an incomplete snapshot")
   }
 
   /** Stage the sf0.001 documents as three landing files (so
@@ -608,5 +613,16 @@ class StreamingSpec extends SparkSpec {
     assert(replayed == rebuilt, "batchId replay duplicated fragment rows")
     assert(spark.read.parquet(s"$b/frag").count() == rebuilt.size,
       "replay appended instead of overwriting its batch partition")
+
+    // a compaction that crashed mid-write leaves a higher-numbered
+    // snapshot without _SUCCESS: serving must skip it (reading it would
+    // drop every fragment it claims to cover)
+    spark.read.parquet(s"$b/compact/c1").filter(col("band") === 0)
+      .write.partitionBy("band").parquet(s"$b/compact/c9")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$b/compact/c9/_SUCCESS"))
+    val skipped = Streaming.readCompactedIndex(spark, s"$b/frag", s"$b/compact")
+      .select("vec_id", "band", "bucket")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(skipped == rebuilt, "serving read an incomplete compact snapshot")
   }
 }
