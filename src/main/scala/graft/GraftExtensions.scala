@@ -38,7 +38,9 @@ object GraftFunctions {
     ("text_repetition_stats", 1, classOf[TextRepetitionStats],
       es => TextRepetitionStats(es(0))))
 
-  private def checkedBuilder(
+  /** `builder` behind an arity check — the form both registration
+    * paths install. */
+  private[graft] def checkedBuilder(
       name: String, arity: Int,
       builder: Seq[Expression] => Expression): Seq[Expression] => Expression =
     es => {
@@ -65,18 +67,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo(clazz.getName, name),
-        checkedBuilder(name, arity, builder)))
+        GraftFunctions.checkedBuilder(name, arity, builder)))
     }
     ext.injectOptimizerRule(_ => graft.plans.ExpandRangeJoin)
     ext.injectOptimizerRule(_ => graft.plans.ExpandOverlapJoin)
   }
-
-  private def checkedBuilder(
-      name: String, arity: Int,
-      builder: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    es => {
-      require(es.length == arity,
-        s"$name expects $arity argument(s), got ${es.length}")
-      builder(es)
-    }
 }

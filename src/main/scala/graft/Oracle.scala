@@ -18,7 +18,8 @@ import graft.operators.{Sketches, Splits}
   *  - [[md5Long]] is the SQL mirror of `Sketches.md5Long` (md5 → first
   *    15 hex digits → BIGINT), the hash format every sketch, split and
   *    sampler relies on; [[shingleHash]], [[hashValue]] and
-  *    [[hashBucket]] mirror the Spark functions of the same names.
+  *    [[hashBucket]] mirror the Spark functions of the same names, and
+  *    [[tokens]] mirrors `TextOps.tokens`.
   */
 object Oracle {
 
@@ -38,6 +39,12 @@ object Oracle {
   /** Mirror of `Splits.hashBucket`: [[hashValue]] mod `Splits.Buckets`. */
   def hashBucket(idExpr: String, salt: String): String =
     s"(${hashValue(idExpr, salt)} % ${Splits.Buckets})"
+
+  /** Whitespace tokens of trimmed text — mirror of `TextOps.tokens`:
+    * DuckDB's `string_split_regex` splits on runs of ASCII spaces
+    * exactly as Spark's `split(trim(text), " +")`, and empty text gives
+    * one empty token in both. */
+  def tokens(expr: String): String = s"string_split_regex(trim($expr), ' +')"
 
   /** Left-fold sum with 0.0 seed — bit-exact mirror of Spark's
     * `aggregate(xs, lit(0.0), (acc, x) => acc + x)`. */

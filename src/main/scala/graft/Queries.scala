@@ -434,7 +434,7 @@ object Queries {
   private val qFeatureHashSql: String = {
     val bucket = featureBucketSql("token")
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
+       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
        |  FROM documents),
        |b AS (
        |  SELECT doc_id, $bucket AS bucket, count(*) AS c
@@ -462,7 +462,7 @@ object Queries {
   private val qQualityClassifierSql: String = {
     val bucket = featureBucketSql("token")
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
+       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
        |  FROM documents),
        |b AS (
        |  SELECT doc_id, $bucket AS bucket, count(*) AS c
@@ -500,7 +500,7 @@ object Queries {
   private val qClassifierTrainedSql: String = {
     val bucket = featureBucketSql("token")
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
+       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
        |  FROM documents),
        |b AS (
        |  SELECT doc_id, $bucket AS bucket, count(*) AS c
@@ -531,7 +531,7 @@ object Queries {
 
   private val qTrigramTopkSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
        |         unnest(list_transform(range(1, greatest(len(t) - ${TrigramN - 1}, 0) + 1),
@@ -556,7 +556,7 @@ object Queries {
 
   private val qLmScoreSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
        |         unnest(list_transform(range(1, greatest(len(t) - ${TrigramN - 1}, 0) + 1),
@@ -603,7 +603,7 @@ object Queries {
   private val qDecontaminateSql: String = {
     val parts = (0 until ContamN).map(j => s"t[i + $j]").mkString(" || ' ' || ")
     s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
        |         unnest(list_transform(range(1, greatest(len(t) - ${ContamN - 1}, 0) + 1),
@@ -628,7 +628,7 @@ object Queries {
 
   private val qVocabTopkSql: String =
     s"""WITH tf AS (
-       |  SELECT unnest(string_split_regex(trim(text), ' +')) AS token, doc_id
+       |  SELECT unnest(${Oracle.tokens("text")}) AS token, doc_id
        |  FROM documents),
        |per_doc AS (
        |  SELECT token, doc_id, count(*) AS c FROM tf GROUP BY 1, 2)
@@ -652,7 +652,7 @@ object Queries {
 
   private val qBpeMergeSql: String =
     s"""WITH toks AS (
-       |  SELECT unnest(string_split_regex(trim(text), ' +')) AS word
+       |  SELECT unnest(${Oracle.tokens("text")}) AS word
        |  FROM documents),
        |wc AS (SELECT word, count(*) AS f FROM toks GROUP BY word),
        |pos AS (
@@ -678,7 +678,7 @@ object Queries {
   private val qTokenFertilitySql: String =
     s"""WITH b AS (
        |  SELECT lang, n_chars,
-       |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS ws,
+       |         CAST(length(${Oracle.tokens("text")}) AS BIGINT) AS ws,
        |         CAST(length(regexp_extract_all(text, '${TextOps.BpeTokenPattern}')) AS BIGINT) AS bpe
        |  FROM documents)
        |SELECT lang,
@@ -709,7 +709,7 @@ object Queries {
   private def bpeRoundsCtes(rounds: Int, src: String = "documents"): String = {
     val head = Seq(
       s"""bwords AS MATERIALIZED (
-        |  SELECT lang, unnest(string_split_regex(trim(text), ' +')) AS w
+        |  SELECT lang, unnest(${Oracle.tokens("text")}) AS w
         |  FROM $src)""".stripMargin,
       """v0 AS MATERIALIZED (
         |  SELECT w, CAST(count(*) AS BIGINT) AS f,
@@ -845,7 +845,7 @@ object Queries {
        |    WHERE d.host = b.h OR right(d.host, length(b.h)+1) = '.' || b.h)),
        |t AS (
        |  SELECT doc_id, lang, text, n_chars,
-       |         string_split_regex(trim(text), ' +') AS toks
+       |         ${Oracle.tokens("text")} AS toks
        |  FROM fu),
        |q AS (SELECT doc_id, lang, text, n_chars FROM t WHERE $qualityOkCaseSql = 1),
        |keepers AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY text),
@@ -856,7 +856,7 @@ object Queries {
        |lwc AS (
        |  SELECT cohort, w, CAST(count(*) AS BIGINT) AS c FROM (
        |    SELECT split || ':' || lang AS cohort,
-       |           unnest(string_split_regex(trim(text), ' +')) AS w
+       |           unnest(${Oracle.tokens("text")}) AS w
        |    FROM lab) GROUP BY 1, 2),
        |ap AS (
        |  SELECT cohort, c,
@@ -893,7 +893,7 @@ object Queries {
 
   private val qPmiBigramsSql: String =
     s"""WITH toks AS (
-       |  SELECT string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT ${Oracle.tokens("text")} AS t FROM documents),
        |uni AS (SELECT unnest(t) AS w FROM toks),
        |uc AS (SELECT w, count(*) AS c FROM uni GROUP BY w),
        |tot AS (SELECT sum(c) AS t FROM uc),
@@ -945,7 +945,7 @@ object Queries {
     val parts = (0 until SpanK).map(j => s"t[i + $j]").mkString(" || ' ' || ")
     val km1 = SpanK - 1
     s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |g AS (
        |  SELECT doc_id, i - 1 AS pos,
        |         ${Oracle.md5Long(parts)} AS gh
@@ -993,7 +993,7 @@ object Queries {
     val parts = (0 until SpanK).map(j => s"t[i + $j]").mkString(" || ' ' || ")
     val km1 = SpanK - 1
     s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |g AS (
        |  SELECT doc_id, i - 1 AS pos,
        |         ${Oracle.md5Long(parts)} AS gh
@@ -1083,12 +1083,12 @@ object Queries {
   }
 
   private val qQualityFunnelSql: String =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT doc_id, n_chars,
-      |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS ntok,
+      |         CAST(length(${Oracle.tokens("text")}) AS BIGINT) AS ntok,
       |         CAST(length(replace(text, ' ', '')) AS BIGINT) AS nsp,
       |         CAST(length(regexp_replace(text, '[^a-z]', '', 'g')) AS BIGINT) AS alpha,
-      |         CAST(len(list_filter(string_split_regex(trim(text), ' +'),
+      |         CAST(len(list_filter(${Oracle.tokens("text")},
       |           x -> x IN ('the', 'a', 'of', 'and', 'is'))) AS BIGINT) AS stop_hits,
       |         min(doc_id) OVER (PARTITION BY md5(text)) AS keeper
       |  FROM documents),
@@ -1124,7 +1124,7 @@ object Queries {
 
   private val qCcnetBucketsSql: String =
     s"""WITH toks AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS t FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
        |         unnest(list_transform(range(1, greatest(len(t) - ${TrigramN - 1}, 0) + 1),
@@ -1191,7 +1191,7 @@ object Queries {
 
   private val qDsirWeightsSql: String = {
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
+       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
        |  FROM documents),
        |tb AS (
        |  SELECT ${featureBucketSql("token")} AS bucket, count(*) AS ct
@@ -1282,7 +1282,7 @@ object Queries {
     s"""WITH u AS (
        |  SELECT regexp_extract(lower($syntheticUrlSql), '${Web.HostPattern}', 1) AS host,
        |         lang, n_chars,
-       |         CAST(len(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_toks
+       |         CAST(len(${Oracle.tokens("text")}) AS BIGINT) AS n_toks
        |  FROM documents),
        |g AS (
        |  SELECT host,
@@ -1346,9 +1346,9 @@ object Queries {
     TextOps.textStats(Tables.documents(s, dir), "lang", "n_chars", "text")
 
   private val qTextStatsSql: String =
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT lang, n_chars,
-      |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS tok
+      |         CAST(length(${Oracle.tokens("text")}) AS BIGINT) AS tok
       |  FROM documents)
       |SELECT lang,
       |       CAST(count(*) AS BIGINT) AS n_docs,
@@ -2622,7 +2622,7 @@ object Queries {
       .map(b => s"(CASE WHEN s_$b > 0 THEN ${1L << b} ELSE 0 END)")
       .mkString(" + ")
     s"""WITH tk AS (
-       |  SELECT doc_id, md5(unnest(string_split_regex(trim(text), ' +'))) AS h
+       |  SELECT doc_id, md5(unnest(${Oracle.tokens("text")})) AS h
        |  FROM documents),
        |s AS (SELECT doc_id, $sums FROM tk GROUP BY doc_id)
        |SELECT doc_id, CAST($bits AS BIGINT) AS simhash
@@ -2649,9 +2649,9 @@ object Queries {
 
   /** Oracle CTE `t(doc_id, text, n_chars, toks)`. */
   private val qualityToksCteSql: String =
-    """t AS (
+    s"""t AS (
       |  SELECT doc_id, text, n_chars,
-      |         string_split_regex(trim(text), ' +') AS toks
+      |         ${Oracle.tokens("text")} AS toks
       |  FROM documents)""".stripMargin
 
   private val qTextQualitySql: String = {
@@ -2737,7 +2737,7 @@ object Queries {
     val k1p1 = Bm25K1 + 1.0
     val oneMinusB = 1.0 - Bm25B
     s"""WITH t AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS toks FROM $docsRel),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS toks FROM $docsRel),
        |ex AS (
        |  SELECT doc_id, CAST(length(toks) AS BIGINT) AS len, unnest(toks) AS tok FROM t),
        |tf AS (
@@ -3236,8 +3236,8 @@ object Queries {
   // correct way — unnest + count here, sort + run-length scan on the
   // Spark side (float parity rules don't apply to integer outputs).
   private val qRepetitionSql: String =
-    """WITH t AS (
-      |  SELECT doc_id, string_split_regex(trim(text), ' +') AS toks FROM documents),
+    s"""WITH t AS (
+      |  SELECT doc_id, ${Oracle.tokens("text")} AS toks FROM documents),
       |tt AS (
       |  SELECT doc_id, CAST(max(c) AS BIGINT) AS top_token_n FROM (
       |    SELECT doc_id, count(*) AS c FROM (
@@ -3273,7 +3273,7 @@ object Queries {
   private val qLangIdSql: String = {
     val hitCols = TextOps.LangMarkers.map { case (lang, markers) =>
       val set = markers.map(w => s"'$w'").mkString(", ")
-      s"CAST(length(list_filter(string_split_regex(trim(text), ' +'), tk -> tk IN ($set))) AS BIGINT) AS h_$lang"
+      s"CAST(length(list_filter(${Oracle.tokens("text")}, tk -> tk IN ($set))) AS BIGINT) AS h_$lang"
     }.mkString(",\n         ")
     val unions = TextOps.LangMarkers.map { case (lang, _) =>
       s"SELECT doc_id, lang, '$lang' AS cand, h_$lang AS hits FROM h"
@@ -3687,7 +3687,7 @@ object Queries {
 
   private val qFuzzyMatchSql: String =
     s"""WITH t AS (
-       |  SELECT unnest(string_split_regex(trim(text), ' +')) AS tok FROM documents),
+       |  SELECT unnest(${Oracle.tokens("text")}) AS tok FROM documents),
        |v AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1)
        |SELECT tok, CAST(levenshtein(tok, '$FuzzyTerm') AS BIGINT) AS dist, n
        |FROM v WHERE levenshtein(tok, '$FuzzyTerm') <= $FuzzyMaxDist
@@ -3707,7 +3707,7 @@ object Queries {
 
   private val qPhraseSearchSql: String =
     s"""WITH t AS (
-       |  SELECT doc_id, string_split_regex(trim(text), ' +') AS toks FROM documents),
+       |  SELECT doc_id, ${Oracle.tokens("text")} AS toks FROM documents),
        |p AS (
        |  SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos
        |  FROM t),
@@ -3746,7 +3746,7 @@ object Queries {
       s"SELECT tok, CAST($i AS BIGINT) AS row, (($a * hm + $b) % $p) % $CmsW AS bucket FROM $src"
     }.mkString("\n    UNION ALL ")
     s"""WITH t AS (
-       |  SELECT unnest(string_split_regex(trim(text), ' +')) AS tok FROM documents),
+       |  SELECT unnest(${Oracle.tokens("text")}) AS tok FROM documents),
        |h AS (
        |  SELECT tok, ${Oracle.shingleHash("tok")} AS hm
        |  FROM t),
@@ -5686,7 +5686,7 @@ object Queries {
   private val qDomainBudgetSql: String =
     s"""WITH t AS (
        |  SELECT doc_id, source, text, n_chars,
-       |         string_split_regex(trim(text), ' +') AS toks
+       |         ${Oracle.tokens("text")} AS toks
        |  FROM documents),
        |q AS (
        |  SELECT doc_id, source,
@@ -5734,7 +5734,7 @@ object Queries {
   private val qShardAssignSql: String =
     s"""WITH t AS (
        |  SELECT doc_id,
-       |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_tokens
+       |         CAST(length(${Oracle.tokens("text")}) AS BIGINT) AS n_tokens
        |  FROM documents),
        |c AS (
        |  SELECT doc_id, n_tokens,
@@ -5791,7 +5791,7 @@ object Queries {
     val hv = Oracle.hashValue("doc_id", EpochSalt)
     s"""WITH t AS (
        |  SELECT doc_id, source,
-       |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_tokens,
+       |         CAST(length(${Oracle.tokens("text")}) AS BIGINT) AS n_tokens,
        |         ($hv % $EpochHashMod) * ${1L << EpochIdBits} + doc_id AS ord
        |  FROM documents),
        |c AS (
@@ -5952,7 +5952,7 @@ object Queries {
     val fbucket = featureBucketSql("token")
     val mixBucket = Oracle.hashBucket("k.doc_id", FilterMixSalt)
     s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split_regex(trim(text), ' +')) AS token
+       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
        |  FROM documents),
        |fb AS (
        |  SELECT doc_id, $fbucket AS bucket, count(*) AS c
@@ -6022,7 +6022,7 @@ object Queries {
     val bucket = Oracle.hashBucket("doc_id", PackSalt)
     s"""WITH base AS (
        |  SELECT doc_id, $bucket AS bucket, $bucket % $PackShards AS shard,
-       |         CAST(length(string_split_regex(trim(text), ' +')) AS BIGINT) AS n_tok
+       |         CAST(length(${Oracle.tokens("text")}) AS BIGINT) AS n_tok
        |  FROM documents),
        |cum AS (
        |  SELECT shard, n_tok,
@@ -6114,7 +6114,7 @@ object Queries {
        |base AS (
        |  SELECT doc_id, ${bucket(PackSalt)} AS pbucket,
        |         ${bucket(PackSalt)} % $PackShards AS shard,
-       |         CAST(length(string_split_regex(trim(dedup_text), ' +')) AS BIGINT) AS n_tok
+       |         CAST(length(${Oracle.tokens("dedup_text")}) AS BIGINT) AS n_tok
        |  FROM qs),
        |cum AS (
        |  SELECT shard, n_tok,

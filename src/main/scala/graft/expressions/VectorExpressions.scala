@@ -16,8 +16,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * `transform` lambda, re-evaluating the O(dim) norm once PER ELEMENT
   * (O(dim²) per row; the round-1 verdict measured ~2.7× on cosine vs
   * euclidean at dim=64). Each expression here evaluates its norm exactly
-  * once per row inside a single generated loop, participates in
-  * whole-stage codegen, and cannot be torn apart by the optimizer.
+  * once per row inside one loop body, participates in whole-stage
+  * codegen, and cannot be torn apart by the optimizer.
+  *
+  * One body per kernel: the loop is the expression's Scala `kernel`
+  * method, and both `nullSafeEval` and the generated code call it — so
+  * the two paths cannot drift, and a kernel adds one call, not its
+  * loops, to the stage's generated method ([[PairwiseKernel]],
+  * [[ArrayKernel]]).
   *
   * Float semantics are bit-identical to the HOF forms (and to the DuckDB
   * oracle SQL in [[graft.Oracle]]): left-to-right folds seeded with 0.0,
@@ -56,7 +62,7 @@ object VectorExpressions {
 
   /** Whether an input's type admits null elements. The kernels read
     * primitive slots, so a null element would silently yield 0.0 —
-    * instead they raise. The guard is emitted ONLY when the type says
+    * instead they raise. The guard is checked ONLY when the type says
     * nulls are possible: kernel outputs (`containsNull=false`) chain
     * guard-free, so e.g. the knn pair loop over pre-normalized vectors
     * pays nothing. */
@@ -76,21 +82,11 @@ object VectorExpressions {
     throw new IllegalArgumentException(
       s"$name: array length mismatch ($nx vs $ny)")
 
-  private def lengthCheckCode(name: String, nx: String, ny: String): String =
-    s"""if ($nx != $ny) throw new IllegalArgumentException(
-       |  "$name: array length mismatch (" + $nx + " vs " + $ny + ")");""".stripMargin
-
-  /** Codegen guard line — empty when the input type has no null slots. */
-  private def guardCode(guard: Boolean, name: String, arr: String, i: String): String =
-    if (guard)
-      s"""if ($arr.isNullAt($i)) throw new IllegalArgumentException(
-         |  "$name: null array element at index " + $i + " (null elements are not supported)");""".stripMargin
-    else ""
-
   /** What the pairwise `ARRAY<DOUBLE> × ARRAY<DOUBLE> → DOUBLE` kernels
-    * share: the input-type check, the result type, null intolerance and
-    * the per-side null-element guards. Each kernel keeps its own loop
-    * and `prettyName`. */
+    * share: the input-type check, the result type, null intolerance, the
+    * per-side null-element guards, and the one-body rule — `kernel` is
+    * the loop, called by eval and by the generated code (package-private
+    * in Scala, public in bytecode, so the generated class can call it). */
   private[expressions] sealed trait PairwiseKernel extends BinaryExpression {
     override def checkInputDataTypes(): TypeCheckResult =
       checkArrayDouble(prettyName, Seq(left.dataType, right.dataType))
@@ -99,46 +95,75 @@ object VectorExpressions {
 
     protected def guardL: Boolean = mayContainNull(left.dataType)
     protected def guardR: Boolean = mayContainNull(right.dataType)
+
+    protected def sameLength(x: ArrayData, y: ArrayData): Int = {
+      val n = x.numElements()
+      if (n != y.numElements()) lengthMismatch(prettyName, n, y.numElements())
+      n
+    }
+
+    private[expressions] def kernel(x: ArrayData, y: ArrayData): Double
+
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val k = ctx.addReferenceObj("kernel", this)
+      defineCodeGen(ctx, ev, (x, y) => s"$k.kernel($x, $y)")
+    }
+  }
+
+  /** The [[PairwiseKernel]] rule for the unary `ARRAY<DOUBLE> → ARRAY`
+    * kernels: normalize, LSH buckets, nearest centroids. */
+  private[expressions] sealed trait ArrayKernel extends UnaryExpression {
+    override def checkInputDataTypes(): TypeCheckResult =
+      checkArrayDouble(prettyName, Seq(child.dataType))
+    override def nullIntolerant: Boolean = true
+
+    protected def guard: Boolean = mayContainNull(child.dataType)
+
+    /** `x` copied into a fresh `double[]` of length `dim` — raises on
+      * another length or (when [[guard]]) on a null element. */
+    protected def doubles(x: ArrayData, dim: Int): Array[Double] = {
+      val n = x.numElements()
+      if (n != dim) lengthMismatch(prettyName, n, dim)
+      val g = guard
+      val vec = new Array[Double](n)
+      var i = 0
+      while (i < n) {
+        if (g && x.isNullAt(i)) nullElement(prettyName, i)
+        vec(i) = x.getDouble(i); i += 1
+      }
+      vec
+    }
+
+    private[expressions] def kernel(x: ArrayData): ArrayData
+
+    override protected def nullSafeEval(a: Any): Any = kernel(a.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val k = ctx.addReferenceObj("kernel", this)
+      defineCodeGen(ctx, ev, x => s"$k.kernel($x)")
+    }
   }
 
   /** Dot product `Σ a[i]*b[i]`, left fold from 0.0. */
   case class VecDot(left: Expression, right: Expression) extends PairwiseKernel {
     override def prettyName: String = "vec_dot"
 
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != y.numElements()) lengthMismatch(prettyName, n, y.numElements())
+    private[expressions] def kernel(x: ArrayData, y: ArrayData): Double = {
+      val n = sameLength(x, y)
+      val gl = guardL
+      val gr = guardR
       var acc = 0.0
       var i = 0
       while (i < n) {
-        if (guardL && x.isNullAt(i)) nullElement(prettyName, i)
-        if (guardR && y.isNullAt(i)) nullElement(prettyName, i)
+        if (gl && x.isNullAt(i)) nullElement(prettyName, i)
+        if (gr && y.isNullAt(i)) nullElement(prettyName, i)
         acc += x.getDouble(i) * y.getDouble(i); i += 1
       }
       acc
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (x, y) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val ny = ctx.freshName("ny")
-        val acc = ctx.freshName("acc")
-        s"""
-           |int $n = $x.numElements();
-           |int $ny = $y.numElements();
-           |${lengthCheckCode(prettyName, n, ny)}
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${guardCode(guardL, prettyName, x, i)}
-           |  ${guardCode(guardR, prettyName, y, i)}
-           |  $acc += $x.getDouble($i) * $y.getDouble($i);
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -147,23 +172,17 @@ object VectorExpressions {
 
   /** Eps-guarded L2 normalize `v / (sqrt(Σ v[i]²) + 1e-12)` — the norm is
     * computed once per row inside the kernel (reference index.py:4-8). */
-  case class VecL2Normalize(child: Expression)
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayDouble(prettyName, Seq(child.dataType))
+  case class VecL2Normalize(child: Expression) extends ArrayKernel {
     override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-    override def nullIntolerant: Boolean = true
     override def prettyName: String = "vec_l2_normalize"
 
-    private def guard = mayContainNull(child.dataType)
-
-    override protected def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
+    private[expressions] def kernel(x: ArrayData): ArrayData = {
       val n = x.numElements()
+      val g = guard
       var ss = 0.0
       var i = 0
       while (i < n) {
-        if (guard && x.isNullAt(i)) nullElement(prettyName, i)
+        if (g && x.isNullAt(i)) nullElement(prettyName, i)
         val v = x.getDouble(i); ss += v * v; i += 1
       }
       val nrm = math.sqrt(ss) + Eps
@@ -172,32 +191,6 @@ object VectorExpressions {
       while (i < n) { out(i) = x.getDouble(i) / nrm; i += 1 }
       UnsafeArrayData.fromPrimitiveArray(out)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, x => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val ss = ctx.freshName("ss")
-        val nrm = ctx.freshName("nrm")
-        val out = ctx.freshName("out")
-        val v = ctx.freshName("v")
-        s"""
-           |int $n = $x.numElements();
-           |double $ss = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${guardCode(guard, prettyName, x, i)}
-           |  double $v = $x.getDouble($i);
-           |  $ss += $v * $v;
-           |}
-           |double $nrm = java.lang.Math.sqrt($ss) + ${Eps}D;
-           |double[] $out = new double[$n];
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $out[$i] = $x.getDouble($i) / $nrm;
-           |}
-           |${ev.value} =
-           |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         """.stripMargin
-      })
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -211,17 +204,16 @@ object VectorExpressions {
   case class VecCosine(left: Expression, right: Expression) extends PairwiseKernel {
     override def prettyName: String = "vec_cosine"
 
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != y.numElements()) lengthMismatch(prettyName, n, y.numElements())
+    private[expressions] def kernel(x: ArrayData, y: ArrayData): Double = {
+      val n = sameLength(x, y)
+      val gl = guardL
+      val gr = guardR
       var ssx = 0.0
       var ssy = 0.0
       var i = 0
       while (i < n) {
-        if (guardL && x.isNullAt(i)) nullElement(prettyName, i)
-        if (guardR && y.isNullAt(i)) nullElement(prettyName, i)
+        if (gl && x.isNullAt(i)) nullElement(prettyName, i)
+        if (gr && y.isNullAt(i)) nullElement(prettyName, i)
         val vx = x.getDouble(i); ssx += vx * vx
         val vy = y.getDouble(i); ssy += vy * vy
         i += 1
@@ -234,39 +226,6 @@ object VectorExpressions {
       acc
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (x, y) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val nyLen = ctx.freshName("nyLen")
-        val ssx = ctx.freshName("ssx")
-        val ssy = ctx.freshName("ssy")
-        val nx = ctx.freshName("nx")
-        val ny = ctx.freshName("ny")
-        val acc = ctx.freshName("acc")
-        val vx = ctx.freshName("vx")
-        val vy = ctx.freshName("vy")
-        s"""
-           |int $n = $x.numElements();
-           |int $nyLen = $y.numElements();
-           |${lengthCheckCode(prettyName, n, nyLen)}
-           |double $ssx = 0.0; double $ssy = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${guardCode(guardL, prettyName, x, i)}
-           |  ${guardCode(guardR, prettyName, y, i)}
-           |  double $vx = $x.getDouble($i); $ssx += $vx * $vx;
-           |  double $vy = $y.getDouble($i); $ssy += $vy * $vy;
-           |}
-           |double $nx = java.lang.Math.sqrt($ssx) + ${Eps}D;
-           |double $ny = java.lang.Math.sqrt($ssy) + ${Eps}D;
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += ($x.getDouble($i) / $nx) * ($y.getDouble($i) / $ny);
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
-
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
@@ -277,44 +236,21 @@ object VectorExpressions {
       extends PairwiseKernel {
     override def prettyName: String = "vec_euclidean_distance"
 
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != y.numElements()) lengthMismatch(prettyName, n, y.numElements())
+    private[expressions] def kernel(x: ArrayData, y: ArrayData): Double = {
+      val n = sameLength(x, y)
+      val gl = guardL
+      val gr = guardR
       var acc = 0.0
       var i = 0
       while (i < n) {
-        if (guardL && x.isNullAt(i)) nullElement(prettyName, i)
-        if (guardR && y.isNullAt(i)) nullElement(prettyName, i)
+        if (gl && x.isNullAt(i)) nullElement(prettyName, i)
+        if (gr && y.isNullAt(i)) nullElement(prettyName, i)
         val d = x.getDouble(i) - y.getDouble(i)
         acc += d * d
         i += 1
       }
       math.sqrt(acc)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (x, y) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val ny = ctx.freshName("ny")
-        val acc = ctx.freshName("acc")
-        val d = ctx.freshName("d")
-        s"""
-           |int $n = $x.numElements();
-           |int $ny = $y.numElements();
-           |${lengthCheckCode(prettyName, n, ny)}
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${guardCode(guardL, prettyName, x, i)}
-           |  ${guardCode(guardR, prettyName, y, i)}
-           |  double $d = $x.getDouble($i) - $y.getDouble($i);
-           |  $acc += $d * $d;
-           |}
-           |${ev.value} = java.lang.Math.sqrt($acc);
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -440,19 +376,15 @@ object VectorExpressions {
     * bucketing took 76.3s composed vs 0.9s fused (and bands=4 alone
     * replayed 46.2s → 0.5s under `-XX:-DontCompileHugeMethods`,
     * confirming the cliff is JIT refusal, not the dots). This kernel
-    * emits one small triple loop over a precomputed plane matrix —
-    * JIT-compiled at any (bits, bands), no JVM flags required. */
+    * runs one small triple loop over a precomputed plane matrix, and
+    * its generated code is one call into that loop — JIT-compiled at
+    * any (bits, bands), no JVM flags required. */
   case class VecSignLshBuckets(child: Expression, dim: Int, bits: Int,
-      bands: Int, bandOffset: Int) extends UnaryExpression {
+      bands: Int, bandOffset: Int) extends ArrayKernel {
     require(dim > 0 && bits > 0 && bits <= 62 && bands > 0 && bandOffset >= 0,
       s"vec_lsh_buckets: bad shape (dim=$dim bits=$bits bands=$bands offset=$bandOffset)")
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayDouble(prettyName, Seq(child.dataType))
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullIntolerant: Boolean = true
     override def prettyName: String = "vec_lsh_buckets"
-
-    private def guard = mayContainNull(child.dataType)
 
     /** Flat plane matrix [band][bit][i] — the exact [[graft.operators
       * .VectorSearch.hyperplane]] doubles, so projections are
@@ -477,16 +409,9 @@ object VectorExpressions {
       out
     }
 
-    override protected def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (n != dim) lengthMismatch(prettyName, n, dim)
-      val vec = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        if (guard && x.isNullAt(i)) nullElement(prettyName, i)
-        vec(i) = x.getDouble(i); i += 1
-      }
+    private[expressions] def kernel(x: ArrayData): ArrayData = {
+      val vec = doubles(x, dim)
+      val pl = planes
       val out = new Array[Long](bands)
       var b = 0
       while (b < bands) {
@@ -495,8 +420,8 @@ object VectorExpressions {
         while (j < bits) {
           val base = (b * bits + j) * dim
           var acc = 0.0
-          i = 0
-          while (i < n) { acc += vec(i) * planes(base + i); i += 1 }
+          var i = 0
+          while (i < dim) { acc += vec(i) * pl(base + i); i += 1 }
           if (acc > 0.0) bucket += (1L << j)
           j += 1
         }
@@ -504,45 +429,6 @@ object VectorExpressions {
         b += 1
       }
       UnsafeArrayData.fromPrimitiveArray(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val planesRef = ctx.addReferenceObj("planes", planes, "double[]")
-      nullSafeCodeGen(ctx, ev, x => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val vec = ctx.freshName("vec")
-        val out = ctx.freshName("out")
-        val b = ctx.freshName("b")
-        val j = ctx.freshName("j")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val bucket = ctx.freshName("bucket")
-        s"""
-           |int $n = $x.numElements();
-           |${lengthCheckCode(prettyName, n, dim.toString)}
-           |double[] $vec = new double[$n];
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${guardCode(guard, prettyName, x, i)}
-           |  $vec[$i] = $x.getDouble($i);
-           |}
-           |long[] $out = new long[$bands];
-           |for (int $b = 0; $b < $bands; $b++) {
-           |  long $bucket = 0L;
-           |  for (int $j = 0; $j < $bits; $j++) {
-           |    int $base = ($b * $bits + $j) * $dim;
-           |    double $acc = 0.0;
-           |    for (int $i = 0; $i < $n; $i++) {
-           |      $acc += $vec[$i] * $planesRef[$base + $i];
-           |    }
-           |    if ($acc > 0.0) $bucket += (1L << $j);
-           |  }
-           |  $out[$b] = $bucket;
-           |}
-           |${ev.value} =
-           |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -589,7 +475,7 @@ object VectorExpressions {
     * comparator breaks). NaN scores never displace non-NaN entries
     * (Java `<` is false), matching NaN-sorts-last struct ordering. */
   case class VecNearestCentroids(child: Expression, mode: String,
-      centroids: Seq[(Long, Seq[Double])], n: Int) extends UnaryExpression {
+      centroids: Seq[(Long, Seq[Double])], n: Int) extends ArrayKernel {
     require(CentroidScore.all.contains(mode),
       s"vec_nearest_centroids: unknown mode $mode")
     require(centroids.nonEmpty, "vec_nearest_centroids: empty centroid set")
@@ -600,17 +486,12 @@ object VectorExpressions {
     private val cdim = centroids.head._2.length
     private val m = math.min(n, centroids.size)
 
-    override def checkInputDataTypes(): TypeCheckResult =
-      checkArrayDouble(prettyName, Seq(child.dataType))
     override def dataType: DataType = ArrayType(
       StructType(Seq(
         StructField("ns", DoubleType, nullable = false),
         StructField("cid", LongType, nullable = false))),
       containsNull = false)
-    override def nullIntolerant: Boolean = true
     override def prettyName: String = "vec_nearest_centroids"
-
-    private def guard = mayContainNull(child.dataType)
 
     @transient private lazy val cents: Array[Double] = {
       val out = new Array[Double](centroids.size * cdim)
@@ -625,38 +506,32 @@ object VectorExpressions {
     }
     @transient private lazy val cids: Array[Long] = centroids.map(_._1).toArray
 
-    override protected def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val nv = x.numElements()
-      if (nv != cdim) lengthMismatch(prettyName, nv, cdim)
-      val vec = new Array[Double](nv)
-      var i = 0
-      while (i < nv) {
-        if (guard && x.isNullAt(i)) nullElement(prettyName, i)
-        vec(i) = x.getDouble(i); i += 1
-      }
+    private[expressions] def kernel(x: ArrayData): ArrayData = {
+      val vec = doubles(x, cdim)
+      val cs = cents
+      val ids = cids
+      val dotMode = mode == CentroidScore.Dot
+      val distMode = mode == CentroidScore.EuclidDist
       val bestNs = Array.fill(m)(Double.PositiveInfinity)
       val bestCid = new Array[Long](m)
       var filled = 0
-      val c = cids.length
       var k = 0
-      while (k < c) {
+      while (k < ids.length) {
         val base = k * cdim
         var ns = 0.0
-        if (mode == CentroidScore.Dot) {
+        if (dotMode) {
           var acc = 0.0
-          i = 0
-          while (i < nv) { acc += vec(i) * cents(base + i); i += 1 }
+          var i = 0
+          while (i < cdim) { acc += vec(i) * cs(base + i); i += 1 }
           ns = -acc
         } else {
           var acc = 0.0
-          i = 0
-          while (i < nv) {
-            val d = vec(i) - cents(base + i); acc += d * d; i += 1
+          var i = 0
+          while (i < cdim) {
+            val d = vec(i) - cs(base + i); acc += d * d; i += 1
           }
           val dist = math.sqrt(acc)
-          ns = if (mode == CentroidScore.EuclidDist) dist
-               else -(1.0 / (1.0 + dist))
+          ns = if (distMode) dist else -(1.0 / (1.0 + dist))
         }
         // insertion into the sorted scratch: strict improvement only, so
         // equal-ns later (higher-cid) centroids never displace earlier
@@ -668,7 +543,7 @@ object VectorExpressions {
           while (s > pos) {
             bestNs(s) = bestNs(s - 1); bestCid(s) = bestCid(s - 1); s -= 1
           }
-          bestNs(pos) = ns; bestCid(pos) = cids(k)
+          bestNs(pos) = ns; bestCid(pos) = ids(k)
           if (filled < m) filled += 1
         }
         k += 1
@@ -680,87 +555,6 @@ object VectorExpressions {
         r += 1
       }
       new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val centsRef = ctx.addReferenceObj("cents", cents, "double[]")
-      val cidsRef = ctx.addReferenceObj("cids", cids, "long[]")
-      val scoreBody = mode match {
-        case CentroidScore.Dot =>
-          (base: String, vec: String, i: String, acc: String, ns: String) =>
-            s"""double $acc = 0.0;
-               |for (int $i = 0; $i < $vec.length; $i++) {
-               |  $acc += $vec[$i] * $centsRef[$base + $i];
-               |}
-               |double $ns = -$acc;""".stripMargin
-        case CentroidScore.EuclidDist =>
-          (base: String, vec: String, i: String, acc: String, ns: String) =>
-            s"""double $acc = 0.0;
-               |for (int $i = 0; $i < $vec.length; $i++) {
-               |  double __d = $vec[$i] - $centsRef[$base + $i];
-               |  $acc += __d * __d;
-               |}
-               |double $ns = java.lang.Math.sqrt($acc);""".stripMargin
-        case CentroidScore.EuclidSim =>
-          (base: String, vec: String, i: String, acc: String, ns: String) =>
-            s"""double $acc = 0.0;
-               |for (int $i = 0; $i < $vec.length; $i++) {
-               |  double __d = $vec[$i] - $centsRef[$base + $i];
-               |  $acc += __d * __d;
-               |}
-               |double $ns = -(1.0 / (1.0 + java.lang.Math.sqrt($acc)));""".stripMargin
-      }
-      nullSafeCodeGen(ctx, ev, x => {
-        val i = ctx.freshName("i")
-        val nv = ctx.freshName("nv")
-        val vec = ctx.freshName("vec")
-        val bestNs = ctx.freshName("bestNs")
-        val bestCid = ctx.freshName("bestCid")
-        val filled = ctx.freshName("filled")
-        val k = ctx.freshName("k")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val ns = ctx.freshName("ns")
-        val pos = ctx.freshName("pos")
-        val t = ctx.freshName("t")
-        val s = ctx.freshName("s")
-        val rows = ctx.freshName("rows")
-        val r = ctx.freshName("r")
-        s"""
-           |int $nv = $x.numElements();
-           |${lengthCheckCode(prettyName, nv, cdim.toString)}
-           |double[] $vec = new double[$nv];
-           |for (int $i = 0; $i < $nv; $i++) {
-           |  ${guardCode(guard, prettyName, x, i)}
-           |  $vec[$i] = $x.getDouble($i);
-           |}
-           |double[] $bestNs = new double[$m];
-           |long[] $bestCid = new long[$m];
-           |java.util.Arrays.fill($bestNs, Double.POSITIVE_INFINITY);
-           |int $filled = 0;
-           |for (int $k = 0; $k < ${cids.length}; $k++) {
-           |  int $base = $k * $cdim;
-           |  ${scoreBody(base, vec, i, acc, ns)}
-           |  int $pos = ($filled < $m) ? $filled : -1;
-           |  for (int $t = (($filled < $m) ? $filled : $m) - 1;
-           |       $t >= 0 && $ns < $bestNs[$t]; $t--) { $pos = $t; }
-           |  if ($pos >= 0) {
-           |    for (int $s = java.lang.Math.min($filled, $m - 1); $s > $pos; $s--) {
-           |      $bestNs[$s] = $bestNs[$s - 1]; $bestCid[$s] = $bestCid[$s - 1];
-           |    }
-           |    $bestNs[$pos] = $ns; $bestCid[$pos] = $cidsRef[$k];
-           |    if ($filled < $m) $filled++;
-           |  }
-           |}
-           |Object[] $rows = new Object[$filled];
-           |for (int $r = 0; $r < $filled; $r++) {
-           |  $rows[$r] = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-           |    new Object[]{ java.lang.Double.valueOf($bestNs[$r]),
-           |                  java.lang.Long.valueOf($bestCid[$r]) });
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($rows);
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -789,8 +583,8 @@ object VectorExpressions {
     * 8-term composed score took 67.1s vs 0.4s with
     * `-XX:-DontCompileHugeMethods`, a 167× JIT-refusal cliff, invisible
     * in plans and logs. This kernel reads the codebook matrix from ONE
-    * reference object in a constant-size double loop — JIT-able at any
-    * (m, ksub, dim). */
+    * reference object in a constant-size double loop, and its generated
+    * code is one call into that loop — JIT-able at any (m, ksub, dim). */
   case class VecPqAdcScore(left: Expression, right: Expression,
       codebooks: Seq[Seq[(Int, Seq[Double])]]) extends BinaryExpression {
     require(codebooks.nonEmpty, "vec_pq_adc: empty codebook set")
@@ -830,8 +624,6 @@ object VectorExpressions {
     override def nullIntolerant: Boolean = true
     override def prettyName: String = "vec_pq_adc"
 
-    private def guard = mayContainNull(left.dataType)
-
     /** Flat codebook matrix [j][code][i] — codebook entries laid out in
       * (subspace, code) order so the inner dot is a contiguous read. */
     @transient private lazy val cb: Array[Double] = {
@@ -851,11 +643,11 @@ object VectorExpressions {
       out
     }
 
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val packed = b.asInstanceOf[Long]
+    private[expressions] def kernel(x: ArrayData, packed: Long): Double = {
       val n = x.numElements()
       if (n != m * sdim) lengthMismatch(prettyName, n, m * sdim)
+      val g = mayContainNull(left.dataType)
+      val book = cb
       var total = 0.0
       var j = 0
       while (j < m) {
@@ -867,8 +659,8 @@ object VectorExpressions {
         var sub = 0.0
         var i = 0
         while (i < sdim) {
-          if (guard && x.isNullAt(j * sdim + i)) nullElement(prettyName, j * sdim + i)
-          sub += x.getDouble(j * sdim + i) * cb(base + i)
+          if (g && x.isNullAt(j * sdim + i)) nullElement(prettyName, j * sdim + i)
+          sub += x.getDouble(j * sdim + i) * book(base + i)
           i += 1
         }
         total += sub
@@ -877,35 +669,12 @@ object VectorExpressions {
       total
     }
 
+    override protected def nullSafeEval(a: Any, b: Any): Any =
+      kernel(a.asInstanceOf[ArrayData], b.asInstanceOf[Long])
+
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cbRef = ctx.addReferenceObj("cb", cb, "double[]")
-      nullSafeCodeGen(ctx, ev, (x, packed) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val j = ctx.freshName("j")
-        val code = ctx.freshName("code")
-        val base = ctx.freshName("base")
-        val sub = ctx.freshName("sub")
-        val total = ctx.freshName("total")
-        s"""
-           |int $n = $x.numElements();
-           |${lengthCheckCode(prettyName, n, (m * sdim).toString)}
-           |double $total = 0.0;
-           |for (int $j = 0; $j < $m; $j++) {
-           |  long $code = ($packed >>> ($bits * $j)) & ${mask}L;
-           |  if ($code >= $ksub) throw new IllegalArgumentException(
-           |    "$prettyName: sub-code " + $code + " out of range (ksub=$ksub)");
-           |  int $base = ($j * $ksub + (int) $code) * $sdim;
-           |  double $sub = 0.0;
-           |  for (int $i = 0; $i < $sdim; $i++) {
-           |    ${guardCode(guard, prettyName, x, s"($j * $sdim + $i)")}
-           |    $sub += $x.getDouble($j * $sdim + $i) * $cbRef[$base + $i];
-           |  }
-           |  $total += $sub;
-           |}
-           |${ev.value} = $total;
-         """.stripMargin
-      })
+      val k = ctx.addReferenceObj("kernel", this)
+      defineCodeGen(ctx, ev, (x, packed) => s"$k.kernel($x, $packed)")
     }
 
     override protected def withNewChildrenInternal(

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.lit
 
 import graft.expressions.VectorExpressions
 
@@ -11,8 +10,8 @@ import graft.expressions.VectorExpressions
   * similar") from two `ARRAY<DOUBLE>` columns.
   *
   * All score kernels are native codegen expressions
-  * ([[graft.expressions.VectorExpressions]]) — one generated loop per row,
-  * norms evaluated once, inside whole-stage codegen.
+  * ([[graft.expressions.VectorExpressions]]) — one loop body per kernel,
+  * called once per row from whole-stage codegen, norms evaluated once.
   *
   * `scorePrenormalized` is the pairwise-loop form: for Cosine it assumes
   * both inputs were already L2-normalized once per row (so the O(dim) norm
@@ -52,7 +51,7 @@ object Metric {
   case object Euclidean extends Metric {
     val name = "euclidean"
     def score(a: Column, b: Column): Column =
-      lit(1.0) / (lit(1.0) + VectorExpressions.euclideanDistance(a, b))
+      VectorFunctions.euclideanSimilarity(a, b)
     def scorePrenormalized(a: Column, b: Column): Column = score(a, b)
     def prepare(v: Column): Column = v
   }

@@ -9,8 +9,9 @@ import graft.expressions.VectorExpressions
   *
   * The primary entry points ([[dot]], [[cosine]], [[l2Normalize]],
   * [[euclideanDistance]]) are native codegen Catalyst expressions
-  * ([[graft.expressions.VectorExpressions]]): one generated per-row loop,
-  * norms evaluated exactly once, fully inside whole-stage codegen.
+  * ([[graft.expressions.VectorExpressions]]): one loop body per kernel,
+  * called once per row from whole-stage codegen, norms evaluated exactly
+  * once.
   *
   * The `hof*` variants are the equivalent declarative higher-order-function
   * formulations (`transform` / `zip_with` / `aggregate`). They are kept as

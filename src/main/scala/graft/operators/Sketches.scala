@@ -374,7 +374,7 @@ object Sketches {
     * `bit_count(a ^ b)`). */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = Partitioning.spread(docs).select(col(idCol),
-      explode(split(trim(col(textCol)), " +")).as("tok"))
+      explode(TextOps.tokens(col(textCol))).as("tok"))
       .withColumn("h", md5(col("tok")))
     val highHex = Seq("8", "9", "a", "b", "c", "d", "e", "f")
     val sums = (0 until 32).map { b =>

@@ -43,7 +43,7 @@ object TextOps {
     * empty token both Spark `split` and DuckDB `string_split_regex`
     * produce). */
   def tokenCount(text: Column): Column =
-    size(split(trim(text), " +")).cast("long")
+    size(tokens(text)).cast("long")
 
   /** Per-language corpus statistics (north-star text analysis): doc
     * count, char and token sums and means. Means are computed as

@@ -178,7 +178,7 @@ object VectorSearch {
 
   /** Deterministic sign-LSH bucket id over `bits` arithmetic hyperplanes:
     * `bucket = Σ_j 2^j · [v·h_j > 0]`. Since r14 this is the fused
-    * [[VectorExpressions.VecSignLshBuckets]] kernel — one generated loop
+    * [[VectorExpressions.VecSignLshBuckets]] kernel — one loop body
     * over a precomputed plane matrix, bit-identical to the per-plane
     * `vec_dot`-against-literal composition (LshKernelSpec pins it) but
     * immune to the HotSpot huge-method cliff the composition hit past ~4

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -22,7 +25,7 @@ import graft.operators.VectorSearch
   * adversarial generated vectors (zeros, denormal scales, mixed signs),
   * real fixture vectors, and the error/null contracts.
   */
-class LshKernelSpec extends SparkSpec {
+class LshKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val Dim = Tables.EmbeddingDim
@@ -93,20 +96,17 @@ class LshKernelSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, Sf0001).select("vec_id", "embedding")
     val prepared = emb.withColumn("embedding",
       Metric.Cosine.prepare(col("embedding")))
-    val f = prepared.select(col("vec_id"),
+    // a new Dataset per call, so each conf below plans its own physical plan
+    def fused() = prepared.select(col("vec_id"),
       VectorExpressions.signLshBuckets(col("embedding"), Dim, 12, 8).as("bk"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val c = prepared.select(col("vec_id") +: (0 until 8).map(b =>
       composedBucketBand(col("embedding"), Dim, 12, b).as(s"b$b")): _*)
-    val fm = f.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val fm = withSQLConf(CodegenOnly: _*)(fused())
     val cm = c.collect().map(r => r.getLong(0) -> (1 to 8).map(r.getLong(_))).toMap
     assert(fm == cm)
-    // interpreted path (eval) == codegen path: force interpreted by
-    // turning whole-stage codegen off for one evaluation
-    withSQLConf("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      val fi = f.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      assert(fi == fm)
-    }
+    // interpreted path (eval) == generated path
+    assert(withSQLConf(Interpreted: _*)(fused()) == fm)
   }
 
   test("fused nearest-centroids == sort_array(composed structs) slice, every metric") {
@@ -205,8 +205,7 @@ class LshKernelSpec extends SparkSpec {
           java.lang.Double.doubleToRawLongBits(c(id)),
           s"ksub=$ksub id=$id fused=$sc composed=${c(id)}") }
       // interpreted path == codegen path
-      withSQLConf("spark.sql.codegen.wholeStage" -> "false",
-        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
+      withSQLConf(Interpreted: _*) {
         val fi = df.select(col("id"),
           VectorExpressions.pqAdcScore(col("q"), col("packed"), codebooks)
             .as("sc")).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -267,6 +266,26 @@ class LshKernelSpec extends SparkSpec {
     assert(exd.getMessage.contains("0..ksub-1"))
   }
 
+  test("pqEncode at m = 16 compiles no generated method past HotSpot's 8,000-byte limit") {
+    // HotSpot's HugeMethodLimit: a longer method is never JIT-compiled
+    // (-XX:+DontCompileHugeMethods is the default) and runs interpreted.
+    // It holds only while each fused kernel adds one call to the
+    // stage's method, not its loops (MIGRATION, "Fused per-row kernels").
+    val emb = Tables.embeddings(spark, Sf0001).select("vec_id", "embedding")
+    val cbs = VectorSearch.pqCodebooks(emb, "embedding", "vec_id", 16, 16)
+    val enc = VectorSearch.pqEncode(emb, "embedding", "vec_id", cbs)
+    assert(enc.count() == emb.count())
+    val stages = collect(enc.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }
+    assert(stages.nonEmpty)
+    stages.foreach { w =>
+      val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
+      assert(stats.maxMethodCodeSize < 8000,
+        s"largest generated method ${stats.maxMethodCodeSize} bytes")
+    }
+  }
+
   test("error contracts: length mismatch raises; null input → null; null element raises") {
     val df = Seq((1L, Array(1.0, 2.0, 3.0))).toDF("id", "v")
     val ex = intercept[Exception] {
@@ -289,14 +308,5 @@ class LshKernelSpec extends SparkSpec {
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Long](1)))
       .toMap
     assert(out(1L) == null && out(2L) != null)
-  }
-
-  private def withSQLConf[A](confs: (String, String)*)(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

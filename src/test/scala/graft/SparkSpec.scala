@@ -52,6 +52,30 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * deleted when the suite ends. */
   def suiteScratchDir(prefix: String): String = newDir(prefix, suiteDirs)
 
+  /** Run `body` with the session confs set, then restore their
+    * previous values. */
+  def withSQLConf[A](confs: (String, String)*)(body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Generated code only: whole-stage codegen on, no interpreted
+    * projections, and a generated class that fails to compile raises
+    * instead of falling back to interpreted eval. */
+  val CodegenOnly: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "true",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+    "spark.sql.codegen.fallback" -> "false")
+
+  /** Interpreted eval only: no whole-stage and no generated projections. */
+  val Interpreted: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test) finally deleteAll(testDirs)
 

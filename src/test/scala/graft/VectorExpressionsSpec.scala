@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.functions.{VectorFunctions => VF}
+import graft.expressions.VectorExpressions
+import graft.expressions.VectorExpressions.CentroidScore
+import graft.functions.{Metric, VectorFunctions => VF}
+import graft.operators.VectorSearch
 
 /** The codegen kernels against their executable HOF specification, plus
   * seeded-random property checks (cosine range, normalize idempotence).
@@ -50,6 +54,33 @@ class VectorExpressionsSpec extends SparkSpec {
         (x, y) => abs(x - y))).as(Seq("i", "d")))
       .agg(max("d")).collect()(0).getDouble(0)
     assert(elems == 0.0)
+  }
+
+  test("every kernel: generated code only (no fallback) == interpreted eval") {
+    // Both paths call the one Scala body, so a doGenCode that failed to
+    // compile would fall back to the same results: with fallback off it
+    // raises instead. Fixture parquet, not a local relation, so the
+    // optimizer cannot fold the projection before execution.
+    val emb = Tables.embeddings(spark, Sf0001).select("vec_id", "embedding")
+    val cbs = VectorSearch.pqCodebooks(emb, "embedding", "vec_id", 8, 16, Metric.Cosine)
+    val cents = emb.orderBy("vec_id").limit(8).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val (e, r) = (col("embedding"), reverse(col("embedding")))
+    def kernels(): Array[Row] = emb.select(col("vec_id") +: Seq(
+      VF.dot(e, r), VF.cosine(e, r), VF.euclideanDistance(e, r), VF.l2Normalize(e),
+      VectorExpressions.signLshBuckets(e, Tables.EmbeddingDim, 12, 8),
+      VectorExpressions.nearestCentroids(e, CentroidScore.Dot, cents, 3),
+      VectorExpressions.nearestCentroids(e, CentroidScore.EuclidSim, cents, 3),
+      VectorExpressions.nearestCentroids(e, CentroidScore.EuclidDist, cents, 1),
+      // vec_id < 500 packs in-range 4-bit sub-codes for ksub = 16
+      VectorExpressions.pqAdcScore(e, col("vec_id"), cbs),
+      VectorExpressions.quantizeStatsCol(e),
+      VectorExpressions.platformLn(abs(element_at(e, 1)) + lit(1.0))): _*)
+      .orderBy("vec_id").collect()
+    val generated = withSQLConf(CodegenOnly: _*)(kernels())
+    val interpreted = withSQLConf(Interpreted: _*)(kernels())
+    assert(generated.length == 500)
+    generated.zip(interpreted).foreach { case (g, i) => assert(g == i, s"vec_id=${g.getLong(0)}") }
   }
 
   test("property: cosine ∈ [-1-eps, 1+eps] on fixture pairs") {
