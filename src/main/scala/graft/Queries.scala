@@ -42,7 +42,7 @@ object Queries {
 
   /** 1-row frame embedding [[RagQueryText]] arithmetically — the O10 text
     * query path (api.py:164-168) with the SURVEY §2.4.3 deterministic
-    * embedding. */
+    * embedding. A constant frame: scored as a literal, not broadcast. */
   private def textQueryFrame(spark: SparkSession): DataFrame =
     spark.range(1)
       .select(VF.arithmeticEmbedding(lit(RagQueryText), EmbeddingDim).as("qvec"))

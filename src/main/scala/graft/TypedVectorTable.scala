@@ -37,7 +37,10 @@ final class TypedVectorTable(val ds: Dataset[VectorRecord], val config: VectorTa
   def insert(rows: Dataset[VectorRecord]): TypedVectorTable =
     TypedVectorTable(toTable.insert(rows.toDF()), spark)
 
-  /** O9 search against a literal query vector, typed result. */
+  /** O9 search against a literal query vector, typed result. The query
+    * is a constant 1-row frame, so it is evaluated on the driver and
+    * scored as a literal inside the corpus scan (any other query frame is
+    * broadcast, [[VectorSearch.scoreAgainst]]). */
   def search(query: Seq[Double], k: Int): Dataset[ScoredNeighbor] = {
     val q = spark.range(1).select(typedlit(query).as("__qvec"))
     VectorSearch.topK(ds.toDF(), config.vecCol, config.idCol, q, "__qvec", metric, k)

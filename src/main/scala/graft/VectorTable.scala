@@ -84,10 +84,12 @@ final class VectorTable(val df: DataFrame, val config: VectorTableConfig) {
     * matrix in process RAM (api.py keeps vectors resident between
     * requests). The cache is Spark's columnar `InMemoryRelation`
     * (codegen-scannable; spills to disk rather than OOM), so every
-    * subsequent [[search]]/[[searchText]] skips the parquet scan AND the
-    * per-row metric prep cost stays the only per-query work. At cluster
-    * scale, cache the served PROJECTION (id + vector), not every
-    * metadata column — the projected plan is what gets pinned. */
+    * subsequent [[search]]/[[searchText]] skips the parquet scan. With a
+    * constant query (see [[search]]) a search is then one job: one pass
+    * over the cached rows that metric-prepares each vector (the cache
+    * holds the raw vectors) and scores it. At cluster scale, cache the
+    * served PROJECTION (id + vector), not every metadata column — the
+    * projected plan is what gets pinned. */
   def cached(): VectorTable = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     this
@@ -99,11 +101,15 @@ final class VectorTable(val df: DataFrame, val config: VectorTableConfig) {
     this
   }
 
-  /** O9 search: top-k rows most similar to the 1-row query frame. */
+  /** O9 search: top-k rows most similar to the 1-row query frame. A
+    * constant 1-row query (literals over `spark.range(1)`, a one-row
+    * `toDF`) is evaluated on the driver and scored as a literal; any other
+    * query frame is broadcast ([[VectorSearch.scoreAgainst]]). */
   def search(query: DataFrame, queryVecCol: String, k: Int): DataFrame =
     VectorSearch.topK(df, config.vecCol, config.idCol, query, queryVecCol, metric, k)
 
-  /** O10 text query (api.py:164-168): embed the query text, then search. */
+  /** O10 text query (api.py:164-168): embed the query text, then search.
+    * The embedded text is a constant query, scored as a literal. */
   def searchText(spark: SparkSession, text: String, k: Int): DataFrame = {
     val q = spark.range(1)
       .select(VF.arithmeticEmbedding(lit(text), config.dim).as("__qvec"))

@@ -1,8 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNullable, Literal, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation, Project, Range}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ColumnGlue
 
 import graft.expressions.VectorExpressions
 import graft.functions.Metric
@@ -22,6 +26,8 @@ import graft.functions.Metric
   *    (O(N·M·dim)) — the norm never recomputes inside the pair loop, and
   *    the single-expression kernel cannot be torn apart by
   *    `CollapseProject` (the round-1 O(dim²) defect).
+  *  - A constant single query ([[scoreAgainst]]) is a literal in the
+  *    corpus projection: one job per search, nothing broadcast.
   *  - [[knnJoin]] does NOT broadcast by default: at 100 TB the data side
   *    does not fit an executor. Pass `broadcastData = true` only when the
   *    data side is a known-small dimension table; otherwise use
@@ -35,9 +41,14 @@ import graft.functions.Metric
 object VectorSearch {
 
   /** Append a `score` column: every row of `data` scored against the single
-    * row of `query` (columns `queryPrefix*`). Declarative cross-join against
-    * a broadcast 1-row frame — no driver-side collect. Both sides are
-    * metric-prepared (cosine → L2-normalized) once, outside the pair loop.
+    * row of `query` (its columns ride along, `queryVecCol` dropped). A
+    * constant 1-row query is evaluated on the driver and scored as a
+    * literal; any other query frame is broadcast. The literal form scores
+    * inside the corpus scan in one job; the broadcast form runs a job for
+    * the broadcast first. Both sides are metric-prepared (cosine →
+    * L2-normalized) once, outside the pair loop, by the same kernel body on
+    * the driver and in the generated code, so both forms give the same
+    * scores bit for bit.
     */
   def scoreAgainst(
       data: DataFrame,
@@ -47,11 +58,43 @@ object VectorSearch {
       metric: Metric): DataFrame = {
     val prepared = prepareColumn(data, vecCol, metric)
     val preparedQ = prepareColumn(query, queryVecCol, metric)
-    prepared
-      .crossJoin(broadcast(preparedQ))
+    val withQuery = constantRow(preparedQ) match {
+      case Some(literals) => prepared.select(col("*") +: literals: _*)
+      case None => prepared.crossJoin(broadcast(preparedQ))
+    }
+    withQuery
       .withColumn("score",
         metric.scorePrenormalized(col(vecCol), col(queryVecCol)))
       .drop(queryVecCol)
+  }
+
+  /** The one row of a constant query frame as literal columns, each under
+    * its own name, data type and nullability. Constant means the optimized
+    * plan is a projection of deterministic, reference-free, evaluable
+    * expressions over `OneRowRelation` or a one-element `Range`, or a
+    * one-row `LocalRelation`; any other frame (no rows, several rows, a
+    * nondeterministic expression, a read of data, a stream) gives None.
+    * This is a test of plan shape, not of size. */
+  private def constantRow(query: DataFrame): Option[Seq[Column]] = {
+    def constant(e: Expression): Boolean =
+      e.deterministic && e.references.isEmpty && !e.exists(_.isInstanceOf[Unevaluable])
+    def oneRow(p: LogicalPlan): Boolean = p match {
+      case _: OneRowRelation => true
+      case r: Range => r.numElements == 1
+      case _ => false
+    }
+    // only a batch plan can be optimized outside a streaming query
+    val values = if (query.isStreaming) None else query.queryExecution.optimizedPlan match {
+      case Project(exprs, child) if oneRow(child) && exprs.forall(constant) =>
+        Some(exprs.map(_.eval(InternalRow.empty)))
+      case l: LocalRelation if l.data.size == 1 =>
+        Some(l.output.zipWithIndex.map { case (a, i) => l.data.head.get(i, a.dataType) })
+      case _ => None
+    }
+    values.map(_.zip(query.schema).map { case (v, f) =>
+      val literal = Literal(InternalRow.copyValue(v), f.dataType)
+      ColumnGlue.column(if (f.nullable) KnownNullable(literal) else literal).as(f.name)
+    })
   }
 
   /** Replace `vecCol` with its metric-prepared form. For cosine this is the

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graph, Sketches}
@@ -152,35 +148,12 @@ class GraphSpec extends SparkSpec {
   test("job-count guard: components + sizes over sf0.001 minhash candidates") {
     val cand = Sketches.minhashCandidates(Tables.documents(spark, Sf0001), "doc_id", "text")
       .localCheckpoint()
-    val sc = spark.sparkContext
-    val (measured, marker) = ("graph-job-guard", "graph-job-guard-marker")
-    val jobs = new AtomicInteger()
-    val drained = new CountDownLatch(1)
-    // the bus delivers events in order, so once the marker job's start
-    // arrives every measured job's start has been counted
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`measured`) => jobs.incrementAndGet()
-          case Some(`marker`) => drained.countDown()
-          case _ =>
-        }
+    val (sized, jobs) = countJobs {
+      Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id")).collect()
     }
-    def inGroup[T](g: String)(body: => T): T = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val sized = inGroup(measured) {
-        Graph.componentSizes(Graph.connectedComponents(cand, "a_id", "b_id")).collect()
-      }
-      assert(sized.nonEmpty)
-      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
-      assert(drained.await(60, TimeUnit.SECONDS))
-      // measured: 9 (one round of 5, componentSizes 4); one job of slack
-      info(s"jobs: ${jobs.get()}")
-      assert(jobs.get() <= 10, s"${jobs.get()} jobs")
-    } finally sc.removeSparkListener(listener)
+    assert(sized.nonEmpty)
+    // measured: 9 (one round of 5, componentSizes 4); one job of slack
+    info(s"jobs: $jobs")
+    assert(jobs <= 10, s"$jobs jobs")
   }
 }

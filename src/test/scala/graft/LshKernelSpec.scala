@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -63,15 +64,31 @@ class LshKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .map { case (v, i) => (i.toLong, v.toArray) }.toDF("id", "v")
   }
 
+  /** Collect `df` through generated code only. The optimizer's
+    * `ConvertToLocalRelation` is excluded: over a local `toDF` frame it
+    * would evaluate the projection on the driver, interpreted, before
+    * execution. Fails unless the plan holds a whole-stage codegen stage.
+    * The composed reference forms are left to that driver eval, so each
+    * fused == composed case compares generated code with interpreted. */
+  private def generated(df: => DataFrame): Array[Row] =
+    withSQLConf(CodegenOnly :+
+        ("spark.sql.optimizer.excludedRules" -> ConvertToLocalRelation.ruleName): _*) {
+      val d = df
+      val rows = d.collect()
+      val plan = d.queryExecution.executedPlan
+      assert(collect(plan) { case w: WholeStageCodegenExec => w }.nonEmpty, plan.toString)
+      rows
+    }
+
   test("fused sign-LSH buckets == composed per-band CASE-sum form, all bands") {
     for ((dim, bits, bands, seed) <- Seq((8, 4, 3, 11L), (17, 12, 8, 12L),
         (64, 12, 8, 13L), (5, 1, 1, 14L), (3, 20, 2, 15L))) {
       val df = vecFrame(dim, 80, seed)
-      val fused = df.select(col("id"),
-        VectorExpressions.signLshBuckets(col("v"), dim, bits, bands).as("bk"))
+      val fused = generated(df.select(col("id"),
+        VectorExpressions.signLshBuckets(col("v"), dim, bits, bands).as("bk")))
       val composed = df.select(col("id") +: (0 until bands).map(b =>
         composedBucketBand(col("v"), dim, bits, b).as(s"b$b")): _*)
-      val f = fused.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val f = fused.map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       val c = composed.collect()
         .map(r => r.getLong(0) -> (1 to bands).map(r.getLong(_))).toMap
       assert(f.keySet == c.keySet)
@@ -82,8 +99,8 @@ class LshKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("fused buckets with bandOffset == composed band at that absolute index") {
     val df = vecFrame(Dim, 60, 21L)
     for (band <- Seq(0, 1, 5, 7)) {
-      val f = df.select(col("id"),
-        VectorSearch.lshBucketBand(col("v"), Dim, 8, band).as("b")).collect()
+      val f = generated(df.select(col("id"),
+        VectorSearch.lshBucketBand(col("v"), Dim, 8, band).as("b")))
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val c = df.select(col("id"),
         composedBucketBand(col("v"), Dim, 8, band).as("b")).collect()
@@ -118,12 +135,12 @@ class LshKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         case Metric.Euclidean => VectorExpressions.CentroidScore.EuclidSim
         case _ => VectorExpressions.CentroidScore.Dot
       }
-      val fused = df.select(col("id"),
-        VectorExpressions.nearestCentroids(col("v"), mode, centGen, n).as("p"))
+      val fused = generated(df.select(col("id"),
+        VectorExpressions.nearestCentroids(col("v"), mode, centGen, n).as("p")))
       val composed = df.select(col("id"),
         slice(sort_array(composedStructs(col("v"), centGen, metric)), 1,
           n).as("p"))
-      val fm = fused.collect().map(r => r.getLong(0) ->
+      val fm = fused.map(r => r.getLong(0) ->
         r.getSeq[org.apache.spark.sql.Row](1).map(x =>
           (x.getDouble(0), x.getLong(1)))).toMap
       val cm = composed.collect().map(r => r.getLong(0) ->
@@ -140,17 +157,17 @@ class LshKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val codebook = vecFrame(s, 16, 41L).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
     val df = vecFrame(s, 60, 42L)
-    val fused = df.select(col("id"),
+    val fused = generated(df.select(col("id"),
       element_at(VectorExpressions.nearestCentroids(col("v"),
         VectorExpressions.CentroidScore.EuclidDist, codebook, 1), 1)
-        .getField("cid").as("code"))
+        .getField("cid").as("code")))
     val composed = df.select(col("id"),
       array_min(array(codebook.map { case (code, cvec) =>
         struct(
           VectorExpressions.euclideanDistance(col("v"), typedlit(cvec)).as("d"),
           lit(code).as("code"))
       }: _*)).getField("code").as("code"))
-    val fm = fused.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val fm = fused.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cm = composed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fm == cm)
   }
@@ -193,9 +210,9 @@ class LshKernelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           (i.toLong, v.toArray, packed)
         }
       val df = rows.toDF("id", "q", "packed")
-      val f = df.select(col("id"),
+      val f = generated(df.select(col("id"),
         VectorExpressions.pqAdcScore(col("q"), col("packed"), codebooks)
-          .as("sc")).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+          .as("sc"))).map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val c = df.select(col("id"),
         composedAdcScore(col("q"), col("packed"), codebooks).as("sc"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -45,6 +45,21 @@ class RagSpec extends SparkSpec {
     assert(context == "only")
   }
 
+  test("answerFromIndex over a cached index runs one job, with no broadcast") {
+    val index = Rag.buildIndex(Tables.documents(spark, Sf0001), "doc_id", "text",
+      chunkSize = 100).cached()
+    try {
+      index.df.count() // fill the cache outside the counted jobs
+      val (answer, built) = countJobs(
+        Rag.answerFromIndex(spark, index, "text", "spark window join", 3))
+      assert(built == 0, s"building ran $built jobs")
+      val (rows, ran) = countJobs(answer.collect())
+      assert(ran == 1, s"collecting ran $ran jobs")
+      assert(rows.length == 1)
+      assert(broadcastNodes(answer).isEmpty, answer.queryExecution.executedPlan.toString)
+    } finally index.uncached()
+  }
+
   test("buildIndex: end-to-end chunk index + text retrieval (rag.py:27-52)") {
     val docs = Tables.documents(spark, Sf0001).limit(50)
     val index = Rag.buildIndex(docs, "doc_id", "text", chunkSize = 100)

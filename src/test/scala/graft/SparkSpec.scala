@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ListBuffer
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.scalatest.{BeforeAndAfterAll, Outcome}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,6 +69,46 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Run `body` and count the Spark jobs it starts (jobs that other
+    * threads start for it, such as a broadcast, carry its job group).
+    * The listener bus delivers events in order, so once a marker job's
+    * start arrives every job of `body` has been counted. */
+  def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val (measured, marker) = ("counted-jobs", "counted-jobs-marker")
+    val jobs = new AtomicInteger()
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`measured`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.countDown()
+          case _ =>
+        }
+    }
+    def inGroup[T](g: String)(b: => T): T = {
+      sc.setJobGroup(g, g)
+      try b finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = inGroup(measured)(body)
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The `BroadcastNestedLoopJoin` and `BroadcastExchange` nodes of
+    * `df`'s executed plan, adaptive stages included. */
+  def broadcastNodes(df: DataFrame): Seq[SparkPlan] =
+    Plans.collect(df.queryExecution.executedPlan) {
+      case p: BroadcastNestedLoopJoinExec => p
+      case p: BroadcastExchangeExec => p
+    }
 
   /** Generated code only: whole-stage codegen on, no interpreted
     * projections, and a generated class that fails to compile raises

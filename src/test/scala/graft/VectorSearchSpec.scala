@@ -1,13 +1,17 @@
 package graft
 
+import java.lang.Double.doubleToRawLongBits
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.Metric
+import graft.functions.{Metric, VectorFunctions => VF}
 import graft.operators.VectorSearch
 
 /** Top-k and knn-join semantics: tie-break determinism, k-clamp
   * (reference api.py:121), empty input (api.py:107-108), self-exclusion,
-  * and knnJoin == per-query topK agreement. */
+  * knnJoin == per-query topK agreement, and the constant-query literal
+  * path == the broadcast path, bit for bit. */
 class VectorSearchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -35,6 +39,77 @@ class VectorSearchSpec extends SparkSpec {
     val rows = VectorSearch.topK(emb.filter(lit(false)), "embedding", "vec_id",
       qv, "qvec", Metric.Cosine, 5).count()
     assert(rows == 0)
+  }
+
+  private def vectors(ids: Long*): Seq[Seq[Double]] =
+    emb.filter(col("vec_id").isin(ids: _*)).orderBy("vec_id")
+      .select("embedding").collect().map(_.getSeq[Double](0)).toSeq
+
+  /** The whole corpus ranked against `query`: (id, rank, raw score bits)
+    * per row, the output schema, and whether the plan broadcasts. */
+  private def ranked(query: DataFrame, metric: Metric) = {
+    val top = VectorSearch.topK(emb, "embedding", "vec_id", query, "qvec",
+      metric, emb.count().toInt)
+    val rows = top.collect().toSeq.zipWithIndex.map { case (r, i) =>
+      (r.getAs[Long]("vec_id"), i + 1, doubleToRawLongBits(r.getAs[Double]("score")))
+    }
+    (rows, top.schema, broadcastNodes(top).nonEmpty)
+  }
+
+  test("a constant query scores as a literal, bit for bit the broadcast path, every metric") {
+    val Seq(v) = vectors(0L)
+    val text = "hello graft"
+    val forms: Seq[(String, () => DataFrame)] = Seq(
+      "range(1) typedLit" -> (() => spark.range(1).select(typedLit(v).as("qvec"))),
+      // a nullable extra column rides along with its nullability
+      "one-row toDF" -> (() => Seq((Option(7L), v)).toDF("tag", "qvec")),
+      "searchText embedding" -> (() => spark.range(1).select(
+        VF.arithmeticEmbedding(lit(text), Tables.EmbeddingDim).as("qvec"))),
+      "hashEmbedding" -> (() => spark.range(1).select(
+        VF.hashEmbedding(lit(text), Tables.EmbeddingDim).as("qvec"))))
+    for (metric <- Metric.all; (name, query) <- forms) {
+      val at = s"${metric.name}, $name"
+      val (literal, literalSchema, literalBroadcasts) = ranked(query(), metric)
+      // a checkpointed frame reads data, so it takes the broadcast path
+      val (broadcast, broadcastSchema, broadcasts) =
+        ranked(query().localCheckpoint(), metric)
+      assert(!literalBroadcasts && broadcasts, at)
+      assert(literalSchema == broadcastSchema, at)
+      val firstDiff = literal.zip(broadcast).find { case (a, b) => a != b }
+      assert(literal.length == broadcast.length && firstDiff.isEmpty, s"$at: $firstDiff")
+    }
+  }
+
+  test("zero-row, two-row, nondeterministic and streaming query frames keep the cross join") {
+    val Seq(v, w) = vectors(0L, 1L)
+    for (none <- Seq(spark.range(0).select(typedLit(v).as("qvec")),
+        Seq.empty[Tuple1[Seq[Double]]].toDF("qvec")))
+      assert(VectorSearch.topK(emb, "embedding", "vec_id", none, "qvec",
+        Metric.Cosine, 5).collect().isEmpty)
+
+    // two rows: every corpus row scored against each, as two one-row queries
+    def scores(df: DataFrame) = df.select("q", "vec_id", "score").collect()
+      .map(r => (r.getLong(0), r.getLong(1), doubleToRawLongBits(r.getDouble(2)))).toSet
+    val two = VectorSearch.scoreAgainst(emb, "embedding",
+      Seq((0L, v), (1L, w)).toDF("q", "qvec"), "qvec", Metric.Cosine)
+    val each = Seq(0L -> v, 1L -> w).flatMap { case (q, qv) =>
+      scores(VectorSearch.scoreAgainst(emb, "embedding",
+        spark.range(1).select(lit(q).as("q"), typedLit(qv).as("qvec")), "qvec", Metric.Cosine))
+    }.toSet
+    val got = scores(two)
+    assert(got.size == each.size && (got diff each).isEmpty, (got diff each).take(3))
+    assert(broadcastNodes(two).nonEmpty)
+
+    // a nondeterministic column: broadcast, same ranking as the constant query
+    val (noisy, _, noisyBroadcasts) = ranked(
+      spark.range(1).select(typedLit(v).as("qvec"), rand(7).as("r")), Metric.Cosine)
+    val (constant, _, _) = ranked(spark.range(1).select(typedLit(v).as("qvec")), Metric.Cosine)
+    assert(noisyBroadcasts)
+    assert(noisy == constant)
+
+    // a stream is never constant: the scored frame is a stream too
+    val stream = spark.readStream.format("rate").load().select(typedLit(v).as("qvec"))
+    assert(VectorSearch.scoreAgainst(emb, "embedding", stream, "qvec", Metric.Cosine).isStreaming)
   }
 
   test("knnJoin agrees with per-query topK for a sample query") {

@@ -160,6 +160,30 @@ class VectorTableSpec extends SparkSpec {
     assert(t.df.count() == 0)
   }
 
+  test("a cached search runs one job: building it runs none, and nothing is broadcast") {
+    val served = VectorTable(
+      Tables.embeddings(spark, Sf0001).select("vec_id", "embedding"),
+      VectorTableConfig(dim = Tables.EmbeddingDim, metric = "cosine"))
+      .cached()
+    try {
+      served.df.count() // fill the cache outside the counted jobs
+      val qvec = served.df.filter(col("vec_id") === 3)
+        .select("embedding").head().getSeq[Double](0)
+      val searches = Seq(
+        "search" -> (() => served.search(
+          spark.range(1).select(typedLit(qvec).as("qvec")), "qvec", 5)),
+        "searchText" -> (() => served.searchText(spark, "hello graft", 5)))
+      for ((name, search) <- searches) {
+        val (hits, built) = countJobs(search())
+        assert(built == 0, s"$name: building ran $built jobs")
+        val (rows, ran) = countJobs(hits.collect())
+        assert(ran == 1, s"$name: collecting ran $ran jobs")
+        assert(rows.length == 5)
+        assert(broadcastNodes(hits).isEmpty, s"$name:\n${hits.queryExecution.executedPlan}")
+      }
+    } finally served.uncached()
+  }
+
   test("cached() serves repeated searches from the in-memory relation") {
     val served = VectorTable(
       Tables.embeddings(spark, Sf0001).select("vec_id", "embedding"),
