@@ -57,10 +57,10 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point injecting the vector kernels and
-  * the [[graft.plans.ExpandRangeJoin]] / [[graft.plans.ExpandOverlapJoin]]
-  * optimizer rules (expand the custom [[graft.plans.RangeJoinPlan]] and
-  * [[graft.plans.OverlapJoinPlan]] nodes into their bucketed equi-join
-  * forms). */
+  * the [[graft.plans.ExpandOverlapJoin]] optimizer rule, which expands
+  * the custom [[graft.plans.OverlapJoinPlan]] node into its bucketed
+  * equi-join form — the one interval join: a range join's point is the
+  * interval [pt, pt]. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach { case (name, arity, clazz, builder) =>
@@ -69,7 +69,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(clazz.getName, name),
         GraftFunctions.checkedBuilder(name, arity, builder)))
     }
-    ext.injectOptimizerRule(_ => graft.plans.ExpandRangeJoin)
     ext.injectOptimizerRule(_ => graft.plans.ExpandOverlapJoin)
   }
 }

@@ -18,8 +18,9 @@ import graft.operators.{Sketches, Splits}
   *  - [[md5Long]] is the SQL mirror of `Sketches.md5Long` (md5 → first
   *    15 hex digits → BIGINT), the hash format every sketch, split and
   *    sampler relies on; [[shingleHash]], [[hashValue]] and
-  *    [[hashBucket]] mirror the Spark functions of the same names, and
-  *    [[tokens]] mirrors `TextOps.tokens`.
+  *    [[hashBucket]] mirror the Spark functions of the same names,
+  *    [[tokens]] mirrors `TextOps.tokens` and [[wordNgrams]] mirrors
+  *    `TextOps.wordNgramsOfTokens`.
   */
 object Oracle {
 
@@ -45,6 +46,14 @@ object Oracle {
     * exactly as Spark's `split(trim(text), " +")`, and empty text gives
     * one empty token in both. */
   def tokens(expr: String): String = s"string_split_regex(trim($expr), ' +')"
+
+  /** The word n-grams of token list `t`, space-joined, in order — mirror
+    * of `TextOps.wordNgramsOfTokens`: a list shorter than `n` gives an
+    * empty list (`range(1, 1)`). */
+  def wordNgrams(t: String, n: Int): String = {
+    val parts = (0 until n).map(j => if (j == 0) s"$t[i]" else s"$t[i + $j]")
+    s"list_transform(range(1, greatest(len($t) - ${n - 1}, 0) + 1), i -> ${parts.mkString(" || ' ' || ")})"
+  }
 
   /** Left-fold sum with 0.0 seed — bit-exact mirror of Spark's
     * `aggregate(xs, lit(0.0), (acc, x) => acc + x)`. */

@@ -416,6 +416,17 @@ object Queries {
   private def featureBucketSql(tok: String): String =
     s"((${Oracle.shingleHash(tok)}) % $FeatureHashK)"
 
+  /** Oracle mirror of [[TextOps.featureHash]]'s per-document bag: CTEs
+    * `toks(doc_id, token)` and `b(doc_id, bucket, c)`, the count of each
+    * document's tokens in each bucket. */
+  private val hashedBagCtes: String =
+    s"""toks AS (
+       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
+       |  FROM documents),
+       |b AS (
+       |  SELECT doc_id, ${featureBucketSql("token")} AS bucket, count(*) AS c
+       |  FROM toks GROUP BY 1, 2)""".stripMargin
+
   /** Vocabulary-free feature extraction ([[TextOps.featureHash]],
     * hashing trick): per-doc certificate over the sparse hashed
     * bag-of-words — nonzeros, token total, squared l2 norm and max
@@ -431,21 +442,14 @@ object Queries {
         max("count").as("max_count"))
       .orderBy("doc_id")
 
-  private val qFeatureHashSql: String = {
-    val bucket = featureBucketSql("token")
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
-       |  FROM documents),
-       |b AS (
-       |  SELECT doc_id, $bucket AS bucket, count(*) AS c
-       |  FROM toks GROUP BY 1, 2)
+  private val qFeatureHashSql: String =
+    s"""WITH $hashedBagCtes
        |SELECT doc_id,
        |       CAST(count(*) AS BIGINT) AS nnz,
        |       CAST(sum(c) AS BIGINT) AS n_tokens,
        |       CAST(sum(c * c) AS BIGINT) AS l2sq,
        |       CAST(max(c) AS BIGINT) AS max_count
        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
   /** Vocabulary-free quality classifier
     * ([[TextOps.hashedLinearScore]]): the GPT-3-style hashed-BoW
@@ -459,14 +463,8 @@ object Queries {
       .select(col("doc_id"), col("score_int"), col("label"))
       .orderBy("doc_id")
 
-  private val qQualityClassifierSql: String = {
-    val bucket = featureBucketSql("token")
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
-       |  FROM documents),
-       |b AS (
-       |  SELECT doc_id, $bucket AS bucket, count(*) AS c
-       |  FROM toks GROUP BY 1, 2),
+  private val qQualityClassifierSql: String =
+    s"""WITH $hashedBagCtes,
        |s AS (
        |  SELECT doc_id,
        |         CAST(sum(c * (((bucket + 1) * 7919) % 193 - 96)) AS BIGINT) AS score_int
@@ -474,7 +472,6 @@ object Queries {
        |SELECT doc_id, score_int,
        |       CAST(CASE WHEN score_int >= 0 THEN 1 ELSE 0 END AS INTEGER) AS label
        |FROM s ORDER BY doc_id""".stripMargin
-  }
 
   /** The trained-weight classifier ([[TextOps.hashedLinearScoreWeighted]])
     * — certifies the BROADCAST WEIGHT TABLE mechanism the arithmetic
@@ -497,14 +494,8 @@ object Queries {
       .select(col("doc_id"), col("score_int"), col("label"))
       .orderBy("doc_id")
 
-  private val qClassifierTrainedSql: String = {
-    val bucket = featureBucketSql("token")
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(${Oracle.tokens("text")}) AS token
-       |  FROM documents),
-       |b AS (
-       |  SELECT doc_id, $bucket AS bucket, count(*) AS c
-       |  FROM toks GROUP BY 1, 2),
+  private val qClassifierTrainedSql: String =
+    s"""WITH $hashedBagCtes,
        |w AS (
        |  SELECT range AS bucket, (range * 37 + 11) % 201 - 100 AS weight
        |  FROM range($FeatureHashK) WHERE (range * 37 + 11) % 5 <> 0),
@@ -515,7 +506,6 @@ object Queries {
        |SELECT doc_id, score_int,
        |       CAST(CASE WHEN score_int >= 0 THEN 1 ELSE 0 END AS INTEGER) AS label
        |FROM s ORDER BY doc_id""".stripMargin
-  }
 
   /** Top-k for [[qVocabTopk]] — deep enough to cross the content-word
     * boundary below the corpus's handful of boilerplate tokens. */
@@ -534,8 +524,7 @@ object Queries {
        |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
-       |         unnest(list_transform(range(1, greatest(len(t) - ${TrigramN - 1}, 0) + 1),
-       |           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS ngram
+       |         unnest(${Oracle.wordNgrams("t", TrigramN)}) AS ngram
        |  FROM toks),
        |per_doc AS (
        |  SELECT ngram, doc_id, count(*) AS c FROM ng GROUP BY 1, 2)
@@ -559,8 +548,7 @@ object Queries {
        |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
-       |         unnest(list_transform(range(1, greatest(len(t) - ${TrigramN - 1}, 0) + 1),
-       |           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS ngram
+       |         unnest(${Oracle.wordNgrams("t", TrigramN)}) AS ngram
        |  FROM toks),
        |g AS (
        |  SELECT doc_id, ${Oracle.md5Long("ngram")} AS gh
@@ -600,14 +588,12 @@ object Queries {
       .orderBy("doc_id")
   }
 
-  private val qDecontaminateSql: String = {
-    val parts = (0 until ContamN).map(j => s"t[i + $j]").mkString(" || ' ' || ")
+  private val qDecontaminateSql: String =
     s"""WITH toks AS (
        |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
-       |         unnest(list_transform(range(1, greatest(len(t) - ${ContamN - 1}, 0) + 1),
-       |           i -> $parts)) AS ngram
+       |         unnest(${Oracle.wordNgrams("t", ContamN)}) AS ngram
        |  FROM toks),
        |g AS (
        |  SELECT doc_id, ${Oracle.md5Long("ngram")} AS gh
@@ -617,7 +603,6 @@ object Queries {
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hit_grams
        |FROM tr JOIN ev USING (gh)
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
 
   /** North-star vocabulary heavy hitters: top-[[VocabK]] tokens by
     * occurrence with document frequencies ([[TextOps.vocabTopK]]) — the
@@ -898,8 +883,7 @@ object Queries {
        |uc AS (SELECT w, count(*) AS c FROM uni GROUP BY w),
        |tot AS (SELECT sum(c) AS t FROM uc),
        |bg AS (
-       |  SELECT unnest(list_transform(range(1, greatest(len(t) - 1, 0) + 1),
-       |           i -> t[i] || ' ' || t[i + 1])) AS bigram
+       |  SELECT unnest(${Oracle.wordNgrams("t", 2)}) AS bigram
        |  FROM toks),
        |bc AS (
        |  SELECT bigram, count(*) AS n_pair FROM bg GROUP BY bigram
@@ -1127,8 +1111,7 @@ object Queries {
        |  SELECT doc_id, ${Oracle.tokens("text")} AS t FROM documents),
        |ng AS (
        |  SELECT doc_id,
-       |         unnest(list_transform(range(1, greatest(len(t) - ${TrigramN - 1}, 0) + 1),
-       |           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS ngram
+       |         unnest(${Oracle.wordNgrams("t", TrigramN)}) AS ngram
        |  FROM toks),
        |g AS (
        |  SELECT doc_id, ${Oracle.md5Long("ngram")} AS gh
@@ -4817,9 +4800,10 @@ object Queries {
     * so the intervals span the whole date axis (global bounds cover
     * ~everything → the bounds prune goes inert) while covering ~2% of
     * its 4-day buckets. The bucket-id bloom of
-    * [[graft.plans.ExpandRangeJoin]] / [[graft.plans.ExpandOverlapJoin]]
-    * is the load-bearing prune here: points in the ~98% of buckets no
-    * interval overlaps drop map-side, BELOW the bucket exchange.
+    * [[graft.plans.ExpandOverlapJoin]] (both twins: a range join's point
+    * is the interval [pt, pt]) is the load-bearing prune here: points
+    * in the ~98% of buckets no interval overlaps drop map-side, BELOW
+    * the bucket exchange.
     * Calendar predicates survive [[ScaleUp]]'s axis extension (replicas
     * shift by whole spans, so every replica contributes its own
     * Marches) — the sparsity RATIO is scale-invariant. */
@@ -4828,13 +4812,16 @@ object Queries {
 
   private val MarchOpeningsSql = "month(o.o_orderdate) = 3 AND day(o.o_orderdate) <= 3"
 
-  /** Range join via the custom [[graft.plans.RangeJoinPlan]] logical
-    * node + [[graft.plans.ExpandRangeJoin]] optimizer rule: lineitems
-    * shipped within 3 days of the date of any order in `orders` — a
-    * pure range predicate with NO equi-key, which Spark natively plans
-    * as BroadcastNestedLoopJoin (O(n·m), dead at 100 TB) and the rule
-    * expands into a bucketed equi-join (4-day buckets ⇒ ≤ 2 bucket
-    * rows per order). Epochs as LONG seconds; quantities are integral
+  /** Range join ([[Temporal.rangeJoin]]): lineitems shipped within 3
+    * days of the date of any order in `orders` — a pure range predicate
+    * with NO equi-key, which Spark natively plans as
+    * BroadcastNestedLoopJoin (O(n·m), dead at 100 TB). A point is the
+    * interval [pt, pt], so the call is the overlap join of
+    * `[ship_s, ship_s]` with the order windows: the custom
+    * [[graft.plans.OverlapJoinPlan]] node, which
+    * [[graft.plans.ExpandOverlapJoin]] expands into a bucketed
+    * equi-join (4-day buckets ⇒ one bucket row per lineitem, ≤ 2 per
+    * order). Epochs as LONG seconds; quantities are integral
     * doubles, summed as exact longs. Rows: q_range_join
     * ([[march1995]]), q_range_join_sparse ([[marchOpenings]]). */
   private def rangeJoin(s: SparkSession, dir: String, orders: Column): DataFrame = {
@@ -4871,9 +4858,9 @@ object Queries {
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Interval-OVERLAP join ([[Temporal.overlapJoin]], the custom
-    * [[graft.plans.OverlapJoinPlan]] node) — the interval×interval
-    * join type the point-in-interval [[graft.plans.RangeJoinPlan]]
-    * cannot express: lineitem shipment-activity windows
+    * [[graft.plans.OverlapJoinPlan]] node that also carries
+    * [[rangeJoin]], whose point is the interval [pt, pt]) with a real
+    * interval on both sides: lineitem shipment-activity windows
     * `[ship−1d, ship+1d]` overlapping the fulfillment windows
     * `[o_date, o_date+3d]` of the orders in `orders`. Both sides
     * explode to 4-day buckets, ONE equi-join on bucket id with the

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.PlanGlue
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.plans.{ExpandOverlapJoin, ExpandRangeJoin, OverlapJoinPlan, RangeJoinPlan}
+import graft.plans.{ExpandOverlapJoin, OverlapJoinPlan}
 
 /** Temporal joins Spark lacks as built-ins. */
 object Temporal {
@@ -132,13 +132,15 @@ object Temporal {
     * readings to validity ranges). All three columns must be LONG
     * (epoch seconds or any monotonic numeric domain).
     *
-    * Built on the custom [[graft.plans.RangeJoinPlan]] logical node +
-    * [[graft.plans.ExpandRangeJoin]] optimizer rule — Spark's native
-    * plan for a join with only range predicates is
-    * BroadcastNestedLoopJoin (O(n·m) pairs, dead at 100 TB); the rule
-    * expands the node into a bucketed equi-join (see RangeJoin.scala
-    * for the full cost model). `bucketWidth` should be ≥ the maximum
-    * interval length so each interval lands in ≤ 2 buckets.
+    * A point is the interval [pt, pt], so this is
+    * `overlapJoin(points, ptCol, ptCol, intervals, loCol, hiCol,
+    * bucketWidth)`: the overlap residual is the range predicate, the
+    * hull prune is `pt BETWEEN min(lo) AND max(hi)`, the bloom probes
+    * the point's one bucket, and the ownership test always holds for a
+    * matching pair. The points are the corpus-scale `left` side; a call
+    * whose interval side is ≥10× the points is swapped internally like
+    * any overlap join. `bucketWidth` should be ≥ the maximum interval
+    * length so each interval lands in ≤ 2 buckets.
     *
     * Output: every point column, then every interval column. Column
     * names must be disjoint across the two inputs. */
@@ -148,44 +150,13 @@ object Temporal {
       intervals: DataFrame,
       loCol: String,
       hiCol: String,
-      bucketWidth: Long): DataFrame = {
-    val spark = points.sparkSession
-    val overlap = points.columns.toSet.intersect(intervals.columns.toSet)
-    require(overlap.isEmpty,
-      s"rangeJoin requires disjoint column names; both sides have: $overlap")
-
-    val lPlan = PlanGlue.analyzed(points)
-    // Fresh exprIds on the interval side so a self-range-join (both
-    // frames derived from one source) cannot alias attributes across
-    // the two join inputs.
-    val rBase = PlanGlue.analyzed(intervals)
-    val rPlan = Project(rBase.output.map(a => Alias(a, a.name)()), rBase)
-
-    def resolve(out: Seq[Attribute], name: String, side: String): Attribute = {
-      val a = out.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(
-          s"rangeJoin: no column '$name' on the $side side"))
-      require(a.dataType == LongType,
-        s"rangeJoin: column '$name' must be LONG, got ${a.dataType.sql}")
-      a
-    }
-    val pt = resolve(lPlan.output, ptCol, "points")
-    val lo = resolve(rPlan.output, loCol, "intervals")
-    val hi = resolve(rPlan.output, hiCol, "intervals")
-
-    // Idempotent runtime registration for sessions built without
-    // `spark.sql.extensions=graft.GraftExtensions`.
-    if (!spark.experimental.extraOptimizations.exists(_ eq ExpandRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ExpandRangeJoin
-
-    PlanGlue.ofRows(spark, RangeJoinPlan(lPlan, rPlan, pt, lo, hi, bucketWidth))
-  }
+      bucketWidth: Long): DataFrame =
+    overlapJoin(points, ptCol, ptCol, intervals, loCol, hiCol, bucketWidth)
 
   /** Interval-OVERLAP join: `a ⋈ b ON a.lo <= b.hi AND b.lo <= a.hi`
-    * (inclusive overlap, all four LONG) — the interval×interval join
-    * [[rangeJoin]]'s point-in-interval node cannot express. Declares
-    * the custom [[graft.plans.OverlapJoinPlan]] node, which
+    * (inclusive overlap, all four LONG) — the one interval join;
+    * [[rangeJoin]] is this call with a point as the interval [pt, pt].
+    * Declares the custom [[graft.plans.OverlapJoinPlan]] node, which
     * [[graft.plans.ExpandOverlapJoin]] rewrites to the bucket trick
     * applied to BOTH sides (equi-join on bucket id, exact overlap as
     * residual, duplicate pairs eliminated WITHOUT a distinct by bucket
@@ -193,21 +164,19 @@ object Temporal {
     * runtime LEFT-side prune: hull bounds before the explode and a
     * bucket-id bloom below the exchange, both fed by one metadata-scale
     * subquery over the right side — so pass the CORPUS-SCALE frame as
-    * `left` and the smaller one as `right` (the [[rangeJoin]] points
-    * convention); a misoriented call auto-swaps internally when the
-    * right side's size estimate is ≥10× the left's (VERDICT r13 #7 —
-    * result and schema unchanged). NULL or inverted (`hi < lo`)
-    * intervals on either
-    * side produce no bucket rows — they never match. NOTE this is a
-    * deliberate semantic choice, not a consequence of the predicate:
-    * unlike [[rangeJoin]]'s point predicate (unsatisfiable when
-    * `hi < lo`), the raw overlap theta `a.lo <= b.hi AND b.lo <= a.hi`
-    * IS satisfiable by an inverted interval nested inside the other
-    * side (a=[10,4] vs b=[0,20]) — here an inverted interval denotes
-    * the empty set and overlaps nothing (PropertySpec pins the
-    * divergence). Catalyst picks broadcast vs shuffled hash vs
-    * sort-merge on the bucket key as usual, AQE re-plans on runtime
-    * sizes. */
+    * `left` and the smaller one as `right`; a misoriented call
+    * auto-swaps internally when the right side's size estimate is ≥10×
+    * the left's (VERDICT r13 #7 — result and schema unchanged). NULL or
+    * inverted (`hi < lo`) intervals on either side produce no bucket
+    * rows — they never match. NOTE this is a deliberate semantic
+    * choice, not a consequence of the predicate: unlike the point
+    * predicate (unsatisfiable when `hi < lo`), the raw overlap theta
+    * `a.lo <= b.hi AND b.lo <= a.hi` IS satisfiable by an inverted
+    * interval nested inside the other side (a=[10,4] vs b=[0,20]) —
+    * here an inverted interval denotes the empty set and overlaps
+    * nothing (PropertySpec pins the divergence). Catalyst picks
+    * broadcast vs shuffled hash vs sort-merge on the bucket key as
+    * usual, AQE re-plans on runtime sizes. */
   def overlapJoin(
       left: DataFrame,
       lLoCol: String,

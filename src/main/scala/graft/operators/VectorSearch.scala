@@ -48,7 +48,8 @@ object VectorSearch {
     * the broadcast first. Both sides are metric-prepared (cosine →
     * L2-normalized) once, outside the pair loop, by the same kernel body on
     * the driver and in the generated code, so both forms give the same
-    * scores bit for bit.
+    * scores bit for bit. A cosine data side is scored from its normalized
+    * vector under a private column, so `vecCol` passes through as stored.
     */
   def scoreAgainst(
       data: DataFrame,
@@ -56,7 +57,10 @@ object VectorSearch {
       query: DataFrame,
       queryVecCol: String,
       metric: Metric): DataFrame = {
-    val prepared = prepareColumn(data, vecCol, metric)
+    val (prepared, dataVec) = metric match {
+      case Metric.Cosine => (data.withColumn("__svec", metric.prepare(col(vecCol))), "__svec")
+      case _ => (data, vecCol)
+    }
     val preparedQ = prepareColumn(query, queryVecCol, metric)
     val withQuery = constantRow(preparedQ) match {
       case Some(literals) => prepared.select(col("*") +: literals: _*)
@@ -64,8 +68,8 @@ object VectorSearch {
     }
     withQuery
       .withColumn("score",
-        metric.scorePrenormalized(col(vecCol), col(queryVecCol)))
-      .drop(queryVecCol)
+        metric.scorePrenormalized(col(dataVec), col(queryVecCol)))
+      .drop("__svec", queryVecCol)
   }
 
   /** The one row of a constant query frame as literal columns, each under
@@ -154,13 +158,11 @@ object VectorSearch {
       k: Int,
       excludeSelf: Boolean = true,
       broadcastData: Boolean = false,
-      spreadQueries: Boolean = true,
       broadcastQueries: Boolean = false): DataFrame = {
     // The O(N·M) pair work parallelizes over the streamed (query) side's
     // partitions; a small/single-file query table would otherwise pin the
     // whole join to a handful of tasks.
-    val spread = if (spreadQueries && !broadcastQueries)
-      Partitioning.spread(queries) else queries
+    val spread = if (broadcastQueries) queries else Partitioning.spread(queries)
     val q0 = side(spread, vecCol, idCol, metric, "query_id", "__qvec")
     // broadcastQueries: the sample×corpus eval shape (recall rows — a
     // fixed ~1000-row query sample vs the full corpus). Broadcasting the

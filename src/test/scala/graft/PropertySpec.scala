@@ -89,6 +89,27 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("rangeJoin == overlapJoin of the points [pt, pt] on generated sets (widths 1, 7, 64)") {
+    val ptsGen = Gen.listOfN(150, Gen.choose(-500L, 500L))
+    val ivGen = Gen.listOfN(60, for {
+      lo <- Gen.choose(-520L, 520L)
+      len <- Gen.choose(-5L, 40L) // negative => inverted interval
+    } yield (lo, lo + len))
+    for ((seed, width) <- Seq((31L, 1L), (37L, 7L), (41L, 64L))) {
+      val pts = samples(ptsGen, 1, seed).head.zipWithIndex
+        .map { case (p, i) => (p, i.toLong) }.toDF("pt", "pid")
+      val ivs = samples(ivGen, 1, seed + 100).head.zipWithIndex
+        .map { case ((lo, hi), i) => (lo, hi, i.toLong) }.toDF("lo", "hi", "iid")
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+        df.select("pid", "iid").as[(Long, Long)].collect().toSeq
+      val range = rows(Temporal.rangeJoin(pts, "pt", ivs, "lo", "hi", width))
+      val overlap = rows(Temporal.overlapJoin(pts, "pt", "pt", ivs, "lo", "hi", width))
+      assert(range.length == range.toSet.size, s"duplicate range pairs at width $width")
+      assert(overlap.length == overlap.toSet.size, s"duplicate overlap pairs at width $width")
+      assert(range.toSet.nonEmpty && range.toSet == overlap.toSet, s"mismatch at width $width seed $seed")
+    }
+  }
+
   test("overlapJoin == naive theta-join on generated interval sets (ownership dedup at every width)") {
     val ivGen = (n: Int, span: Long) => Gen.listOfN(n, for {
       lo <- Gen.choose(-span, span)

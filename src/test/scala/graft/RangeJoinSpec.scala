@@ -1,14 +1,19 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ExtensionsSessionGlue
 
 import graft.operators.Temporal
 
-/** The custom RangeJoinPlan node + ExpandRangeJoin rule: result parity
-  * with the naive theta-join, boundary/degenerate semantics, and the
-  * plan-shape claim (bucketed equi-join, NOT a nested-loop pair scan). */
+/** Temporal.rangeJoin — the overlap join of the points [pt, pt] with the
+  * intervals (a point is the interval [pt, pt]; one custom node, one
+  * rule): result parity with the naive theta-join, boundary/degenerate
+  * semantics, the misorientation swap, and the plan-shape claim
+  * (bucketed equi-join, NOT a nested-loop pair scan). */
 class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -126,5 +131,44 @@ class RangeJoinSpec extends SparkSpec {
   test("empty interval frame prunes every point and returns zero rows") {
     val emptyIv = intervals.filter(col("iid") < 0)
     assert(viaRule(points, emptyIv, 16) === Set.empty)
+  }
+
+  test("interval side >= 10x the points: exact rows, and the bloom prune moves to the intervals") {
+    val p = spark.range(0, 30).select((col("id") * 37 % 1000).as("pt"), col("id").as("pid"))
+    val iv = spark.range(0, 3000).select(
+      (col("id") * 7 % 1000).as("lo"),
+      (col("id") * 7 % 1000 + col("id") % 20).as("hi"),
+      col("id").as("iid"))
+    val df = Temporal.rangeJoin(p, "pt", iv, "lo", "hi", 16)
+    val got = df.select("pid", "iid").as[(Long, Long)].collect()
+    assert(got.length === got.toSet.size, "each matching pair must appear exactly once")
+    val expected = naive(p, iv)
+    assert(expected.nonEmpty && got.toSet === expected)
+    assert(df.columns.toSeq === Seq("pt", "pid", "lo", "hi", "iid"))
+    // the swap filters the big side: every bloom probe reads an interval
+    // row, none a point row
+    val probed = df.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[BloomFilterMightContain]) =>
+        f.output.map(_.name).toSet
+    }
+    assert(probed.nonEmpty && probed.forall(c => c("iid") && !c("pid")),
+      s"bloom prune not on the interval side:\n${df.queryExecution.optimizedPlan}")
+  }
+
+  test("in a session built with spark.sql.extensions=graft.GraftExtensions: exact rows, no pair scan") {
+    ExtensionsSessionGlue.withExtensionsSession(spark, "graft.GraftExtensions") { s =>
+      // the injected kernels resolve: the extension was applied
+      assert(s.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))")
+        .head().getDouble(0) === 11.0)
+      val p = s.range(0, 400).select((col("id") * 7 % 997).as("pt"), col("id").as("pid"))
+      val iv = s.range(0, 50).select(
+        (col("id") * 20).as("lo"), (col("id") * 20 + 15).as("hi"), col("id").as("iid"))
+      val df = Temporal.rangeJoin(p, "pt", iv, "lo", "hi", 16)
+      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"), plan)
+      val got = df.select("pid", "iid").as[(Long, Long)].collect()
+      assert(got.length === got.toSet.size)
+      assert(got.toSet === naive(p, iv) && got.nonEmpty)
+    }
   }
 }

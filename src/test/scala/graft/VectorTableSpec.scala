@@ -83,6 +83,21 @@ class VectorTableSpec extends SparkSpec {
     assert(out.count() == 7)
   }
 
+  test("cosine search and searchText return each hit's stored vector, bit for bit") {
+    val stored = base.df.select("vec_id", "embedding").as[(Long, Seq[Double])].collect().toMap
+    def bits(v: Seq[Double]): Seq[Long] = v.map(java.lang.Double.doubleToRawLongBits)
+    val hits = Seq(
+      "search" -> base.search(spark.range(1).select(typedLit(stored(3L)).as("qvec")), "qvec", 5),
+      "searchText" -> base.searchText(spark, "hello graft", 5))
+    for ((name, df) <- hits) {
+      val rows = df.select("vec_id", "embedding").as[(Long, Seq[Double])].collect()
+      assert(rows.length == 5, name)
+      rows.foreach { case (id, v) =>
+        assert(bits(v) == bits(stored(id)), s"$name: vec_id $id returned a rewritten vector")
+      }
+    }
+  }
+
   test("partitioned save prunes partitions at the scan (PartitionFilters)") {
     val path = tmpDir()
     base.save(path, partitionBy = Seq("label"))
