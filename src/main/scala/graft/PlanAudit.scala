@@ -10,8 +10,10 @@ import org.apache.spark.sql.SparkSession
   *  - `BNLJ`: BroadcastNestedLoopJoin — allowed ONLY for 1-row
   *    broadcast frames: single-query knn / rag / bm25-family corpus
   *    stats (incl. q_rerank's bm25 stage), exact-knn crossJoins behind
-  *    partial top-k (q_knn_join / q_contrastive_pairs, and
-  *    q_ann_recall's broadcast sample×corpus exact side), the
+  *    partial top-k (q_knn_join / q_contrastive_pairs; the broadcast
+  *    sample×corpus exact side of the recall rows and of
+  *    q_contrastive_pairs_scaled builds no join at all — a per-partition
+  *    heap pass, `MapPartitions`, feeds its window), the
   *    1-row bounds/count frames of q_zorder_layout and q_sim_histogram,
   *    q_ivfpq_refine's exact re-rank (1-row query frame ×
   *    ≤nCandidates fetched vectors), the 1-row Σ√n weight frame
@@ -26,8 +28,7 @@ import org.apache.spark.sql.SparkSession
   *    — multibandKnnJoin's maxBucketFactor crossJoins a 1-row avg
   *    over the scalar index; since r15 the same 1-row threshold frame
   *    appears in the capped multiprobe join —
-  *    q_ann_multiprobe_capped_scaled, and q_ann_recall_multiprobe_scaled
-  *    which also carries the broadcast sample×corpus exact side);
+  *    q_ann_multiprobe_capped_scaled and q_ann_recall_multiprobe_scaled);
   *    anything else needs a key
   *  - `GLOBALWIN`: a Window with an EMPTY partition spec — the whole
   *    input funnels through one task (allowed only on already-cut ≤k-row

@@ -1545,9 +1545,10 @@ object Queries {
     val queries = emb.filter(col("vec_id") % mod === 0)
     val exact = VectorSearch.knnJoin(queries, emb, "embedding", "vec_id",
       Metric.Cosine, k = KnnJoinK, excludeSelf = true,
-      // sample x corpus ground truth: broadcast the bounded sample so the
-      // corpus streams once (no per-query-partition recompute, no corpus
-      // movement) - the only orientation that survives 100 TB
+      // sample x corpus ground truth: the bounded sample is collected and
+      // broadcast, and each corpus partition keeps a k-heap per query, so
+      // the corpus is read once, never moved, and no pair row is built -
+      // the only orientation that survives 100 TB
       broadcastQueries = true)
       .select(col("query_id"), col("neighbor_id"))
     // the query side is ~N/mod by construction of the % filter

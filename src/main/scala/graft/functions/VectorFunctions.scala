@@ -36,9 +36,6 @@ object VectorFunctions {
   /** Epsilon guard for normalization (reference index.py:5-8). */
   val Eps: Double = VectorExpressions.Eps
 
-  /** Cast an `ARRAY<FLOAT>` (fixture layout) to `ARRAY<DOUBLE>` at scan. */
-  def asDouble(v: Column): Column = v.cast("array<double>")
-
   // ------------------------------------------------- codegen (hot path) ---
 
   /** Dot product: left fold of pairwise products (reference index.py:19-22). */
@@ -72,10 +69,6 @@ object VectorFunctions {
   /** HOF normalize — executable spec for [[l2Normalize]]. */
   def hofL2Normalize(v: Column): Column =
     transform(v, x => x / (l2Norm(v) + lit(Eps)))
-
-  /** `v / denom` elementwise, for a precomputed per-row denominator. */
-  def scaleBy(v: Column, denom: Column): Column =
-    transform(v, x => x / denom)
 
   /** HOF dot — executable spec for [[dot]]. */
   def hofDot(a: Column, b: Column): Column =

@@ -46,16 +46,17 @@ object Contrastive {
       broadcastAnchors: Boolean = false): DataFrame = {
     val anchors = emb.filter(anchorFilter)
     // broadcastAnchors: the recall rows' sample×corpus orientation —
-    // broadcast the bounded anchor set so the corpus is the STREAMED
-    // side of the exact retrieval (scanned + metric-prepared once)
+    // the bounded anchor set is collected when this is called and
+    // broadcast, and the corpus is scanned + metric-prepared once, each
+    // partition keeping a k-bounded heap per anchor (no pair rows),
     // instead of the default CartesianProduct re-evaluating the corpus
-    // subtree once per anchor partition. Pass true when the anchor set
-    // is a bounded SAMPLE (the scaled rows' fixed ~1000–2000 anchors);
-    // leave false when anchors are a large corpus fraction (the
-    // fixture's every-10th rule) — a broadcast side must stay
-    // driver/executor-memory bounded. Results are orientation-
-    // independent: the pair set and the per-anchor window are
-    // identical either way.
+    // subtree once per anchor partition and ranking every pair. Pass
+    // true when the anchor set is a bounded SAMPLE (the scaled rows'
+    // fixed ~1000–2000 anchors); leave false when anchors are a large
+    // corpus fraction (the fixture's every-10th rule) — a collected
+    // side must stay driver/executor-memory bounded. Results are
+    // orientation-independent: both forms rank with the same window
+    // over the same scores.
     // localCheckpoint: the ranked frame feeds FOUR consumers (positives,
     // hard, the posOf candidate key-join, and the anti-join build side)
     // and the union would otherwise re-execute the anchors×corpus

@@ -37,12 +37,6 @@ object Quantize {
       .otherwise(transform(vec, _ => lit(0.0)))
   }
 
-  /** Reconstruction `code_i · s`. */
-  def dequantize(vec: Column): Column = {
-    val s = scaleOf(vec)
-    transform(codes(vec), c => c * s)
-  }
-
   /** Quantize a vector column in place (codes + scale columns added;
     * original column replaced by the reconstruction) — the form a recall
     * test or a quantized search path consumes. */

@@ -1,12 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.util.{Comparator, PriorityQueue}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, KnownNullable, Literal, Unevaluable}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation, Project, Range}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, BindReferences, Expression, JoinedRow, KnownNullable, Literal, MutableProjection, Predicate, RowOrdering, SpecificInternalRow, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, OneRowRelation, Project, Range, Sort}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftglue.ColumnGlue
+import org.apache.spark.sql.graftglue.{ColumnGlue, PlanGlue}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.expressions.VectorExpressions
 import graft.functions.Metric
@@ -33,6 +39,12 @@ import graft.functions.Metric
   *    data side is a known-small dimension table; otherwise use
   *    [[bucketedKnnJoin]], which shuffles both sides by a deterministic
   *    LSH bucket id — per-bucket equi-join instead of all-pairs.
+  *  - A bounded query sample against the whole corpus
+  *    (`knnJoin(broadcastQueries = true)`) builds no pair rows: the
+  *    query side is collected when `knnJoin` is called, and one pass
+  *    over each corpus partition keeps a k-bounded heap per query, so
+  *    the rank window sees k rows per query per corpus partition, not
+  *    every pair.
   *
   * Determinism: every ordering tie-breaks on the id column
   * (SURVEY §2.4.2) — argsort on equal scores is arbitrary in the
@@ -142,12 +154,23 @@ object VectorSearch {
     * serving path ann.py:67-102). Output: one row per (query, neighbor)
     * with `rank` (BIGINT, 1-based).
     *
-    * Scale: `broadcastData = true` turns the pair stage into a
-    * broadcast-nested-loop with NO shuffle of the (large) query side —
-    * right when data is a small dimension table. Default is false: Spark
-    * plans a shuffling cartesian and AQE decides; at real scale prefer
-    * [[bucketedKnnJoin]]. The per-query top-k is a `row_number` window
-    * partitioned by query id — shuffles once on a uniform key.
+    * Scale, by orientation:
+    *  - default: a shuffling cartesian of the two prepared sides, scored
+    *    per pair and ranked by the [[rankTopK]] window; AQE decides the
+    *    join. At real scale prefer [[bucketedKnnJoin]].
+    *  - `broadcastData = true`: the pair stage is a broadcast nested loop
+    *    with NO shuffle of the (large) query side — right when data is a
+    *    small dimension table.
+    *  - `broadcastQueries = true` (wins over `broadcastData`): the
+    *    sample×corpus eval shape (recall rows — a bounded query sample vs
+    *    the full corpus). The prepared query side is COLLECTED on the
+    *    driver when `knnJoin` is called (one job, then; a query-side error
+    *    raises here) and broadcast; the corpus is scanned and prepared
+    *    once, and no pair row is built — [[queryBlockTopK]] keeps a
+    *    k-bounded heap per query row in each corpus partition, so the
+    *    window ranks at most k × (corpus partitions) rows per query row.
+    *    At 100 TB this is the only orientation that never moves or
+    *    re-reads the corpus. `queries` must be a batch frame.
     */
   def knnJoin(
       queries: DataFrame,
@@ -158,48 +181,143 @@ object VectorSearch {
       k: Int,
       excludeSelf: Boolean = true,
       broadcastData: Boolean = false,
-      broadcastQueries: Boolean = false): DataFrame = {
-    // The O(N·M) pair work parallelizes over the streamed (query) side's
-    // partitions; a small/single-file query table would otherwise pin the
-    // whole join to a handful of tasks.
-    val spread = if (broadcastQueries) queries else Partitioning.spread(queries)
-    val q0 = side(spread, vecCol, idCol, metric, "query_id", "__qvec")
-    // broadcastQueries: the sample×corpus eval shape (recall rows — a
-    // fixed ~1000-row query sample vs the full corpus). Broadcasting the
-    // SAMPLE makes the corpus the streamed side of the
-    // BroadcastNestedLoopJoin: every corpus partition is scanned and
-    // metric-prepared exactly ONCE, where the default CartesianProduct
-    // recomputes each corpus partition once per query partition (the
-    // corpus subtree runs |qPartitions|×). The per-query top-k stays a
-    // row_number
-    // window, whose partial WindowGroupLimit keeps ≤k rows per query per
-    // corpus partition ahead of the exchange. At 100 TB this is the only
-    // orientation that never moves or re-reads the corpus.
-    val q = if (broadcastQueries) broadcast(q0) else q0
-    val d = side(data, vecCol, idCol, metric, "neighbor_id", "__dvec")
-    val dSide = if (broadcastData) broadcast(d) else d
-    rankTopK(q.crossJoin(dSide), metric, k, excludeSelf)
-  }
+      broadcastQueries: Boolean = false): DataFrame =
+    if (broadcastQueries)
+      rankTopK(queryBlockTopK(
+        side(queries, vecCol, idCol, metric, "query_id", "__qvec"),
+        side(data, vecCol, idCol, metric, "neighbor_id", "__dvec"),
+        metric, k, excludeSelf), k)
+    else {
+      // The O(N·M) pair work parallelizes over the streamed (query)
+      // side's partitions; a small/single-file query table would
+      // otherwise pin the whole join to a handful of tasks.
+      val q = side(Partitioning.spread(queries), vecCol, idCol, metric, "query_id", "__qvec")
+      val d = side(data, vecCol, idCol, metric, "neighbor_id", "__dvec")
+      val dSide = if (broadcastData) broadcast(d) else d
+      rankTopK(scorePairs(q.crossJoin(dSide), metric, excludeSelf), k)
+    }
+
+  /** The rank order of every knn join: best score first (null last, NaN
+    * above every number, -0.0 equal to 0.0 — Spark's ordering), ties to
+    * the lower neighbor id. [[rankTopK]]'s window and
+    * [[queryBlockTopK]]'s heaps both order by it. */
+  private val RankOrder: Seq[Column] = Seq(desc("score"), asc("neighbor_id"))
+
+  /** The self-pair test of [[dropSelf]]: null unless both ids are
+    * non-null, so a filter on it also drops null ids. */
+  private val NotSelf: Column = col("query_id") =!= col("neighbor_id")
 
   /** Drop the `query_id == neighbor_id` pairs when `excludeSelf`. */
   private def dropSelf(pairs: DataFrame, excludeSelf: Boolean): DataFrame =
-    if (excludeSelf) pairs.filter(col("query_id") =!= col("neighbor_id"))
-    else pairs
+    if (excludeSelf) pairs.filter(NotSelf) else pairs
 
-  /** Shared tail of the knn joins: the `score` of each (`__qvec`,
-    * `__dvec`) pair, optional self-exclusion, per-query `row_number`
-    * window, rank filter, scalar projection. */
-  private def rankTopK(pairs: DataFrame, metric: Metric, k: Int,
-      excludeSelf: Boolean): DataFrame = {
-    val scored = pairs
-      .withColumn("score", metric.scorePrenormalized(col("__qvec"), col("__dvec")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(desc("score"), asc("neighbor_id"))
-    dropSelf(scored, excludeSelf)
+  /** The score of a (`__qvec`, `__dvec`) pair. */
+  private def pairScore(metric: Metric): Column =
+    metric.scorePrenormalized(col("__qvec"), col("__dvec"))
+
+  /** The `score` of each pair row, then optional self-exclusion. */
+  private def scorePairs(pairs: DataFrame, metric: Metric, excludeSelf: Boolean): DataFrame =
+    dropSelf(pairs.withColumn("score", pairScore(metric)), excludeSelf)
+
+  /** Shared tail of the knn joins: over scored (`query_id`,
+    * `neighbor_id`, `score`) rows — every pair, or only
+    * [[queryBlockTopK]]'s survivors — a per-query `row_number` window in
+    * [[RankOrder]], the rank filter and the scalar projection. Spark plans
+    * it as a sort, a partial `WindowGroupLimit` ahead of the exchange on
+    * `query_id`, a second sort and the final window. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(RankOrder: _*)
+    scored
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "score", "rank")
   }
+
+  /** The first `k` (`query_id`, `neighbor_id`, `score`) rows in
+    * [[RankOrder]] of every (query row, corpus partition), without pair
+    * rows: `q` (`query_id`, `__qvec`) is collected and broadcast now, and
+    * one typed `mapPartitions` pass over `d` (`neighbor_id`, `__dvec`)
+    * scores each corpus row against the whole query block into a
+    * k-bounded heap per query row, emitting the heaps at the end of the
+    * partition. The pass stays in the logical plan, so the corpus scan
+    * stays visible to the optimizer and to plan records.
+    *
+    * Each pair goes through [[dropSelf]]'s predicate (when `excludeSelf`)
+    * and then [[pairScore]] — the same Catalyst expressions the pair form
+    * evaluates, bound once to (query row ++ corpus row) — so scores and
+    * errors are those of the pair form. The heaps compare with Spark's
+    * ordering for [[RankOrder]].
+    *
+    * Exact: a pair in a query's final top-k is also among the first k of
+    * its (query row, corpus partition) subset under the same total
+    * order, and pairs that compare equal are equal in every output
+    * column. Duplicate or null query ids merge in [[rankTopK]]'s window
+    * as in the pair form. Memory per task: k heap entries per query row. */
+  private def queryBlockTopK(q: DataFrame, d: DataFrame, metric: Metric, k: Int,
+      excludeSelf: Boolean): DataFrame = {
+    val spark = d.sparkSession
+    val pairAttrs = LocalRelation(StructType(q.schema ++ d.schema)).output
+    val Seq(keep, score) = resolved(spark, pairAttrs, NotSelf, pairScore(metric))
+    // heap key rows: (score, neighbor_id), ordered as the window orders
+    val (scoreField, idField) = (StructField("score", DoubleType, score.nullable), d.schema("neighbor_id"))
+    val keyAttrs = LocalRelation(StructType(Seq(scoreField, idField))).output
+    val order = PlanGlue.ofRows(spark, LocalRelation(keyAttrs))
+      .sortWithinPartitions(RankOrder: _*).queryExecution.analyzed match {
+        case s: Sort => s.order
+      }
+    val toQueryRow = ExpressionEncoder(q.schema).createSerializer()
+    val block = spark.sparkContext.broadcast(
+      q.collect().map(r => (r.get(0), toQueryRow(r).copy())))
+    val corpusEncoder = ExpressionEncoder(d.schema)
+    val out = StructType(Seq(q.schema("query_id"), idField, scoreField))
+    val heapsOf: Iterator[Row] => Iterator[Row] = { rows =>
+      val queries = block.value
+      if (queries.isEmpty || k <= 0) Iterator.empty
+      else {
+        val toRow = corpusEncoder.createSerializer()
+        val notSelf = Predicate.create(keep)
+        val ord = RowOrdering.create(order, keyAttrs)
+        val key = new SpecificInternalRow(keyAttrs.map(_.dataType))
+        val scoreInto = MutableProjection.create(Seq(score)).target(key)
+        // each heap's head is its worst kept entry: (key copy, neighbor id)
+        val worstFirst: Comparator[(InternalRow, Any)] = (a, b) => ord.compare(b._1, a._1)
+        val heaps = Array.fill(queries.length)(new PriorityQueue(worstFirst))
+        val pair = new JoinedRow
+        rows.foreach { r =>
+          val row = toRow(r)
+          key.update(1, InternalRow.copyValue(row.get(0, idField.dataType)))
+          pair.withRight(row)
+          var i = 0
+          while (i < queries.length) {
+            pair.withLeft(queries(i)._2)
+            if (!excludeSelf || notSelf.eval(pair)) {
+              scoreInto(pair)
+              val heap = heaps(i)
+              if (heap.size < k) heap.add((key.copy(), r.get(0)))
+              else if (ord.compare(key, heap.peek._1) < 0) {
+                heap.poll()
+                heap.add((key.copy(), r.get(0)))
+              }
+            }
+            i += 1
+          }
+        }
+        queries.indices.iterator.flatMap { i =>
+          heaps(i).iterator.asScala.map { case (kept, id) =>
+            Row(queries(i)._1, id, kept.get(0, DoubleType))
+          }
+        }
+      }
+    }
+    d.mapPartitions(heapsOf)(Encoders.row(out))
+  }
+
+  /** `cols` resolved over a relation of `attrs`, bound to their ordinals. */
+  private def resolved(spark: SparkSession, attrs: Seq[Attribute],
+      cols: Column*): Seq[Expression] =
+    PlanGlue.ofRows(spark, LocalRelation(attrs)).select(cols: _*)
+      .queryExecution.analyzed.asInstanceOf[Project].projectList.map(e =>
+        BindReferences.bindReference(e.asInstanceOf[Alias].child, attrs))
 
   /** Deterministic hyperplane `j` (0-based) of width `dim`, as an array
     * literal: `h[j][i] = (((i+1)·(j+1)·7919) mod 193) / 193.0 − 0.5`.
@@ -369,7 +487,7 @@ object VectorSearch {
         explode(probeStructs(col("__qvec"), cents, metric, nProbes)))
       .withColumn("centroid_id", col("probe.cid"))
       .drop("probe")
-    rankTopK(q.join(d, Seq("centroid_id")), metric, k, excludeSelf)
+    rankTopK(scorePairs(q.join(d, Seq("centroid_id")), metric, excludeSelf), k)
   }
 
   // -------------------------------------------------- product quantization ---
@@ -694,7 +812,7 @@ object VectorSearch {
     def bucket = lshBucket(col(vecCol), dim, bits).as("bucket")
     val q = side(queries, vecCol, idCol, metric, "query_id", "__qvec", bucket)
     val d = side(data, vecCol, idCol, metric, "neighbor_id", "__dvec", bucket)
-    rankTopK(q.join(d, Seq("bucket")), metric, k, excludeSelf)
+    rankTopK(scorePairs(q.join(d, Seq("bucket")), metric, excludeSelf), k)
   }
 
   /** The LSH index AS DATA: one row per (id, band, bucket) over `bands`
@@ -861,8 +979,8 @@ object VectorSearch {
       nD: Long): DataFrame = {
     val qv = reattachSide(side(queries, vecCol, idCol, metric, "query_id", "__qvec"), nQ, dim)
     val dv = reattachSide(side(data, vecCol, idCol, metric, "neighbor_id", "__dvec"), nD, dim)
-    rankTopK(candidates.join(qv, Seq("query_id")).join(dv, Seq("neighbor_id")),
-      metric, k, excludeSelf = false)
+    rankTopK(scorePairs(candidates.join(qv, Seq("query_id")).join(dv, Seq("neighbor_id")),
+      metric, excludeSelf = false), k)
   }
 
   /** The corpus-side bucket cap of the LSH joins: drop every `keys`

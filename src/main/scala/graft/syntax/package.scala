@@ -41,11 +41,6 @@ package object syntax {
       df.join(ok, id)
     }
 
-    /** [[Splits.assignSplit]]: deterministic labeled split column. */
-    def withSplit(salt: String, weights: Seq[(String, Double)],
-        id: String = "doc_id"): DataFrame =
-      Splits.assignSplit(df, id, salt, weights)
-
     /** [[Splits.quotaSample]]: rate-capped per-group quota. */
     def quotaSampled(group: String, salt: String, quota: Long,
         id: String = "doc_id"): DataFrame =
@@ -55,15 +50,6 @@ package object syntax {
     def temperatureSampled(group: String, salt: String, targetTotal: Long,
         id: String = "doc_id"): DataFrame =
       Splits.temperatureSample(df, id, group, salt, targetTotal)
-
-    /** [[Splits.quantileFilter]]: keep rows ≥ their group's p-quantile. */
-    def quantileFiltered(group: String, value: String, p: Double): DataFrame =
-      Splits.quantileFilter(df, group, value, p)
-
-    /** [[Temporal.keepFirst]]: DISTINCT ON by (order, tie-break). */
-    def keptFirst(keys: Seq[String], order: Seq[String],
-        payload: Seq[String]): DataFrame =
-      Temporal.keepFirst(df, keys, order, payload)
 
     /** [[TextOps.vocabTopK]]: corpus heavy hitters. */
     def vocabTop(k: Int, id: String = "doc_id",
@@ -80,20 +66,11 @@ package object syntax {
         id: String = "doc_id", text: String = "text"): DataFrame =
       Sketches.minhashCandidates(df, id, text, k, m, bands)
 
-    /** [[Sketches.minhashCandidatesCapped]]: candidates under the
-      * production LSH bucket-size cap. */
-    def nearDupCandidatesCapped(k: Int, m: Int, bands: Int, maxBucket: Int,
-        id: String = "doc_id", text: String = "text"): DataFrame =
-      Sketches.minhashCandidatesCapped(df, id, text, k, m, bands, maxBucket)
-
     /** [[Sketches.fingerprintPairs]]: winnowing near-dup pairs. */
     def fingerprintPairs(minShared: Int = 3, maxDocFreq: Int = 10,
         id: String = "doc_id", text: String = "text"): DataFrame =
       Sketches.fingerprintPairs(df, id, text,
         minShared = minShared, maxDocFreq = maxDocFreq)
-
-    /** [[Profile.profile]]: per-column data-quality report. */
-    def profiled(cols: String*): DataFrame = Profile.profile(df, cols)
 
     /** [[Temporal.funnelCounts]]: k-step first-touch funnel. */
     def funnel(steps: Seq[String], windowDays: Int = 7,
@@ -140,18 +117,6 @@ package object syntax {
     def groupTop(group: String, value: String, tie: String, n: Int,
         largest: Boolean = true): DataFrame =
       Temporal.groupTopK(df, group, value, tie, n, largest)
-
-    /** [[TextOps.hashedLinearScoreWeighted]]: hashed-BoW scores against a
-      * TRAINED broadcast weight table `(bucket, weight)`. */
-    def qualityScoredWeighted(weights: DataFrame, k: Int,
-        id: String = "doc_id", text: String = "text"): DataFrame =
-      TextOps.hashedLinearScoreWeighted(df, id, text, k, weights)
-
-    /** [[TextOps.contaminationReport]]: word-n-gram benchmark
-      * decontamination report against a broadcast eval set. */
-    def contaminationChecked(evalDocs: DataFrame, n: Int = 13,
-        id: String = "doc_id", text: String = "text"): DataFrame =
-      TextOps.contaminationReport(df, evalDocs, id, text, n)
 
     /** [[Budget.domainBudget]]: budget-capped priority-ordered take per
       * group (per-domain token caps). */

@@ -142,6 +142,17 @@ class EmptyInputSpec extends SparkSpec {
       dim = Tables.EmbeddingDim, maxBucketFactor = Some(2.0)).count() == 0)
   }
 
+  test("knn: broadcast queries over an empty side give no rows and the pair form's schema") {
+    val none = noEmb.select("vec_id", "embedding")
+    for ((queries, corpus) <- Seq(none -> someEmb, someEmb -> none); metric <- Metric.all) {
+      def join(broadcastQueries: Boolean) = VectorSearch.knnJoin(queries, corpus,
+        "embedding", "vec_id", metric, k = 5, broadcastQueries = broadcastQueries)
+      val block = join(broadcastQueries = true)
+      assert(block.collect().isEmpty, metric.name)
+      assert(block.schema == join(broadcastQueries = false).schema, metric.name)
+    }
+  }
+
   test("index tables: LSH bucket table and appends on zero vectors") {
     val idx = VectorSearch.lshBucketTable(noEmb.select("vec_id", "embedding"),
       "embedding", "vec_id", Metric.Cosine, Tables.EmbeddingDim, bits = 8, bands = 4)

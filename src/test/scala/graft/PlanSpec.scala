@@ -1,5 +1,16 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Plan-quality regression guards: the scale properties the DuckDB
   * oracle CANNOT see — pushdown reaching the scan, hash vs sort
   * aggregation, partial top-k below the exchange, materialized-once
@@ -59,6 +70,60 @@ class PlanSpec extends SparkSpec {
     // exchange feeding the window (partial mode before shuffle)
     assert(p.lastIndexOf("WindowGroupLimit") > p.indexOf("Exchange"),
       s"no pre-shuffle partial top-k:\n$p")
+  }
+
+  /** The executed plans of `name`: the row's own, plus those of the
+    * lazy checkpoints its builder takes (a checkpoint's plan is hidden
+    * behind `Scan ExistingRDD` in the row's plan). */
+  private def executedPlans(name: String): Seq[SparkPlan] = {
+    spark.catalog.clearCache()
+    val checkpoints = new ConcurrentLinkedQueue[QueryExecution]
+    val marker = spark.range(1).toDF()
+    val drained = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe eq marker.queryExecution) drained.countDown()
+        else if (action == "localCheckpoint") checkpoints.add(qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val row = Queries.queries(name)(spark, Sf0001)
+      marker.collect()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      row.queryExecution.executedPlan +: checkpoints.asScala.toSeq.map(_.executedPlan)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("q_ann_recall, q_contrastive_pairs_scaled: exact knn over broadcast queries builds no pair rows") {
+    object Plans extends AdaptiveSparkPlanHelper
+    for (name <- Seq("q_ann_recall", "q_contrastive_pairs_scaled")) {
+      val plans = executedPlans(name)
+      val all = plans.flatMap(p => Plans.collect(p) { case n => n })
+      // the broadcast count frame of the contrastive random negatives
+      // (a global aggregate) is a 1-row nested loop, not a pair product
+      def oneRow(p: SparkPlan) = p.exists {
+        case a: HashAggregateExec => a.groupingExpressions.isEmpty
+        case _ => false
+      }
+      val pairJoins = all.collect {
+        case j: BroadcastNestedLoopJoinExec
+            if !oneRow(if (j.buildSide == BuildLeft) j.left else j.right) => j
+        case c: CartesianProductExec => c
+      }
+      assert(pairJoins.isEmpty, s"$name: pair join\n${plans.mkString("\n")}")
+      assert(all.exists(_.isInstanceOf[MapPartitionsExec]), s"$name: no corpus pass\n${plans.mkString("\n")}")
+      // every sort on `score` ranks either the corpus pass's heap
+      // survivors or an ANN join's candidate pairs
+      val pairSorts = all.collect {
+        case s: SortExec if s.sortOrder.exists(_.references.exists(_.name == "score")) &&
+            Plans.find(s) {
+              case _: MapPartitionsExec | _: HashJoin | _: SortMergeJoinExec => true
+              case _ => false
+            }.isEmpty => s
+      }
+      assert(pairSorts.isEmpty, s"$name: sort over scored pairs\n${pairSorts.mkString("\n")}")
+    }
   }
 
   test("q_reservoir_sample: partial WindowGroupLimit keeps the corpus off the exchange") {

@@ -136,6 +136,67 @@ class VectorSearchSpec extends SparkSpec {
     assert(perQuery.count() == 0)
   }
 
+  /** knnJoin's rows as (query_id, neighbor_id, raw score bits, rank),
+    * sorted; a null id or score is None. */
+  private def knnRows(df: DataFrame): Seq[(Option[Long], Option[Long], Option[Long], Long)] =
+    df.select("query_id", "neighbor_id", "score", "rank").collect().toSeq.map { r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(1)).map(_.asInstanceOf[Long]),
+        Option(r.get(2)).map(s => doubleToRawLongBits(s.asInstanceOf[Double])), r.getLong(3))
+    }.sorted
+
+  // ties, nulls and NaN: ids 1-3 share a vector, 4-5 another; 6 has a
+  // null vector, 7 a NaN element, the last row a null id. Spread over
+  // three partitions, so a query's survivors come from several heaps.
+  private lazy val edgeCorpus = Seq(
+    (Option(1L), Option(Seq(1.0, 2.0, 0.5))), (Option(2L), Option(Seq(1.0, 2.0, 0.5))),
+    (Option(3L), Option(Seq(1.0, 2.0, 0.5))), (Option(4L), Option(Seq(-1.0, 0.5, 2.0))),
+    (Option(5L), Option(Seq(-1.0, 0.5, 2.0))), (Option(6L), Option.empty[Seq[Double]]),
+    (Option(7L), Option(Seq(Double.NaN, 1.0, 0.0))), (Option(8L), Option(Seq(0.0, 0.0, 0.0))),
+    (Option(9L), Option(Seq(0.3, -0.2, 0.9))), (Option(10L), Option(Seq(2.0, 4.0, 1.0))),
+    (Option(11L), Option(Seq(0.0, -1.0, 0.0))), (Option.empty[Long], Option(Seq(1.0, 1.0, 1.0))))
+    .toDF("vec_id", "embedding").repartition(3).cache()
+  // duplicate query id 2 (two vectors), a null query vector (6), a NaN
+  // query (7) and a null query id
+  private lazy val edgeQueries = Seq(
+    (Option(2L), Option(Seq(1.0, 2.0, 0.5))), (Option(2L), Option(Seq(0.3, -0.2, 0.9))),
+    (Option(4L), Option(Seq(-1.0, 0.5, 2.0))), (Option(6L), Option.empty[Seq[Double]]),
+    (Option(7L), Option(Seq(Double.NaN, 1.0, 0.0))), (Option(9L), Option(Seq(1.0, 0.0, 0.0))),
+    (Option.empty[Long], Option(Seq(0.5, 0.5, 0.5)))).toDF("vec_id", "embedding")
+
+  test("knnJoin with broadcast queries equals the pair form row for row, scores bit for bit") {
+    assert(edgeCorpus.rdd.getNumPartitions == 3)
+    for (metric <- Metric.all; k <- Seq(1, 5, 50); excludeSelf <- Seq(true, false)) {
+      val at = s"${metric.name}, k=$k, excludeSelf=$excludeSelf"
+      def join(broadcastQueries: Boolean) = VectorSearch.knnJoin(edgeQueries, edgeCorpus,
+        "embedding", "vec_id", metric, k, excludeSelf, broadcastQueries = broadcastQueries)
+      val (block, pairs) = (join(true), join(false))
+      assert(block.schema == pairs.schema, at)
+      val (got, want) = (knnRows(block), knnRows(pairs))
+      assert(got == want, s"$at: ${got.diff(want).take(3)} vs ${want.diff(got).take(3)}")
+    }
+    // the fixture corpus, in its own partitions
+    val sample = emb.filter(col("vec_id") % 25 === 0)
+    for (metric <- Metric.all) {
+      def join(broadcastQueries: Boolean) = VectorSearch.knnJoin(sample, emb, "embedding",
+        "vec_id", metric, k = 10, broadcastQueries = broadcastQueries)
+      assert(knnRows(join(true)) == knnRows(join(false)), metric.name)
+    }
+  }
+
+  test("knnJoin with broadcast queries raises the pair form's length-mismatch error") {
+    val short = Seq((100L, Seq(1.0, 2.0))).toDF("vec_id", "embedding")
+    def rootMessage(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case a: IllegalArgumentException => a.getMessage }.getOrElse(e.toString)
+    for (metric <- Metric.all) {
+      def raised(broadcastQueries: Boolean) = rootMessage(intercept[Exception](
+        VectorSearch.knnJoin(edgeQueries.filter(col("vec_id") === 4), edgeCorpus.unionByName(short),
+          "embedding", "vec_id", metric, k = 3, broadcastQueries = broadcastQueries).collect()))
+      val (block, pairs) = (raised(true), raised(false))
+      assert(block == pairs && block.contains("array length mismatch (3 vs 2)"), metric.name)
+    }
+  }
+
   test("semanticDedup matches a sequential cluster-then-prune model") {
     val tau = 0.3
     val cents = VectorSearch.ivfCentroids(emb, "embedding", "vec_id", 16, Metric.Cosine)
